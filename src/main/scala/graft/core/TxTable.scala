@@ -7,10 +7,10 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
-/** Transactional parquet table — the Delta/Iceberg seam of
-  * `core.Table` made real with nothing but parquet + one atomic file
-  * rename (the public table-format recipe: immutable data files, a
-  * versioned manifest as the commit point).
+/** Transactional parquet table — a Delta/Iceberg-style table format
+  * built from nothing but parquet + one atomic file rename (the public
+  * table-format recipe: immutable data files, a versioned manifest as
+  * the commit point).
   *
   * Layout:
   * {{{
@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   * N is exactly the files named by manifest N. A commit writes the new
   * manifest to a temp name and RENAMES it into place — a single-file
   * rename, atomic on HDFS/POSIX (on S3 this is where a conditional PUT
-  * slots in). Consequences, versus the directory-swap protocol of
-  * [[Table]]:
+  * slots in). Consequences, versus rewriting a table directory and
+  * swapping it into place:
   *
   *  - **Snapshot isolation**: readers plan against the file list of the
   *    version current at read time; later commits add files and a new
@@ -79,7 +79,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   * `vacuum`.
   * At 100 TB: manifests list O(buckets × files-per-bucket) lines of
   * driver-side metadata (the Iceberg avro-manifest analog); bucket
-  * count is sized so a bucket ≈ a few GB (see [[Warehouse]] scaladoc).
+  * count is sized so a bucket ≈ a few GB (see
+  * [[Warehouse.bucketedTables]]).
   */
 final class TxTable(
     spark: SparkSession,
@@ -116,7 +117,7 @@ final class TxTable(
       * stock readers need. Off by default: pre-existing tables' files
       * carry no footer ids, and claiming id mode over them would
       * break stock readers. */
-    val fieldIds: Boolean = false) extends TableOps {
+    val fieldIds: Boolean = false) {
 
   require(keys.nonEmpty, "TxTable requires key columns")
   require(numBuckets > 0, "TxTable requires numBuckets > 0")
@@ -3315,8 +3316,6 @@ final class TxTable(
       }
     }
   }
-
-  def optimize(): Unit = compact()
 
   /** ZERO-COPY shallow clone: a new table at `dstDir` whose first
     * manifest references THIS table's current data files (and DV

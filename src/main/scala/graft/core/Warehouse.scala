@@ -1,97 +1,27 @@
 package graft.core
 
-import java.util.UUID
+import org.apache.spark.sql.SparkSession
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-
-/** Parquet-directory table layer with the reference's write semantics
-  * (SURVEY §2.1) re-expressed for a lakehouse without a transactional
-  * table format on the classpath:
+/** The domain tables of one deployment, each a [[TxTable]] under
+  * `root`. The reference's write semantics (SURVEY §2.1) map onto
+  * TxTable's methods:
   *
   *  - `append`           — plain INSERT (S12)
-  *  - `insertIfAbsent`   — INSERT .. ON CONFLICT DO NOTHING (S9):
-  *                         left-anti join on keys, then append
-  *  - `upsert`           — INSERT .. ON CONFLICT DO UPDATE (S10/S13):
-  *                         anti-join existing + union, atomic swap
-  *  - `deleteWhere`      — DELETE (S16): filter + atomic swap
-  *  - `truncate`         — TRUNCATE (S17): empty overwrite
-  *
-  * Atomic swap protocol: write to `<dir>.tmp-<uuid>`, rename old →
-  * `<dir>.old-<uuid>`, rename tmp → dir, delete old. Single-writer
-  * (matches the reference: merge concurrency 1, `worker.ts:26`).
-  *
-  * Mutable tables are hash-bucket partitioned (`numBuckets` > 0): rows
-  * live under `<dir>/_kb=<pmod(hash(keys), n)>/`, and `upsert` /
-  * `deleteWhere` rewrite ONLY the bucket partitions containing touched
-  * keys — a 1-row status update (S13) moves one bucket's worth of data,
-  * not the whole table. At 100 TB, size `numBuckets` so one bucket ≈ a
-  * few GB (buckets ≈ tableBytes / 4 GiB); the swap stays per-partition
-  * and the untouched 99.9% of files are never opened. On a real
-  * deployment this layer is where Delta/Iceberg would slot in; every
-  * caller sees only the `Table` interface.
+  *  - `insertIfAbsent`   — INSERT .. ON CONFLICT DO NOTHING (S9)
+  *  - `upsert`           — INSERT .. ON CONFLICT DO UPDATE (S10/S13)
+  *  - `deleteWhere`      — DELETE (S16)
+  *  - `truncate`         — TRUNCATE (S17)
   */
-/** The write/read surface shared by both storage protocols — the
-  * directory-swap [[Table]] and the manifest-committed [[TxTable]].
-  * Jobs and services program against this trait, so a deployment picks
-  * its protocol with one constructor flag (`Warehouse(transactional)`),
-  * the way a real lakehouse picks parquet-dir vs Delta/Iceberg. */
-trait TableOps {
-  def exists: Boolean
-  def createIfAbsent(): Unit
-  def read: DataFrame
-  /** Primary-key point read, pruned to the key's hash bucket when the
-    * protocol supports it (partition pruning / manifest pruning). */
-  def lookup(values: Seq[Any]): DataFrame
-  def append(df: DataFrame): Unit
-  def insertIfAbsent(df: DataFrame): Unit
-  def upsert(df: DataFrame): Unit
-  def deleteWhere(cond: Column): Unit
-  def truncate(): Unit
-  def count(): Long
-  /** Small-file compaction with protocol-appropriate layout (one file
-    * per bucket partition when bucketed) — the OPTIMIZE analog. */
-  def optimize(): Unit
-  /** Current number of data files (the compaction trigger metric). */
-  def dataFileCount: Int
-}
+final class Warehouse(val spark: SparkSession, val root: String) {
 
-final class Warehouse(val spark: SparkSession, val root: String,
-    /** true (the DEFAULT protocol) → domain tables use the
-      * transactional manifest protocol ([[TxTable]]: snapshot
-      * isolation, time travel, multi-writer optimistic commits);
-      * false → the swap-based [[Table]], kept as the fallback for
-      * single-writer deployments that want a plain directory layout.
-      * Same jobs run on either (proven byte-equal in PipelineSpec). */
-    val transactional: Boolean = true) {
-
-  def table(name: String, schema: StructType, keys: Seq[String],
-      partitionCols: Seq[String] = Nil, numBuckets: Int = 0): Table =
-    new Table(spark, s"$root/$name", schema, keys, partitionCols, numBuckets)
-
-  def domainTable(name: String): TableOps =
-    if (transactional) domainTxTable(name)
-    else {
-      val (schema, keys) = graft.domain.Schemas.tables(name)
-      table(name, schema, keys,
-        numBuckets = Warehouse.bucketedTables.getOrElse(name, 0))
-    }
-
-  /** Transactional table (manifest commits, snapshot isolation, time
-    * travel — see [[TxTable]]): the upgrade path from the directory-swap
-    * [[Table]] for deployments that need concurrent readers or history.
-    * A given table name should use one protocol or the other, not both. */
-  def txTable(name: String, schema: StructType, keys: Seq[String],
-      numBuckets: Int = 16): TxTable =
-    new TxTable(spark, s"$root/$name", schema, keys, numBuckets)
-
-  def domainTxTable(name: String): TxTable = {
+  def domainTable(name: String): TxTable = {
     val (schema, keys) = graft.domain.Schemas.tables(name)
-    txTable(name, schema, keys,
-      math.max(1, Warehouse.bucketedTables.getOrElse(name, 16)))
+    new TxTable(spark, s"$root/$name", schema, keys,
+      Warehouse.bucketedTables.getOrElse(name, 16))
   }
+
+  /** Alias of [[domainTable]], kept for callers compiled against it. */
+  def domainTxTable(name: String): TxTable = domainTable(name)
 
   /** Create every domain table that doesn't exist yet (replaces the
     * reference's SQL migration runner, `src/db.ts:29-75`). */
@@ -100,20 +30,15 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   /** Run `body` as a crash-safe multi-table job over the named domain
     * tables (the reference's per-job Postgres transaction analog —
-    * see [[JobTxn]] for the exact semantics and caveats). Requires
-    * the transactional protocol. */
-  def jobTxn[A](names: Seq[String])(body: => A): A = {
-    require(transactional, "jobTxn requires the transactional protocol")
+    * see [[JobTxn]] for the exact semantics and caveats). */
+  def jobTxn[A](names: Seq[String])(body: => A): A =
     JobTxn.run(spark, s"$root/_txn",
-      names.map(n => n -> domainTxTable(n)))(body)
-  }
+      names.map(n => n -> domainTable(n)))(body)
 
   /** Roll back any job that crashed mid-write (journal present) —
     * run at startup before new jobs. Returns journals recovered. */
-  def recoverJobTxns(): Int = {
-    require(transactional, "recoverJobTxns requires the transactional protocol")
-    JobTxn.recover(spark, s"$root/_txn", domainTxTable)
-  }
+  def recoverJobTxns(): Int =
+    JobTxn.recover(spark, s"$root/_txn", domainTable)
 
   /** Register every domain table as a temp view so the spark.sql
     * surface can query the warehouse by name (SURVEY §1.1 catalog
@@ -126,9 +51,9 @@ final class Warehouse(val spark: SparkSession, val root: String,
   /** Scheduled-maintenance sweep (the lakehouse OPTIMIZE job; the
     * reference's Postgres autovacuum/index-maintenance analog):
     * compact every domain table whose data-file count exceeds
-    * `maxFiles`; transactional tables are then vacuumed to
-    * `keepVersions` so compaction reclaims space instead of doubling
-    * it (old versions' files stay until vacuum). Returns table →
+    * `maxFiles`, then vacuum it to `keepVersions` so compaction
+    * reclaims space instead of doubling it (old versions' files stay
+    * until vacuum). Returns table →
     * (filesBefore, filesAfter) for the tables compacted. Safe to run
     * from a cron/stream trigger WHILE writers are live: compaction is
     * an ordinary optimistic commit (rebased on conflict), and vacuum
@@ -137,21 +62,17 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * in-flight commit (see [[TxTable.vacuum]]). */
   def compactAll(maxFiles: Int = 16, keepVersions: Int = 3,
       vacuumMinAgeMs: Long = TxTable.DefaultVacuumRetentionMs,
-      /** Transactional tables size their output files from ACTUAL
-        * bytes (≈ this many bytes per file — the Delta/Iceberg
-        * target-file-size knob; see [[TxTable.compactTo]]) instead of
-        * writing one file per bucket regardless of table size. */
+      /** Output files are sized from ACTUAL bytes (≈ this many bytes
+        * per file — the Delta/Iceberg target-file-size knob; see
+        * [[TxTable.compactTo]]) instead of one file per bucket
+        * regardless of table size. */
       targetFileBytes: Long = Warehouse.DefaultTargetFileBytes): Map[String, (Int, Int)] =
     graft.domain.Schemas.tables.keys.toSeq.sorted.flatMap { n =>
       val t = domainTable(n)
       val before = t.dataFileCount
       if (before > maxFiles) {
-        t match {
-          case tx: TxTable =>
-            tx.compactTo(targetFileBytes)
-            tx.vacuum(keepVersions, vacuumMinAgeMs)
-          case _ => t.optimize()
-        }
+        t.compactTo(targetFileBytes)
+        t.vacuum(keepVersions, vacuumMinAgeMs)
         Some(n -> (before, t.dataFileCount))
       } else None
     }.toMap
@@ -163,269 +84,18 @@ object Warehouse {
     * task-level parallelism and tight zone maps). */
   val DefaultTargetFileBytes: Long = 128L * 1024 * 1024
 
-  /** Tables the reference mutates per pipeline step (`repository.ts:25-78`
-    * upsert, run/review status updates) get bucket partitioning so a
-    * point write rewrites one bucket, not the table. Counts are sized
-    * for test scale; at 100 TB they'd be derived from table bytes
-    * (see `Table` scaladoc) — the protocol is count-agnostic. */
+  /** Bucket counts of the tables the reference mutates per pipeline
+    * step (`repository.ts:25-78` upsert, run/review status updates):
+    * a key-addressed write rewrites only the touched buckets' files,
+    * so a 1-row status update (S13) moves one bucket's worth of data,
+    * not the whole table. Other domain tables get 16. Counts are
+    * sized for test scale; at 100 TB, size them so one bucket ≈ a few
+    * GB (buckets ≈ tableBytes / 4 GiB) — the untouched 99.9% of files
+    * are then never opened. The protocol is count-agnostic. */
   val bucketedTables: Map[String, Int] = Map(
     "regulation_items" -> 16,
     "source_documents" -> 16,
     "runs" -> 8,
     "review_queue" -> 8,
     "vector_chunks" -> 16)
-}
-
-final class Table(
-    spark: SparkSession,
-    val dir: String,
-    val schema: StructType,
-    val keys: Seq[String],
-    /** Hive-style partition columns (e.g. a derived date column):
-      * predicates on them prune whole directories at scan planning
-      * (`PartitionFilters` in the physical plan) — the data-skipping
-      * analog of the reference's secondary indexes (SURVEY §4). */
-    val partitionCols: Seq[String] = Nil,
-    /** When > 0, add a derived `_kb = pmod(hash(keys), numBuckets)`
-      * partition column; key-addressed mutations rewrite only touched
-      * buckets and key lookups prune to one bucket. */
-    val numBuckets: Int = 0) extends TableOps {
-
-  import Table.BUCKET
-
-  require(numBuckets == 0 || keys.nonEmpty, "bucketing requires keys")
-  require(numBuckets == 0 || partitionCols.isEmpty,
-    "bucketing and explicit partitionCols are mutually exclusive")
-
-  private def bucketed: Boolean = numBuckets > 0
-
-  private def bucketExpr: Column =
-    pmod(hash(keys.map(col): _*), lit(numBuckets)).cast(IntegerType)
-
-  private def schemaWithBucket: StructType =
-    StructType(schema.fields :+ StructField(BUCKET, IntegerType, nullable = false))
-
-  private def fs: FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def exists: Boolean = fs.exists(new Path(dir))
-
-  def createIfAbsent(): Unit =
-    if (!exists) overwriteAtomic(empty)
-
-  def empty: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Read with the declared schema (projection/pushdown still apply —
-    * the schema is fixed, not inferred, so planning never lists files
-    * twice). Bucket column is internal and never surfaces here. */
-  def read: DataFrame =
-    if (!exists) empty
-    else if (bucketed) readB.drop(BUCKET)
-    else spark.read.schema(schema).parquet(dir)
-
-  /** Internal read retaining `_kb` so mutations/lookups can prune. */
-  private def readB: DataFrame =
-    if (exists) spark.read.schema(schemaWithBucket).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaWithBucket)
-
-  /** Point lookup pruned to the key's bucket: the literal bucket id
-    * constant-folds, so the scan carries `PartitionFilters: [_kb = n]`
-    * and opens one directory out of `numBuckets` (the reference's
-    * primary-key index lookup, `schema.sql` PKs). */
-  def lookup(values: Seq[Any]): DataFrame = {
-    require(values.length == keys.length, s"expected ${keys.length} key values")
-    val typedLits = keys.zip(values).map { case (k, v) =>
-      lit(v).cast(schema(k).dataType)
-    }
-    val keyPred = keys.zip(typedLits)
-      .map { case (k, l) => col(k) === l }.reduce(_ && _)
-    if (!bucketed) read.filter(keyPred)
-    else {
-      val b = pmod(hash(typedLits: _*), lit(numBuckets)).cast(IntegerType)
-      readB.filter(col(BUCKET) === b).filter(keyPred).drop(BUCKET)
-    }
-  }
-
-  private def conform(df: DataFrame): DataFrame =
-    df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
-
-  private def effectivePartitionCols: Seq[String] =
-    if (bucketed) Seq(BUCKET) else partitionCols
-
-  private def writer(df: DataFrame, mode: SaveMode) = {
-    val out = if (bucketed) conform(df).withColumn(BUCKET, bucketExpr)
-              else conform(df)
-    val w = out.write.mode(mode)
-    if (effectivePartitionCols.nonEmpty) w.partitionBy(effectivePartitionCols: _*) else w
-  }
-
-  /** S12 — plain append. Guarded like the mutations: appending
-    * bucketed data next to legacy root-level files would create the
-    * mixed layout partition discovery can't read. */
-  def append(df: DataFrame): Unit = {
-    if (bucketed && exists) assertBucketLayout()
-    writer(df, SaveMode.Append).parquet(dir)
-  }
-
-  /** S9 — insert rows whose key is not already present
-    * (`ON CONFLICT DO NOTHING`). Also dedups within the incoming
-    * batch (first occurrence by key wins is not required here — the
-    * reference inserts row-at-a-time, any single row per key is
-    * acceptable — but we keep it deterministic via min ordering). */
-  def insertIfAbsent(df: DataFrame): Unit = {
-    if (bucketed && exists) assertBucketLayout()
-    val incoming = conform(df).dropDuplicates(keys)
-    val fresh = incoming.join(read.select(keys.map(col): _*), keys, "left_anti")
-    writer(fresh, SaveMode.Append).parquet(dir)
-  }
-
-  /** Bucketing is a CREATION-TIME layout property: a directory written
-    * unbucketed holds root-level data files whose rows would read as
-    * `_kb = null` and silently vanish from bucket-pruned mutations.
-    * Fail fast instead; `compact()` rewrites into the bucketed layout
-    * (the one-off migration). */
-  private def assertBucketLayout(): Unit = {
-    val f = fs
-    val stray = f.listStatus(new Path(dir))
-      .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (stray)
-      throw new IllegalStateException(
-        s"$dir holds unbucketed data files but numBuckets=$numBuckets; " +
-          "run compact() once to migrate the layout")
-  }
-
-  /** S10/S13 — MERGE: last-writer-wins per key (matches
-    * `ON CONFLICT DO UPDATE` semantics, `src/repository.ts:25-78`).
-    *
-    * The incoming batch is eagerly `localCheckpoint`ed first, so a
-    * caller handing us a DataFrame derived from THIS table (merge jobs
-    * do) can't be invalidated by the directory swap mid-write.
-    *
-    * Bucketed: only partitions whose bucket contains an updated key are
-    * rewritten; every other `_kb=` directory is untouched on disk. */
-  def upsert(df: DataFrame): Unit = {
-    val updates = conform(df).dropDuplicates(keys).localCheckpoint(true)
-    if (bucketed && exists) assertBucketLayout()
-    if (!bucketed || !exists) {
-      val keep = read.join(updates.select(keys.map(col): _*), keys, "left_anti")
-      overwriteAtomic(keep.unionByName(updates))
-    } else {
-      val updatesB = updates.withColumn(BUCKET, bucketExpr)
-      val touched = updatesB.select(BUCKET).distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-      if (touched.nonEmpty) {
-        val existing = readB.filter(col(BUCKET).isin(touched: _*))
-        val keep = existing.join(updates.select(keys.map(col): _*), keys, "left_anti")
-        swapBuckets(keep.unionByName(updatesB), touched)
-      }
-    }
-  }
-
-  /** S16 — delete rows matching the predicate. Bucketed: only bucket
-    * partitions that actually contain matching rows are rewritten. */
-  def deleteWhere(cond: Column): Unit = {
-    val hit = coalesce(cond, lit(false))
-    if (bucketed && exists) assertBucketLayout()
-    if (!bucketed || !exists) {
-      overwriteAtomic(read.filter(!hit))
-    } else {
-      val touched = readB.filter(hit).select(BUCKET).distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-      if (touched.nonEmpty) {
-        val remain = readB.filter(col(BUCKET).isin(touched: _*)).filter(!hit)
-        swapBuckets(remain, touched)
-      }
-    }
-  }
-
-  /** S17 — truncate. */
-  def truncate(): Unit = overwriteAtomic(empty)
-
-  def count(): Long = read.count()
-
-  /** Small-file compaction + optional clustering: rewrite the table
-    * into `numFiles` files (per bucket partition when bucketed),
-    * optionally sorted within files so column min/max stats prune
-    * reads (the OPTIMIZE/ZORDER analog for plain parquet). */
-  def compact(numFiles: Int, sortCols: Seq[String] = Nil): Unit = {
-    val df0 =
-      if (bucketed) read.repartition(numBuckets * numFiles, bucketExpr)
-      else read.repartition(numFiles)
-    val df = if (sortCols.nonEmpty)
-      df0.sortWithinPartitions(sortCols.map(col): _*) else df0
-    overwriteAtomic(df)
-  }
-
-  /** OPTIMIZE default: one file per bucket partition when bucketed
-    * (the layout mutations maintain), a handful of files otherwise. */
-  def optimize(): Unit = compact(if (bucketed) 1 else 4)
-
-  def dataFileCount: Int =
-    if (!exists) 0
-    else {
-      val it = fs.listFiles(new Path(dir), true)
-      var n = 0
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      }
-      n
-    }
-
-  /** Write-tmp-and-swap overwrite; readers never observe a partial
-    * directory. */
-  def overwriteAtomic(df: DataFrame): Unit = {
-    val token = UUID.randomUUID().toString.take(8)
-    val tmp = new Path(dir + s".tmp-$token")
-    val old = new Path(dir + s".old-$token")
-    val cur = new Path(dir)
-    writer(df, SaveMode.Overwrite).parquet(tmp.toString)
-    val f = fs
-    if (f.exists(cur)) {
-      if (!f.rename(cur, old))
-        throw new IllegalStateException(s"swap failed: $cur -> $old")
-    }
-    if (!f.rename(tmp, cur))
-      throw new IllegalStateException(s"swap failed: $tmp -> $cur")
-    if (f.exists(old)) f.delete(old, true)
-  }
-
-  /** Partition-scoped atomic swap: write `df` (which must carry `_kb`
-    * and contain only rows of `buckets`) partitioned to a tmp dir, then
-    * rename each touched `_kb=` directory into place. Directories of
-    * untouched buckets are never listed, read, or moved.
-    *
-    * Visibility caveat: each bucket's rename is atomic, but a reader
-    * planning WHILE a multi-bucket mutation is mid-swap can observe
-    * some buckets new and others old. Single-writer batch pipelines
-    * tolerate this (reads happen between jobs); deployments needing a
-    * cross-bucket atomic commit point use [[TxTable]], whose manifest
-    * rename publishes all buckets at once. */
-  private def swapBuckets(df: DataFrame, buckets: Seq[Int]): Unit = {
-    val token = UUID.randomUUID().toString.take(8)
-    val tmp = new Path(dir + s".tmp-$token")
-    val oldRoot = new Path(dir + s".old-$token")
-    conform(df.drop(BUCKET)).withColumn(BUCKET, bucketExpr)
-      .write.mode(SaveMode.Overwrite).partitionBy(BUCKET)
-      .parquet(tmp.toString)
-    val f = fs
-    f.mkdirs(oldRoot)
-    buckets.foreach { b =>
-      val live = new Path(dir, s"$BUCKET=$b")
-      val fresh = new Path(tmp, s"$BUCKET=$b")
-      if (f.exists(live) && !f.rename(live, new Path(oldRoot, s"$BUCKET=$b")))
-        throw new IllegalStateException(s"swap failed: $live")
-      // A bucket can come back empty (all rows deleted): no fresh dir.
-      if (f.exists(fresh) && !f.rename(fresh, live))
-        throw new IllegalStateException(s"swap failed: $fresh -> $live")
-    }
-    f.delete(oldRoot, true)
-    f.delete(tmp, true)
-  }
-}
-
-object Table {
-  /** Internal hash-bucket partition column name (never in `read`). */
-  val BUCKET = "_kb"
 }

@@ -36,11 +36,7 @@ object MergeJob {
     val tracker = new RunTracker(wh)
     tracker.setStatus(params.runId, "running")
     try {
-      val counters =
-        if (wh.transactional)
-          wh.jobTxn(persistTables)(execute(wh, params, merger, tracker))
-        else execute(wh, params, merger, tracker)
-      counters
+      wh.jobTxn(persistTables)(execute(wh, params, merger, tracker))
     } catch {
       case e: Exception =>
         tracker.fail(params.runId, String.valueOf(e.getMessage), params.now)
@@ -54,9 +50,9 @@ object MergeJob {
     val now = lit(params.now)
 
     // P1 — merge input relation. Eagerly materialized (localCheckpoint,
-    // not best-effort cache): the upsert below atomically swaps the
-    // regulation_items directory this plan reads, so a cache-evicted
-    // recomputation would hit the swapped (or vanished) directory.
+    // not best-effort cache): the argmax below, the merger and the
+    // mapped_to links all read it, and each would otherwise re-run
+    // the filter and sort.
     val items = wh.domainTable("regulation_items").read
       .filter(col("jurisdiction") === params.jurisdiction)
       .orderBy(desc("created_at"))
@@ -88,9 +84,9 @@ object MergeJob {
       .withColumn("monitoring_stage",
         coalesce(col("monitoring_stage"), lit(inferredStage.orNull)))
 
-    // V1 + V3 — validate then route. Durable for the same reason as
-    // `items`: review rows and counters are computed from this AFTER
-    // the regulation_items swap.
+    // V1 + V3 — validate then route. Materialized for the same reason
+    // as `items`: the upsert, review rows, links and counters all read
+    // it.
     val routed = Validator.routeItems(
       Validator.validateItems(backfilled, params.confidenceMin))
       .localCheckpoint(true)

@@ -65,11 +65,8 @@ object ScanJob {
       // transaction (jobs/scan.ts:35-94): a failed job leaves no
       // partial doc/item/review/link state. Same boundary here —
       // run status + logs stay OUTSIDE (they must survive a failure).
-      val counters =
-        if (wh.transactional)
-          wh.jobTxn(ScanJob.persistTables)(
-            execute(wh, candidates, params, extractor, embedder, policy, tracker))
-        else execute(wh, candidates, params, extractor, embedder, policy, tracker)
+      val counters = wh.jobTxn(ScanJob.persistTables)(
+        execute(wh, candidates, params, extractor, embedder, policy, tracker))
       tracker.log(params.runId, "complete",
         s"scan done: discovered ${counters.discovered} / accepted ${counters.accepted} / review ${counters.review}",
         params.now)
@@ -152,9 +149,7 @@ object ScanJob {
       // frame (document insert, five ingest sketch batches, the embed
       // input, the extraction input, the lineage links) and each
       // would otherwise re-run the dedupe-window + recency + policy
-      // pipeline over the candidate batch (r21, guide §1.2/§5). Also
-      // required for durability: the review/link reads below survive
-      // the source_documents directory swap insertIfAbsent performs.
+      // pipeline over the candidate batch (r21, guide §1.2/§5).
       .localCheckpoint(true)
 
     val docTable = wh.domainTable("source_documents")
@@ -253,10 +248,10 @@ object ScanJob {
       col("_profile").as("profile_id"))
     val items = extractor.extract(extractDocs, params.jurisdiction, now)
 
-    // V1 + V3 — validate then route. Eagerly materialized so the
-    // review/counter reads below survive the regulation_items
-    // directory swap performed by upsert (cache() is best-effort and
-    // recomputation would re-run the whole extract pipeline).
+    // V1 + V3 — validate then route. Eagerly materialized: the
+    // upsert, review rows, links and counters all read it, and each
+    // would otherwise re-run the whole extract pipeline (cache() is
+    // best-effort).
     val routed = Validator.routeItems(
       Validator.validateItems(items, params.confidenceMin))
       .localCheckpoint(true)

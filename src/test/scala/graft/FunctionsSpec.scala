@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Warehouse
 import graft.functions.VectorFunctions
 
 class FunctionsSpec extends SparkSpec {
@@ -162,29 +161,5 @@ class FunctionsSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS b_facts")
       spark.sql("DROP TABLE IF EXISTS b_dims")
     }
-  }
-
-  test("partitioned table writes hive layout and prunes partitions") {
-    val wh = new Warehouse(spark, tmpDir("part"))
-    val t = wh.table("logs",
-      StructType(Seq(
-        StructField("id", StringType),
-        StructField("msg", StringType),
-        StructField("day", StringType))),
-      keys = Seq("id"),
-      partitionCols = Seq("day"))
-    t.append(Seq(("a", "m1", "2026-01-01"), ("b", "m2", "2026-01-02"),
-      ("c", "m3", "2026-01-02")).toDF("id", "msg", "day"))
-
-    // hive-style directories exist
-    val dirs = new java.io.File(t.dir).listFiles().map(_.getName).toSet
-    assert(dirs.exists(_.startsWith("day=2026-01-01")))
-
-    val q = t.read.filter(col("day") === "2026-01-02")
-    assert(q.count() === 2)
-    // partition pruning visible in the physical plan
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("day#") || plan.contains("isnotnull(day"))
   }
 }

@@ -1,18 +1,19 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Table, Warehouse}
+import graft.core.{TxTable, Warehouse}
 
 class WarehouseSpec extends SparkSpec {
   import spark.implicits._
 
-  private def kv(): Table = {
-    val wh = new Warehouse(spark, tmpDir("wh"))
-    wh.table("kv", StructType(Seq(
-      StructField("k", StringType), StructField("v", IntegerType))), Seq("k"))
-  }
+  /** A keyed table built the way [[Warehouse.domainTable]] builds one. */
+  private def kv(numBuckets: Int = 1): TxTable =
+    new TxTable(spark, s"${tmpDir("wh")}/kv", StructType(Seq(
+      StructField("k", StringType), StructField("v", IntegerType))),
+      Seq("k"), numBuckets)
 
   test("createIfAbsent yields empty readable table") {
     val t = kv(); t.createIfAbsent()
@@ -46,9 +47,11 @@ class WarehouseSpec extends SparkSpec {
 
   test("deleteWhere removes matching rows, keeps null-predicate rows") {
     val t = kv()
-    t.append(Seq(("a", 1), ("b", 2), ("c", 3)).toDF("k", "v"))
+    t.append(Seq(("a", Some(1)), ("b", Some(2)), ("c", Some(3)), ("n", None))
+      .toDF("k", "v"))
     t.deleteWhere(col("v") >= 2)
-    assert(t.read.as[(String, Int)].collect().toSeq === Seq(("a", 1)))
+    assert(t.read.orderBy("k").as[(String, Option[Int])].collect().toSeq ===
+      Seq(("a", Some(1)), ("n", None)))
   }
 
   test("truncate empties but preserves schema") {
@@ -62,13 +65,9 @@ class WarehouseSpec extends SparkSpec {
   test("compact rewrites to the target file count preserving data") {
     val t = kv()
     (1 to 5).foreach(i => t.append(Seq((s"k$i", i)).toDF("k", "v")))
-    val before = new java.io.File(t.dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(before >= 5)
-    t.compact(1, sortCols = Seq("k"))
-    val after = new java.io.File(t.dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(after === 1)
+    assert(t.dataFileCount >= 5)
+    t.compact() // one file per bucket
+    assert(t.dataFileCount === 1)
     assert(t.read.orderBy("k").as[(String, Int)].collect().map(_._2).toSeq ===
       Seq(1, 2, 3, 4, 5))
   }
@@ -80,34 +79,32 @@ class WarehouseSpec extends SparkSpec {
     assert(wh.domainTable("links").read.count() === 0)
   }
 
-  // ---- hash-bucket partitioned tables (partition-pruned mutation) ----
+  // ---- hash-bucketed tables (bucket-scoped mutation) ----
 
-  private def bkv(n: Int = 4): Table = {
-    val wh = new Warehouse(spark, tmpDir("whb"))
-    wh.table("kv", StructType(Seq(
-      StructField("k", StringType), StructField("v", IntegerType))),
-      Seq("k"), numBuckets = n)
-  }
+  /** bucket → the current version's data files, each with its on-disk
+    * (size, mtime). */
+  private type Layout = Map[Int, Map[String, (Long, Long)]]
 
-  /** Recursive (relativePath, size, mtime) snapshot of a table dir. */
-  private def snapshot(dir: String): Map[String, (Long, Long)] = {
-    val root = new java.io.File(dir)
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    walk(root).filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getPath.stripPrefix(root.getPath),
-        (f.length(), f.lastModified()))).toMap
-  }
+  private def layout(t: TxTable): Layout =
+    t.currentFileInfo.groupBy(_.bucket).map { case (b, files) =>
+      b -> files.map { f =>
+        val file = new java.io.File(new Path(f.path).toUri.getPath)
+        f.path -> (file.length(), file.lastModified())
+      }.toMap
+    }
+
+  private def changedBuckets(before: Layout, after: Layout): Set[Int] =
+    (before.keySet ++ after.keySet).filter(b => before.get(b) != after.get(b))
 
   test("bucketed: read hides _kb and preserves schema order") {
-    val t = bkv()
+    val t = kv(4)
     t.append(Seq(("a", 1), ("b", 2)).toDF("k", "v"))
     assert(t.read.schema.fieldNames.toSeq === Seq("k", "v"))
     assert(t.read.count() === 2)
   }
 
   test("bucketed: upsert merges by key and is idempotent") {
-    val t = bkv()
+    val t = kv(4)
     t.append((1 to 40).map(i => (s"k$i", i)).toDF("k", "v"))
     val updates = Seq(("k7", 700), ("new1", 1000)).toDF("k", "v")
     t.upsert(updates)
@@ -120,62 +117,39 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("bucketed: 1-row upsert leaves untouched bucket partitions' files unchanged") {
-    val t = bkv()
+    val t = kv(4)
     t.append((1 to 200).map(i => (s"k$i", i)).toDF("k", "v"))
-    val before = snapshot(t.dir)
-    assert(new java.io.File(t.dir).listFiles().count(_.getName.startsWith("_kb=")) > 1)
+    val before = layout(t)
+    assert(before.size > 1)
     t.upsert(Seq(("k17", -17)).toDF("k", "v"))
-    val after = snapshot(t.dir)
-    val changed = after.keySet.diff(before.keySet) ++
-      before.keySet.diff(after.keySet) ++
-      after.keySet.intersect(before.keySet).filter(p => before(p) != after(p))
-    // every changed file lives in exactly one bucket directory
-    val touchedBuckets = changed.map(_.split("/").find(_.startsWith("_kb=")).get)
-    assert(touchedBuckets.size === 1, s"expected 1 touched bucket, got $touchedBuckets")
-    // and the other buckets' files are byte-identical with original mtimes
-    val untouched = before.keySet.filterNot(p => touchedBuckets.exists(p.contains))
-    assert(untouched.nonEmpty)
-    untouched.foreach(p => assert(before(p) === after(p), s"file $p was rewritten"))
+    // every other bucket keeps the same files, byte-identical with
+    // original mtimes
+    val touched = changedBuckets(before, layout(t))
+    assert(touched.size === 1, s"expected 1 touched bucket, got $touched")
     assert(t.read.as[(String, Int)].collect().toMap.apply("k17") === -17)
   }
 
   test("bucketed: deleteWhere rewrites only buckets containing matches") {
-    val t = bkv()
+    val t = kv(4)
     t.append((1 to 200).map(i => (s"k$i", i)).toDF("k", "v"))
-    val before = snapshot(t.dir)
+    val before = layout(t)
     t.deleteWhere(col("k") === "k42")
-    val after = snapshot(t.dir)
-    val changed = after.keySet.diff(before.keySet) ++
-      before.keySet.diff(after.keySet) ++
-      after.keySet.intersect(before.keySet).filter(p => before(p) != after(p))
-    assert(changed.map(_.split("/").find(_.startsWith("_kb=")).get).size === 1)
+    assert(changedBuckets(before, layout(t)).size === 1)
     assert(t.read.count() === 199)
     assert(t.read.filter(col("k") === "k42").count() === 0)
   }
 
   test("bucketed: insertIfAbsent skips existing keys") {
-    val t = bkv()
+    val t = kv(4)
     t.append(Seq(("a", 1)).toDF("k", "v"))
     t.insertIfAbsent(Seq(("a", 99), ("b", 2)).toDF("k", "v"))
     assert(t.read.orderBy("k").as[(String, Int)].collect().toSeq ===
       Seq(("a", 1), ("b", 2)))
   }
 
-  test("bucketed: lookup prunes to one partition (PartitionFilters) and finds the row") {
-    val t = bkv(8)
-    t.append((1 to 100).map(i => (s"k$i", i)).toDF("k", "v"))
-    val q = t.lookup(Seq("k33"))
-    assert(q.as[(String, Int)].collect().toSeq === Seq(("k33", 33)))
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan)
-    // the bucket predicate constant-folded into the partition filter
-    assert(raw"PartitionFilters: \[[^\]]*_kb[^\]]*=[^\]]*\d".r
-      .findFirstIn(plan).isDefined, plan)
-  }
-
-  test("compactAll sweeps only tables over the file threshold, preserving data") {
-    // explicitly the swap-protocol variant (the tx one is below)
-    val wh = new Warehouse(spark, tmpDir("whopt"), transactional = false)
+  /** A warehouse whose `run_logs` holds 20 single-row files. */
+  private def fragmentedLogs(prefix: String): Warehouse = {
+    val wh = new Warehouse(spark, tmpDir(prefix))
     wh.createAll()
     val logs = wh.domainTable("run_logs")
     (1 to 20).foreach { i =>
@@ -185,56 +159,34 @@ class WarehouseSpec extends SparkSpec {
         .withColumn("created_at", lit(t0).cast(TimestampType)))
     }
     assert(logs.dataFileCount >= 20)
+    wh
+  }
+
+  test("compactAll sweeps only tables over the file threshold, preserving data") {
+    val wh = fragmentedLogs("whopt")
     val swept = wh.compactAll(maxFiles = 16)
     assert(swept.contains("run_logs"))
     val (before, after) = swept("run_logs")
-    assert(before >= 20 && after <= 4)
+    assert(before >= 20 && after <= 16) // one file per non-empty bucket
     assert(wh.domainTable("run_logs").count() === 20)
     // tables under the threshold are untouched
     assert(!swept.contains("regulation_items"))
   }
 
   test("bucketed: deleteWhere with no matches touches nothing") {
-    val t = bkv()
+    val t = kv(4)
     t.append((1 to 50).map(i => (s"k$i", i)).toDF("k", "v"))
-    val before = snapshot(t.dir)
+    val before = layout(t)
     t.deleteWhere(col("k") === "absent")
-    assert(snapshot(t.dir) === before)
-  }
-
-  test("bucketed: mutating an unbucketed legacy layout fails fast; compact migrates it") {
-    val wh = new Warehouse(spark, tmpDir("whmig"))
-    val schema = StructType(Seq(
-      StructField("k", StringType), StructField("v", IntegerType)))
-    // legacy writer: same dir, no bucketing
-    wh.table("kv", schema, Seq("k"))
-      .append(Seq(("a", 1), ("b", 2)).toDF("k", "v"))
-    val bucketed = wh.table("kv", schema, Seq("k"), numBuckets = 4)
-    val e = intercept[IllegalStateException] {
-      bucketed.upsert(Seq(("a", 10)).toDF("k", "v"))
-    }
-    assert(e.getMessage.contains("compact"))
-    bucketed.compact(1) // one-off layout migration
-    bucketed.upsert(Seq(("a", 10)).toDF("k", "v"))
-    assert(bucketed.read.as[(String, Int)].collect().toMap ===
-      Map("a" -> 10, "b" -> 2))
+    assert(layout(t) === before)
   }
 
   test("compactAll on a transactional warehouse compacts AND vacuums to the retention window") {
-    val wh = new Warehouse(spark, tmpDir("whopt-tx"), transactional = true)
-    wh.createAll()
-    val logs = wh.domainTable("run_logs")
-    (1 to 20).foreach { i =>
-      logs.append(Seq((s"l$i", s"run-1", "stage", s"m$i"))
-        .toDF("id", "run_id", "stage", "message")
-        .withColumn("meta", lit(null).cast(StringType))
-        .withColumn("created_at", lit(t0).cast(TimestampType)))
-    }
-    assert(logs.dataFileCount >= 20)
+    val wh = fragmentedLogs("whopt-tx")
     val swept = wh.compactAll(maxFiles = 16, keepVersions = 1, vacuumMinAgeMs = 0L)
     assert(swept("run_logs")._2 <= 16) // one file per non-empty bucket
     assert(wh.domainTable("run_logs").count() === 20)
-    val tx = wh.domainTxTable("run_logs")
+    val tx = wh.domainTable("run_logs")
     assert(tx.versions.length === 1) // retention window enforced
     // physically reclaimed: only the retained version's files remain
     val onDisk = new java.io.File(tx.dir + "/data").listFiles()
