@@ -2671,8 +2671,13 @@ final class TxTable(
       metaOf: Seq[FEntry] => Map[String, String])
       (pre: TxTable.Snapshot => Boolean): Option[(Seq[FEntry], Long, Long)] = {
     createIfAbsent()
+    // stale-mark retries run on the commit TIME budget, as withRetry's
+    // do: each retry re-stages, so under an append storm a writer can
+    // lose many rounds while its competitors land, and an attempt
+    // count would fail it while the storm is still draining
+    val deadline = System.currentTimeMillis() + math.max(0L, commitBudgetMs)
     var attempt = 0
-    while (attempt < 8) {
+    while (attempt == 0 || System.currentTimeMillis() < deadline) {
       attempt += 1
       val ids = identityFields(currentSchema)
       val claims = ids.map(f => f -> identityNext(f))
@@ -2710,8 +2715,8 @@ final class TxTable(
       if (res.isDefined) { maybeAutoCompact(); return res }
       if (!markStale) return None
     }
-    sys.error(s"identity append lost the high-water-mark CAS 8 times " +
-      s"on $dir - an append storm; re-run")
+    sys.error(s"identity append lost the high-water-mark CAS $attempt " +
+      s"times in $commitBudgetMs ms on $dir - an append storm; re-run")
   }
 
   /** Exact row count of just-staged entries from their footer stats;

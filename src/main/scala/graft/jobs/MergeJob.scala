@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Warehouse
+import graft.core.{Pools, Warehouse}
 import graft.domain.{Terms, Validator}
 import graft.pipeline.{Ids, Merger}
 
@@ -17,6 +17,14 @@ import graft.pipeline.{Ids, Merger}
   * requirements gate (V5: only when inferred tier is TIER_A_BINDING)
   * → links incl. the requirement × source-item cartesian (J7,
   * `merge.ts:147-158`) → run meta counters.
+  *
+  * Independent steps overlap on [[graft.core.Pools]] (`∥`), each
+  * commit unchanged and inside the job transaction:
+  *
+  *   [jobTxn: status `running` ∥ items checkpoint → argmax → merge →
+  *   routed checkpoint → items upsert ∥ review insert ∥
+  *   (requirements insert → count) ∥ links insert ∥ merged count ∥
+  *   review count ∥ data-gaps collect → run meta].
   */
 object MergeJob {
 
@@ -34,7 +42,6 @@ object MergeJob {
 
   def run(wh: Warehouse, params: Params, merger: Merger): Counters = {
     val tracker = new RunTracker(wh)
-    tracker.setStatus(params.runId, "running")
     try {
       wh.jobTxn(persistTables)(execute(wh, params, merger, tracker))
     } catch {
@@ -52,11 +59,13 @@ object MergeJob {
     // P1 — merge input relation. Eagerly materialized (localCheckpoint,
     // not best-effort cache): the argmax below, the merger and the
     // mapped_to links all read it, and each would otherwise re-run
-    // the filter and sort.
-    val items = wh.domainTable("regulation_items").read
-      .filter(col("jurisdiction") === params.jurisdiction)
-      .orderBy(desc("created_at"))
-      .localCheckpoint(true)
+    // the filter and sort. The run-status write is independent of it.
+    val (_, items) = Pools.runPair("merge prelude")(
+      "runs" -> (() => tracker.setStatus(params.runId, "running")),
+      "items" -> (() => wh.domainTable("regulation_items").read
+        .filter(col("jurisdiction") === params.jurisdiction)
+        .orderBy(desc("created_at"))
+        .localCheckpoint(true)))
 
     // A5/A6 — argmax by tier rank / stage ordinal over input items.
     val tierRank = Terms.TierRank.foldLeft(lit(0): org.apache.spark.sql.Column) {
@@ -92,7 +101,6 @@ object MergeJob {
       .localCheckpoint(true)
     val accepted = routed.filter(col("_route") === "main")
       .drop("_valid", "_reason", "_route", "_review_reason")
-    wh.domainTable("regulation_items").upsert(accepted)
 
     val review = routed.filter(col("_route") === "review_queue")
     val reviewRows = review.select(
@@ -106,11 +114,6 @@ object MergeJob {
       now.cast(TimestampType).as("created_at"),
       lit(null).cast(TimestampType).as("reviewed_at"),
       lit(null).cast(StringType).as("reviewer"))
-    // insert-if-absent, not append: review ids are deterministic per
-    // (runId, itemId), so a replayed run (streaming retry under the
-    // same child runId — see StreamingMerge) converges instead of
-    // duplicating queue rows. Distinct runIds still queue separately.
-    wh.domainTable("review_queue").insertIfAbsent(reviewRows)
 
     // V2 + V5 — requirements radar, gated on inferred TIER_A.
     val allowRequirements = inferredTier.contains("TIER_A_BINDING")
@@ -118,58 +121,74 @@ object MergeJob {
       .withColumn("_vr", Validator.requirementReason(out.radarTable))
       .filter(col("_vr").isNull).drop("_vr")
       .cache()
-    val nRadar =
-      if (allowRequirements) {
-        wh.domainTable("requirements").insertIfAbsent(validReqs)
-        validReqs.count()
-      } else 0L
-
-    // Links: produced + extracted_from per merged item; produced per
-    // requirement; requirement × source-item cartesian `mapped_to`
-    // (J7 — dimension side is small; Spark broadcasts it).
-    val runLit = lit(params.runId)
-    val itemLinks = accepted.select(
-      lit("Run").as("from_type"), runLit.as("from_id"),
-      lit("RegulationItem").as("to_type"), col("id").as("to_id"),
-      lit("produced").as("relation"))
-    val extractedLinks = accepted.filter(col("source_document_id").isNotNull)
-      .select(
-        lit("SourceDocument").as("from_type"),
-        col("source_document_id").as("from_id"),
+    try {
+      // Links: produced + extracted_from per merged item; produced per
+      // requirement; requirement × source-item cartesian `mapped_to`
+      // (J7 — dimension side is small; Spark broadcasts it).
+      val runLit = lit(params.runId)
+      val itemLinks = accepted.select(
+        lit("Run").as("from_type"), runLit.as("from_id"),
         lit("RegulationItem").as("to_type"), col("id").as("to_id"),
-        lit("extracted_from").as("relation"))
-    val reqIds = if (allowRequirements) validReqs.select(col("id").as("req_id"))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("req_id", StringType))))
-    val reqLinks = reqIds.select(
-      lit("Run").as("from_type"), runLit.as("from_id"),
-      lit("Requirement").as("to_type"), col("req_id").as("to_id"),
-      lit("produced").as("relation"))
-    val mappedLinks = items.select(col("id").as("src_id"))
-      .crossJoin(broadcast(reqIds))
-      .select(
-        lit("RegulationItem").as("from_type"), col("src_id").as("from_id"),
+        lit("produced").as("relation"))
+      val extractedLinks = accepted.filter(col("source_document_id").isNotNull)
+        .select(
+          lit("SourceDocument").as("from_type"),
+          col("source_document_id").as("from_id"),
+          lit("RegulationItem").as("to_type"), col("id").as("to_id"),
+          lit("extracted_from").as("relation"))
+      val reqIds = if (allowRequirements) validReqs.select(col("id").as("req_id"))
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq(StructField("req_id", StringType))))
+      val reqLinks = reqIds.select(
+        lit("Run").as("from_type"), runLit.as("from_id"),
         lit("Requirement").as("to_type"), col("req_id").as("to_id"),
-        lit("mapped_to").as("relation"))
-    val links = Seq(itemLinks, extractedLinks, reqLinks, mappedLinks)
-      .reduce(_ unionByName _)
-      .withColumn("id", Ids.deterministicUuid(concat_ws("|",
-        col("from_type"), col("from_id"), col("to_type"), col("to_id"),
-        col("relation"))))
-      .withColumn("created_at", now.cast(TimestampType))
-    wh.domainTable("links").insertIfAbsent(links)
+        lit("produced").as("relation"))
+      val mappedLinks = items.select(col("id").as("src_id"))
+        .crossJoin(broadcast(reqIds))
+        .select(
+          lit("RegulationItem").as("from_type"), col("src_id").as("from_id"),
+          lit("Requirement").as("to_type"), col("req_id").as("to_id"),
+          lit("mapped_to").as("relation"))
+      val links = Seq(itemLinks, extractedLinks, reqLinks, mappedLinks)
+        .reduce(_ unionByName _)
+        .withColumn("id", Ids.deterministicUuid(concat_ws("|",
+          col("from_type"), col("from_id"), col("to_type"), col("to_id"),
+          col("relation"))))
+        .withColumn("created_at", now.cast(TimestampType))
 
-    val nMerged = accepted.count()
-    val nReview = review.count()
-    val gapsJson = out.dataGaps.toJSON.collect().mkString("[", ",", "]")
-    tracker.complete(params.runId, JsonUtil.obj(
-      "merged" -> nMerged,
-      "radar" -> nRadar,
-      "data_gaps" -> JsonUtil.RawJson(gapsJson),
-      "summary" -> out.summary,
-      "review" -> nReview), params.now)
-    validReqs.unpersist()
-    Counters(nMerged, nRadar, nReview)
+      // The four table writes and the counters read only `items`,
+      // `routed` and the radar — none reads another's output — so
+      // they run together; a failure surfaces only once every running
+      // sibling has finished, before the jobTxn rolls back.
+      val Seq(_, _, nRadar: Long, _, nMerged: Long, nReview: Long,
+          gapsJson: String) = Pools.runAll[Any]("merge persist", 7)(Seq(
+        "regulation_items" -> (() =>
+          wh.domainTable("regulation_items").upsert(accepted)),
+        // insert-if-absent, not append: review ids are deterministic
+        // per (runId, itemId), so a replayed run (streaming retry
+        // under the same child runId — see StreamingMerge) converges
+        // instead of duplicating queue rows. Distinct runIds still
+        // queue separately.
+        "review_queue" -> (() =>
+          wh.domainTable("review_queue").insertIfAbsent(reviewRows)),
+        "requirements" -> (() =>
+          if (allowRequirements) {
+            wh.domainTable("requirements").insertIfAbsent(validReqs)
+            validReqs.count()
+          } else 0L),
+        "links" -> (() => wh.domainTable("links").insertIfAbsent(links)),
+        "merged" -> (() => accepted.count()),
+        "review" -> (() => review.count()),
+        "data_gaps" -> (() =>
+          out.dataGaps.toJSON.collect().mkString("[", ",", "]"))))
+      tracker.complete(params.runId, JsonUtil.obj(
+        "merged" -> nMerged,
+        "radar" -> nRadar,
+        "data_gaps" -> JsonUtil.RawJson(gapsJson),
+        "summary" -> out.summary,
+        "review" -> nReview), params.now)
+      Counters(nMerged, nRadar, nReview)
+    } finally validReqs.unpersist()
   }
 }

@@ -19,7 +19,9 @@ final class RunTracker(wh: Warehouse) {
   private val logs = wh.domainTable("run_logs")
   private val spark = wh.spark
 
-  private var logSeq = 0
+  // atomic: a pipeline run logs from pool threads too, and two log
+  // calls must never share a run_logs id
+  private val logSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Idempotent by runId (insert-if-absent): a streaming micro-batch
     * replay re-creating its child run must not duplicate the row. */
@@ -37,8 +39,7 @@ final class RunTracker(wh: Warehouse) {
 
   def log(runId: String, stage: String, message: String,
       now: Timestamp, meta: Option[String] = None): Unit = {
-    logSeq += 1
-    val id = f"$runId-log-$logSeq%05d"
+    val id = f"$runId-log-${logSeq.incrementAndGet()}%05d"
     val row = Row(id, runId, stage, message, meta.orNull, now)
     logs.append(spark.createDataFrame(
       java.util.Arrays.asList(row), Schemas.runLogs))

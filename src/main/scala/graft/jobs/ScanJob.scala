@@ -25,6 +25,16 @@ import graft.pipeline.{Embedder, Extractor, Ids}
   * crawl → Postgres) collapse into Spark stages; the candidate source
   * is a DataFrame (connector output or fixture).
   *
+  * Independent writes overlap on [[graft.core.Pools]] (`∥`), each
+  * commit unchanged and inside the job transaction:
+  *
+  *   status `running` ∥ log `detect` → [jobTxn: docs checkpoint ∥
+  *   (count → log `triage`) → log `extract` → documents insert ∥
+  *   five sketch batches ∥ (vector store → embed → chunks insert →
+  *   count) ∥ (extract → routed checkpoint → items upsert ∥ review
+  *   append ∥ links insert ∥ two counts)] → log `complete` ∥ run
+  *   meta.
+  *
   * Candidate schema: url, title, content, published_date (ISO string,
   * nullable), connector, connector_rank (int — connector priority
   * order, lower wins dedup).
@@ -55,11 +65,12 @@ object ScanJob {
       extractor: Extractor,
       embedder: Embedder,
       policy: Policy.TrustPolicy = Policy.referencePolicy): Counters = {
-    val spark = wh.spark
     val tracker = new RunTracker(wh)
-    tracker.setStatus(params.runId, "running")
-    tracker.log(params.runId, "detect",
-      s"scanning ${params.jurisdiction} (last ${params.days} days)", params.now)
+    Pools.runAll("scan start", 2)(Seq(
+      "runs" -> (() => tracker.setStatus(params.runId, "running")),
+      "run_logs" -> (() => tracker.log(params.runId, "detect",
+        s"scanning ${params.jurisdiction} (last ${params.days} days)",
+        params.now))))
     try {
       // the reference wraps the persist block in one Postgres
       // transaction (jobs/scan.ts:35-94): a failed job leaves no
@@ -67,15 +78,16 @@ object ScanJob {
       // run status + logs stay OUTSIDE (they must survive a failure).
       val counters = wh.jobTxn(ScanJob.persistTables)(
         execute(wh, candidates, params, extractor, embedder, policy, tracker))
-      tracker.log(params.runId, "complete",
-        s"scan done: discovered ${counters.discovered} / accepted ${counters.accepted} / review ${counters.review}",
-        params.now)
-      tracker.complete(params.runId, JsonUtil.obj(
-        "discovered" -> counters.discovered,
-        "errors" -> JsonUtil.RawJson("[]"),
-        "vector_count" -> counters.vectorCount,
-        "accepted" -> counters.accepted,
-        "review" -> counters.review), params.now)
+      Pools.runAll("scan finish", 2)(Seq(
+        "run_logs" -> (() => tracker.log(params.runId, "complete",
+          s"scan done: discovered ${counters.discovered} / accepted ${counters.accepted} / review ${counters.review}",
+          params.now)),
+        "runs" -> (() => tracker.complete(params.runId, JsonUtil.obj(
+          "discovered" -> counters.discovered,
+          "errors" -> JsonUtil.RawJson("[]"),
+          "vector_count" -> counters.vectorCount,
+          "accepted" -> counters.accepted,
+          "review" -> counters.review), params.now))))
       counters
     } catch {
       case e: Exception =>
@@ -113,10 +125,6 @@ object ScanJob {
         to_date(substring(col("published_date"), 1, 10)) >=
           date_sub(to_date(now), params.days))
 
-    val discovered = fresh.count()
-    tracker.log(params.runId, "triage", s"$discovered candidates after dedup+recency",
-      params.now)
-
     // O3 — head maxResults in deterministic precedence order.
     val limited = fresh
       .orderBy(asc("connector_rank"), asc("c_url"))
@@ -126,7 +134,7 @@ object ScanJob {
     val evaluated = Policy.evaluateSource(spark, limited.drop("c_url"), "url", policy)
 
     // Source documents (S9 insert-if-absent) with deterministic ids.
-    val docs = evaluated.select(
+    val docsPlan = evaluated.select(
       Ids.deterministicUuid(concat(lit("doc:"), col("canonical_url"))).as("id"),
       col("canonical_url").as("url"),
       col("s_domain").as("domain"),
@@ -145,68 +153,92 @@ object ScanJob {
       col("trust_tier").as("_tier"),
       col("monitoring_stage").as("_stage"),
       col("profile_id").as("_profile"))
+
+    // The triage count and the docs checkpoint are independent jobs
+    // over the same candidates: run them together.
+    val (discovered, docs) = Pools.runPair("scan prelude")(
+      "triage" -> (() => {
+        val n = fresh.count()
+        tracker.log(params.runId, "triage",
+          s"$n candidates after dedup+recency", params.now)
+        n
+      }),
       // materialized ONCE (batch-bounded): EIGHT consumers read this
       // frame (document insert, five ingest sketch batches, the embed
       // input, the extraction input, the lineage links) and each
       // would otherwise re-run the dedupe-window + recency + policy
       // pipeline over the candidate batch (r21, guide §1.2/§5).
-      .localCheckpoint(true)
+      "docs" -> (() => docsPlan.localCheckpoint(true)))
 
-    val docTable = wh.domainTable("source_documents")
-    docTable.insertIfAbsent(docs.drop("_published", "_tier", "_stage", "_profile"))
+    tracker.log(params.runId, "extract", "structured extraction", params.now)
 
-    // The five mergeable ingest sketches (HLL distincts, binned
-    // histogram, Misra-Gries term frequencies, rank quantiles,
-    // per-domain KMV) each summarize the SAME checkpointed batch frame
-    // into its own store directory — five INDEPENDENT Spark jobs with
-    // no data dependency between them or on anything later in the
-    // scan. Submitted from a small thread pool so one job's straggler
-    // tail back-fills the others' idle cores (guide §2.6: actions are
-    // only sequential because the driver calls them sequentially);
-    // each job's internal plan, partitioning, and output bytes are
-    // unchanged — PipelineSpec still pins store contents. Failures
-    // propagate: the pool is joined here, inside the jobTxn boundary.
-    // Store semantics (one batch dir per run id, replay-idempotent
-    // overwrite; the 32-bit-hash caveat on the HLL batchId) are
-    // documented in each store.
-    val sketchBatches: Seq[(String, () => Unit)] = Seq(
+    // Four independent branches, each reading only `docs`: the
+    // document insert, the sketch batches, vectorize, and extract →
+    // route → item/review/link writes. No branch writes a table
+    // another one writes or reads, so they run together. Failures
+    // propagate only after every running branch has finished
+    // (Pools.runAll), so the jobTxn rollback never races a branch's
+    // late commit.
+    val Seq(_, _, vectorCount: Long, (nAccepted: Long, nReview: Long)) =
+      Pools.runAll[Any]("scan persist", 4)(Seq(
+        "source_documents" -> (() => wh.domainTable("source_documents")
+          .insertIfAbsent(docs.drop("_published", "_tier", "_stage", "_profile"))),
+        "sketches" -> (() => addSketchBatches(wh, docs, params.runId)),
+        "vector_chunks" -> (() => persistVectors(wh, docs, embedder, params.now)),
+        "routed" -> (() => persistRouted(wh, docs, extractor, params))))
+    Counters(discovered, nAccepted, nReview, vectorCount)
+  }
+
+  /** The five mergeable ingest sketches (HLL distincts, binned
+    * histogram, Misra-Gries term frequencies, rank quantiles,
+    * per-domain KMV) each summarize the SAME checkpointed batch frame
+    * into its own store directory — five INDEPENDENT Spark jobs with
+    * no data dependency between them or on anything later in the
+    * scan. Submitted from a small thread pool so one job's straggler
+    * tail back-fills the others' idle cores (guide §2.6: actions are
+    * only sequential because the driver calls them sequentially);
+    * each job's internal plan, partitioning, and output bytes are
+    * unchanged — PipelineSpec still pins store contents. Store
+    * semantics (one batch dir per run id, replay-idempotent
+    * overwrite; the 32-bit-hash caveat on the HLL batchId) are
+    * documented in each store. */
+  private def addSketchBatches(wh: Warehouse, docs: DataFrame,
+      runId: String): Unit =
+    Pools.runAll("ingest sketch batch", 3)(Seq(
       "hll" -> (() =>
         graft.ext.DistinctSketch.addBatch(docs.select("url", "domain"),
           Seq("url", "domain"), s"${wh.root}/sketches/source_documents",
-          batchId = params.runId.hashCode.toLong)),
+          batchId = runId.hashCode.toLong)),
       "histogram" -> (() =>
         graft.ext.HistogramSketch.addBatchKeyed(
           docs.select((floor(length(col("content")) / 200) * 200)
             .as("len_bucket")),
           Seq("len_bucket"), s"${wh.root}/sketches/source_documents",
-          batchKey = params.runId)),
+          batchKey = runId)),
       "freq" -> (() =>
         graft.ext.FreqSketch.addBatchKeyed(
           docs.select(explode(graft.ext.Dedup.words(col("content")))
             .as("word")),
           "word", s"${wh.root}/sketches/source_documents_freq",
-          batchKey = params.runId)),
+          batchKey = runId)),
       "quantile" -> (() =>
         graft.ext.QuantileSketch.addBatchKeyed(
           docs.select(length(col("content")).cast("double").as("len")),
           "len", s"${wh.root}/sketches/source_documents_quant",
-          batchKey = params.runId)),
+          batchKey = runId)),
       "kmv" -> (() =>
         graft.ext.KmvSketch.addBatchGroupedKeyed(
           docs.select(col("domain"), col("url")),
           "domain", "url", s"${wh.root}/sketches/source_documents_kmvgrp",
-          batchKey = params.runId)))
-    // Pools.runAll cancels the outstanding batches when one fails
-    // (interrupt running, skip queued) BEFORE rethrowing into the
-    // jobTxn unwind — a stray batch must not land a store write after
-    // the transaction has aborted (writes are batch-keyed/idempotent,
-    // so cancellation itself is safe).
-    Pools.runAll("ingest sketch batch", 3)(
-      sketchBatches.map { case (label, job) => label -> (() => job()) })
+          batchKey = runId))))
 
-    // L3 — vectorize (embed title+content, 6000-char cap, single chunk
-    // index 0; `vectorize.ts:6-33`).
-    val localStoreId = ensureLocalStore(wh, params.now)
+  /** L3 — vectorize (embed title+content, 6000-char cap, single chunk
+    * index 0; `vectorize.ts:6-33`) into `vector_chunks`. Returns the
+    * chunk count. */
+  private def persistVectors(wh: Warehouse, docs: DataFrame,
+      embedder: Embedder, nowTs: Timestamp): Long = {
+    val now = lit(nowTs)
+    val localStoreId = ensureLocalStore(wh, nowTs)
     val embedInput = docs.select(col("id"),
       OntoFunctions.truncate(
         concat_ws("\n\n", coalesce(col("title"), lit("")),
@@ -237,9 +269,15 @@ object ScanJob {
       // materialized chunk frame instead of re-embedding (r21)
       .localCheckpoint(true)
     wh.domainTable("vector_chunks").insertIfAbsent(vectors)
-    val vectorCount = vectors.count()
+    vectors.count()
+  }
 
-    tracker.log(params.runId, "extract", "structured extraction", params.now)
+  /** L1 extraction → V1/V3 validate and route → the main-table upsert,
+    * the review rows and the lineage links. Returns (accepted,
+    * review) counts. */
+  private def persistRouted(wh: Warehouse, docs: DataFrame,
+      extractor: Extractor, params: Params): (Long, Long) = {
+    val now = lit(params.now)
 
     // L1 — structured extraction (injected; stub is rule-based).
     val extractDocs = docs.select(col("id"), col("url"), col("title"),
@@ -258,7 +296,6 @@ object ScanJob {
 
     val accepted = routed.filter(col("_route") === "main")
       .drop("_valid", "_reason", "_route", "_review_reason")
-    wh.domainTable("regulation_items").upsert(accepted)
 
     val review = routed.filter(col("_route") === "review_queue")
     val reviewRows = review.select(
@@ -272,7 +309,6 @@ object ScanJob {
       now.cast(TimestampType).as("created_at"),
       lit(null).cast(TimestampType).as("reviewed_at"),
       lit(null).cast(StringType).as("reviewer"))
-    wh.domainTable("review_queue").append(reviewRows)
 
     // J6/J8 — lineage links fan-out (`scan.ts:107-160`).
     val runLit = lit(params.runId)
@@ -300,12 +336,19 @@ object ScanJob {
         col("from_type"), col("from_id"), col("to_type"), col("to_id"),
         col("relation"))))
       .withColumn("created_at", now.cast(TimestampType))
-    wh.domainTable("links").insertIfAbsent(links)
 
-    val nAccepted = accepted.count()
-    val nReview = review.count()
+    // three writes to three tables and two counts, all reading the
+    // checkpointed `routed`: independent, so they run together
+    val Seq(_, _, _, nAccepted: Long, nReview: Long) =
+      Pools.runAll[Any]("scan routed writes", 5)(Seq(
+        "regulation_items" -> (() =>
+          wh.domainTable("regulation_items").upsert(accepted)),
+        "review_queue" -> (() => wh.domainTable("review_queue").append(reviewRows)),
+        "links" -> (() => wh.domainTable("links").insertIfAbsent(links)),
+        "accepted" -> (() => accepted.count()),
+        "review" -> (() => review.count())))
     routed.unpersist()
-    Counters(discovered, nAccepted, nReview, vectorCount)
+    (nAccepted, nReview)
   }
 
   /** Exactly one provider='local' vector store

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.CacheEntries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -122,6 +125,75 @@ class JobTxnSpec extends SparkSpec {
       .filter(col("id") === "run-x").select("status")
       .as[String].collect().toSeq
     assert(run === Seq("failed"))
+  }
+
+  test("a MergeJob failing during its overlapped writes rolls the whole job back") {
+    import graft.core.Warehouse
+    import graft.jobs.{MergeJob, RunTracker, ScanJob}
+    import graft.pipeline.{HashEmbedder, MergeOutput, Merger, RuleExtractor, RuleMerger}
+    // the radar raises at EXECUTION time, so the failure lands in the
+    // requirements/links writes while the item upsert, the review
+    // insert and the counters are in flight beside them
+    object RadarBombMerger extends Merger {
+      def merge(s: org.apache.spark.sql.SparkSession,
+          items: org.apache.spark.sql.DataFrame, jurisdiction: String,
+          now: org.apache.spark.sql.Column): MergeOutput = {
+        val out = RuleMerger.merge(s, items, jurisdiction, now)
+        out.copy(radarTable = out.radarTable.withColumn("owner",
+          raise_error(lit("radar exploded")).cast(StringType)))
+      }
+    }
+    def scanned(tag: String): Warehouse = {
+      val wh = new Warehouse(spark, tmpDir(s"jt-merge-$tag"))
+      wh.createAll()
+      val tracker = new RunTracker(wh)
+      tracker.create("scan-1", "scan", "EU", 30, t0)
+      ScanJob.run(wh, Seq(
+        ("https://eur-lex.europa.eu/eli/reg/2024/1689", "AI Act consolidated",
+          "binding regulation on ai act and gdpr compliance, urgent cybersecurity rules",
+          "2026-01-10", 0),
+        ("https://unece.org/undated-doc", "Undated UNECE doc",
+          "automated driving un r157", null, 0))
+        .toDF("url", "title", "content", "published_date", "connector_rank"),
+        ScanJob.Params("scan-1", "EU", 30, 10, 0.5, t0),
+        RuleExtractor, new HashEmbedder(16))
+      tracker.create("merge-1", "merge", "EU", 0, t0)
+      wh
+    }
+    def contents(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val mergeParams = MergeJob.Params("merge-1", "EU", 0.5, t0)
+
+    val clean = MergeJob.run(scanned("clean"), mergeParams, RuleMerger)
+    assert(clean.radar >= 1, "the radar must have rows for the bomb to fire")
+
+    val wh = scanned("bomb")
+    val tables = MergeJob.persistTables.map(n => n -> wh.domainTable(n))
+    val preJob = tables.map { case (n, t) => n -> t.currentVersion }.toMap
+    val cachedBefore = CacheEntries(spark)
+    val e = intercept[Exception] {
+      MergeJob.run(wh, mergeParams, RadarBombMerger)
+    }
+    assert(causeMessages(e).contains("radar exploded"))
+    tables.foreach { case (n, t) =>
+      assert(contents(t.read) === contents(t.readVersion(preJob(n))),
+        s"$n must be back at its pre-job version ${preJob(n)}")
+    }
+    assert(CacheEntries(spark) === cachedBefore,
+      "a failed merge must release its radar cache")
+    val run = wh.domainTable("runs").read
+      .filter(col("id") === "merge-1").select("status").as[String].collect()
+    assert(run.toSeq === Seq("failed"))
+    // no sibling left a claim marker or a stage directory behind
+    tables.foreach { case (n, _) =>
+      val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(wh.root, n))
+      val leftovers = try stream.iterator().asScala.map(_.getFileName.toString)
+        .filter(f => f.endsWith(".claim") || f.startsWith(".stage-")).toList
+      finally stream.close()
+      assert(leftovers.isEmpty, s"$n: $leftovers")
+    }
+    // the rolled-back warehouse reruns to exactly the clean outcome
+    assert(MergeJob.run(wh, mergeParams, RuleMerger) === clean)
   }
 
   test("rollback never disturbs a concurrent snapshot reader") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.CacheEntries
 import org.apache.spark.sql.functions._
 
 import graft.core.Warehouse
@@ -299,6 +300,44 @@ class PipelineSpec extends SparkSpec {
     assert(new ReviewService(wh).reject("rev-2", t0) === "rejected")
     assert(wh.domainTable("review_queue").read
       .filter(col("status") === "rejected").count() === 1)
+  }
+
+  test("run_logs: concurrent log calls get distinct ids, one row each") {
+    val wh = freshWarehouse()
+    val tracker = new RunTracker(wh)
+    val n = 6
+    graft.core.Pools.runAll("logs", n)((1 to n).map { i =>
+      s"log$i" -> (() => tracker.log("run-c", s"stage$i", s"message $i", t0))
+    })
+    val ids = wh.domainTable("run_logs").read
+      .filter(col("run_id") === "run-c").select("id").as[String].collect()
+    assert(ids.length === n)
+    assert(ids.toSet === (1 to n).map(i => f"run-c-log-$i%05d").toSet)
+  }
+
+  test("approve and reject leave the session cache as they found it") {
+    val wh = freshWarehouse()
+    val payload = """{"id":"item-1","jurisdiction":"EU","title":"t",""" +
+      """"summary_1line":"s","confidence":0.9,"topics":["GDPR"],""" +
+      """"priority":"P1","url":"https://eur-lex.europa.eu/x",""" +
+      """"source_document_id":"doc-1"}"""
+    val queued = Seq("rev-ok" -> payload, "rev-bad" -> "{}",
+      "rev-no" -> payload).map { case (id, p) =>
+      org.apache.spark.sql.Row(id, "RegulationItem", p, "r", "pending", t0,
+        null, null)
+    }
+    wh.domainTable("review_queue").append(spark.createDataFrame(
+      java.util.Arrays.asList(queued: _*), graft.domain.Schemas.reviewQueue))
+    val svc = new ReviewService(wh)
+    val before = CacheEntries(spark)
+    assert(svc.approve("rev-ok", t0) === "approved")
+    assert(CacheEntries(spark) === before, "after approve")
+    assert(svc.approve("rev-ok", t0) === "approved") // no longer pending
+    assert(svc.approve("rev-missing", t0) === "not_found")
+    assert(svc.approve("rev-bad", t0) === "invalid_payload")
+    assert(CacheEntries(spark) === before, "after the early returns")
+    assert(svc.reject("rev-no", t0) === "rejected")
+    assert(CacheEntries(spark) === before, "after reject")
   }
 
   test("full lifecycle: scan and merge commits stay time-travelable") {
