@@ -48,6 +48,22 @@ object Bench {
         Some(-1.0)
     }
 
+  /** Times `runs` executions of one query. A run that throws fails the
+    * query (None): its elapsed time is never recorded, so a fast
+    * failure cannot enter a median or the total as a fast run. */
+  private[graft] def timeRuns(name: String, runs: Int)(
+      q: => Any): Option[Seq[Double]] =
+    try Some((1 to runs).map { _ =>
+      val t0 = System.nanoTime()
+      q
+      (System.nanoTime() - t0) / 1e9
+    })
+    catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] query $name FAILED: $e")
+        None
+    }
+
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(); ()
@@ -93,32 +109,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE rewrite sort-merge → shuffled-hash at runtime when
-      // EVERY post-shuffle build partition is under 64 MB (guide §3.1:
-      // off by default). Runtime-sized per partition, so it converts
-      // only joins whose build side is provably hash-table-small at
-      // ANY corpus size — not a local[32] constant. A/B r22 (quiet
-      // probes in BENCH_HISTORY): the six SMJ-planning queries sum
-      // 5-7% faster in both pairs, q20/p6i/q_table_diff consistently.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.Sessions.defaultCores
+    val spark = graft.core.Sessions.local("graft-bench", cpus)
     // calibration BEFORE any Spark work (idle JVM, cold pool) and
     // again AFTER the measured pass (contended, post-GC-pressure
     // state): the pair brackets the host conditions the query times
     // were taken under
     val (calibBefore, keep1) = calibrate()
     val calibMt = calibrateMt(math.max(1,
-      math.min(cpus.toInt, Runtime.getRuntime.availableProcessors())))
+      math.min(cpus, Runtime.getRuntime.availableProcessors())))
     // Warm-up: trigger codegen/classloading, file listing, and the OS
     // page cache for EVERY table once, so measured times reflect query
     // compute rather than which table happened to be read first (cold
@@ -207,17 +206,15 @@ object Bench {
     val allRuns = selected.map { case (name, fn) =>
       if (gcFence) System.gc()
       val g0 = gcMsNow()
-      val times = (1 to runsN).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
+      val times = timeRuns(name, runsN)(fn(spark, sfDir).count())
       name -> (times, gcMsNow() - g0, rssMbNow())
     }
     val gcByQuery = allRuns.map { case (k, (_, gc, _)) => k -> gc }
     val rssByQuery = allRuns.map { case (k, (_, _, rss)) => k -> rss }
-    val runDetail = allRuns.map { case (k, (ts, _, _)) => k -> ts }
+    val runDetail = allRuns.collect { case (k, (Some(ts), _, _)) => k -> ts }
+    val failed = allRuns.collect { case (k, (None, _, _)) => k }.toSeq.sorted
     val results = runDetail.map { case (k, ts) => k -> ts.sorted.apply(ts.size / 2) }
+    val failedJson = failed.map(k => "\"" + k + "\"").mkString("[", ",", "]")
     // Pipeline-level metric: the §3 scan→merge→review lifecycle on
     // candidates derived from this SF's documents table, one timed
     // run into a throwaway warehouse — job-layer regressions (jobs/,
@@ -290,7 +287,7 @@ object Bench {
     val telemetry =
       s"""{"gc_ms":$gcTotal,"rss_mb":${rssMbNow()},"heap_mb":$heapMb,"gc_fence":$gcFence,"widest_spread":$spreadJson,"calibration":$calibJson}"""
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"median","runs":$runsN,"n_queries":${results.size},"queries":$qs,"fast_queries":$fastJson,"build_seconds":$bs$pipe,"telemetry":$telemetry,"sf":"$sfDir","full":"BENCH_LOCAL.json"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"median","runs":$runsN,"n_queries":${results.size},"failed":$failedJson,"queries":$qs,"fast_queries":$fastJson,"build_seconds":$bs$pipe,"telemetry":$telemetry,"sf":"$sfDir","full":"BENCH_LOCAL.json"}"""
     // durable copy for post-hoc inspection (stdout tail is lossy);
     // carries the complete per-query map and per-run detail the
     // stdout line elides
@@ -308,7 +305,7 @@ object Bench {
         .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val durable =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"median","runs":$runsN,"n_queries":${results.size},"queries":$fullQs,"build_seconds":$bsFull,"tx_prebuild_seconds":$txDetailJson$pipe,"telemetry":$telemetry,"sf":"$sfDir","runs_detail":$detail,"gc_ms":$gcJson,"rss_mb":$rssJson}"""
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"median","runs":$runsN,"n_queries":${results.size},"failed":$failedJson,"queries":$fullQs,"build_seconds":$bsFull,"tx_prebuild_seconds":$txDetailJson$pipe,"telemetry":$telemetry,"sf":"$sfDir","runs_detail":$detail,"gc_ms":$gcJson,"rss_mb":$rssJson}"""
       val w = new java.io.PrintWriter("/root/repo/BENCH_LOCAL.json", "UTF-8")
       try w.println(durable) finally w.close()
       // append-only history: BENCH_LOCAL is overwritten per run, and
@@ -322,5 +319,6 @@ object Bench {
     spark.stop()
     // last line of output, after Spark's shutdown logs
     println(line)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print `explain(formatted)` for named queries (used to
   * refresh PLANS.md after plan-shape changes; not part of the driver
   * contract). Usage: PlanDump <sfDir> <query1,query2,...> */
@@ -16,32 +14,18 @@ object PlanDump {
         (SparkEntry.queries.keySet -- queries.TxQueries.queries.keySet)
           .toArray.sorted
       else args(1).split(",").map(_.trim)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // match Bench's session so dumped plans are the benched plans
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local("graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
-    // Optional 3rd arg "exec": run the query first (noop sink) and
+    // Optional 3rd arg "exec": run the query first (collect) and
     // print the FINAL adaptive plan — the only place runtime
     // ReusedExchange / AQEShuffleRead decisions are visible.
     val exec = args.length > 2 && args(2) == "exec"
     names.foreach { n =>
       println(s"===== $n =====")
       val df = SparkEntry.queries(n)(spark, sfDir)
-      if (exec) {
-        df.collect() // drives THIS QueryExecution so AQE finalizes it
-        println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      } else
-        println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+      if (exec) df.collect() // drives THIS QueryExecution so AQE finalizes it
+      println(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
     }
   }
 }

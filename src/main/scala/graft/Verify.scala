@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,22 +11,23 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None => SparkEntry.queries
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer.empty[String]
+    // Result dumps are written as INT96, the timestamp form
+    // tools/oracle_check.py reads (pandas reads UTC-adjusted micros as
+    // tz-aware and its canon() refuses them). Only the dump write
+    // switches: each frame is built first, so the tables a tx query
+    // builds keep the session's TIMESTAMP_MICROS layout.
+    val tsType = "spark.sql.parquet.outputTimestampType"
+    val sessionTsType = spark.conf.get(tsType)
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val df = fn(spark, sfDir)
+        spark.conf.set(tsType, "INT96")
+        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        finally spark.conf.set(tsType, sessionTsType)
+      } catch { case e: Throwable =>
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

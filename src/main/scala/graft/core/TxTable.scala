@@ -2408,33 +2408,16 @@ final class TxTable(
     * they lack the new columns physically and read as null. Types of
     * existing columns never change. */
   def appendEvolving(df: DataFrame): Unit = {
-    createIfAbsent()
-    // same refusal as appendEvolvingIf: the evolving path widens the
-    // schema inside its commit loop, so identity allocation (which
-    // pins the generated frame to a mark BEFORE staging) cannot ride
-    // it — landing NULL ids silently would be worse than refusing
-    require(identityFields(currentSchema).isEmpty,
-      s"schema-evolving appends into $dir are not supported with " +
-        "IDENTITY columns - use the fixed-schema append path")
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      val target = widen(schemaAt(m), df.schema)
-      stageAndCommit(m.entries, conform(df, target), base, target)
-    }
+    appendEvolvingIf(df, Map.empty)(_ => true)
+    ()
   }
 
   /** [[upsert]] with SCHEMA EVOLUTION (see [[appendEvolving]]).
     * Update rows that omit an existing column null it — upsert is
     * whole-row last-writer-wins, same as the non-evolving path. */
   def upsertEvolving(df: DataFrame): Unit = {
-    createIfAbsent()
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      val target = widen(schemaAt(m), df.schema)
-      upsertOnto(m, conform(df, target), base, target)
-    }
+    upsertEvolvingIf(df, Map.empty)(_ => true)
+    ()
   }
 
   /** S9 — insert keys not present (ON CONFLICT DO NOTHING). */
@@ -2459,18 +2442,8 @@ final class TxTable(
     * applied-source-version watermark, made ATOMIC with the data by
     * riding the same manifest rename (see [[commitMeta]]). */
   def upsert(df: DataFrame, meta: Map[String, String]): Unit = {
-    createIfAbsent()
-    // no localCheckpoint needed: even if `df` derives from this table,
-    // its plan pins the files of the snapshot it was read from, which
-    // a commit never mutates (only vacuum deletes files)
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      val target = schemaAt(m)
-      val updates = df
-        .select(target.fields.map(fl => col(fl.name).cast(fl.dataType)): _*)
-      upsertOnto(m, updates, base, target, meta)
-    }
+    upsertIf(df, meta)(_ => true)
+    ()
   }
 
   /** MERGE-ON-READ upsert: the deletion-vector twin of [[upsert]].
@@ -2544,11 +2517,8 @@ final class TxTable(
   /** Replace the table's entire contents in ONE commit (full-refresh
     * semantics; prior versions stay time-travelable until vacuum). */
   def replace(df: DataFrame, meta: Map[String, String] = Map.empty): Unit = {
-    createIfAbsent()
-    withRetry {
-      val base = currentVersion
-      stageAndCommit(Nil, df, base, currentSchema, meta = meta)
-    }
+    replaceIf(df, meta)(_ => true)
+    ()
   }
 
   /** `REPLACE TABLE … AS SELECT` semantics: ONE guarded commit whose
@@ -2793,6 +2763,9 @@ final class TxTable(
   def upsertIf(df: DataFrame, meta: Map[String, String])
       (pre: TxTable.Snapshot => Boolean): Boolean = {
     createIfAbsent()
+    // no localCheckpoint needed: even if `df` derives from this table,
+    // its plan pins the files of the snapshot it was read from, which
+    // a commit never mutates (only vacuum deletes files)
     withRetry {
       val base = currentVersion
       val m = loadManifest(base)

@@ -610,26 +610,6 @@ class ExtSpec extends SparkSpec {
     assert(capped.components.count() === 0)
   }
 
-  test("MLlib BRP-LSH: cosine kNN and near-dup pairs on unit vectors") {
-    import graft.ext.MllibAnn
-    val emb = (0 until 40).map { i =>
-      val base = if (i % 2 == 0) Array(1.0f, 2.0f, 3.0f, 4.0f)
-      else Array(-4.0f, 3.0f, -2.0f, 1.0f)
-      (i.toLong, base.map(_ * (1.0f + i / 50.0f)))
-    }.toDF("vec_id", "embedding")
-    val top = MllibAnn.approxTopK(emb, "embedding", "vec_id", 0L, 5)
-      .select("id", "cosine").as[(Long, Double)].collect()
-    assert(top.nonEmpty)
-    assert(top.forall { case (id, c) => id % 2 == 0 && c > 0.999 })
-
-    val pairs = MllibAnn
-      .approxNearDupPairs(emb, "embedding", "vec_id", 0.999)
-      .as[(Long, Long, Double)].collect()
-    assert(pairs.nonEmpty)
-    // same-direction vectors only
-    assert(pairs.forall { case (a, b, _) => (a % 2) == (b % 2) })
-  }
-
   test("IVF index: clustered directions get separate lists; ANN finds true neighbours") {
     // two well-separated clusters of scaled directions
     val emb = (0 until 60).map { i =>

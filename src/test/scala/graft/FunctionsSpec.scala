@@ -135,31 +135,4 @@ class FunctionsSpec extends SparkSpec {
     val after = graft.functions.DotProductRewrite(df.queryExecution.analyzed)
     assert(!after.toString.toLowerCase.contains("dotproduct"))
   }
-
-  test("bucketed tables join without any Exchange (co-located join)") {
-    import graft.ext.Bucketing
-    val facts = (0L until 2000L).map(i => (i % 97, i, i * 1.5))
-      .toDF("key", "id", "value")
-    val dims = (0L until 97L).map(i => (i, s"dim-$i")).toDF("key", "name")
-    Bucketing.writeBucketed(facts, "b_facts", "key", 8, Some("key"))
-    Bucketing.writeBucketed(dims, "b_dims", "key", 8, Some("key"))
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      // force a non-broadcast join so bucketing is what saves the shuffle
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val joined = Bucketing.read(spark, "b_facts")
-        .join(Bucketing.read(spark, "b_dims"), "key")
-        .groupBy("key").count()
-      assert(joined.count() === 97)
-      assert(Bucketing.isExchangeFree(joined),
-        joined.queryExecution.executedPlan.toString.take(2000))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.sql("DROP TABLE IF EXISTS b_facts")
-      spark.sql("DROP TABLE IF EXISTS b_dims")
-    }
-  }
 }

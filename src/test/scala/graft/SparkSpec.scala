@@ -6,23 +6,15 @@ import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, one session). */
+/** Shared local session for all suites (one JVM, one session): the
+  * production `Sessions.local`, so the suite runs the engine's plans. */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // match Sessions.local: micros carry parquet footer stats (INT96
-      // doesn't), which TxTable's manifest zone maps read
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session catalog's managed tables go to a temp dir, not the
+    // working directory; SparkConf picks up spark.* system properties
+    System.setProperty("spark.sql.warehouse.dir",
+      Files.createTempDirectory("graft-warehouse").toString)
+    val s = graft.core.Sessions.local("graft-test", 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

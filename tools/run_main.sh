@@ -17,10 +17,8 @@ OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
 --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
 --add-opens=java.base/sun.security.action=ALL-UNNAMED \
 --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
-# 24g default: the 188-query bench in one JVM is GC-bound at 8g
-# (measured 79s -> 69s total at sf0.1 from the heap bump alone);
-# the box has 128 GiB.
-exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-24g} \
+# heap: SPARK_DRIVER_MEM, else build.sbt's 8g fallback
+exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLS" "$@"
