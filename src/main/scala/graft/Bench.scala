@@ -64,6 +64,41 @@ object Bench {
         None
     }
 
+  /** The catalog entries a `SPARK_GRAFT_ONLY` subset selects (None =
+    * the whole catalog), or Left(the subset's names that are not
+    * catalog queries, sorted) — a typo must fail the run, not bench a
+    * fast, nearly empty one. */
+  private[graft] def select[A](only: Option[Set[String]],
+      catalog: Map[String, A]): Either[Seq[String], Map[String, A]] =
+    only match {
+      case None => Right(catalog)
+      case Some(names) =>
+        val unknown = (names -- catalog.keySet).toSeq.sorted
+        if (unknown.nonEmpty) Left(unknown)
+        else Right(catalog.filter(kv => names(kv._1)))
+    }
+
+  /** Everything that failed in one run, sorted: the failed queries,
+    * `pipeline` for a failed lifecycle (-1 seconds), `prebuild:<name>`
+    * per failed tx prebuild and `prebuild` when the index prebuild
+    * itself threw. A non-empty list makes Bench exit 1. */
+  private[graft] def failures(queries: Seq[String],
+      pipelineSec: Option[Double], txPrebuildsFailed: Seq[String],
+      prebuildFailed: Boolean): Seq[String] =
+    (queries ++
+      pipelineSec.filter(_ < 0).map(_ => "pipeline") ++
+      txPrebuildsFailed.map("prebuild:" + _) ++
+      (if (prebuildFailed) Seq("prebuild") else Nil)).sorted
+
+  /** Where a run records BENCH_LOCAL.json and BENCH_HISTORY.jsonl: the
+    * working directory, for full runs only — a dev subset is not
+    * comparable with full runs and must not enter the history. */
+  private[graft] def artifactPaths(only: Option[Set[String]])
+      : Option[(java.io.File, java.io.File)] =
+    if (only.isDefined) None
+    else Some((new java.io.File("BENCH_LOCAL.json").getAbsoluteFile,
+      new java.io.File("BENCH_HISTORY.jsonl").getAbsoluteFile))
+
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(); ()
@@ -109,6 +144,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // dev loop: SPARK_GRAFT_ONLY=q1,q2 benches a subset
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val selected = select(only, SparkEntry.queries) match {
+      case Right(qs) => qs
+      case Left(unknown) =>
+        System.err.println("[bench] SPARK_GRAFT_ONLY names no catalog " +
+          s"query: ${unknown.mkString(",")}")
+        sys.exit(2)
+    }
     val cpus = graft.core.Sessions.defaultCores
     val spark = graft.core.Sessions.local("graft-bench", cpus)
     // calibration BEFORE any Spark work (idle JVM, cold pool) and
@@ -142,39 +187,31 @@ object Bench {
     // 20-30 s txtables warm-up chunk is attributable to named queries
     // instead of one opaque number; the stdout line is unchanged)
     val txPrebuildDetail = Seq.newBuilder[(String, Double)]
+    val txFailed = Seq.newBuilder[String]
+    var prebuildFailed = false
     val builds: Seq[(String, Double)] =
       try {
         val idx = queries.ExtQueries.prebuildIndexes(spark, sfDir)
         val t0 = System.nanoTime()
-        var txFails = 0
         queries.TxQueries.queries.foreach { case (name, fn) =>
           val q0 = System.nanoTime()
           try fn(spark, sfDir).count()
           catch { case e: Throwable =>
-            txFails += 1
-            System.err.println(s"[bench] tx prebuild failed: $e")
+            txFailed += name
+            System.err.println(s"[bench] tx prebuild $name failed: $e")
           }
           txPrebuildDetail += name -> (System.nanoTime() - q0) / 1e9
         }
-        val tx = Seq("txtables" -> (System.nanoTime() - t0) / 1e9)
-        // a failed warm-up re-charges builds to the first probe — that
-        // accounting skew must be VISIBLE, never silent
-        val err = if (txFails > 0)
-          Seq("txtables_errors" -> txFails.toDouble) else Nil
-        idx ++ tx ++ err
+        idx ++ Seq("txtables" -> (System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
+          // a failed warm-up re-charges builds to the first probe: the
+          // run fails (see `failures`) instead of timing that skew
           System.err.println(
             s"[bench] prebuild FAILED — probe times will re-pay builds: $e")
-          Seq("prebuild_error" -> -1.0)
+          prebuildFailed = true
+          Nil
       }
-    // dev loop: SPARK_GRAFT_ONLY=q1,q2 benches a subset
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
     // Median-of-N per query (default 3): this box shows transient
     // ~40-90% outliers on single runs — a median makes a real
     // regression distinguishable from machine noise round over round.
@@ -212,9 +249,7 @@ object Bench {
     val gcByQuery = allRuns.map { case (k, (_, gc, _)) => k -> gc }
     val rssByQuery = allRuns.map { case (k, (_, _, rss)) => k -> rss }
     val runDetail = allRuns.collect { case (k, (Some(ts), _, _)) => k -> ts }
-    val failed = allRuns.collect { case (k, (None, _, _)) => k }.toSeq.sorted
     val results = runDetail.map { case (k, ts) => k -> ts.sorted.apply(ts.size / 2) }
-    val failedJson = failed.map(k => "\"" + k + "\"").mkString("[", ",", "]")
     // Pipeline-level metric: the §3 scan→merge→review lifecycle on
     // candidates derived from this SF's documents table, one timed
     // run into a throwaway warehouse — job-layer regressions (jobs/,
@@ -228,6 +263,9 @@ object Bench {
         try timePipeline(spark, sfDir, root)
         finally deleteRecursively(new java.io.File(root))
       }
+    val failed = failures(allRuns.collect { case (k, (None, _, _)) => k }.toSeq,
+      pipelineSec, txFailed.result(), prebuildFailed)
+    val failedJson = failed.map(k => "\"" + k + "\"").mkString("[", ",", "]")
     // 3-decimal (millisecond) precision: full doubles push the 71-query
     // JSON line past the harness's captured stdout tail and the line
     // arrives truncated/unparseable (observed in BENCH_r03.json).
@@ -286,12 +324,13 @@ object Bench {
       "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val telemetry =
       s"""{"gc_ms":$gcTotal,"rss_mb":${rssMbNow()},"heap_mb":$heapMb,"gc_fence":$gcFence,"widest_spread":$spreadJson,"calibration":$calibJson}"""
+    val full = if (only.isEmpty) ""","full":"BENCH_LOCAL.json"""" else ""
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"median","runs":$runsN,"n_queries":${results.size},"failed":$failedJson,"queries":$qs,"fast_queries":$fastJson,"build_seconds":$bs$pipe,"telemetry":$telemetry,"sf":"$sfDir","full":"BENCH_LOCAL.json"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"median","runs":$runsN,"n_queries":${results.size},"failed":$failedJson,"queries":$qs,"fast_queries":$fastJson,"build_seconds":$bs$pipe,"telemetry":$telemetry,"sf":"$sfDir"$full}"""
     // durable copy for post-hoc inspection (stdout tail is lossy);
     // carries the complete per-query map and per-run detail the
     // stdout line elides
-    try {
+    artifactPaths(only).foreach { case (local, history) => try {
       val fullQs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val detail = runDetail.map { case (k, ts) =>
@@ -306,16 +345,16 @@ object Bench {
         .mkString("{", ",", "}")
       val durable =
         s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"median","runs":$runsN,"n_queries":${results.size},"failed":$failedJson,"queries":$fullQs,"build_seconds":$bsFull,"tx_prebuild_seconds":$txDetailJson$pipe,"telemetry":$telemetry,"sf":"$sfDir","runs_detail":$detail,"gc_ms":$gcJson,"rss_mb":$rssJson}"""
-      val w = new java.io.PrintWriter("/root/repo/BENCH_LOCAL.json", "UTF-8")
+      val w = new java.io.PrintWriter(local, "UTF-8")
       try w.println(durable) finally w.close()
       // append-only history: BENCH_LOCAL is overwritten per run, and
       // the per-round artifact captures only a stdout TAIL — this
       // keeps every run's complete per-query map diffable in-repo
       val ts = java.time.Instant.now().toString
-      val h = new java.io.FileWriter("/root/repo/BENCH_HISTORY.jsonl", true)
+      val h = new java.io.FileWriter(history, true)
       try h.write(durable.stripSuffix("}") + s""","at":"$ts"}""" + "\n")
       finally h.close()
-    } catch { case _: Throwable => () }
+    } catch { case _: Throwable => () } }
     spark.stop()
     // last line of output, after Spark's shutdown logs
     println(line)

@@ -504,22 +504,22 @@ object DeltaExport {
   // parquet and replay only the JSON tail, and the JSON prefix
   // becomes vacuumable.
 
-  private case class CpProtocol(minReaderVersion: Int, minWriterVersion: Int,
+  private[core] case class CpProtocol(minReaderVersion: Int, minWriterVersion: Int,
       readerFeatures: Option[Seq[String]],
       writerFeatures: Option[Seq[String]])
-  private case class CpFormat(provider: String)
-  private case class CpMetaData(id: String, format: CpFormat,
+  private[core] case class CpFormat(provider: String)
+  private[core] case class CpMetaData(id: String, format: CpFormat,
       schemaString: String, partitionColumns: Seq[String],
       configuration: Map[String, String], createdTime: Long)
-  private case class CpDv(storageType: String, pathOrInlineDv: String,
+  private[core] case class CpDv(storageType: String, pathOrInlineDv: String,
       offset: Long, sizeInBytes: Long, cardinality: Long)
-  private case class CpAdd(path: String, partitionValues: Map[String, String],
+  private[core] case class CpAdd(path: String, partitionValues: Map[String, String],
       size: Long, modificationTime: Long, dataChange: Boolean,
       stats: Option[String], deletionVector: Option[CpDv],
       baseRowId: Option[Long], defaultRowCommitVersion: Option[Long])
-  private case class CpDomainMetadata(domain: String,
+  private[core] case class CpDomainMetadata(domain: String,
       configuration: String, removed: Boolean)
-  private case class CpRow(protocol: Option[CpProtocol],
+  private[core] case class CpRow(protocol: Option[CpProtocol],
       metaData: Option[CpMetaData], add: Option[CpAdd],
       domainMetadata: Option[CpDomainMetadata] = None)
 

@@ -324,13 +324,21 @@ final class TxTable(
 
   def exists: Boolean = fs.exists(new Path(manifestDir))
 
-  def versions: Seq[Long] =
+  def versions: Seq[Long] = manifestListing.map(_._1)
+
+  /** (version, manifest mtime) of every retained manifest, ascending —
+    * one directory listing; the mtime identifies a manifest file for
+    * [[carriedMeta]]. */
+  private def manifestListing: Seq[(Long, Long)] =
     if (!exists) Nil
     else fs.listStatus(new Path(manifestDir)).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".tsv"))
-      .map(n => n.stripPrefix("v").stripSuffix(".tsv").toLong)
-      .sorted
+      .filter { st =>
+        val n = st.getPath.getName
+        n.startsWith("v") && n.endsWith(".tsv")
+      }
+      .map(st => st.getPath.getName.stripPrefix("v").stripSuffix(".tsv")
+        .toLong -> st.getModificationTime)
+      .sortBy(_._1)
 
   def currentVersion: Long = versions.lastOption.getOrElse(-1L)
 
@@ -389,6 +397,52 @@ final class TxTable(
     versions.reverseIterator.map(commitMeta(_).get(key))
       .collectFirst { case Some(v) => v }
       .filterNot(_ == TxTable.MetaTombstone)
+
+  /** The governance meta keys ([[TxTable.CarriedMetaKeys]]) at the
+    * head, carried forward per table DIRECTORY in a cache every
+    * instance over that directory shares ([[Warehouse.domainTable]]
+    * opens a fresh instance per call, so a per-instance cache is cold
+    * on every pipeline write). A read at a new head loads only the
+    * manifests committed since the cached version — one manifest per
+    * append instead of the whole retained history, which a key no
+    * commit declares (most tables set no TBLPROPERTIES) otherwise
+    * walks on every write. The cached version is trusted only while
+    * its manifest is still listed with the same mtime: a vacuumed
+    * cached version, a head below it, or a dropped-and-recreated
+    * directory refolds from the retained manifests. Folding oldest to
+    * newest gives [[latestMeta]]'s newest-wins answer; a tombstone
+    * clears the key, except that CHECK and dropped-column tombstones
+    * are skipped ([[dropMeta]] refuses both keys, and a tombstone from
+    * before that refusal must not disable validation or the
+    * resurrection guard). */
+  private def carriedMeta: Map[String, String] = {
+    val listing = manifestListing
+    if (listing.isEmpty) Map.empty
+    else {
+      val (head, headMtime) = listing.last
+      val cacheKey = fs.makeQualified(new Path(dir)).toString
+      val cached = Option(TxTable.metaCarries.get(cacheKey))
+        .filter(c => listing.contains(c.version -> c.mtime))
+      cached match {
+        case Some(c) if c.version == head => c.values
+        case _ =>
+          val floor = cached.fold(-1L)(_.version)
+          val values = listing.iterator.map(_._1).filter(_ > floor)
+            .foldLeft(cached.fold(Map.empty[String, String])(_.values)) {
+              (acc, v) =>
+                commitMeta(v).foldLeft(acc) {
+                  case (a, (k, _)) if !TxTable.CarriedMetaKeys(k) => a
+                  case (a, (k, x)) if x != TxTable.MetaTombstone => a + (k -> x)
+                  case (a, (k, _)) =>
+                    if (k == "checks" || k == "dropped_cols") a else a - k
+                }
+            }
+          TxTable.metaCarries.put(cacheKey,
+            TxTable.MetaCarry(head, headMtime, values))
+          values
+      }
+    }
+  }
 
   /** [[latestMeta]] pinned AT a version: newest value for `key` among
     * retained commits `<= v`. Guarded commits hand their precondition
@@ -642,32 +696,14 @@ final class TxTable(
     }
   }
 
-  @volatile private var droppedCache: Option[(Long, Set[String])] = None
-
   /** Column names (lowercased) ever retired by [[dropColumns]] —
     * permanently unavailable for re-adding (resurrection guard; see
-    * [[dropColumns]]). Carried forward like [[checkConstraints]]:
-    * each drop commit declares the full cumulative set, lookups load
-    * only manifests newer than the cached version. */
-  def droppedColumns: Set[String] = {
-    val head = currentVersion
-    if (head < 0) Set.empty
-    else droppedCache match {
-      case Some((v, s)) if v == head => s
-      case cached =>
-        val floor = cached.map(_._1).getOrElse(-1L)
-        // tombstones are skipped defensively (dropMeta refuses the key
-        // now, but a pre-refusal tombstone must not disable the guard)
-        val declared = versions.filter(_ > floor).sorted.reverseIterator
-          .map(v => commitMeta(v).get("dropped_cols")
-            .filterNot(_ == TxTable.MetaTombstone))
-          .collectFirst { case Some(s) =>
-            s.split(",").map(_.trim).filter(_.nonEmpty).toSet }
-        val s = declared.orElse(cached.map(_._2)).getOrElse(Set.empty)
-        droppedCache = Some((head, s))
-        s
-    }
-  }
+    * [[dropColumns]]). Each drop commit declares the full cumulative
+    * set; read through [[carriedMeta]]. */
+  def droppedColumns: Set[String] =
+    carriedMeta.get("dropped_cols")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty)
 
   /** ALTER COLUMN <c> TYPE <wider> as a METADATA-ONLY commit — the
     * type-widening lifecycle op done the cheap sound way: Spark 4's
@@ -817,9 +853,10 @@ final class TxTable(
 
   /** User TBLPROPERTIES at the current version: the full map rides ONE
     * commit-meta key per change (newest declaration wins outright),
-    * the same carry [[checkConstraints]] uses. */
+    * read through [[carriedMeta]] like [[checkConstraints]]. */
   def tableProperties: Map[String, String] =
-    latestMeta(TxTable.TblPropsKey).map(decodeChecks).getOrElse(Map.empty)
+    carriedMeta.get(TxTable.TblPropsKey).map(decodeChecks)
+      .getOrElse(Map.empty)
 
   /** SET TBLPROPERTIES: merge `props` into the current map (one
     * metadata-only commit, data untouched). */
@@ -1042,7 +1079,7 @@ final class TxTable(
     * per-column stats). One meta read at the head — planner-path
     * cheap. */
   def columnAnalysis: Option[(Long, Map[String, TxTable.ColAnalysis])] =
-    latestMeta(TxTable.ColStatsKey).flatMap { raw =>
+    carriedMeta.get(TxTable.ColStatsKey).flatMap { raw =>
       scala.util.Try {
         import org.json4s._
         val j = org.json4s.jackson.JsonMethods.parse(raw)
@@ -1119,33 +1156,13 @@ final class TxTable(
       case _ => Map.empty
     }
 
-  /** (version, active set) — constraints change rarely, so the set is
-    * carried forward version-by-version: a lookup at a new head loads
-    * ONLY the manifests newer than the cached version (one JSON read
-    * per commit since, not a full history walk per write). */
-  @volatile private var checksCache: Option[(Long, Map[String, String])] =
-    None
-
   /** Active CHECK constraints (name → SQL predicate) at the current
     * version. The full set is declared under ONE meta key per change,
     * so the newest declaration wins outright (no per-key tombstone
-    * folding). */
-  def checkConstraints: Map[String, String] = {
-    val head = currentVersion
-    if (head < 0) Map.empty
-    else checksCache match {
-      case Some((v, m)) if v == head => m
-      case cached =>
-        val floor = cached.map(_._1).getOrElse(-1L)
-        val declared = versions.filter(_ > floor).sorted.reverseIterator
-          .map(v => commitMeta(v).get("checks")
-            .filterNot(_ == TxTable.MetaTombstone))
-          .collectFirst { case Some(s) => decodeChecks(s) }
-        val m = declared.orElse(cached.map(_._2)).getOrElse(Map.empty)
-        checksCache = Some((head, m))
-        m
-    }
-  }
+    * folding); read through [[carriedMeta]], which loads only the
+    * manifests committed since the cached version. */
+  def checkConstraints: Map[String, String] =
+    carriedMeta.get("checks").map(decodeChecks).getOrElse(Map.empty)
 
   /** SQL-standard CHECK semantics: a NULL predicate PASSES (only
     * definite FALSE violates). */
@@ -1949,11 +1966,14 @@ final class TxTable(
       changes(cur, cur).withColumn("_commit_version", lit(cur)))
   }
 
-  /** Point lookup via MANIFEST pruning: the key's bucket is computed
-    * driver-side with the same Murmur3 (seed 42) Spark's `hash()`
-    * uses, and only that bucket's files are planned — metadata-level
-    * data skipping, no directory listing of the other buckets. */
-  def lookup(values: Seq[Any]): DataFrame = {
+  /** The bucket of one key tuple, computed driver-side with the same
+    * Murmur3 (seed 42) Spark's `hash()` uses (or the Iceberg bucket
+    * transform), plus the key's null-safe equality predicate over a
+    * schema's CURRENT declared key names. NULL-keyed rows are
+    * first-class (see [[keyMatchJoin]]) and must be findable — `===`
+    * would filter them out silently. Renamed keys hash identically:
+    * values, not names, feed the bucket hash. */
+  private def keyAddress(values: Seq[Any]): (Int, StructType => Column) = {
     require(values.length == keys.length, s"expected ${keys.length} key values")
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash}
     val lits = keys.zip(values).map { case (k, v) =>
@@ -1972,24 +1992,96 @@ final class TxTable(
           .bucketOf(v, lits.head.dataType, numBuckets)).getOrElse(0)
       else math.floorMod(
         Murmur3Hash(lits, 42).eval(null).asInstanceOf[Int], numBuckets)
-    // null-safe: NULL-keyed rows are first-class (see keyMatchJoin) and
-    // must be findable — `===` would filter them out silently.
-    // Predicates bind the CURRENT declared key names (renamed keys
-    // hash identically — values, not names, feed the bucket hash).
     def keyPredFor(s: StructType) =
       logicalKeyNames(s).zip(keys.zip(values)).map { case (lk, (k, v)) =>
         col(lk) <=> lit(v).cast(schema(k).dataType)
       }.reduce(_ && _)
+    (b, keyPredFor)
+  }
+
+  /** The files of version `m` that may hold the key: its bucket's
+    * entries, narrowed by zone maps and then bloom filters. */
+  private def keyCandidates(m: Manifest, bucket: Int, keyPred: Column,
+      s: StructType): Seq[FEntry] =
+    pruneEntries(m.entries.filter(_.bucket == bucket), keyPred, s)
+
+  /** Point lookup via MANIFEST pruning: only the key's bucket's files
+    * are planned ([[keyAddress]]) — metadata-level data skipping, no
+    * directory listing of the other buckets. */
+  def lookup(values: Seq[Any]): DataFrame = {
+    val (b, keyPredFor) = keyAddress(values)
     val v0 = currentVersion
     if (v0 < 0) emptyDfFor(schema).filter(keyPredFor(schema))
     else {
       val m = loadManifest(v0)
       val s = schemaAt(m)
       val keyPred = keyPredFor(s)
-      val picked = pruneEntries( // bucket pruning, then zone maps within
-        m.entries.filter(_.bucket == b), keyPred, s)
-      readEntries(picked, s).filter(keyPred)
+      readEntries(keyCandidates(m, b, keyPred, s), s).filter(keyPred)
     }
+  }
+
+  /** S13/S14 — `UPDATE t SET c = v, … WHERE key = k` in one pruned
+    * pass: only the files that may hold the key ([[keyCandidates]])
+    * are read (deletion-vector masks applied), each `set` column is
+    * projected as `when(key matches, value).otherwise(current)`, and
+    * the rewrite replaces exactly those files; every other entry,
+    * including the bucket's other files, is re-linked untouched. The
+    * rewrite stages without a shuffle (every row is already in the
+    * key's bucket), so a warm one-row flip is one Spark job.
+    *
+    * Values are columns evaluated over the row BEFORE the update (SQL
+    * UPDATE semantics: `SET a = b, b = a` swaps) and cast to the
+    * column's type; columns are named by their current declared
+    * (logical) names. Generated columns that depend on a set column
+    * recompute for the matched row only (Delta's UPDATE semantics);
+    * CHECK constraints gate the staged rows. Refused: a key column
+    * (its bucket hash would move) and a generated column (its value is
+    * the expression's).
+    *
+    * A key no file can hold starts no job and commits no version. A
+    * bloom-filter false positive rewrites the picked file unchanged
+    * and so commits a version with identical content. */
+  def updateKey(values: Seq[Any], set: Map[String, Column]): Unit = {
+    require(set.nonEmpty, "updateKey needs at least one column to set")
+    val (b, keyPredFor) = keyAddress(values)
+    withRetry {
+      val base = currentVersion
+      if (base >= 0) {
+        val m = loadManifest(base)
+        val s = schemaAt(m)
+        val byName = set.map { case (c, v) =>
+          val f = s.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
+            throw new IllegalArgumentException(s"no column '$c' in $dir"))
+          require(!logicalKeyNames(s).exists(_.equalsIgnoreCase(f.name)),
+            s"updateKey cannot set key column '${f.name}' (its bucket " +
+              "would move)")
+          require(!f.metadata.contains(TxTable.GeneratedExprKey),
+            s"updateKey cannot set generated column '${f.name}'")
+          f.name -> v
+        }
+        val keyPred = keyPredFor(s)
+        val picked = keyCandidates(m, b, keyPred, s)
+        if (picked.nonEmpty) {
+          // generated columns over a set column: null on the matched
+          // row, so staging recomputes them from the new values
+          val stale = generatedFields(s).filter { g =>
+            spark.sessionState.sqlParser
+              .parseExpression(g.metadata.getString(TxTable.GeneratedExprKey))
+              .references.exists(a => byName.keys.exists(_.equalsIgnoreCase(a.name)))
+          }.map(_.name).toSet
+          val updated = readEntries(picked, s).select(s.fields.map { f =>
+            val v = byName.get(f.name).map(_.cast(f.dataType))
+              .orElse(if (stale(f.name)) Some(lit(null).cast(f.dataType)) else None)
+            v.fold(col(f.name))(x =>
+              when(keyPred, x).otherwise(col(f.name)).as(f.name))
+          }.toSeq: _*)
+          val pickedPaths = picked.map(_.path).toSet
+          stageAndCommit(m.entries.filterNot(e => pickedPaths(e.path)),
+            updated, base, s, verifyGenerated = false, oneBucket = true)
+        }
+      }
+    }
+    ()
   }
 
   // ---- writes ----
@@ -2072,7 +2164,10 @@ final class TxTable(
       /** false on REWRITE/MAINTENANCE paths: re-staged rows passed
         * admission once; see [[applyGenerated]]'s session-dependence
         * rationale. Fresh-data paths keep the per-row equality check. */
-      verifyGenerated: Boolean = true): (Seq[FEntry], Path) = {
+      verifyGenerated: Boolean = true,
+      /** every row of `df` is in one bucket (a key-addressed rewrite):
+        * one task writes one file, with no shuffle to group buckets. */
+      oneBucket: Boolean = false): (Seq[FEntry], Path) = {
     val f = fs
     val stage = new Path(dir, s".stage-${UUID.randomUUID().toString.take(8)}")
     val withGen = applyGenerated(df, asSchema, verifyGenerated)
@@ -2087,6 +2182,7 @@ final class TxTable(
     enforceChecks(projected)
     val cast = projected.withColumn("_kb", bucketExprFor(asSchema))
     val laidOut = layout match {
+      case None if oneBucket => cast.coalesce(1)
       case None => cast.repartition(col("_kb"))
       case Some(key) =>
         // range-split each bucket on the layout key and sort files by
@@ -2177,9 +2273,9 @@ final class TxTable(
         * (identity high-water marks need the staged max id). */
       metaOf: Option[Seq[FEntry] => Map[String, String]] = None,
       layoutPartitions: Option[Int] = None,
-      verifyGenerated: Boolean = true): Long = {
+      verifyGenerated: Boolean = true, oneBucket: Boolean = false): Long = {
     val (staged, stage) = stageFiles(df, asSchema, layout, filesPerBucket,
-      layoutPartitions, verifyGenerated)
+      layoutPartitions, verifyGenerated, oneBucket)
     try commit(keep ++ staged, base, Some(asSchema),
       metaOf.fold(meta)(f => meta ++ f(staged)))
     finally fs.delete(stage, true)
@@ -3923,12 +4019,42 @@ object TxTable {
     * plausible application value space. */
   val MetaTombstone: String = "\u0000tombstone\u0000"
 
+  // declared before the key sets below: object vals initialize in
+  // order, and a forward reference would put null in the sets
+  /** Commit-meta key carrying the user TBLPROPERTIES map (JSON). */
+  val TblPropsKey: String = "tblproperties"
+
+  /** Commit-meta key carrying ANALYZE column statistics (JSON). */
+  val ColStatsKey: String = "colstats"
+
   /** Commit-meta keys that carry table GOVERNANCE state, not consumer
     * watermarks — [[TxTable.dropMeta]] refuses them (a tombstone would
     * silently disable CHECK validation / the dropped-column
     * resurrection guard). */
   val ReservedMetaKeys: Set[String] = Set("checks", "dropped_cols",
     TblPropsKey)
+
+  /** The commit-meta keys [[TxTable.carriedMeta]] carries forward:
+    * the governance keys plus the ANALYZE stats every planned read
+    * consults. */
+  private[core] val CarriedMetaKeys: Set[String] =
+    ReservedMetaKeys + ColStatsKey
+
+  /** One table directory's [[CarriedMetaKeys]] values as of `version`,
+    * whose manifest had modification time `mtime`. */
+  private[core] final case class MetaCarry(version: Long, mtime: Long,
+      values: Map[String, String])
+
+  /** Carried meta per qualified table directory, shared by every
+    * instance in the JVM; LRU-bounded so a process that opens many
+    * short-lived tables does not grow it without limit. */
+  private[core] val metaCarries: java.util.Map[String, MetaCarry] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[String, MetaCarry](64, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, MetaCarry]): Boolean =
+          size() > 1024
+      })
 
   /** Whether any column (nested included) is Spark 4's VARIANT. */
   private[graft] def hasVariantType(
@@ -3965,12 +4091,6 @@ object TxTable {
         case None    => spark.conf.unset(key)
       }
     }
-
-  /** Commit-meta key carrying the user TBLPROPERTIES map (JSON). */
-  val TblPropsKey: String = "tblproperties"
-
-  /** Commit-meta key carrying ANALYZE column statistics (JSON). */
-  val ColStatsKey: String = "colstats"
 
   /** One column's ANALYZE result: NDV, plus avg/max byte length for
     * strings (CBO's row-width inputs), plus an optional equi-height

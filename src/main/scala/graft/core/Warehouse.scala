@@ -9,6 +9,7 @@ import org.apache.spark.sql.SparkSession
   *  - `append`           — plain INSERT (S12)
   *  - `insertIfAbsent`   — INSERT .. ON CONFLICT DO NOTHING (S9)
   *  - `upsert`           — INSERT .. ON CONFLICT DO UPDATE (S10/S13)
+  *  - `updateKey`        — UPDATE .. WHERE key = k (S13/S14)
   *  - `deleteWhere`      — DELETE (S16)
   *  - `truncate`         — TRUNCATE (S17)
   */

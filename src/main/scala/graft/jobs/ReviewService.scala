@@ -72,9 +72,7 @@ final class ReviewService(wh: Warehouse) {
   }
 
   private def setStatus(reviewId: String, status: String, now: Timestamp): Unit = {
-    val queue = wh.domainTable("review_queue")
-    queue.upsert(queue.lookup(Seq(reviewId))
-      .withColumn("status", lit(status))
-      .withColumn("reviewed_at", lit(now).cast(TimestampType)))
+    wh.domainTable("review_queue").updateKey(Seq(reviewId),
+      Map("status" -> lit(status), "reviewed_at" -> lit(now)))
   }
 }

@@ -34,8 +34,7 @@ final class RunTracker(wh: Warehouse) {
   }
 
   def setStatus(runId: String, status: String): Unit =
-    runs.upsert(runs.lookup(Seq(runId))
-      .withColumn("status", lit(status)))
+    runs.updateKey(Seq(runId), Map("status" -> lit(status)))
 
   def log(runId: String, stage: String, message: String,
       now: Timestamp, meta: Option[String] = None): Unit = {
@@ -64,8 +63,8 @@ final class RunTracker(wh: Warehouse) {
     val rightMap = coalesce(from_json(lit(patchJson), mapType), map().cast(mapType))
     val leftOnly = map_filter(leftMap,
       (k, _) => !array_contains(map_keys(rightMap), k))
-    runs.upsert(runs.lookup(Seq(runId))
-      .withColumn("meta", to_json(map_concat(leftOnly, rightMap))))
+    runs.updateKey(Seq(runId),
+      Map("meta" -> to_json(map_concat(leftOnly, rightMap))))
   }
 
   def fail(runId: String, error: String, now: Timestamp): Unit =
@@ -73,10 +72,8 @@ final class RunTracker(wh: Warehouse) {
 
   private def finish(runId: String, status: String, metaJson: String,
       now: Timestamp): Unit =
-    runs.upsert(runs.lookup(Seq(runId))
-      .withColumn("status", lit(status))
-      .withColumn("completed_at", lit(now))
-      .withColumn("meta", lit(metaJson)))
+    runs.updateKey(Seq(runId), Map("status" -> lit(status),
+      "completed_at" -> lit(now), "meta" -> lit(metaJson)))
 }
 
 /** Minimal JSON building for run meta (open-map JSONB analog). */

@@ -469,6 +469,177 @@ class TxTableSpec extends SparkSpec {
     assert(t.read.as[(String, Int)].collect().toSet === before)
   }
 
+  /** Spark jobs started while `body` runs (listener bus drained on
+    * both sides, so earlier jobs' events never count). */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
+  private def kvRows(t: TxTable): Map[String, Int] =
+    t.read.as[(String, Int)].collect().toMap
+
+  test("updateKey changes only the keyed row in one job; other buckets' files keep their paths") {
+    val t = tkv()
+    t.append((1 to 200).map(i => (s"k$i", i)).toDF("k", "v"))
+    t.updateKey(Seq("k1"), Map("v" -> lit(0))) // warm the write path
+    def live = t.currentFileInfo.map(_.path).toSet
+    val before = live
+    val rowsBefore = kvRows(t)
+    val jobs = jobsDuring(t.updateKey(Seq("k17"), Map("v" -> lit(-17))))
+    assert(jobs === 1, "a warm one-row flip is one Spark job")
+    assert(kvRows(t) === rowsBefore.updated("k17", -17))
+    // one file was rewritten; the other three buckets' files re-link
+    val after = live
+    assert((before -- after).size === 1 && (after -- before).size === 1)
+  }
+
+  test("updateKey of a key no file can hold starts no job and commits no version") {
+    val t = tkv()
+    t.append((1 to 200).map(i => (s"k$i", i)).toDF("k", "v"))
+    val v = t.currentVersion
+    // above every file's key range: the zone maps rule it out
+    val jobs = jobsDuring(t.updateKey(Seq("zzz"), Map("v" -> lit(1))))
+    assert(jobs === 0)
+    assert(t.currentVersion === v)
+    // an empty table is a no-op too
+    val empty = tkv()
+    empty.updateKey(Seq("a"), Map("v" -> lit(1)))
+    assert(empty.currentVersion === -1L)
+  }
+
+  test("updateKey keeps a deletion vector's tombstoned rows deleted") {
+    val t = tkv(n = 1)
+    t.append((1 to 50).map(i => (s"k$i", i)).toDF("k", "v"))
+    t.deleteWhereLight(col("k") === "k5")
+    t.updateKey(Seq("k7"), Map("v" -> lit(700)))
+    val got = kvRows(t)
+    assert(got.size === 49 && !got.contains("k5") && got("k7") === 700)
+    assert(t.count() === 49L)
+  }
+
+  test("updateKey sets a renamed column, keyed by a renamed key, by their logical names") {
+    val t = tkv()
+    t.append((1 to 40).map(i => (s"k$i", i)).toDF("k", "v"))
+    t.renameColumn("v", "val")
+    t.renameColumn("k", "id")
+    t.updateKey(Seq("k3"), Map("val" -> lit(33)))
+    val got = t.read.select("id", "val").as[(String, Int)].collect().toMap
+    assert(got.size === 40 && got("k3") === 33 && got("k4") === 4)
+  }
+
+  test("updateKey refuses a key column or an unknown column") {
+    val t = tkv()
+    t.append(Seq(("a", 1)).toDF("k", "v"))
+    val v = t.currentVersion
+    intercept[IllegalArgumentException](
+      t.updateKey(Seq("a"), Map("k" -> lit("b"))))
+    intercept[IllegalArgumentException](
+      t.updateKey(Seq("a"), Map("nope" -> lit(1))))
+    assert(t.currentVersion === v && kvRows(t) === Map("a" -> 1))
+  }
+
+  test("updateKey violating a CHECK constraint leaves the table unchanged") {
+    val t = tkv()
+    t.append((1 to 20).map(i => (s"k$i", i)).toDF("k", "v"))
+    t.addCheckConstraint("v_pos", "v > 0")
+    val v = t.currentVersion
+    val e = intercept[IllegalArgumentException](
+      t.updateKey(Seq("k2"), Map("v" -> lit(-1))))
+    assert(e.getMessage.contains("v_pos"))
+    assert(t.currentVersion === v)
+    assert(kvRows(t) === (1 to 20).map(i => s"k$i" -> i).toMap)
+  }
+
+  test("updateKey recomputes generated columns over a set column for the matched row only") {
+    def gen(sql: String) = new MetadataBuilder()
+      .putString(TxTable.GeneratedExprKey, sql).build()
+    val t = new TxTable(spark, tmpDir("txgen") + "/g", StructType(Seq(
+      StructField("k", StringType), StructField("ts", TimestampType),
+      StructField("v", IntegerType),
+      StructField("yr", IntegerType, nullable = true, gen("year(ts)")),
+      StructField("dbl", IntegerType, nullable = true, gen("v * 2")))),
+      Seq("k"), numBuckets = 1)
+    val ts = java.sql.Timestamp.valueOf("1995-12-31 23:30:00") // UTC
+    t.append(Seq(("a", ts, 1), ("b", ts, 2)).toDF("k", "ts", "v"))
+    def rows = t.read.select("k", "yr", "dbl").as[(String, Int, Int)]
+      .collect().sortBy(_._1).toSeq
+    assert(rows === Seq(("a", 1995, 2), ("b", 1995, 4)))
+    // year(ts) is session-zone dependent: under +09:00 the same instant
+    // falls in 1996, so a recompute is visible
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try {
+      t.updateKey(Seq("a"), Map("v" -> lit(10)))
+      // dbl depends on v: recomputed for a; yr does not: kept
+      assert(rows === Seq(("a", 1995, 20), ("b", 1995, 4)))
+      t.updateKey(Seq("a"), Map("ts" -> lit(ts)))
+      // yr depends on ts: recomputed for a only; b keeps its stored 1995
+      assert(rows === Seq(("a", 1996, 20), ("b", 1995, 4)))
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+    intercept[IllegalArgumentException](
+      t.updateKey(Seq("a"), Map("dbl" -> lit(0))))
+  }
+
+  test("updateKey from two threads on different keys of one bucket: both land") {
+    val t = tkv(n = 1)
+    t.append((1 to 30).map(i => (s"k$i", i)).toDF("k", "v"))
+    val v = t.currentVersion
+    val ths = Seq("k3" -> 300, "k9" -> 900).map { case (k, x) =>
+      new Thread(() => t.updateKey(Seq(k), Map("v" -> lit(x))))
+    }
+    ths.foreach(_.start()); ths.foreach(_.join())
+    assert(t.currentVersion === v + 2)
+    assert(kvRows(t) === (1 to 30).map(i => s"k$i" -> i).toMap
+      .updated("k3", 300).updated("k9", 900))
+  }
+
+  test("updateKey ends in the state upsert(lookup(k).withColumn(...)) reaches") {
+    val rows = (1 to 300).map(i => (s"k$i", i)).toDF("k", "v")
+    val a = tkv(n = 16); a.append(rows)
+    val b = tkv(n = 16); b.append(rows)
+    Seq("k1", "k150", "k299", "absent").foreach { k =>
+      a.updateKey(Seq(k), Map("v" -> (col("v") * 10 + 1)))
+      b.upsert(b.lookup(Seq(k)).withColumn("v", col("v") * 10 + 1))
+    }
+    assert(kvRows(a) === kvRows(b))
+    assert(kvRows(a)("k150") === 1501)
+  }
+
+  test("appends read a bounded amount of metadata as versions accumulate") {
+    import scala.jdk.CollectionConverters._
+    // auto-compaction keeps the manifest one entry long, so what grows
+    // with the version count is the metadata walk alone
+    val t = tkv(n = 1); t.createIfAbsent()
+    t.setTableProperties(Map(TxTable.AutoCompactKey -> "2"))
+    def bytesRead: Long =
+      org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    def appendBytes(i: Int): Long = {
+      val b0 = bytesRead
+      t.append(Seq((s"k$i", i)).toDF("k", "v"))
+      bytesRead - b0
+    }
+    (1 to 3).foreach(appendBytes)
+    val early = (4 to 6).map(appendBytes).sum / 3 // 10+ versions
+    (7 to 147).foreach(appendBytes)
+    val late = (148 to 150).map(appendBytes).sum / 3
+    assert(t.versions.size > 290)
+    assert(late <= 2 * early,
+      s"bytes read per append grew from $early to $late")
+    assert(t.read.count() === 150L)
+  }
+
   test("truncate commits an empty version; history retained") {
     val t = tkv()
     t.append(Seq(("a", 1)).toDF("k", "v"))
