@@ -342,6 +342,21 @@ final class TxTable(
 
   def currentVersion: Long = versions.lastOption.getOrElse(-1L)
 
+  /** The flat string-map JSON of `#meta` headers, CHECK sets and
+    * TBLPROPERTIES. */
+  private def encodeMap(m: Map[String, String]): String =
+    org.json4s.jackson.JsonMethods.compact(
+      org.json4s.jackson.JsonMethods.render(org.json4s.JObject(
+        m.toList.sortBy(_._1).map { case (k, v) =>
+          k -> (org.json4s.JString(v): org.json4s.JValue) })))
+
+  private def decodeMap(s: String): Map[String, String] =
+    org.json4s.jackson.JsonMethods.parse(s) match {
+      case org.json4s.JObject(fs) => fs.collect {
+        case (k, org.json4s.JString(v)) => k -> v }.toMap
+      case _ => Map.empty
+    }
+
   private def loadManifest(v: Long): Manifest = {
     val in = fs.open(manifestPath(v))
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -352,13 +367,7 @@ final class TxTable(
         DataType.fromJson(l.stripPrefix("#schema\t")).asInstanceOf[StructType]
     }
     val meta = lines.collectFirst {
-      case l if l.startsWith("#meta\t") =>
-        org.json4s.jackson.JsonMethods.parse(l.stripPrefix("#meta\t")) match {
-          case org.json4s.JObject(fs) => fs.collect {
-            case (k, org.json4s.JString(s)) => k -> s
-          }.toMap
-          case _ => Map.empty[String, String]
-        }
+      case l if l.startsWith("#meta\t") => decodeMap(l.stripPrefix("#meta\t"))
     }.getOrElse(Map.empty[String, String])
     // bare names resolve against this table's dirs; absolute paths /
     // URIs are FOREIGN references (shallow clones) and pass through
@@ -448,10 +457,32 @@ final class TxTable(
     * retained commits `<= v`. Guarded commits hand their precondition
     * a [[TxTable.Snapshot]] backed by this, so the check is against
     * the exact state the commit claims — never floating head state. */
-  def metaAsOf(v: Long, key: String): Option[String] =
+  private def metaAsOf(v: Long, key: String): Option[String] =
     versions.reverseIterator.filter(_ <= v)
       .map(commitMeta(_).get(key)).collectFirst { case Some(x) => x }
       .filterNot(_ == TxTable.MetaTombstone)
+
+  /** A METADATA-ONLY commit: re-link the head's entries under the
+    * schema and meta `change` derives from (head version, head
+    * schema); a None schema keeps the declared one. */
+  private def republish(
+      change: (Long, StructType) => (Option[StructType], Map[String, String]))
+      : Unit =
+    withRetry {
+      val base = currentVersion
+      require(base >= 0, s"$dir has no committed version")
+      val m = loadManifest(base)
+      val (s, meta) = change(base, schemaAt(m))
+      commit(m.entries, base, s.orElse(m.declaredSchema), meta)
+      ()
+    }
+
+  /** `s`'s column `name` (case-insensitive), or the refusal naming
+    * the table's columns. */
+  private def fieldNamed(s: StructType, name: String): StructField =
+    s.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
+      throw new IllegalArgumentException(s"no such column '$name' " +
+        s"(table has ${s.fieldNames.mkString(", ")})"))
 
   /** Retire commit-meta keys (watermarks of consumers that no longer
     * exist — a dropped view, a deleted stream query). Vacuum's
@@ -475,13 +506,7 @@ final class TxTable(
       s"cannot dropMeta reserved governance key(s) ${reserved.mkString(", ")}" +
         " - use dropCheckConstraint for constraints; dropped_cols is " +
         "permanent by design (resurrection guard)")
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      commit(m.entries, base, m.declaredSchema,
-        ks.map(_ -> TxTable.MetaTombstone).toMap)
-      ()
-    }
+    republish((_, _) => (None, ks.map(_ -> TxTable.MetaTombstone).toMap))
   }
 
   /** DROP TABLE as a guarded MANIFEST TOMBSTONE, not a delete: the
@@ -493,13 +518,7 @@ final class TxTable(
     * stays where it belongs: an explicit [[vacuum]] after retention. */
   def dropTable(): Unit = {
     require(!isDropped, s"$dir is already dropped")
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      commit(m.entries, base, m.declaredSchema,
-        Map(TxTable.DroppedKey -> "true"))
-      ()
-    }
+    republish((_, _) => (None, Map(TxTable.DroppedKey -> "true")))
     // O(1) catalog marker, written AFTER the commit publishes: the
     // commit meta is the durable audit record, the marker is the fast
     // path every catalog resolution checks (a latestMeta scan would
@@ -587,10 +606,7 @@ final class TxTable(
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
     cols.foreach(f => require(f.nullable,
       s"new column ${f.name} must be nullable - existing rows null-fill"))
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      val cur = schemaAt(m)
+    republish { (_, cur) =>
       // case-INSENSITIVE duplicate check, matching widen()'s resolver
       // semantics — otherwise adding `ID` to a table with `id` would
       // silently no-op (widen dedups case-insensitively) instead of
@@ -599,8 +615,7 @@ final class TxTable(
         !cur.fieldNames.exists(_.equalsIgnoreCase(f.name)),
         s"column ${f.name} already exists"))
       val target = widen(cur, cols)
-      commit(m.entries, base, Some(target))
-      ()
+      (Some(target), Map.empty)
     }
   }
 
@@ -636,16 +651,8 @@ final class TxTable(
       s"$dir has no _table.json write descriptor: DROP COLUMN needs " +
         "the key columns to protect the physical identity - open the " +
         "table through the Scala API with its keys, or add _table.json")
-    withRetry {
-      val base = currentVersion
-      require(base >= 0, s"$dir has no committed version")
-      val m = loadManifest(base)
-      val cur = schemaAt(m)
-      val resolved = names.map { n =>
-        cur.fieldNames.find(_.equalsIgnoreCase(n)).getOrElse(
-          throw new IllegalArgumentException(s"no such column '$n' " +
-            s"(table has ${cur.fieldNames.mkString(", ")})"))
-      }.distinct
+    republish { (_, cur) =>
+      val resolved = names.map(fieldNamed(cur, _).name).distinct
       // key/bloom identity and the dropped-name registry are
       // PHYSICAL: a renamed column's declared name differs from the
       // parquet name its pre-drop files hold
@@ -690,9 +697,8 @@ final class TxTable(
           TxTable.maxFieldId(cur),
           latestMeta(TxTable.MaxFieldIdKey).flatMap(_.toLongOption)
             .getOrElse(0L)).toString)
-      commit(m.entries, base, Some(target),
+      (Some(target),
         Map("dropped_cols" -> all.toSeq.sorted.mkString(",")) ++ idWm)
-      ()
     }
   }
 
@@ -722,15 +728,9 @@ final class TxTable(
     * hash identity in their sidecars); decimals (the physical
     * encoding changes with precision class). */
   def widenColumn(name: String, to: org.apache.spark.sql.types.DataType)
-      : Unit = {
-    withRetry {
-      val base = currentVersion
-      require(base >= 0, s"$dir has no committed version")
-      val m = loadManifest(base)
-      val cur = schemaAt(m)
-      val f = cur.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(s"no such column '$name' " +
-          s"(table has ${cur.fieldNames.mkString(", ")})"))
+      : Unit =
+    republish { (_, cur) =>
+      val f = fieldNamed(cur, name)
       require(TxTable.widensTo(f.dataType, to),
         s"cannot widen ${f.name} from ${f.dataType.simpleString} to " +
           s"${to.simpleString} - lossless primitive widenings only " +
@@ -745,10 +745,8 @@ final class TxTable(
           "type-sensitive; migrate with rebucketTo")
       val target = StructType(cur.fields.map(x =>
         if (x.name.equalsIgnoreCase(name)) x.copy(dataType = to) else x))
-      commit(m.entries, base, Some(target))
-      ()
+      (Some(target), Map.empty)
     }
-  }
 
   /** ALTER TABLE RENAME COLUMN as a METADATA-ONLY commit (column
     * mapping): the renamed field keeps its creation-time parquet name
@@ -769,14 +767,8 @@ final class TxTable(
     * physical one, so no pre-drop file values can resurrect. */
   def renameColumn(from: String, to: String): Unit = {
     require(from.nonEmpty && to.nonEmpty, "RENAME COLUMN needs names")
-    withRetry {
-      val base = currentVersion
-      require(base >= 0, s"$dir has no committed version")
-      val m = loadManifest(base)
-      val cur = schemaAt(m)
-      val f = cur.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
-        throw new IllegalArgumentException(s"no such column '$from' " +
-          s"(table has ${cur.fieldNames.mkString(", ")})"))
+    republish { (_, cur) =>
+      val f = fieldNamed(cur, from)
       require(!cur.fieldNames.exists(_.equalsIgnoreCase(to)),
         s"column '$to' already exists")
       checkConstraints.foreach { case (cn, pred) =>
@@ -801,9 +793,7 @@ final class TxTable(
           StructField(to, x.dataType, x.nullable, mb)
         } else x
       })
-      commit(m.entries, base, Some(target),
-        meta = Map("renamed_col" -> s"${f.name.toLowerCase}->$to"))
-      ()
+      (Some(target), Map("renamed_col" -> s"${f.name.toLowerCase}->$to"))
     }
   }
 
@@ -814,15 +804,9 @@ final class TxTable(
     * and keep reading their stored values (or null). The
     * exists-default is deliberately NOT set here — rewriting history
     * via metadata would lie about what the files hold. */
-  def setColumnDefault(name: String, defaultSql: Option[String]): Unit = {
-    withRetry {
-      val base = currentVersion
-      require(base >= 0, s"$dir has no committed version")
-      val m = loadManifest(base)
-      val cur = schemaAt(m)
-      val f = cur.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(s"no such column '$name' " +
-          s"(table has ${cur.fieldNames.mkString(", ")})"))
+  def setColumnDefault(name: String, defaultSql: Option[String]): Unit =
+    republish { (_, cur) =>
+      val f = fieldNamed(cur, name)
       // the default must parse, analyze and cast against the column
       // NOW, not at first insert: a bad default should fail the DDL
       defaultSql.foreach { sql =>
@@ -844,10 +828,8 @@ final class TxTable(
           x.copy(metadata = mb.build())
         } else x
       })
-      commit(m.entries, base, Some(target))
-      ()
+      (Some(target), Map.empty)
     }
-  }
 
   // ---- user table properties (SET/UNSET TBLPROPERTIES) ----
 
@@ -855,21 +837,15 @@ final class TxTable(
     * commit-meta key per change (newest declaration wins outright),
     * read through [[carriedMeta]] like [[checkConstraints]]. */
   def tableProperties: Map[String, String] =
-    carriedMeta.get(TxTable.TblPropsKey).map(decodeChecks)
+    carriedMeta.get(TxTable.TblPropsKey).map(decodeMap)
       .getOrElse(Map.empty)
 
   /** SET TBLPROPERTIES: merge `props` into the current map (one
     * metadata-only commit, data untouched). */
   def setTableProperties(props: Map[String, String]): Unit = {
     require(props.nonEmpty, "SET TBLPROPERTIES needs at least one pair")
-    withRetry {
-      val base = currentVersion
-      require(base >= 0, s"$dir has no committed version")
-      val m = loadManifest(base)
-      commit(m.entries, base, m.declaredSchema,
-        Map(TxTable.TblPropsKey -> encodeChecks(tableProperties ++ props)))
-      ()
-    }
+    republish((_, _) =>
+      (None, Map(TxTable.TblPropsKey -> encodeMap(tableProperties ++ props))))
   }
 
   /** UNSET TBLPROPERTIES: drop `keys` from the map (absent keys are a
@@ -877,15 +853,8 @@ final class TxTable(
     * properties). */
   def unsetTableProperties(keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
-    withRetry {
-      val base = currentVersion
-      require(base >= 0, s"$dir has no committed version")
-      val m = loadManifest(base)
-      commit(m.entries, base, m.declaredSchema,
-        Map(TxTable.TblPropsKey ->
-          encodeChecks(tableProperties -- keys)))
-      ()
-    }
+    republish((_, _) =>
+      (None, Map(TxTable.TblPropsKey -> encodeMap(tableProperties -- keys))))
   }
 
   // ---- ANALYZE column statistics (planner NDV; the CBO feed) ----
@@ -906,8 +875,9 @@ final class TxTable(
     * the oracle-checkable mode. Stats are advisory planner input
     * pinned at the analyzed version, per ANALYZE semantics
     * everywhere: writers do not invalidate them, the next ANALYZE
-    * replaces them. */
-  /** `histogramBins >= 2` additionally computes an EQUI-HEIGHT
+    * replaces them.
+    *
+    * `histogramBins >= 2` additionally computes an EQUI-HEIGHT
     * histogram per numeric column: bin endpoints from ONE mergeable
     * `percentile_approx` folded into the same aggregation pass the
     * NDV takes, then one more pass for per-bin distinct counts
@@ -1066,13 +1036,7 @@ final class TxTable(
                     })): org.json4s.JValue)))
               : org.json4s.JValue)
           })))
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      commit(m.entries, base, m.declaredSchema,
-        Map(TxTable.ColStatsKey -> json))
-      ()
-    }
+    republish((_, _) => (None, Map(TxTable.ColStatsKey -> json)))
   }
 
   /** The declared column analysis, if any: (analyzed version,
@@ -1143,26 +1107,13 @@ final class TxTable(
   // ---- CHECK constraints (write-path governance; Delta's CHECK
   // constraint analog) ----
 
-  private def encodeChecks(m: Map[String, String]): String =
-    org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(org.json4s.JObject(
-        m.toList.sortBy(_._1).map { case (k, v) =>
-          k -> (org.json4s.JString(v): org.json4s.JValue) })))
-
-  private def decodeChecks(s: String): Map[String, String] =
-    org.json4s.jackson.JsonMethods.parse(s) match {
-      case org.json4s.JObject(fs) => fs.collect {
-        case (k, org.json4s.JString(v)) => k -> v }.toMap
-      case _ => Map.empty
-    }
-
   /** Active CHECK constraints (name → SQL predicate) at the current
     * version. The full set is declared under ONE meta key per change,
     * so the newest declaration wins outright (no per-key tombstone
     * folding); read through [[carriedMeta]], which loads only the
     * manifests committed since the cached version. */
   def checkConstraints: Map[String, String] =
-    carriedMeta.get("checks").map(decodeChecks).getOrElse(Map.empty)
+    carriedMeta.get("checks").map(decodeMap).getOrElse(Map.empty)
 
   /** SQL-standard CHECK semantics: a NULL predicate PASSES (only
     * definite FALSE violates). */
@@ -1182,9 +1133,7 @@ final class TxTable(
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name must be an identifier, got '$name'")
     createIfAbsent()
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
+    republish { (base, _) =>
       // validate INSIDE each attempt, over the base the commit will
       // land on: a CommitConflict retry (or a writer racing between
       // scan and commit) otherwise admits a constraint over rows it
@@ -1196,24 +1145,17 @@ final class TxTable(
         s"existing rows violate CHECK $name ($predicateSql)")
       val cur = checkConstraints
       require(!cur.contains(name), s"CHECK $name already exists")
-      commit(m.entries, base, m.declaredSchema,
-        Map("checks" -> encodeChecks(cur + (name -> predicateSql))))
+      (None, Map("checks" -> encodeMap(cur + (name -> predicateSql))))
     }
-    ()
   }
 
   /** Retire a CHECK constraint (later writes stop validating it). */
-  def dropCheckConstraint(name: String): Unit = {
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
+  def dropCheckConstraint(name: String): Unit =
+    republish { (_, _) =>
       val cur = checkConstraints
       require(cur.contains(name), s"CHECK $name does not exist")
-      commit(m.entries, base, m.declaredSchema,
-        Map("checks" -> encodeChecks(cur - name)))
+      (None, Map("checks" -> encodeMap(cur - name)))
     }
-    ()
-  }
 
   /** One aggregate pass counting violations of every active
     * constraint over an incoming batch; refuses (with per-constraint
@@ -1237,6 +1179,17 @@ final class TxTable(
 
   private def snapshotAt(v: Long): TxTable.Snapshot =
     new TxTable.Snapshot(v, k => metaAsOf(v, k))
+
+  /** The guarded-commit attempt loop (see [[upsertIf]]): each attempt
+    * pins its base, hands `pre` the snapshot at that base, and runs
+    * `body` on the base manifest only while `pre` holds — None once it
+    * does not. */
+  private def guarded[A](pre: TxTable.Snapshot => Boolean)
+      (body: (Manifest, Long) => A): Option[A] =
+    withRetry {
+      val base = currentVersion
+      if (pre(snapshotAt(base))) Some(body(loadManifest(base), base)) else None
+    }
 
   private def claimPath(v: Long): Path =
     new Path(manifestDir, f"v$v%020d.claim")
@@ -1405,11 +1358,7 @@ final class TxTable(
         .filter(_.nonEmpty)
         .map(s => s"#schema\t${s.json}\n").getOrElse("")
       val metaHeader =
-        if (meta.isEmpty) ""
-        else "#meta\t" + org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(org.json4s.JObject(
-            meta.toList.sortBy(_._1).map { case (k, v2) =>
-              k -> org.json4s.JString(v2) }))) + "\n"
+        if (meta.isEmpty) "" else "#meta\t" + encodeMap(meta) + "\n"
       val header = schemaHeader + metaHeader
       try out.write((header + finalEntries.sortBy(_.bucket)
         .map { e =>
@@ -1597,15 +1546,57 @@ final class TxTable(
     val (dirty, clean) = entries.partition(_.dvs.nonEmpty)
     val cleanDf = readFiles(clean.map(_.path), s)
     if (dirty.isEmpty) cleanDf
-    else {
-      val tomb = dvTombstones(dirty)
-      val d = readFilesWithPos(dirty.map(_.path), s)
-        .join(broadcast(tomb),
-          col("_file") === col("_dv_file") && col("_pos") === col("_dv_pos"),
-          "left_anti")
-        .drop("_file", "_pos")
-      cleanDf.unionByName(d)
-    }
+    else cleanDf.unionByName(liveDirtyWithPos(dirty, s).drop("_file", "_pos"))
+  }
+
+  /** The live rows of DV-carrying `dirty` entries with their `_file` /
+    * `_pos` columns: the broadcast anti-join [[readEntries]] masks by. */
+  private def liveDirtyWithPos(dirty: Seq[FEntry], s: StructType): DataFrame =
+    readFilesWithPos(dirty.map(_.path), s)
+      .join(broadcast(dvTombstones(dirty)),
+        col("_file") === col("_dv_file") && col("_pos") === col("_dv_pos"),
+        "left_anti")
+
+  /** The live rows of `entries` with `_file` / `_pos` — the row
+    * identities a new deletion vector tombstones (existing DVs apply:
+    * an already-tombstoned row must not be tombstoned twice). */
+  private def liveWithPos(entries: Seq[FEntry], s: StructType): DataFrame = {
+    val (dirty, clean) = entries.partition(_.dvs.nonEmpty)
+    val cleanPos = readFilesWithPos(clean.map(_.path), s)
+    if (dirty.isEmpty) cleanPos
+    else cleanPos.unionByName(liveDirtyWithPos(dirty, s))
+  }
+
+  /** Stage `hits` (`_dv_file` basename, `_dv_pos`) as ONE deletion-
+    * vector sidecar under a private `.stage-*` dir and run `body` with
+    * `m`'s entries masked by it — None when `hits` is empty. The
+    * per-file counts come back to the driver (bounded by the touched
+    * file count); the stage dir is deleted when `body` returns. */
+  private def withTombstones[A](hits: DataFrame, m: Manifest)
+      (body: Option[Seq[FEntry]] => A): A = {
+    val stage = new Path(dir, s".stage-${UUID.randomUUID().toString.take(8)}")
+    try {
+      hits.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      val perFile: Map[String, Long] = spark.read.parquet(stage.toString)
+        .groupBy("_dv_file").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      body(if (perFile.isEmpty) None else {
+        val sidecar = fs.listStatus(stage).toSeq.map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")).head.toString
+        // basename match: tombstones store basenames, and a shallow
+        // clone's foreign entries keep absolute paths
+        val names = m.entries
+          .map(e => e.path.substring(e.path.lastIndexOf('/') + 1))
+        val unknown = perFile.keySet -- names
+        require(unknown.isEmpty,
+          s"row delta tombstones reference ${unknown.size} file(s) " +
+            s"not live at v${m.version} of $dir: " +
+            unknown.take(3).mkString(", "))
+        Some(m.entries.zip(names).map { case (e, n) =>
+          perFile.get(n).fold(e)(c => e.copy(dvs = e.dvs :+ DvRef(sidecar, c)))
+        })
+      })
+    } finally fs.delete(stage, true)
   }
 
   /** Snapshot read of the current version: the plan pins this
@@ -2086,15 +2077,6 @@ final class TxTable(
 
   // ---- writes ----
 
-  /** Write `df` bucketed into fresh immutable files under a private
-    * `.stage-*` directory — NOT `data/`: uncommitted bytes must never
-    * be visible where `vacuum` deletes unreferenced files, or a
-    * `vacuum(minAgeMs = 0)` racing an in-flight writer would delete
-    * its staged files before the commit references them. [[commit]]
-    * moves the files into `data/` only after the version claim is
-    * won. Returns the manifest entries (stage paths) and the stage
-    * dir, which the caller deletes when the mutation ends. One file
-    * per non-empty bucket. */
   private[graft] def generatedFields(s: StructType): Seq[StructField] =
     s.fields.toSeq.filter(_.metadata.contains(TxTable.GeneratedExprKey))
 
@@ -2152,6 +2134,15 @@ final class TxTable(
         d.withColumn(f.name, lit(null).cast(f.dataType))
       else d)
 
+  /** Write `df` bucketed into fresh immutable files under a private
+    * `.stage-*` directory — NOT `data/`: uncommitted bytes must never
+    * be visible where `vacuum` deletes unreferenced files, or a
+    * `vacuum(minAgeMs = 0)` racing an in-flight writer would delete
+    * its staged files before the commit references them. [[commit]]
+    * moves the files into `data/` only after the version claim is
+    * won. Returns the manifest entries (stage paths) and the stage
+    * dir, which the caller deletes when the mutation ends. One file
+    * per non-empty bucket. */
   private def stageFiles(
       df: DataFrame, asSchema: StructType, layout: Option[Column] = None,
       filesPerBucket: Int = 1,
@@ -2352,8 +2343,8 @@ final class TxTable(
     * don't depend on the base version, so a rebase after a conflict
     * only re-reads the manifest and re-commits — no data rewrite
     * (commit's post-conflict rollback returns them to the stage).
-    * Tables with IDENTITY columns route through the allocating core
-    * (high-water-mark CAS — see [[appendIfMetaOf]]). */
+    * Every append commits through the allocating core, which CASes
+    * the high-water mark of IDENTITY columns (see [[appendIfMetaOf]]). */
   def append(df: DataFrame): Unit = { appendCommit(df); () }
 
   // ---- identity columns (GENERATED ALWAYS AS IDENTITY) ----
@@ -2392,10 +2383,6 @@ final class TxTable(
     latestMeta(identityMetaKey(f)).map(_.toLong)
       .getOrElse(f.metadata.getLong(TxTable.IdentityStartKey))
 
-  /** `f`'s value for an incoming row: explicit-null rows take the
-    * generated id; non-null rows are the caller's — accepted under
-    * GENERATED BY DEFAULT, a per-row `raise_error` under ALWAYS
-    * (single pass, codegen'd, no extra validation job). */
   /** The raw generated-id expression for `f` from mark `next`. */
   private def identityGen(f: StructField, next: Long): Column = {
     require(f.dataType == org.apache.spark.sql.types.LongType,
@@ -2405,6 +2392,10 @@ final class TxTable(
       monotonically_increasing_id()).cast(f.dataType)
   }
 
+  /** `f`'s value for an incoming row: explicit-null rows take the
+    * generated id; non-null rows are the caller's — accepted under
+    * GENERATED BY DEFAULT, a per-row `raise_error` under ALWAYS
+    * (single pass, codegen'd, no extra validation job). */
   private def identityValue(f: StructField, next: Long): Column = {
     val gen = identityGen(f, next)
     val explicitOk =
@@ -2421,9 +2412,9 @@ final class TxTable(
     * id actually staged (from footer stats — zero data I/O), never
     * behind the claimed mark. */
   private def identityAdvance(f: StructField, claimed: Long,
-      staged: Seq[FEntry]): Long = {
+      staged: Seq[FEntry], s: StructType): Long = {
     val step = f.metadata.getLong(TxTable.IdentityStepKey)
-    val phys = physicalize(currentSchema)
+    val phys = physicalize(s)
     val pname = physicalFieldName(f)
     val extremes = staged.flatMap { e =>
       e.parsedStats(phys).flatMap(_.cols.get(pname))
@@ -2443,30 +2434,13 @@ final class TxTable(
     else math.min(claimed, extremes.min + step)
   }
 
-
   /** [[append]] returning the version THIS append committed — callers
     * that need the version must use this, never a re-read of
     * `currentVersion` (a concurrent writer may advance the head in
     * between: TOCTOU). */
-  def appendCommit(df: DataFrame): Long = {
-    createIfAbsent()
-    if (identityFields(currentSchema).nonEmpty) {
-      // allocating path: ids generate from the CAS'd high-water
-      // mark (pre = always-true - only a stale mark re-stages);
-      // auto-compaction runs inside the allocating core
-      appendIfMetaOf(df, _ => Map.empty)(_ => true).get._2
-    } else {
-      val v = {
-        val (staged, stage) = stageFiles(df, currentSchema)
-        try withRetry {
-          val base = currentVersion
-          commit(loadManifest(base).entries ++ staged, base)
-        } finally fs.delete(stage, true)
-      }
-      maybeAutoCompact()
-      v
-    }
-  }
+  def appendCommit(df: DataFrame): Long =
+    // pre = always-true: only a stale identity mark re-stages
+    appendIfMetaOf(df, _ => Map.empty)(_ => true).get._1
 
   /** WRITE-TRIGGERED auto-compaction (the `autoCompact` analog): when
     * the table property `graft.autoCompact.minFiles` is set, every
@@ -2564,48 +2538,19 @@ final class TxTable(
       val touched = updates.select(bucketExprFor(target).as("_kb")).distinct()
         .collect().map(_.getInt(0)).toSet
       if (touched.nonEmpty) {
-        val hit = m.entries.filter(e => touched(e.bucket))
-        // live positions of the keys being replaced (existing DVs apply:
-        // an already-tombstoned row must not be tombstoned twice)
-        val (dirty, clean) = hit.partition(_.dvs.nonEmpty)
-        val cleanPos = readFilesWithPos(clean.map(_.path), target)
-        val livePos =
-          if (dirty.isEmpty) cleanPos
-          else cleanPos.unionByName(
-            readFilesWithPos(dirty.map(_.path), target)
-              .join(broadcast(dvTombstones(dirty)),
-                col("_file") === col("_dv_file") && col("_pos") === col("_dv_pos"),
-                "left_anti"))
-        val hits = keyMatchJoin(livePos, updates, "left_semi", target)
+        // live positions of the keys being replaced
+        val hits = keyMatchJoin(
+          liveWithPos(m.entries.filter(e => touched(e.bucket)), target),
+          updates, "left_semi", target)
           .select(col("_file").as("_dv_file"), col("_pos").as("_dv_pos"))
-        val dvStage = new Path(dir, s".stage-${UUID.randomUUID().toString.take(8)}")
         // generated columns recompute for the incoming rows — the same
         // Delta UPDATE semantics as upsertOnto (byte-identical results
         // between the light and copy-on-write paths is the contract)
         val (staged, dataStage) =
           stageFiles(resetGenerated(updates, target), target)
-        try {
-          hits.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvStage.toString)
-          val perFile: Map[String, Long] = spark.read.parquet(dvStage.toString)
-            .groupBy("_dv_file").count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          val sidecar =
-            if (perFile.isEmpty) None
-            else fs.listStatus(dvStage).toSeq.map(_.getPath)
-              .find(_.getName.endsWith(".parquet")).map(_.toString)
-          val masked = m.entries.map { e =>
-            // basename match — see deleteWhereLight
-            val name = e.path.substring(e.path.lastIndexOf('/') + 1)
-            (perFile.get(name), sidecar) match {
-              case (Some(n), Some(sc)) => e.copy(dvs = e.dvs :+ DvRef(sc, n))
-              case _ => e
-            }
-          }
-          commit(masked ++ staged, base, Some(target))
-        } finally {
-          fs.delete(dvStage, true)
-          fs.delete(dataStage, true)
-        }
+        try withTombstones(hits, m) { masked =>
+          commit(masked.getOrElse(m.entries) ++ staged, base, Some(target))
+        } finally fs.delete(dataStage, true)
       }
     }
   }
@@ -2719,11 +2664,11 @@ final class TxTable(
     * mid-run. */
   def appendIfCounted(df: DataFrame, meta: Map[String, String])
       (pre: TxTable.Snapshot => Boolean): Option[(Long, Long)] =
-    appendIfMetaOf(df, _ => meta)(pre).map(r => (r._2, r._3))
+    appendIfMetaOf(df, _ => meta, countRows = true)(pre)
 
-  /** Core of EVERY append that isn't the plain fast path: stages
-    * once, evaluates `pre` at each claimed base, derives the commit
-    * meta from the staged entries' footer stats (identity high-water
+  /** Core of EVERY append: stages once, evaluates `pre` at each
+    * claimed base, derives the commit meta from the staged entries'
+    * footer stats (identity high-water
     * marks need the staged max id; COPY INTO's row report needs the
     * staged row count) — and, on tables with IDENTITY columns, folds
     * the id allocation in: values generate from the claimed mark
@@ -2732,10 +2677,11 @@ final class TxTable(
     * append triggers an internal re-stage with fresh ids (the
     * caller's own `pre` failing still aborts with None — a stale
     * mark is retryable, a failed application precondition is not).
-    * Returns (staged entries, committed version). */
+    * Returns (committed version, staged row count — -1 unless
+    * `countRows`). */
   private def appendIfMetaOf(df: DataFrame,
-      metaOf: Seq[FEntry] => Map[String, String])
-      (pre: TxTable.Snapshot => Boolean): Option[(Seq[FEntry], Long, Long)] = {
+      metaOf: Seq[FEntry] => Map[String, String], countRows: Boolean = false)
+      (pre: TxTable.Snapshot => Boolean): Option[(Long, Long)] = {
     createIfAbsent()
     // stale-mark retries run on the commit TIME budget, as withRetry's
     // do: each retry re-stages, so under an append storm a writer can
@@ -2745,39 +2691,35 @@ final class TxTable(
     var attempt = 0
     while (attempt == 0 || System.currentTimeMillis() < deadline) {
       attempt += 1
-      val ids = identityFields(currentSchema)
-      val claims = ids.map(f => f -> identityNext(f))
+      val s = currentSchema
+      val claims = identityFields(s).map(f => f -> identityNext(f))
       val toStage =
         if (claims.isEmpty) df
-        else claims.foldLeft(conform(df, currentSchema)) {
+        else claims.foldLeft(conform(df, s)) {
           case (d, (f, n)) => d.withColumn(f.name, identityValue(f, n))
         }
-      val (staged, stage) = stageFiles(toStage, currentSchema)
+      val (staged, stage) = stageFiles(toStage, s)
       // row count BEFORE the commit: the stats-less fallback reads the
       // staged file, which commit() renames to a fresh UUID in data/
       // and the finally deletes the stage dir - counting after would
       // throw on a path that no longer exists (misreporting a landed
       // load as failed)
-      val stagedRows = stagedRowCount(staged)
+      val stagedRows = if (countRows) stagedRowCount(staged, s) else -1L
       var markStale = false
-      val res = try withRetry {
-        val base = currentVersion
-        val m = loadManifest(base)
-        val snap = snapshotAt(base)
-        if (!pre(snap)) None
-        else if (!claims.forall { case (f, n) =>
-          snap.meta(identityMetaKey(f)).map(_.toLong)
+      val res = try guarded(pre) { (m, base) =>
+        if (!claims.forall { case (f, n) =>
+          snapshotAt(base).meta(identityMetaKey(f)).map(_.toLong)
             .getOrElse(f.metadata.getLong(TxTable.IdentityStartKey)) == n
         }) {
           markStale = true; None
         } else {
-          val v = commit(m.entries ++ staged, base,
-            meta = metaOf(staged) ++ claims.map { case (f, n) =>
-              identityMetaKey(f) -> identityAdvance(f, n, staged).toString
+          val v = commit(m.entries ++ staged, base, m.declaredSchema,
+            metaOf(staged) ++ claims.map { case (f, n) =>
+              identityMetaKey(f) -> identityAdvance(f, n, staged, s).toString
             })
-          Some((staged, v, stagedRows))
+          Some((v, stagedRows))
         }
-      } finally fs.delete(stage, true)
+      }.flatten finally fs.delete(stage, true)
       if (res.isDefined) { maybeAutoCompact(); return res }
       if (!markStale) return None
     }
@@ -2788,8 +2730,8 @@ final class TxTable(
   /** Exact row count of just-staged entries from their footer stats;
     * the rare stats-less entry (footer read failed at stage time)
     * falls back to one bounded re-read of THAT file only. */
-  private def stagedRowCount(staged: Seq[FEntry]): Long = {
-    val phys = physicalize(currentSchema)
+  private def stagedRowCount(staged: Seq[FEntry], s: StructType): Long = {
+    val phys = physicalize(s)
     staged.iterator.map { e =>
       e.parsedStats(phys).map(_.rows).getOrElse(
         spark.read.parquet(e.path).count())
@@ -2812,33 +2754,21 @@ final class TxTable(
     require(identityFields(currentSchema).isEmpty,
       s"schema-evolving appends into $dir are not supported with " +
         "IDENTITY columns - use the fixed-schema append/sink path")
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      if (!pre(snapshotAt(base))) false
-      else {
-        val target = widen(schemaAt(m), df.schema)
-        stageAndCommit(m.entries, conform(df, target), base, target,
-          meta = meta)
-        true
-      }
-    }
+    guarded(pre) { (m, base) =>
+      val target = widen(schemaAt(m), df.schema)
+      stageAndCommit(m.entries, conform(df, target), base, target,
+        meta = meta)
+    }.isDefined
   }
 
   /** GUARDED [[upsertEvolving]] — see [[appendEvolvingIf]]. */
   def upsertEvolvingIf(df: DataFrame, meta: Map[String, String])
       (pre: TxTable.Snapshot => Boolean): Boolean = {
     createIfAbsent()
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      if (!pre(snapshotAt(base))) false
-      else {
-        val target = widen(schemaAt(m), df.schema)
-        upsertOnto(m, conform(df, target), base, target, meta)
-        true
-      }
-    }
+    guarded(pre) { (m, base) =>
+      val target = widen(schemaAt(m), df.schema)
+      upsertOnto(m, conform(df, target), base, target, meta)
+    }.isDefined
   }
 
   /** GUARDED [[upsert]]: a compare-and-set against table state. Each
@@ -2862,33 +2792,21 @@ final class TxTable(
     // no localCheckpoint needed: even if `df` derives from this table,
     // its plan pins the files of the snapshot it was read from, which
     // a commit never mutates (only vacuum deletes files)
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      if (!pre(snapshotAt(base))) false
-      else {
-        val target = schemaAt(m)
-        val updates = df
-          .select(target.fields.map(fl => col(fl.name).cast(fl.dataType)): _*)
-        upsertOnto(m, updates, base, target, meta)
-        true
-      }
-    }
+    guarded(pre) { (m, base) =>
+      val target = schemaAt(m)
+      val updates = df
+        .select(target.fields.map(fl => col(fl.name).cast(fl.dataType)): _*)
+      upsertOnto(m, updates, base, target, meta)
+    }.isDefined
   }
 
   /** GUARDED [[replace]] — see [[upsertIf]]. */
   def replaceIf(df: DataFrame, meta: Map[String, String])
       (pre: TxTable.Snapshot => Boolean): Boolean = {
     createIfAbsent()
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      if (!pre(snapshotAt(base))) false
-      else {
-        stageAndCommit(Nil, df, base, schemaAt(m), meta = meta)
-        true
-      }
-    }
+    guarded(pre) { (m, base) =>
+      stageAndCommit(Nil, df, base, schemaAt(m), meta = meta)
+    }.isDefined
   }
 
   /** MERGE in one commit: upsert `upserts` AND delete `deleteKeys`
@@ -2912,44 +2830,31 @@ final class TxTable(
   def applyChangesIf(upserts: DataFrame, deleteKeys: DataFrame,
       meta: Map[String, String])(pre: TxTable.Snapshot => Boolean): Boolean = {
     createIfAbsent()
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      if (!pre(snapshotAt(base))) false
-      else {
-        val target = schemaAt(m)
-        val lk = logicalKeyNames(target)
-        val ups = upserts
-          .select(target.fields.map(fl => col(fl.name).cast(fl.dataType)): _*)
-          .dropDuplicates(lk)
-        val dels = keyMatchJoin(deleteKeys
-          .select(lk.map(k => col(k).cast(target(k).dataType)): _*)
-          .dropDuplicates(lk), ups, "left_anti", target) // upsert wins
-        val gone = ups.select(lk.map(col): _*).unionByName(dels)
-        val touched = gone.select(bucketExprFor(target).as("_kb")).distinct()
-          .collect().map(_.getInt(0)).toSet
-        if (touched.nonEmpty) {
-          val (hit, kept) = m.entries.partition(e => touched(e.bucket))
-          val remain = keyMatchJoin(readEntries(hit, target), gone,
-            "left_anti", target)
-            .unionByName(resetGenerated(ups, target))
-          stageAndCommit(kept, remain, base, target,
-            meta = meta, verifyGenerated = false)
-        } else if (meta.nonEmpty) {
-          commit(m.entries, base, Some(target), meta)
-        }
-        true
-      }
-    }
+    guarded(pre) { (m, base) =>
+      val target = schemaAt(m)
+      val lk = logicalKeyNames(target)
+      val ups = upserts
+        .select(target.fields.map(fl => col(fl.name).cast(fl.dataType)): _*)
+      val dels = deleteKeys
+        .select(lk.map(k => col(k).cast(target(k).dataType)): _*)
+        .dropDuplicates(lk)
+      upsertOnto(m, ups, base, target, meta, deduped =>
+        deduped.select(lk.map(col): _*).unionByName(
+          keyMatchJoin(dels, deduped, "left_anti", target))) // upsert wins
+    }.isDefined
   }
 
-  /** Shared MERGE body: dedup updates, rewrite only touched buckets,
-    * re-link the rest. Runs inside a [[withRetry]] attempt. */
+  /** Shared MERGE body: dedup updates, rewrite only the buckets holding
+    * a key of `removing(updates)` (the updates themselves for a plain
+    * upsert; plus the delete keys for [[applyChangesIf]]), re-link the
+    * rest. Runs inside a [[withRetry]] attempt. */
   private def upsertOnto(
       m: Manifest, updates0: DataFrame, base: Long, target: StructType,
-      meta: Map[String, String] = Map.empty): Unit = {
+      meta: Map[String, String],
+      removing: DataFrame => DataFrame = identity): Unit = {
     val updates = updates0.dropDuplicates(logicalKeyNames(target))
-    val touched = updates.select(bucketExprFor(target).as("_kb")).distinct()
+    val gone = removing(updates)
+    val touched = gone.select(bucketExprFor(target).as("_kb")).distinct()
       .collect().map(_.getInt(0)).toSet
     if (touched.nonEmpty) {
       val (hit, kept) = m.entries.partition(e => touched(e.bucket))
@@ -2959,7 +2864,7 @@ final class TxTable(
       // re-staged untouched rows keep their stored values verbatim
       // (verifyGenerated = false: they passed admission once, and a
       // session-dependent expression must not rewrite them)
-      val merged = keyMatchJoin(existing, updates, "left_anti", target)
+      val merged = keyMatchJoin(existing, gone, "left_anti", target)
         .unionByName(resetGenerated(updates, target))
       stageAndCommit(kept, merged, base, target,
         meta = meta, verifyGenerated = false)
@@ -3020,43 +2925,10 @@ final class TxTable(
       val s = schemaAt(m)
       val candidates = pruneEntries(m.entries, cond, s)
       if (candidates.nonEmpty) {
-        // live matching rows → (file, pos) tombstones. The per-file
-        // counts come back to the driver (bounded by the candidate
-        // file count, same order as the manifest itself).
-        val (dirty, clean) = candidates.partition(_.dvs.nonEmpty)
-        val cleanHits = readFilesWithPos(clean.map(_.path), s)
-        val dirtyHits =
-          if (dirty.isEmpty) None
-          else Some(readFilesWithPos(dirty.map(_.path), s)
-            .join(broadcast(dvTombstones(dirty)),
-              col("_file") === col("_dv_file") && col("_pos") === col("_dv_pos"),
-              "left_anti"))
-        val hits = dirtyHits.fold(cleanHits)(cleanHits.unionByName(_))
-          .filter(hitCond)
+        // live matching rows → (file, pos) tombstones
+        val hits = liveWithPos(candidates, s).filter(hitCond)
           .select(col("_file").as("_dv_file"), col("_pos").as("_dv_pos"))
-        val stage = new Path(dir, s".stage-${UUID.randomUUID().toString.take(8)}")
-        try {
-          hits.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
-          val perFile: Map[String, Long] = spark.read.parquet(stage.toString)
-            .groupBy("_dv_file").count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          if (perFile.nonEmpty) {
-            val sidecar = fs.listStatus(stage).toSeq
-              .map(_.getPath)
-              .filter(p => p.getName.endsWith(".parquet"))
-              .head.toString
-            val newEntries = m.entries.map { e =>
-              // basename match: tombstones store basenames, and a
-              // shallow clone's foreign entries keep absolute paths
-              val name = e.path.substring(e.path.lastIndexOf('/') + 1)
-              perFile.get(name) match {
-                case Some(n) => e.copy(dvs = e.dvs :+ DvRef(sidecar, n))
-                case None => e
-              }
-            }
-            commit(newEntries, base, Some(s))
-          }
-        } finally fs.delete(stage, true)
+        withTombstones(hits, m)(_.foreach(commit(_, base, Some(s))))
       }
     }
   }
@@ -3114,56 +2986,21 @@ final class TxTable(
     val idMeta: Option[Seq[FEntry] => Map[String, String]] =
       if (idClaims.isEmpty || ins.isEmpty) None
       else Some(staged => idClaims.map { case (f, n) =>
-        identityMetaKey(f) -> identityAdvance(f, n, staged).toString
+        identityMetaKey(f) -> identityAdvance(f, n, staged, s).toString
       }.toMap)
-    try {
-      dvRows match {
-        case None =>
-          ins.foreach(df =>
-            stageAndCommit(m.entries, df, base, s, metaOf = idMeta,
-              verifyGenerated = false))
-        case Some(dv) =>
-          val stage =
-            new Path(dir, s".stage-${UUID.randomUUID().toString.take(8)}")
-          try {
-            dv.select(col("_dv_file"), col("_dv_pos")).distinct()
-              .coalesce(1).write.mode(SaveMode.Overwrite)
-              .parquet(stage.toString)
-            // per-file tombstone counts back to the driver — bounded
-            // by the touched-file count, same as deleteWhereLight
-            val perFile: Map[String, Long] = spark.read
-              .parquet(stage.toString)
-              .groupBy("_dv_file").count()
-              .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-            if (perFile.isEmpty) {
-              ins.foreach(df =>
-                stageAndCommit(m.entries, df, base, s, metaOf = idMeta,
-                  verifyGenerated = false))
-            } else {
-              val sidecar = fs.listStatus(stage).toSeq.map(_.getPath)
-                .filter(_.getName.endsWith(".parquet")).head.toString
-              val baseNames = m.entries
-                .map(e => e.path.substring(e.path.lastIndexOf('/') + 1))
-              val unknown = perFile.keySet -- baseNames.toSet
-              require(unknown.isEmpty,
-                s"row delta tombstones reference ${unknown.size} file(s) " +
-                  s"not live at v$base of $dir: ${unknown.take(3).mkString(", ")}")
-              val newEntries = m.entries.map { e =>
-                val name = e.path.substring(e.path.lastIndexOf('/') + 1)
-                perFile.get(name) match {
-                  case Some(n) => e.copy(dvs = e.dvs :+ DvRef(sidecar, n))
-                  case None => e
-                }
-              }
-              ins match {
-                case Some(df) =>
-                  stageAndCommit(newEntries, df, base, s,
-                    metaOf = idMeta, verifyGenerated = false)
-                case None => commit(newEntries, base, Some(s)); ()
-              }
-            }
-          } finally fs.delete(stage, true)
-      }
+    // inserts land on the masked entries; a delta of tombstones only
+    // commits when one matched
+    def land(masked: Option[Seq[FEntry]]): Unit = ins match {
+      case Some(df) =>
+        stageAndCommit(masked.getOrElse(m.entries), df, base, s,
+          metaOf = idMeta, verifyGenerated = false)
+        ()
+      case None => masked.foreach(commit(_, base, Some(s)))
+    }
+    try dvRows match {
+      case None => land(None)
+      case Some(dv) => withTombstones(
+        dv.select(col("_dv_file"), col("_dv_pos")).distinct(), m)(land)
     } catch {
       // a lost CAS is the same staleness, reported the same way
       case _: TxTable.CommitConflict => staleSnapshot(currentVersion)
@@ -3250,14 +3087,22 @@ final class TxTable(
 
   /** Rewrite the current version into one file per bucket (small-file
     * compaction; old version remains for time travel). */
-  def compact(): Unit = {
+  def compact(): Unit = rewriteAll(1)((_, _) => None)
+
+  /** The whole-table compaction body: rewrite the current version's
+    * live rows under the layout `layoutOf` derives from (snapshot,
+    * schema) — None = one file per bucket. */
+  private def rewriteAll(filesPerBucket: Int)
+      (layoutOf: (DataFrame, StructType) => Option[Column]): Unit = {
     createIfAbsent()
     withRetry {
       val base = currentVersion
+      val snap = readVersion(base)
+      val s = currentSchema
       // layout_only: the live ROW SET is unchanged — streaming tail
       // readers (graft.sources.GraftMicroBatchStream) skip this commit
       // instead of failing on its remove/re-add file churn
-      stageAndCommit(Nil, readVersion(base), base, currentSchema,
+      stageAndCommit(Nil, snap, base, s, layoutOf(snap, s), filesPerBucket,
         meta = Map("layout_only" -> "true"), verifyGenerated = false)
     }
   }
@@ -3273,6 +3118,14 @@ final class TxTable(
     * bounded by the fragmented buckets alone. */
   def compactBuckets(minFiles: Int): Int = {
     require(minFiles >= 2, s"minFiles must be >= 2, got $minFiles")
+    compactFragmented(minFiles, None, 1)
+  }
+
+  /** The selective compaction body: rewrite the fragmented buckets
+    * (>= `minFiles` files, or multi-file with DVs) under `layout`,
+    * re-link the rest; returns how many buckets rewrote. */
+  private def compactFragmented(minFiles: Int, layout: Option[Column],
+      filesPerBucket: Int): Int = {
     if (currentVersion < 0) return 0
     withRetry {
       val base = currentVersion
@@ -3287,8 +3140,10 @@ final class TxTable(
         val df = readEntries(rewrite, schemaAt(m))
         // layout_only: the live row set is unchanged — streaming tail
         // readers skip this commit (same contract as compact())
-        stageAndCommit(keep, df, base, schemaAt(m),
-          meta = Map("layout_only" -> "true"), verifyGenerated = false)
+        stageAndCommit(keep, df, base, schemaAt(m), layout, filesPerBucket,
+          meta = Map("layout_only" -> "true"),
+          layoutPartitions = Some(fragmented.size * filesPerBucket),
+          verifyGenerated = false)
         fragmented.size
       }
     }
@@ -3314,26 +3169,8 @@ final class TxTable(
     require(minFiles > filesPerBucket,
       s"minFiles ($minFiles) must exceed filesPerBucket " +
         s"($filesPerBucket) - equal or lower re-trips on every append")
-    if (currentVersion < 0) return 0
-    withRetry {
-      val base = currentVersion
-      val m = loadManifest(base)
-      val fragmented = m.entries.groupBy(_.bucket)
-        .filter { case (_, es) =>
-          es.length >= minFiles || (es.length > 1 && es.exists(_.dvs.nonEmpty))
-        }.keySet
-      if (fragmented.isEmpty) 0
-      else {
-        val (rewrite, keep) = m.entries.partition(e => fragmented(e.bucket))
-        val df = readEntries(rewrite, schemaAt(m))
-        stageAndCommit(keep, df, base, schemaAt(m),
-          Some(struct(clusterBy.map(col): _*)), filesPerBucket,
-          meta = Map("layout_only" -> "true"),
-          layoutPartitions = Some(fragmented.size * filesPerBucket),
-          verifyGenerated = false)
-        fragmented.size
-      }
-    }
+    compactFragmented(minFiles, Some(struct(clusterBy.map(col): _*)),
+      filesPerBucket)
   }
 
   /** Compaction + CLUSTERING: rewrite the current version so each
@@ -3345,13 +3182,7 @@ final class TxTable(
     * remains for time travel. */
   def compactClustered(clusterBy: Seq[String], filesPerBucket: Int = 8): Unit = {
     require(clusterBy.nonEmpty, "compactClustered requires cluster columns")
-    createIfAbsent()
-    withRetry {
-      val base = currentVersion
-      stageAndCommit(Nil, readVersion(base), base, currentSchema,
-        Some(struct(clusterBy.map(col): _*)), filesPerBucket,
-        meta = Map("layout_only" -> "true"), verifyGenerated = false)
-    }
+    rewriteAll(filesPerBucket)((_, _) => Some(struct(clusterBy.map(col): _*)))
   }
 
   /** [[compactClustered]] along a Z-ORDER (Morton) curve over several
@@ -3362,11 +3193,7 @@ final class TxTable(
   def compactZOrdered(cols: Seq[String], filesPerBucket: Int = 8,
       bitsPerCol: Int = 8): Unit = {
     require(cols.nonEmpty, "compactZOrdered requires columns")
-    createIfAbsent()
-    withRetry {
-      val base = currentVersion
-      val snap = readVersion(base)
-      val s = currentSchema
+    rewriteAll(filesPerBucket) { (snap, s) =>
       // DateType has no legal direct cast to double — route through
       // timestamp (epoch seconds: order-preserving, which is all the
       // z-value needs)
@@ -3377,16 +3204,11 @@ final class TxTable(
       }
       val bounds = snap.select(cols.flatMap(c =>
         Seq(min(numView(c)), max(numView(c)))): _*).head()
-      if (bounds.anyNull) // empty table or all-null dims: plain compact
-        stageAndCommit(Nil, snap, base, s,
-          meta = Map("layout_only" -> "true"), verifyGenerated = false)
+      if (bounds.anyNull) None // empty table or all-null dims: plain compact
       else {
         val mins = cols.indices.map(i => bounds.getDouble(2 * i))
         val maxs = cols.indices.map(i => bounds.getDouble(2 * i + 1))
-        stageAndCommit(Nil, snap, base, s,
-          Some(ZOrder.zvalue(cols.map(numView), mins, maxs, bitsPerCol)),
-          filesPerBucket, meta = Map("layout_only" -> "true"),
-          verifyGenerated = false)
+        Some(ZOrder.zvalue(cols.map(numView), mins, maxs, bitsPerCol))
       }
     }
   }
@@ -3740,6 +3562,59 @@ final class TxTable(
     compactClustered(clusterBy, perBucket.toInt)
   }
 
+  final case class VacuumPlan(dataFiles: Seq[String], dvFiles: Seq[String],
+      droppedVersions: Seq[Long], bytes: Long,
+      carriedMetaKeys: Seq[String])
+
+  /** What a [[vacuum]] with the same arguments WOULD delete — the
+    * dry run every retention change deserves before it runs against
+    * production: unreferenced aged data files and DV sidecars (with
+    * their byte total) and the dropped manifest versions. Pure
+    * metadata reads, zero mutation (the real vacuum's watermark
+    * carry-forward commit is also previewed as `carriedMetaKeys`). */
+  def vacuumPlan(
+      keepVersions: Int = 1,
+      minAgeMs: Long = TxTable.DefaultVacuumRetentionMs): VacuumPlan = {
+    val f = fs
+    val vs = versions
+    if (vs.isEmpty) return VacuumPlan(Nil, Nil, Nil, 0L, Nil)
+    val now = System.currentTimeMillis()
+    def aged(st: org.apache.hadoop.fs.FileStatus): Boolean =
+      now - st.getModificationTime >= minAgeMs
+    // TAGS are retention pins: a tagged manifest (and through the
+    // reference sweep below, its files) survives past keepVersions —
+    // that is what makes `VERSION AS OF '<tag>'` durable
+    val pinned = tags.values.toSet.intersect(vs.toSet)
+    val keep = (vs.takeRight(math.max(1, keepVersions)) ++ pinned)
+      .distinct.sorted
+    // manifests store bare names; stripPrefix inverts exactly what
+    // loadManifest prepended, so this is the raw manifest name
+    val keptEntries = keep.flatMap(v => loadManifest(v).entries)
+    val referenced: Set[String] =
+      keptEntries.map(_.path.stripPrefix(s"$dataDir/")).toSet
+    // deletion-vector sidecars: same reference-count-by-basename sweep
+    val referencedDvs: Set[String] = keptEntries
+      .flatMap(_.dvs.map(_.path.stripPrefix(s"$dvDir/"))).toSet
+    def sweep(d: String, ref: Set[String]): Seq[(String, Long)] =
+      if (!f.exists(new Path(d))) Nil
+      else f.listStatus(new Path(d)).toSeq.collect {
+        case st if !ref(st.getPath.getName) && aged(st) =>
+          st.getPath.getName -> st.getLen
+      }
+    val dataGone = sweep(dataDir, referenced)
+    val dvGone = sweep(dvDir, referencedDvs)
+    val oldestKept = keep.head
+    val dropped = vs.filter(_ < oldestKept)
+    val retainedKeys: Set[String] = vs.filter(_ >= oldestKept)
+      .flatMap(commitMeta(_).keys).toSet
+    val carried = dropped.sorted
+      .foldLeft(Map.empty[String, String])((acc, v) => acc ++ commitMeta(v))
+      .--(retainedKeys).filterNot(_._2 == TxTable.MetaTombstone)
+    VacuumPlan(dataGone.map(_._1).sorted, dvGone.map(_._1).sorted,
+      dropped, dataGone.map(_._2).sum + dvGone.map(_._2).sum,
+      carried.keys.toSeq.sorted)
+  }
+
   /** Drop manifests older than the newest `keepVersions` and delete
     * data files no retained manifest references — but NEVER anything
     * younger than `minAgeMs`. Bounds storage; the retention window is
@@ -3763,87 +3638,17 @@ final class TxTable(
     * full-path string comparison would silently match nothing and
     * delete live data. Also sweeps aged-out commit claims and orphaned
     * tmp/stage debris from failed attempts. */
-  /** What a [[vacuum]] with the same arguments WOULD delete — the
-    * dry run every retention change deserves before it runs against
-    * production: unreferenced aged data files and DV sidecars (with
-    * their byte total) and the dropped manifest versions. Pure
-    * metadata reads, zero mutation (the real vacuum's watermark
-    * carry-forward commit is also previewed as `carriedMetaKeys`). */
-  final case class VacuumPlan(dataFiles: Seq[String], dvFiles: Seq[String],
-      droppedVersions: Seq[Long], bytes: Long,
-      carriedMetaKeys: Seq[String])
-
-  def vacuumPlan(
-      keepVersions: Int = 1,
-      minAgeMs: Long = TxTable.DefaultVacuumRetentionMs): VacuumPlan = {
-    val f = fs
-    val vs = versions
-    if (vs.isEmpty) return VacuumPlan(Nil, Nil, Nil, 0L, Nil)
-    val now = System.currentTimeMillis()
-    def aged(st: org.apache.hadoop.fs.FileStatus): Boolean =
-      now - st.getModificationTime >= minAgeMs
-    val pinned = tags.values.toSet.intersect(vs.toSet)
-    val keep = (vs.takeRight(math.max(1, keepVersions)) ++ pinned)
-      .distinct.sorted
-    val keptEntries = keep.flatMap(v => loadManifest(v).entries)
-    val referenced: Set[String] =
-      keptEntries.map(_.path.stripPrefix(s"$dataDir/")).toSet
-    val referencedDvs: Set[String] = keptEntries
-      .flatMap(_.dvs.map(_.path.stripPrefix(s"$dvDir/"))).toSet
-    def sweep(d: String, ref: Set[String]): Seq[(String, Long)] =
-      if (!f.exists(new Path(d))) Nil
-      else f.listStatus(new Path(d)).toSeq.collect {
-        case st if !ref(st.getPath.getName) && aged(st) =>
-          st.getPath.getName -> st.getLen
-      }
-    val dataGone = sweep(dataDir, referenced)
-    val dvGone = sweep(dvDir, referencedDvs)
-    val oldestKept = keep.head
-    val dropped = vs.filter(_ < oldestKept)
-    val retainedKeys: Set[String] = vs.filter(_ >= oldestKept)
-      .flatMap(commitMeta(_).keys).toSet
-    val carried = dropped.sorted
-      .foldLeft(Map.empty[String, String])((acc, v) => acc ++ commitMeta(v))
-      .--(retainedKeys).filterNot(_._2 == TxTable.MetaTombstone)
-    VacuumPlan(dataGone.map(_._1).sorted, dvGone.map(_._1).sorted,
-      dropped, dataGone.map(_._2).sum + dvGone.map(_._2).sum,
-      carried.keys.toSeq.sorted)
-  }
-
   def vacuum(
       keepVersions: Int = 1,
       minAgeMs: Long = TxTable.DefaultVacuumRetentionMs): Unit = {
     val f = fs
-    val vs = versions
-    if (vs.isEmpty) return
+    if (versions.isEmpty) return
     val now = System.currentTimeMillis()
     def aged(st: org.apache.hadoop.fs.FileStatus): Boolean =
       now - st.getModificationTime >= minAgeMs
-    // TAGS are retention pins: a tagged manifest (and through the
-    // reference sweep below, its files) survives past keepVersions —
-    // that is what makes `VERSION AS OF '<tag>'` durable
-    val pinned = tags.values.toSet.intersect(vs.toSet)
-    val keep = (vs.takeRight(math.max(1, keepVersions)) ++ pinned)
-      .distinct.sorted
-    // manifests store bare names; stripPrefix inverts exactly what
-    // loadManifest prepended, so this is the raw manifest name
-    val keptEntries = keep.flatMap(v => loadManifest(v).entries)
-    val referenced: Set[String] =
-      keptEntries.map(_.path.stripPrefix(s"$dataDir/")).toSet
-    if (f.exists(new Path(dataDir)))
-      f.listStatus(new Path(dataDir)).foreach { st =>
-        if (!referenced(st.getPath.getName) && aged(st))
-          f.delete(st.getPath, false)
-      }
-    // deletion-vector sidecars: same reference-count-by-basename sweep
-    val referencedDvs: Set[String] = keptEntries
-      .flatMap(_.dvs.map(_.path.stripPrefix(s"$dvDir/"))).toSet
-    if (f.exists(new Path(dvDir)))
-      f.listStatus(new Path(dvDir)).foreach { st =>
-        if (!referencedDvs(st.getPath.getName) && aged(st))
-          f.delete(st.getPath, false)
-      }
-    val oldestKept = keep.head
+    val plan = vacuumPlan(keepVersions, minAgeMs)
+    plan.dataFiles.foreach(n => f.delete(new Path(dataDir, n), false))
+    plan.dvFiles.foreach(n => f.delete(new Path(dvDir, n), false))
     // Application watermarks (stream replay guards, IVM / replication
     // source versions) live in commit meta, and [[latestMeta]] scans
     // only RETAINED manifests — deleting the last manifest that
@@ -3857,14 +3662,14 @@ final class TxTable(
     // is never shadowed — its key lands in the retained set and drops
     // out of `lost`). Idempotent: once carried, the key is retained
     // and later vacuums skip it.
-    val dropped = vs.filter(_ < oldestKept)
-    if (dropped.nonEmpty) {
-      val candidate = dropped.sorted
+    val dropped = plan.droppedVersions
+    if (plan.carriedMetaKeys.nonEmpty) {
+      val candidate = dropped
         .foldLeft(Map.empty[String, String])((acc, v) => acc ++ commitMeta(v))
-      if (candidate.nonEmpty) withRetry {
+      withRetry {
         val base = currentVersion
         val m = loadManifest(base)
-        val retainedKeys: Set[String] = versions.filter(_ >= oldestKept)
+        val retainedKeys: Set[String] = versions.filter(_ > dropped.last)
           .flatMap(commitMeta(_).keys).toSet
         // a key whose newest dropped value is a TOMBSTONE ends its
         // lifecycle here: not carried, and every older value aged out

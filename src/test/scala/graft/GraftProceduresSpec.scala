@@ -196,14 +196,25 @@ class GraftProceduresSpec extends SparkSpec {
     val d = (1L to 50L).map(i => (i, i * 1.0)).toDF("k", "v")
     val t = new TxTable(spark, dir, d.schema, Seq("k"), numBuckets = 2)
     t.append(d)                                     // v1
-    t.upsert((1L to 50L).map(i => (i, -i * 1.0)).toDF("k", "v")) // v2
-    def files(): Int = new java.io.File(dir + "/data").listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    t.deleteWhereLight(col("k") === 1L)             // v2: a DV sidecar
+    // v3 rewrites both buckets (the sidecar is no longer referenced)
+    // and carries a watermark that only a dropped version holds
+    t.upsert((1L to 50L).map(i => (i, -i * 1.0)).toDF("k", "v"),
+      Map("wm" -> "3"))
+    t.upsert(Seq((2L, -20.0)).toDF("k", "v"))       // v4
+    def names(sub: String): Set[String] =
+      Option(new java.io.File(s"$dir/$sub").listFiles()).toSeq.flatten
+        .map(_.getName)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet
+    def files(): Int = names("data").size
     val before = files()
+    val (dataBefore, dvBefore) = (names("data"), names("_dv"))
     // Scala plan at zero age: v1's rewritten files are sweep targets
     val p = t.vacuumPlan(keepVersions = 1, minAgeMs = 0L)
     assert(p.dataFiles.nonEmpty && p.bytes > 0)
-    assert(p.droppedVersions === Seq(0L, 1L))
+    assert(p.dvFiles.nonEmpty)
+    assert(p.droppedVersions === Seq(0L, 1L, 2L, 3L))
+    assert(p.carriedMetaKeys === Seq("wm"))
     assert(files() === before, "plan must not delete")
     // SQL dry run (default retention age: nothing aged yet → 0s, but
     // the report shape and the no-mutation contract are the point)
@@ -212,10 +223,14 @@ class GraftProceduresSpec extends SparkSpec {
     assert(rep("dry_run") === "true")
     assert(rep.contains("would_free_bytes"))
     assert(files() === before, "dry_run must not delete")
-    assert(t.currentVersion === 2L, "dry_run must not commit")
+    assert(t.currentVersion === 4L, "dry_run must not commit")
     // the real vacuum then performs exactly the planned sweep
     t.vacuum(keepVersions = 1, minAgeMs = 0L)
     assert(files() === before - p.dataFiles.length)
+    assert(dataBefore -- names("data") === p.dataFiles.toSet)
+    assert(dvBefore -- names("_dv") === p.dvFiles.toSet)
+    assert(t.currentVersion === 5L, "one carry commit")
+    assert(t.commitMeta(5L).keySet === p.carriedMetaKeys.toSet)
   }
 
   test("zorder / export_delta / export_iceberg / undrop through CALL") {

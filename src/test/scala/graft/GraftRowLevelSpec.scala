@@ -166,6 +166,22 @@ class GraftRowLevelSpec extends SparkSpec {
     assert(tx.count() === 3L) // untouched
   }
 
+  test("row delta tombstoning a file not live at the scanned version is refused") {
+    val root = tmpDir("graft-rl-unknown")
+    val df = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
+    val tx = new TxTable(spark, s"$root/t", df.schema, Seq("k"), numBuckets = 2)
+    tx.append(df) // v1
+    val scanned = tx.currentVersion
+    val dv = Seq(("not-a-live-file.parquet", 0L)).toDF("_dv_file", "_dv_pos")
+    val e = intercept[IllegalArgumentException] {
+      tx.applyRowDelta(Some(dv), Some(Seq((3L, 30.0)).toDF("k", "v")), scanned)
+    }
+    assert(e.getMessage.contains(s"not live at v$scanned"))
+    assert(tx.currentVersion === scanned)
+    assert(tx.read.orderBy("k").as[(Long, Double)].collect().toSeq ===
+      Seq((1L, 10.0), (2L, 20.0)))
+  }
+
   test("MERGE WHEN NOT MATCHED BY SOURCE: full sync semantics") {
     val root = tmpDir("graft-rl-nmbs")
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s")

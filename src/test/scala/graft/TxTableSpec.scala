@@ -616,6 +616,29 @@ class TxTableSpec extends SparkSpec {
     assert(kvRows(a)("k150") === 1501)
   }
 
+  test("each warm mutation path starts a fixed number of Spark jobs on 16 buckets") {
+    val t = tkv(n = 16)
+    t.append((1 to 400).map(i => (s"k$i", i)).toDF("k", "v"))
+    val ops: Seq[(String, Int => Unit)] = Seq(
+      "append" -> (i => t.append(Seq((s"a$i", i)).toDF("k", "v"))),
+      "upsert" -> (i => t.upsert(Seq((s"k$i", -i)).toDF("k", "v"))),
+      "insertIfAbsent" -> (i =>
+        t.insertIfAbsent(Seq((s"n$i", i), (s"k$i", 0)).toDF("k", "v"))),
+      "applyChangesIf" -> { i =>
+        t.applyChangesIf(Seq((s"k${i + 1}", -i)).toDF("k", "v"),
+          Seq(s"k${i + 2}").toDF("k"), Map.empty)(_ => true)
+        ()
+      },
+      "upsertLight" -> (i => t.upsertLight(Seq((s"k${i + 3}", -i)).toDF("k", "v"))),
+      "deleteWhereLight" -> (i => t.deleteWhereLight(col("k") === s"k${i + 4}")))
+    ops.foreach { case (_, op) => op(10) } // warm every path once
+    val jobs = ops.map { case (name, op) => name -> jobsDuring(op(20)) }
+    assert(jobs === Seq("append" -> 2, "upsert" -> 4, "insertIfAbsent" -> 7,
+      "applyChangesIf" -> 10, "upsertLight" -> 8, "deleteWhereLight" -> 4))
+    assert(kvRows(t)("k20") === -20 && kvRows(t)("k21") === -20 &&
+      !kvRows(t).contains("k22") && !kvRows(t).contains("k24"))
+  }
+
   test("appends read a bounded amount of metadata as versions accumulate") {
     import scala.jdk.CollectionConverters._
     // auto-compaction keeps the manifest one entry long, so what grows
