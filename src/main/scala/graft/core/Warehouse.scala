@@ -41,14 +41,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   def recoverJobTxns(): Int =
     JobTxn.recover(spark, s"$root/_txn", domainTable)
 
-  /** Register every domain table as a temp view so the spark.sql
-    * surface can query the warehouse by name (SURVEY §1.1 catalog
-    * registration). */
-  def registerViews(): Unit =
-    graft.domain.Schemas.tables.keys.foreach { n =>
-      domainTable(n).read.createOrReplaceTempView(n)
-    }
-
   /** Scheduled-maintenance sweep (the lakehouse OPTIMIZE job; the
     * reference's Postgres autovacuum/index-maintenance analog):
     * compact every domain table whose data-file count exceeds

@@ -55,9 +55,9 @@ object OntoFunctions {
     * uses `replace("www.", "")` (first occurrence anywhere) — we keep
     * the saner leading-anchor strip; `contains` makes both equivalent
     * on the whitelist. */
-  def isAllowedDomain(url: Column, domains: Seq[String] = Terms.AllowedDomains): Column = {
+  def isAllowedDomain(url: Column): Column = {
     val host = safeDomain(url)
-    domains.map(d => host.contains(d)).reduce(_ || _)
+    Terms.AllowedDomains.map(d => host.contains(d)).reduce(_ || _)
   }
 
   /** F3 — domain → source organization (21-branch contains-mapping,
@@ -104,10 +104,6 @@ object OntoFunctions {
           .otherwise("P2"))
   }
 
-  /** F5 — enum normalize with fallback. */
-  def normalizeEnum(c: Column, domain: Seq[String], fallback: String): Column =
-    when(c.isin(domain: _*), c).otherwise(lit(fallback))
-
   /** F6 — clamp to [0,1] (ref `scan.ts:265-267`). */
   def clamp01(c: Column): Column =
     greatest(lit(0.0), least(lit(1.0), c.cast(DoubleType)))
@@ -115,22 +111,10 @@ object OntoFunctions {
   /** F7 — string truncation caps. */
   def truncate(c: Column, n: Int): Column = substring(c, 1, n)
 
-  /** F12 — restrict an array column to an enum domain, preserving
-    * element order (ref `scan.ts:259-264` uses filter-includes). */
-  def filterToDomain(c: Column, domain: Seq[String]): Column =
-    filter(c, t => t.isin(domain: _*))
-
-  /** F14 — coerce scalar-or-array JSON values to array (ref
-    * `src/index.ts:432-436`): used after from_json on open payloads. */
-  def asArray(c: Column): Column =
-    when(c.isNull, array()).otherwise(c)
-
   /** F19/D5 — content identity hash. The reference stores an opaque
     * 32-bit string hash (`scan.ts:485-492`); value itself is never
     * compared across systems, so we use the stronger xxhash64 for
-    * partition-friendly 64-bit identity plus md5 hex for fingerprints. */
+    * partition-friendly 64-bit identity. */
   def contentHash(url: Column, title: Column): Column =
     xxhash64(concat_ws("|", url, coalesce(title, lit(""))))
-
-  def contentFingerprint(text: Column): Column = md5(text)
 }

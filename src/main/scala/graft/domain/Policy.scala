@@ -22,13 +22,7 @@ object Policy {
 
   case class TrustPolicy(
       profiles: Seq[Profile],
-      tierDomains: Map[String, Seq[String]],
-      stripUtmParams: Boolean = true,
-      normalizeTrailingSlash: Boolean = true,
-      perDomainRps: Double = 0.2,
-      burst: Int = 2,
-      robotsEnforced: Boolean = true,
-      denyOnCaptcha: Boolean = true)
+      tierDomains: Map[String, Seq[String]])
 
   /** The reference's shipped policy (`config/trust-policy.json`); its
     * six profiles are all TIER_B — tests add a TIER_A profile to

@@ -35,11 +35,20 @@ import graft.pipeline.{Embedder, Extractor, Ids}
   *   append ∥ links insert ∥ two counts)] → log `complete` ∥ run
   *   meta.
   *
-  * Candidate schema: url, title, content, published_date (ISO string,
-  * nullable), connector, connector_rank (int — connector priority
-  * order, lower wins dedup).
+  * The candidates' shape is [[ScanJob.candidateSchema]].
   */
 object ScanJob {
+
+  /** Candidate shape `run` consumes: `published_date` is a nullable ISO
+    * date string; `connector_rank` is the connector's priority (lower
+    * wins the first-wins dedup, D1). */
+  val candidateSchema: StructType = StructType(Seq(
+    StructField("url", StringType, nullable = false),
+    StructField("title", StringType),
+    StructField("content", StringType),
+    StructField("published_date", StringType),
+    StructField("connector", StringType),
+    StructField("connector_rank", IntegerType)))
 
   /** Tables the persist phase writes — the [[graft.core.JobTxn]]
     * enlistment set (runs/run_logs excluded: status and progress must

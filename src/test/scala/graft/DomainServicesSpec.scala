@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.core.Warehouse
-import graft.domain.{RuntimeConfig, Schemas, Seeder, Terms}
-import graft.ingest.Connectors
-import graft.jobs.{EvidenceVerifier, RunTracker, ScanJob}
-import graft.pipeline.{HashEmbedder, RuleExtractor}
+import graft.domain.{Seeder, Terms}
 
 class DomainServicesSpec extends SparkSpec {
   import spark.implicits._
@@ -16,24 +12,6 @@ class DomainServicesSpec extends SparkSpec {
     val wh = new Warehouse(spark, tmpDir("dsvc"))
     wh.createAll()
     wh
-  }
-
-  test("runtime config: defaults, typed load, upsert override, junk tolerated") {
-    val wh = freshWarehouse()
-    val cfg = new RuntimeConfig(wh)
-    assert(cfg.load() === cfg.Values())       // defaults
-    cfg.set("confidence_min", "0.9", t0)
-    cfg.set("reasoning_effort", "high", t0)
-    cfg.set("reasoning_effort", "low", t0)    // upsert replaces
-    cfg.set("unrelated_key", "x", t0)
-    val v = cfg.load()
-    assert(v.confidenceMin === 0.9)
-    assert(v.reasoningEffort === "low")
-    cfg.set("confidence_min", "not-a-number", t0)
-    cfg.set("reasoning_effort", "extreme", t0)
-    val v2 = cfg.load()
-    assert(v2.confidenceMin === 0.7)          // junk → default
-    assert(v2.reasoningEffort === "medium")   // out-of-enum → default
   }
 
   test("seeder populates the 11 term families idempotently + local store") {
@@ -52,39 +30,6 @@ class DomainServicesSpec extends SparkSpec {
       .filter(col("provider") === "local").count() === 1)
   }
 
-  test("HTML harvest: anchors, relative URL resolution, path filter, title/content cascade") {
-    val listPages = Seq(
-      ("https://news.example.eu/en/news", """
-        <html><body>
-        <a href="/en/news/article-1">A1</a>
-        <a href="https://news.example.eu/en/news/article-2">A2</a>
-        <a href="/en/other/skip-me">skip</a>
-        <a href="/en/news/article-1">dup</a>
-        </body></html>""")).toDF("page_url", "html")
-    val articles = Seq(
-      ("https://news.example.eu/en/news/article-1",
-        """<html><head><meta property="og:title" content="OG Title"/></head>
-          |<body><p>First para.</p><p>Second <b>bold</b> para.</p></body></html>"""
-          .stripMargin, "2026-01-10"),
-      ("https://news.example.eu/en/news/article-2",
-        "<html><head><title>Plain Title</title></head><body><p>Body.</p></body></html>",
-        null))
-      .toDF("url", "html", "published_date")
-
-    val conn = new Connectors.HtmlCorpusConnector(
-      "eu_news", 0, listPages, articles, "/en/news")
-    val got = conn.candidates(spark)
-      .orderBy("url")
-      .select("url", "title", "content", "connector_rank")
-      .as[(String, String, String, Int)].collect()
-    assert(got.length === 2)
-    assert(got(0)._1.endsWith("article-1"))
-    assert(got(0)._2 === "OG Title")
-    assert(got(0)._3 === "First para.\nSecond bold para.")
-    assert(got(1)._2 === "Plain Title")
-    assert(got.forall(_._4 === 0))
-  }
-
   test("quality profile: per-column nulls and distincts in one pass") {
     val df = Seq(
       (Some("a"), 1), (None, 2), (Some("a"), 3), (Some("b"), 3))
@@ -95,175 +40,5 @@ class DomainServicesSpec extends SparkSpec {
     assert(p.getAs[Long]("distinct_s") === 2)   // nulls not counted
     assert(p.getAs[Long]("nulls_n") === 0)
     assert(p.getAs[Long]("distinct_n") === 3)
-  }
-
-  test("unionCandidates merges connectors; empty list yields empty typed frame") {
-    val pages = Seq(("https://news.example.eu/en/news",
-      """<a href="/en/news/a1">x</a>""")).toDF("page_url", "html")
-    val arts = Seq(("https://news.example.eu/en/news/a1",
-      "<html><head><title>T</title></head><body><p>B</p></body></html>",
-      "2026-01-01")).toDF("url", "html", "published_date")
-    val c1 = new Connectors.HtmlCorpusConnector("one", 0, pages, arts, "/en/news")
-    val c2 = new Connectors.HtmlCorpusConnector("two", 1, pages, arts, "/en/news")
-    val both = Connectors.unionCandidates(spark, Seq(c1, c2))
-    assert(both.count() === 2)
-    assert(both.select("connector").distinct().count() === 2)
-    val none = Connectors.unionCandidates(spark, Seq.empty)
-    assert(none.count() === 0)
-    assert(none.schema.fieldNames.toSeq ===
-      Connectors.candidateSchema.fieldNames.toSeq)
-  }
-
-  test("S6 binary documents: binaryFile scan → text extraction → ScanJob accepts") {
-    val docsDir = tmpDir("bindocs")
-    def write(name: String, bytes: Array[Byte]): Unit = {
-      val os = new java.io.FileOutputStream(new java.io.File(docsDir, name))
-      os.write(bytes); os.close()
-    }
-    // fake PDF: non-printable junk, then text operators the extractor
-    // should surface; first run becomes the title
-    write("reg-2026.pdf",
-      Array[Byte](0x01, 0x02, 0x03) ++
-        "Binding regulation on AI Act and GDPR compliance".getBytes("US-ASCII") ++
-        Array[Byte](0x00, 0x0B) ++
-        "urgent cybersecurity rules apply".getBytes("US-ASCII"))
-    write("notes.docx",
-      "Type approval guidance for software update management".getBytes("US-ASCII"))
-    write("skip.txt", "never harvested".getBytes("US-ASCII"))
-
-    val conn = new Connectors.BinaryDocConnector(
-      "gar_docs", 0, docsDir,
-      p => concat(lit("https://eur-lex.europa.eu/docs/"),
-        regexp_extract(p, "([^/]+)$", 1)))
-    val cands = conn.candidates(spark).orderBy("url")
-    val got = cands.select("url", "title", "content", "connector")
-      .as[(String, String, String, String)].collect()
-    assert(got.length === 2) // .txt filtered out by the glob
-    assert(got(0)._1 === "https://eur-lex.europa.eu/docs/notes.docx")
-    assert(got(1)._1 === "https://eur-lex.europa.eu/docs/reg-2026.pdf")
-    assert(got(1)._2 === "Binding regulation on AI Act and GDPR compliance")
-    assert(got(1)._3.contains("urgent cybersecurity rules apply"))
-    assert(got(0)._2.startsWith("Type approval guidance"))
-
-    // e2e: the extracted candidates flow through the scan pipeline and
-    // the TIER_A domain docs are accepted into regulation_items
-    val wh = freshWarehouse()
-    new RunTracker(wh).create("run-bin", "scan", "EU", 30, t0)
-    val counters = ScanJob.run(wh, cands,
-      ScanJob.Params("run-bin", "EU", 30, 10, 0.5, t0),
-      RuleExtractor, new HashEmbedder(16))
-    assert(counters.discovered === 2)
-    val items = wh.domainTable("regulation_items").read
-    assert(items.filter(col("url").contains("eur-lex.europa.eu/docs/")).count() === 2)
-    assert(wh.domainTable("source_documents").read.count() === 2)
-  }
-
-  test("S8 web search: domain filter, canonicalization, cross-query dedup, robots gate, page decoration") {
-    import graft.ingest.Connectors.{FixtureSearchClient, SearchHit, WebSearchConnector}
-    val client = new FixtureSearchClient(Map(
-      "ai act" -> Seq(
-        SearchHit("ai act", "https://eur-lex.europa.eu/reg/2026?utm_source=x",
-          "AI Act (search)", "snippet about the AI Act", "2026-01-10"),
-        SearchHit("ai act", "https://spam.example.com/clickbait",
-          "Spam", "not allowed", "2026-01-01"),
-        SearchHit("ai act", "https://unece.org/private/draft",
-          "Blocked draft", "robots denies this", "2026-01-02")),
-      "cyber rules" -> Seq(
-        // same URL as query 1 post-canonicalization → first query wins
-        SearchHit("cyber rules", "https://eur-lex.europa.eu/reg/2026",
-          "dup title", "dup snippet", "2026-01-11"),
-        SearchHit("cyber rules", "https://unece.org/public/rules",
-          "Cyber rules (search)", "snippet on cyber rules", "2026-02-01"))))
-    // one hit has a fetched page (decorated); the others keep snippets
-    val pages = Seq((
-      "https://eur-lex.europa.eu/reg/2026",
-      "<html><head><title>AI Act final text</title></head>" +
-        "<body><p>Full binding obligations text.</p></body></html>",
-      "2026-01-15")).toDF("url", "html", "published_date")
-    val conn = new WebSearchConnector(
-      "web_search", 5, client, Seq("ai act", "cyber rules"),
-      allowedDomains = Seq("eur-lex.europa.eu", "unece.org"),
-      fetchedPages = pages,
-      robotsByDomain = Map(
-        "unece.org" -> "User-agent: *\nDisallow: /private/\n"))
-    val got = conn.candidates(spark)
-      .select("url", "title", "content", "published_date", "connector_rank")
-      .as[(String, String, String, String, Int)].collect().sortBy(_._1)
-    assert(got.map(_._1).toSeq === Seq(
-      "https://eur-lex.europa.eu/reg/2026", // utm stripped, deduped, fetched
-      "https://unece.org/public/rules"))    // snippet fallback; /private robots-blocked
-    val lex = got(0)
-    assert(lex._2 === "AI Act final text") // page beats search title
-    assert(lex._3.contains("Full binding obligations"))
-    assert(lex._4 === "2026-01-15")
-    val unece = got(1)
-    assert(unece._2 === "Cyber rules (search)")
-    assert(unece._3 === "snippet on cyber rules")
-    assert(unece._4 === "2026-02-01")
-    assert(got.forall(_._5 === 5))
-  }
-
-  test("S8 with the LOCAL index-backed search client: ranked retrieval end to end") {
-    import graft.ingest.Connectors.{IndexSearchClient, WebSearchConnector}
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text", "source")
-    val idxDir = tmpDir("s8idx")
-    graft.ext.TextIndex.build(docs, "doc_id", "text", idxDir, nBuckets = 16)
-    val client = new IndexSearchClient(spark, idxDir, docs)
-
-    val hits = client.search("fast merge spark", 5)
-    assert(hits.size === 5)
-    // ranking contract: matched-term count is non-increasing down the
-    // result list (recomputed directly from the corpus texts)
-    val terms = Seq("fast", "merge", "spark")
-    val byId = docs.as[(Long, String, String)].collect()
-      .map(r => r._1 -> r._2.toLowerCase.split("[^a-z0-9]+").toSet).toMap
-    val matched = hits.map(h =>
-      terms.count(byId(h.url.split("/").last.toLong)))
-    assert(matched === matched.sorted.reverse, s"ranking broke: $matched")
-    assert(matched.head === 3, "top hit should match every query term")
-    // determinism: same query, same results
-    assert(client.search("fast merge spark", 5) === hits)
-
-    // and the full S8 connector runs over the local backend: domain
-    // whitelist + robots gates apply to the synthesized URLs unchanged
-    val conn = new WebSearchConnector(
-      "web_search_local", 5, client, Seq("fast merge spark"),
-      allowedDomains = Seq("src0.example", "src1.example"),
-      fetchedPages = Seq.empty[(String, String, String)]
-        .toDF("url", "html", "published_date"))
-    val got = conn.candidates(spark)
-      .select("url", "title", "content").as[(String, String, String)]
-      .collect()
-    assert(got.nonEmpty)
-    assert(got.forall(r =>
-      r._1.startsWith("https://src0.example/") ||
-        r._1.startsWith("https://src1.example/")))
-    assert(got.forall(r => r._2.nonEmpty && r._3.nonEmpty))
-  }
-
-  test("evidence verifier: rule verdicts with reference contract shape") {
-    val wh = freshWarehouse()
-    def item(id: String, nCit: Int, conf: Double, citUrl: String) = Row(
-      id, "EU", "Org", "guidance", "t", "s", "https://eur-lex.europa.eu/x",
-      null, t0, null, "unknown", Seq(), Seq(), Seq(),
-      Row(null, null, (0 until nCit).map(_ => Row("c", citUrl, null))),
-      conf, "", "P2", "TIER_A_BINDING", null, null, null, t0)
-    wh.domainTable("regulation_items").append(spark.createDataFrame(
-      java.util.Arrays.asList(
-        item("ok", 1, 0.9, "https://eur-lex.europa.eu/x"),
-        item("no-cit", 0, 0.9, "https://eur-lex.europa.eu/x"),
-        item("bad-domain", 1, 0.9, "https://evil.example.com/x"),
-        item("low-conf", 1, 0.2, "https://eur-lex.europa.eu/x")),
-      Schemas.regulationItems))
-
-    assert(EvidenceVerifier.verify(wh, "ok") === Some((true, "pass")))
-    assert(EvidenceVerifier.verify(wh, "no-cit") ===
-      Some((false, "fail: no citations")))
-    assert(EvidenceVerifier.verify(wh, "bad-domain") ===
-      Some((false, "fail: citation from disallowed domain")))
-    val (p, msg) = EvidenceVerifier.verify(wh, "low-conf").get
-    assert(!p && msg.contains("confidence below 0.5"))
-    assert(EvidenceVerifier.verify(wh, "missing") === None)
   }
 }

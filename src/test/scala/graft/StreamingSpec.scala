@@ -314,7 +314,7 @@ class StreamingSpec extends SparkSpec {
     // streaming: one file per trigger → ≥3 child runs
     val whS = new Warehouse(spark, tmpDir("wh-stream")); whS.createAll()
     val stream = spark.readStream
-      .schema(graft.ingest.Connectors.candidateSchema)
+      .schema(ScanJob.candidateSchema)
       .option("maxFilesPerTrigger", 1).parquet(candDir)
     val q = StreamingScan.start(whS, stream, params,
       RuleExtractor, new HashEmbedder(16), tmpDir("scan-cp"))
