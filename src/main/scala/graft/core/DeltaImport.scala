@@ -546,7 +546,6 @@ object DeltaImport {
         * flag-scoped child, or `spark` itself). */
       reader: Option[SparkSession] = None): DataFrame = {
     val rs = reader.getOrElse(spark)
-    import org.apache.spark.sql.functions.{broadcast, element_at, split}
     val (dirty, clean) = group.partition(_.deletionVector.nonEmpty)
     val cleanDf =
       if (clean.isEmpty) None
@@ -575,15 +574,8 @@ object DeltaImport {
           .flatMap { case (f, bytes) =>
             DeltaDv.deserializeBitmap(bytes).iterator.map(p => (f, p)) }
           .toDF("_dv_file", "_dv_pos")
-        Some(rs.read.schema(dataSchema).parquet(dirty.map(_.path): _*)
-          .withColumn("_file",
-            element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("_pos", col("_metadata.row_index"))
-          .join(broadcast(tomb),
-            col("_file") === col("_dv_file") &&
-              col("_pos") === col("_dv_pos"),
-            "left_anti")
-          .drop("_file", "_pos"))
+        Some(TxTable.maskDeleted(TxTable.withRowIdentity(
+          rs.read.schema(dataSchema).parquet(dirty.map(_.path): _*)), tomb))
       }
     (cleanDf.toSeq ++ dirtyDf.toSeq).reduce(_ unionByName _)
   }

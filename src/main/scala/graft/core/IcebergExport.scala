@@ -430,7 +430,7 @@ object IcebergExport {
   private def writeEqualityDeletes(spark: SparkSession, fs: FileSystem,
       table: TxTable, dirty: Seq[(TxTable.LiveFile, Seq[String])],
       uuid: String, keyFields: Seq[(StructField, Int)]): (String, Long) = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at, split}
+    import org.apache.spark.sql.functions.{broadcast, col}
     val delDir = new Path(table.dir, "_iceberg_deletes")
     val CountedName = s"""^\\Q$uuid\\E-n(\\d+)-eq-deletes\\.parquet$$""".r
     val existing = (fs.globStatus(
@@ -458,12 +458,10 @@ object IcebergExport {
     // spelling — what our own eq-masking path binds by) with the
     // Iceberg field ids as parquet field ids (what spec id-resolving
     // readers bind by) — correct under both binding disciplines
-    val rows = spark.read.schema(physSchema)
-      .parquet(dirty.map(_._1.path): _*)
-      .withColumn("_dv_file",
-        element_at(split(col("_metadata.file_path"), "/"), -1))
-      .withColumn("_dv_pos", col("_metadata.row_index"))
-      .join(broadcast(tomb), Seq("_dv_file", "_dv_pos"), "left_semi")
+    val rows = TxTable.withRowIdentity(spark.read.schema(physSchema)
+        .parquet(dirty.map(_._1.path): _*))
+      .join(broadcast(tomb), col("_file") === col("_dv_file") &&
+        col("_pos") === col("_dv_pos"), "left_semi")
       .select(keyFields.zip(physKeys).map { case ((f, fid), phys) =>
         val md = new MetadataBuilder()
           .putLong("parquet.field.id", fid.toLong).build()

@@ -1161,19 +1161,23 @@ object IcebergImport {
         s.files.zip(s.fileRowBases).map { case (f, b) =>
           base(f) -> b.get }.toMap
       }
-    /** `_row_id` = the file's base + the reader's physical row index
-      * (positions are physical, so the mask composes after this). */
-    def withLineage(scan: DataFrame): DataFrame =
-      if (!withRowId) scan
-      else {
-        val m = broadcast(rowBaseOf.toSeq.toDF("_rl_file", "_rl_base"))
-        scan.withColumn("_rl_f",
-            element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("_rl_pos", col("_metadata.row_index"))
-          .join(m, col("_rl_f") === col("_rl_file"), "left")
-          .withColumn("_row_id", col("_rl_base") + col("_rl_pos"))
-          .drop("_rl_f", "_rl_pos", "_rl_file", "_rl_base")
-      }
+    def scan(files: Seq[String]): DataFrame =
+      spark.read.schema(s.fileSchema).parquet(files: _*)
+    /** `_row_id` = the file's base + the physical row index `_pos` of
+      * `identified` (a [[TxTable.withRowIdentity]] scan; positions are
+      * physical, so the mask composes after this). */
+    def withLineage(identified: DataFrame): DataFrame =
+      if (!withRowId) identified
+      else identified
+        .join(broadcast(rowBaseOf.toSeq.toDF("_rl_file", "_rl_base")),
+          col("_file") === col("_rl_file"), "left")
+        .withColumn("_row_id", col("_rl_base") + col("_pos"))
+        .drop("_rl_file", "_rl_base")
+    /** The unmasked rows of `files`, with `_row_id` when asked. */
+    def scanClean(files: Seq[String]): DataFrame =
+      if (!withRowId) scan(files)
+      else withLineage(TxTable.withRowIdentity(scan(files)))
+        .drop("_file", "_pos")
     // data files bind by the name-mapped (physical) column names;
     // the declared names surface via one positional rename
     def toDeclared(df: DataFrame): DataFrame =
@@ -1182,14 +1186,13 @@ object IcebergImport {
         (if (withRowId) Seq("_row_id") else Nil)): _*)
     if (s.posDeleteFiles.isEmpty && s.eqDeletes.isEmpty &&
       s.dvDeletes.isEmpty)
-      return toDeclared(withLineage(
-        spark.read.schema(s.fileSchema).parquet(s.files: _*)))
+      return toDeclared(scanClean(s.files))
     val parquetTomb =
       if (s.posDeleteFiles.isEmpty) None
       else Some(spark.read.parquet(s.posDeleteFiles: _*)
         .select(
-          element_at(split(col("file_path"), "/"), -1).as("_del_file"),
-          col("pos").as("_del_pos"))
+          element_at(split(col("file_path"), "/"), -1).as("_dv_file"),
+          col("pos").as("_dv_pos"))
         .distinct())
     // v3 DVs: bitmaps expand to positions on EXECUTORS (the Delta DV
     // read plan) and union with the parquet tombstones
@@ -1200,45 +1203,25 @@ object IcebergImport {
         Some(spark.createDataset(s.dvDeletes)
           .flatMap { case (f, vec) =>
             DeltaDv.deserializeBitmap(vec).iterator.map(p => (f, p)) }
-          .toDF("_del_file", "_del_pos"))
+          .toDF("_dv_file", "_dv_pos"))
       }
     val tombOpt = (parquetTomb, dvTomb) match {
       case (Some(a), Some(b)) => Some(a.unionByName(b).distinct())
       case (a, b)             => a.orElse(b)
     }
     val targeted: Set[String] = (parquetTomb
-      .map(_.select("_del_file").distinct()
+      .map(_.select("_dv_file").distinct()
         .collect().map(_.getString(0)).toSet) // file-count-bounded
       .getOrElse(Set.empty)) ++ s.dvDeletes.map(_._1)
 
     // position masking, per file group: only referenced files pay
     def scanMasked(files: Seq[String]): DataFrame = {
       val (dirty, clean) = files.partition(f => targeted(base(f)))
-      val cleanDf =
-        if (clean.isEmpty) None
-        else Some(withLineage(
-          spark.read.schema(s.fileSchema).parquet(clean: _*)))
+      val cleanDf = if (clean.isEmpty) None else Some(scanClean(clean))
       val dirtyDf =
         if (dirty.isEmpty) None
-        else {
-          val raw = spark.read.schema(s.fileSchema).parquet(dirty: _*)
-            .withColumn("_file",
-              element_at(split(col("_metadata.file_path"), "/"), -1))
-            .withColumn("_pos", col("_metadata.row_index"))
-          val lin =
-            if (!withRowId) raw
-            else {
-              val m = broadcast(
-                rowBaseOf.toSeq.toDF("_rl_file", "_rl_base"))
-              raw.join(m, col("_file") === col("_rl_file"), "left")
-                .withColumn("_row_id", col("_rl_base") + col("_pos"))
-                .drop("_rl_file", "_rl_base")
-            }
-          Some(lin
-            .join(tombOpt.get, col("_file") === col("_del_file") &&
-              col("_pos") === col("_del_pos"), "left_anti")
-            .drop("_file", "_pos"))
-        }
+        else Some(TxTable.maskDeleted(
+          withLineage(TxTable.withRowIdentity(scan(dirty))), tombOpt.get))
       toDeclared((cleanDf.toSeq ++ dirtyDf.toSeq).reduce(_ unionByName _))
     }
 

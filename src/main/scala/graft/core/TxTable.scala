@@ -1494,8 +1494,6 @@ final class TxTable(
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
 
-  private def emptyDf: DataFrame = emptyDfFor(currentSchema)
-
   /** Read `files` under schema `s`; files written before an evolution
     * commit simply lack the new columns and surface them as nulls
     * (parquet-by-declared-schema — no footer merging, no rewrite). */
@@ -1511,18 +1509,15 @@ final class TxTable(
       if (phys == s) raw else raw.toDF(s.fieldNames.toSeq: _*)
     }
 
-  /** [[readFiles]] plus provenance columns `_file` (basename) and
-    * `_pos` (row position within the file) from the parquet reader's
-    * `_metadata` struct — the row identity deletion vectors tombstone. */
+  /** [[readFiles]] plus the row identity deletion vectors tombstone
+    * ([[TxTable.withRowIdentity]]'s `_file` / `_pos`). */
   private def readFilesWithPos(files: Seq[String], s: StructType): DataFrame =
     if (files.isEmpty)
       emptyDfFor(s).withColumn("_file", lit("")).withColumn("_pos", lit(0L))
     else {
       val phys = physicalize(s)
-      val raw = spark.read.schema(phys).parquet(files: _*)
-        .withColumn("_file",
-          element_at(split(col("_metadata.file_path"), "/"), -1))
-        .withColumn("_pos", col("_metadata.row_index"))
+      val raw = TxTable.withRowIdentity(
+        spark.read.schema(phys).parquet(files: _*))
       if (phys == s) raw
       else raw.select(phys.fields.zip(s.fields).map { case (p, l) =>
         col(p.name).as(l.name) } :+ col("_file") :+ col("_pos"): _*)
@@ -1538,24 +1533,16 @@ final class TxTable(
   }
 
   /** MERGE-ON-READ: the live rows of `entries` — clean files stream
-    * straight through; files carrying deletion vectors are anti-joined
-    * against the (broadcast, tiny) tombstone set on (file, position).
-    * The anti-join is a map-side broadcast filter: no shuffle of the
-    * data, and files without DVs never pay it. */
+    * straight through; files carrying deletion vectors pass
+    * [[TxTable.maskDeleted]] against their sidecars' tombstones, so
+    * files without DVs never pay the mask. */
   private def readEntries(entries: Seq[FEntry], s: StructType): DataFrame = {
     val (dirty, clean) = entries.partition(_.dvs.nonEmpty)
     val cleanDf = readFiles(clean.map(_.path), s)
     if (dirty.isEmpty) cleanDf
-    else cleanDf.unionByName(liveDirtyWithPos(dirty, s).drop("_file", "_pos"))
+    else cleanDf.unionByName(TxTable.maskDeleted(
+      readFilesWithPos(dirty.map(_.path), s), dvTombstones(dirty)))
   }
-
-  /** The live rows of DV-carrying `dirty` entries with their `_file` /
-    * `_pos` columns: the broadcast anti-join [[readEntries]] masks by. */
-  private def liveDirtyWithPos(dirty: Seq[FEntry], s: StructType): DataFrame =
-    readFilesWithPos(dirty.map(_.path), s)
-      .join(broadcast(dvTombstones(dirty)),
-        col("_file") === col("_dv_file") && col("_pos") === col("_dv_pos"),
-        "left_anti")
 
   /** The live rows of `entries` with `_file` / `_pos` — the row
     * identities a new deletion vector tombstones (existing DVs apply:
@@ -1564,7 +1551,9 @@ final class TxTable(
     val (dirty, clean) = entries.partition(_.dvs.nonEmpty)
     val cleanPos = readFilesWithPos(clean.map(_.path), s)
     if (dirty.isEmpty) cleanPos
-    else cleanPos.unionByName(liveDirtyWithPos(dirty, s))
+    else cleanPos.unionByName(TxTable.maskDeleted(
+      readFilesWithPos(dirty.map(_.path), s), dvTombstones(dirty),
+      keepIdentity = true))
   }
 
   /** Stage `hits` (`_dv_file` basename, `_dv_pos`) as ONE deletion-
@@ -1655,17 +1644,6 @@ final class TxTable(
     val s = schemaAt(m)
     val es = pred.map(p => pruneEntries(m.entries, p, s)).getOrElse(m.entries)
     (s, es.map(e => (e.bucket, e.path, e.dvs.map(_.path))))
-  }
-
-  /** Planning statistics for the provider: (bytes, exact live rows)
-    * of version `v` after pruning by `pred` — manifest metadata plus
-    * one file-status per surviving file (bounded by the pruned file
-    * count; Spark's own file sources pay the same listing). Rows are
-    * None if any surviving file predates recorded stats. */
-  private[graft] def providerStats(v: Long, pred: Option[Column])
-      : (Long, Option[Long]) = {
-    val (bytes, rows, _, _) = providerStatsFull(v, pred)
-    (bytes, rows)
   }
 
   /** One-pass planning statistics: (bytes, exact live rows, schema,
@@ -3786,6 +3764,32 @@ object TxTable {
     * [[TxTable.currentFileInfo]]). */
   final case class LiveFile(path: String, bucket: Int, statsJson: String,
       dvRows: Long)
+
+  /** `scan` (a parquet file read) plus the row identity a position
+    * delete names: `_file`, the basename of the file a row came from,
+    * and `_pos`, its physical row index in that file. Basenames, not
+    * full URIs: writers disagree on `file:/` vs `file:///`, and every
+    * format's data file names are unique within a table. */
+  private[graft] def withRowIdentity(scan: DataFrame): DataFrame =
+    scan.withColumn("_file",
+        element_at(split(col("_metadata.file_path"), "/"), -1))
+      .withColumn("_pos", col("_metadata.row_index"))
+
+  /** MERGE-ON-READ mask shared by every format: the rows of `scan`
+    * (carrying [[withRowIdentity]]'s columns) whose identity is not
+    * among `tombstones` (`_dv_file`, `_dv_pos`). Each format only
+    * decodes its own tombstones (DV sidecars, Delta DV descriptors,
+    * Iceberg position-delete files and Puffin blobs); the anti-join
+    * broadcasts them — tombstones are tiny next to the data, so the
+    * data never shuffles. The identity columns are dropped unless
+    * `keepIdentity`. */
+  private[graft] def maskDeleted(scan: DataFrame, tombstones: DataFrame,
+      keepIdentity: Boolean = false): DataFrame = {
+    val live = scan.join(broadcast(tombstones),
+      col("_file") === col("_dv_file") && col("_pos") === col("_dv_pos"),
+      "left_anti")
+    if (keepIdentity) live else live.drop("_file", "_pos")
+  }
 
   /** The `_table.json` write descriptor, if the table has one:
     * (key columns, bucket count, bloom columns). See

@@ -41,8 +41,8 @@ import graft.core.DeltaImport
   *
   * Scale shape: offset resolution is one log-directory listing,
   * per-commit planning one JSON parse (driver metadata); each batch
-  * fans out one partition per change file through the same row reader
-  * the provider uses.
+  * fans out one partition per change file through the provider's
+  * parquet reader.
   */
 final class GraftCdfTable(dir: String) extends Table with SupportsRead {
   private val spark = SparkSession.active
@@ -158,9 +158,9 @@ final class GraftCdfReaderFactory(dataSchema: StructType)
 }
 
 /** Streams one change (or insert-derived data) file: the provider's
-  * row decoder does the parquet work; this wrapper appends the
-  * constant `_change_type` (for insert derivation) and
-  * `_commit_version`. */
+  * parquet reader does the decode (through its row view); this
+  * wrapper appends the constant `_change_type` (for insert
+  * derivation) and `_commit_version`. */
 final class GraftCdfPartitionReader(path: String, hasChangeCol: Boolean,
     commitVersion: Long, dataSchema: StructType)
     extends PartitionReader[InternalRow] {
@@ -170,8 +170,8 @@ final class GraftCdfPartitionReader(path: String, hasChangeCol: Boolean,
       StructType(dataSchema.fields :+
         StructField("_change_type", StringType))
     else dataSchema
-  private val inner =
-    new GraftPartitionReader(path, Array.empty, innerSchema)
+  private val inner = new GraftReaderFactory(innerSchema)
+    .createReader(GraftInputPartition(path, Array.empty))
   private val insertTag = UTF8String.fromString("insert")
 
   override def next(): Boolean = inner.next()
@@ -181,7 +181,10 @@ final class GraftCdfPartitionReader(path: String, hasChangeCol: Boolean,
     val n = dataSchema.length
     val vals = new Array[Any](n + 2)
     var i = 0
-    while (i < n) { vals(i) = r.get(i, dataSchema(i).dataType); i += 1 }
+    while (i < n) {
+      vals(i) = if (r.isNullAt(i)) null else r.get(i, dataSchema(i).dataType)
+      i += 1
+    }
     vals(n) = if (hasChangeCol) r.get(n, StringType) else insertTag
     vals(n + 1) = commitVersion
     new GenericInternalRow(vals)

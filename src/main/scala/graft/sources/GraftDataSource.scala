@@ -1,19 +1,11 @@
 package graft.sources
 
-import java.nio.ByteOrder
 import java.util.{Map => JMap}
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -24,6 +16,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.TxTable
@@ -51,18 +44,15 @@ import graft.core.TxTable
   *    schema — unrequested columns are never materialized;
   *  - merge-on-read deletion vectors apply INSIDE the partition
   *    reader: each reader loads only its own file's tombstone
-  *    positions (basename-keyed sidecar rows) and skips them by row
-  *    index while streaming, so a DV'd table reads correctly through
+  *    positions (basename-keyed sidecar rows) and masks them by row
+  *    index batch by batch, so a DV'd table reads correctly through
   *    plain SQL with no extra shuffle.
   *
-  * Decode is two-tier: clean (DV-free) snapshots run Spark's OWN
-  * vectorized parquet reader and hand back ColumnarBatches
-  * ([[GraftColumnarReader]] — the scan-wide decision lives in
-  * [[GraftReaderFactory.supportColumnarReads]]); files carrying
-  * deletion vectors fall back to the row-at-a-time Group decode,
-  * which masks tombstones exactly by physical position. Maintenance
-  * (`materializeDeletes`, compaction) folds DVs and restores the
-  * vectorized path.
+  * Decode is Spark's OWN vectorized parquet reader, handing back
+  * ColumnarBatches ([[GraftColumnarReader]], the one reader): clean
+  * batches pass through zero-copy, batches holding tombstones compact
+  * their survivors. Maintenance (`materializeDeletes`, compaction)
+  * folds DVs and restores the zero-copy path.
   *
   * Writes route THROUGH the guarded commit protocol, never around it:
   * the V1 write bridge ([[GraftWriteBuilder]]) hands the resolved
@@ -975,34 +965,25 @@ final class GraftScan(tx: TxTable, version: Long, required: StructType,
 final class GraftReaderFactory(required: StructType)
     extends PartitionReaderFactory {
 
-  /** COLUMNAR whenever the requested data columns are survivor-
-    * copyable types (Spark refuses mixed row/batch partitions, so the
-    * decision is scan-wide). Deletion vectors no longer force the row
-    * path: the columnar reader masks tombstones batch-side — batches
-    * with no tombstones in range pass through ZERO-copy, batches with
-    * tombstones compact the survivors into reusable vectors — so a
-    * heavily-DV'd table keeps the vectorized decode exactly when it
-    * is large enough to need it. */
-  override def supportColumnarReads(partition: InputPartition): Boolean = {
-    val dataFields = required.fields.filter(f =>
-      f.name != GraftTable.FileCol && f.name != GraftTable.PosCol)
-    dataFields.nonEmpty &&
-      dataFields.forall(f => GraftColumnarReader.copyable(f.dataType))
-  }
+  /** COLUMNAR for every partition: [[GraftColumnarReader]] is the
+    * provider's one parquet reader. Deletion vectors mask batch-side
+    * (batches with no tombstones in range pass through ZERO-copy,
+    * batches with tombstones compact the survivors into reusable
+    * vectors), and a scan with no data column (`count(*)`, a
+    * `_graft_file`/`_graft_pos`-only row-level scan) gets batches that
+    * carry only row counts and the metadata vectors. */
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    true
 
+  /** Rows for the callers that consume them (the graft-files overlay,
+    * the CDF stream, the Iceberg tail and changelog readers): a row
+    * view over [[createColumnarReader]]. */
   override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = partition match {
-    case p: GraftInputPartition =>
-      new GraftPartitionReader(p.path, p.dvPaths, required,
-        p.start, p.length)
-    case b: GraftBucketPartition =>
-      new GraftChainReader(b.paths.indices.map(i => () =>
-        new GraftPartitionReader(b.paths(i), b.dvPaths(i), required)
-          : PartitionReader[InternalRow]))
-  }
+      : PartitionReader[InternalRow] =
+    new GraftBatchRows(createColumnarReader(partition))
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+      : PartitionReader[ColumnarBatch] =
     partition match {
       case p: GraftInputPartition =>
         new GraftColumnarReader(p.path, p.dvPaths, required,
@@ -1010,8 +991,30 @@ final class GraftReaderFactory(required: StructType)
       case b: GraftBucketPartition =>
         new GraftChainReader(b.paths.indices.map(i => () =>
           new GraftColumnarReader(b.paths(i), b.dvPaths(i), required)
-            : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch]))
+            : PartitionReader[ColumnarBatch]))
     }
+}
+
+/** The rows of a columnar reader's batches, one `rowIterator()` at a
+  * time. `get()` returns the same row until the next `next()`; a row
+  * is valid only until then (batch vectors are reused), so callers
+  * copy what they keep. */
+private[sources] final class GraftBatchRows(
+    batches: PartitionReader[ColumnarBatch])
+    extends PartitionReader[InternalRow] {
+  private var rows: java.util.Iterator[InternalRow] =
+    java.util.Collections.emptyIterator()
+  private var current: InternalRow = _
+  override def next(): Boolean = {
+    while (!rows.hasNext) {
+      if (!batches.next()) return false
+      rows = batches.get().rowIterator()
+    }
+    current = rows.next()
+    true
+  }
+  override def get(): InternalRow = current
+  override def close(): Unit = batches.close()
 }
 
 /** VECTORIZED partition reader: Spark's own
@@ -1022,12 +1025,12 @@ final class GraftReaderFactory(required: StructType)
   * requested order, missing pre-evolution columns as constant-null
   * vectors, and the row-identity metadata columns (`_graft_file`
   * constant, `_graft_pos` a per-batch position fill) when requested.
-  * This clears the provider's per-row Group-decode tax on the hottest
-  * path — at 100 TB the scan IS the workload.
+  * A scan with no data column reads no parquet column: its batches
+  * carry only row counts (Spark's own `count(*)` shape).
   *
-  * DELETION VECTORS mask batch-side, so DV'd files keep the columnar
-  * decode: the file's tombstoned positions load once (sorted), and
-  * each batch checks its position range against a monotonic cursor —
+  * DELETION VECTORS mask batch-side: the file's tombstoned positions
+  * load once (sorted), and each batch checks its position range
+  * against a monotonic cursor —
   * a batch with NO tombstones in range passes through ZERO-copy (the
   * common case: deletes cluster in few row groups), a batch with
   * tombstones compacts the survivors into reusable output vectors
@@ -1041,11 +1044,10 @@ final class GraftReaderFactory(required: StructType)
   * decode wrongly. */
 final class GraftColumnarReader(path: String, dvPaths: Array[String],
     required: StructType, start: Long = 0L, length: Long = -1L)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+    extends PartitionReader[ColumnarBatch] {
   require(length < 0 ||
     (dvPaths.isEmpty && !required.fieldNames.contains(GraftTable.PosCol)),
     "byte-ranged reads serve no row identity (positions restart per range)")
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
   import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
   import org.apache.spark.sql.internal.SQLConf
@@ -1054,6 +1056,13 @@ final class GraftColumnarReader(path: String, dvPaths: Array[String],
 
   private val dataFields = required.fields.filter(f =>
     f.name != GraftTable.FileCol && f.name != GraftTable.PosCol)
+  // refused up front, DV'd or not: a clean snapshot must not serve a
+  // schema that a snapshot with deletion vectors cannot
+  dataFields.find(f => !GraftColumnarReader.copyable(f.dataType)).foreach {
+    f => throw new UnsupportedOperationException(
+      s"graft DSv2 reader does not decode ${f.dataType} (flat relational " +
+        "schemas only; read nested tables through the Scala API)")
+  }
   private val dataIdx: Map[String, Int] =
     dataFields.map(_.name).zipWithIndex.toMap
 
@@ -1107,9 +1116,7 @@ final class GraftColumnarReader(path: String, dvPaths: Array[String],
     else {
       val set = new java.util.TreeSet[java.lang.Long]()
       dvPaths.foreach { dv =>
-        val r = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            new Path(dv))
+        val r = ParquetReader.builder(new GroupReadSupport(), new Path(dv))
           .withConf(new Configuration()).build()
         try {
           var g = r.read()
@@ -1201,22 +1208,22 @@ final class GraftColumnarReader(path: String, dvPaths: Array[String],
 }
 
 object GraftColumnarReader {
-  import org.apache.spark.sql.vectorized.ColumnVector
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 
   /** Types the survivor-compaction copy handles — the flat relational
-    * set this engine stores. Anything else reads row-based. */
-  def copyable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
+    * set this engine stores, plus variant. The reader refuses any
+    * other requested type when it is built. */
+  def copyable(dt: DataType): Boolean = dt match {
     case BooleanType | ByteType | ShortType | IntegerType | DateType |
         LongType | TimestampType | TimestampNTZType | FloatType |
-        DoubleType | StringType | BinaryType => true
+        DoubleType | StringType | BinaryType | VariantType => true
     case _: DecimalType => true
     case _ => false
   }
 
   /** Copy `count` surviving rows (source indices in `survivors`) from
     * `src` into `dst`, type-dispatched ONCE per column per batch. */
-  private[sources] def copySurvivors(dt: org.apache.spark.sql.types.DataType,
+  private[sources] def copySurvivors(dt: DataType,
       src: ColumnVector, dst: OnHeapColumnVector,
       survivors: Array[Int], count: Int): Unit = {
     var i = 0
@@ -1268,208 +1275,18 @@ object GraftColumnarReader {
         if (src.isNullAt(r)) dst.putNull(i)
         else dst.putDecimal(i, src.getDecimal(r, d.precision, d.scale),
           d.precision); i += 1 }
+      case VariantType => while (i < count) {
+        val r = survivors(i)
+        if (src.isNullAt(r)) dst.putNull(i)
+        else {
+          val v = src.getVariant(r)
+          val value = v.getValue
+          val meta = v.getMetadata
+          dst.getChild(0).putByteArray(i, value, 0, value.length)
+          dst.getChild(1).putByteArray(i, meta, 0, meta.length)
+        }; i += 1 }
       case other => throw new UnsupportedOperationException(
-        s"survivor copy for $other (supportColumnarReads should have " +
-          "routed this scan row-based)")
+        s"survivor copy for $other (the reader refuses it when built)")
     }
-  }
-}
-
-/** Streams one data file as InternalRows: projected parquet Group
-  * decode, row-index tombstone skip for this file's deletion vectors.
-  * Row position counts every physical row in file order (no row-group
-  * filtering here — positions must match the `_metadata.row_index`
-  * identity the DV sidecars tombstone). */
-final class GraftPartitionReader(path: String, dvPaths: Array[String],
-    required: StructType, start: Long = 0L, length: Long = -1L)
-    extends PartitionReader[InternalRow] {
-  require(length < 0 ||
-    (dvPaths.isEmpty && !required.fieldNames.contains(GraftTable.PosCol)),
-    "byte-ranged reads serve no row identity (positions restart per range)")
-
-  private val conf = new Configuration()
-  private val hPath = new Path(path)
-  private val baseName = path.substring(path.lastIndexOf('/') + 1)
-
-  private val fileSchema: MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-
-  // projection: the required columns present in THIS file (a
-  // pre-evolution file simply lacks the new ones — they surface null);
-  // parquet cannot read zero columns, so an empty projection (count(*)
-  // over no columns, or a rowId-only row-level scan) reads the
-  // narrowest stand-in field — which also keeps positions advancing
-  private val presentFields = required.fields
-    .filter(f => f.name != GraftTable.FileCol && f.name != GraftTable.PosCol)
-    .filter(f => fileSchema.containsField(f.name))
-  private val requestedSchema: MessageType = {
-    val types =
-      if (presentFields.nonEmpty)
-        presentFields
-          .map(f => fileSchema.getType(fileSchema.getFieldIndex(f.name)))
-          .toList
-      else List(fileSchema.getFields.asScala.head)
-    new MessageType(fileSchema.getName, types.asJava)
-  }
-
-  private val reader: ParquetReader[Group] = {
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, requestedSchema.toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), hPath)
-      .withConf(conf)
-    (if (length < 0) b else b.withFileRange(start, start + length)).build()
-  }
-
-  // per required field: index in the projected group (-1 = null-fill,
-  // -2 = _graft_file metadata, -3 = _graft_pos metadata) and a
-  // primitive decoder bound to the FILE's physical type
-  private val fieldIdx: Array[Int] = required.fields.map { f =>
-    if (f.name == GraftTable.FileCol) -2
-    else if (f.name == GraftTable.PosCol) -3
-    else presentFields.indexWhere(_.name == f.name)
-  }
-  private val baseNameUtf8 = UTF8String.fromString(baseName)
-  private val decoders: Array[(Group, Int) => Any] =
-    required.fields.zipWithIndex.map { case (f, i) =>
-      if (fieldIdx(i) < 0) null
-      else if (f.dataType.isInstanceOf[
-          org.apache.spark.sql.types.VariantType]) {
-        // VARIANT: graft stages the PLAIN encoding — a group of two
-        // binaries (value, metadata) — so the row path decodes it to
-        // the catalyst VariantVal directly. A SHREDDED group (a
-        // foreign writer's typed_value tree) needs Spark's own
-        // reassembly: refuse with the DataFrame-path remedy rather
-        // than misread partial bytes.
-        val gt = requestedSchema.getType(fieldIdx(i)).asGroupType()
-        require(gt.containsField("value") && gt.containsField("metadata")
-            && !gt.containsField("typed_value"),
-          s"variant column '${f.name}' in $baseName is SHREDDED - the " +
-            "row-level scan decodes only the plain value/metadata " +
-            "encoding; read through spark.read.parquet (it reassembles " +
-            "shredded variants)")
-        (g: Group, i0: Int) => {
-          val vg = g.getGroup(i0, 0)
-          new org.apache.spark.unsafe.types.VariantVal(
-            vg.getBinary("value", 0).getBytes,
-            vg.getBinary("metadata", 0).getBytes)
-        }
-      }
-      else GraftPartitionReader.decoderFor(f.dataType,
-        requestedSchema.getType(fieldIdx(i)).asPrimitiveType())
-    }
-
-  // this file's tombstoned row positions (sidecars are shared across
-  // files of a commit — filter to our basename; bounded by DV size)
-  private val deleted: java.util.HashSet[java.lang.Long] = {
-    val set = new java.util.HashSet[java.lang.Long]()
-    dvPaths.foreach { dv =>
-      val r = ParquetReader.builder(new GroupReadSupport(), new Path(dv))
-        .withConf(new Configuration()).build()
-      try {
-        var g = r.read()
-        while (g != null) {
-          if (g.getString("_dv_file", 0) == baseName)
-            set.add(g.getLong("_dv_pos", 0))
-          g = r.read()
-        }
-      } finally r.close()
-    }
-    set
-  }
-
-  private var pos: Long = -1L
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    var g = reader.read()
-    pos += 1
-    while (g != null && deleted.contains(pos)) {
-      g = reader.read()
-      pos += 1
-    }
-    current = g
-    g != null
-  }
-
-  override def get(): InternalRow = {
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      val gi = fieldIdx(i)
-      vals(i) =
-        if (gi == -2) baseNameUtf8
-        else if (gi == -3) pos
-        else if (gi < 0 || current.getFieldRepetitionCount(gi) == 0) null
-        else decoders(i)(current, gi)
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  override def close(): Unit = reader.close()
-}
-
-object GraftPartitionReader {
-  import LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
-  import PrimitiveType.PrimitiveTypeName._
-
-  private def int96ToMicros(b: Binary): Long = {
-    val buf = b.toByteBuffer.order(ByteOrder.LITTLE_ENDIAN)
-    val nanos = buf.getLong
-    val julian = buf.getInt
-    (julian - 2440588).toLong * 86400000000L + nanos / 1000L
-  }
-
-  private def tsUnitScale(p: PrimitiveType): Long =
-    p.getLogicalTypeAnnotation match {
-      case t: TimestampLogicalTypeAnnotation => t.getUnit match {
-        case TimeUnit.MILLIS => 1000L
-        case TimeUnit.MICROS => 1L
-        case TimeUnit.NANOS  => -1L // marker: divide
-      }
-      case _ => 1L // unannotated INT64 timestamp = micros (Spark's own)
-    }
-
-  /** Decoder from the file's physical type to the Catalyst-internal
-    * value Spark expects (UTF8String / Decimal / micros / days).
-    * Nested types are refused loudly — this reader serves the flat
-    * relational schemas TxTable stores. */
-  private[sources] def decoderFor(dt: DataType, p: PrimitiveType)
-      : (Group, Int) => Any = dt match {
-    case BooleanType => (g, i) => g.getBoolean(i, 0)
-    case IntegerType | ShortType | ByteType => (g, i) => g.getInteger(i, 0)
-    case LongType => p.getPrimitiveTypeName match {
-      case INT32 => (g, i) => g.getInteger(i, 0).toLong
-      case _     => (g, i) => g.getLong(i, 0)
-    }
-    case FloatType => (g, i) => g.getFloat(i, 0)
-    case DoubleType => p.getPrimitiveTypeName match {
-      case FLOAT => (g, i) => g.getFloat(i, 0).toDouble
-      case _     => (g, i) => g.getDouble(i, 0)
-    }
-    case StringType =>
-      (g, i) => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-    case BinaryType => (g, i) => g.getBinary(i, 0).getBytes
-    case DateType => (g, i) => g.getInteger(i, 0)
-    case TimestampType | TimestampNTZType => p.getPrimitiveTypeName match {
-      case INT96 => (g, i) => int96ToMicros(g.getInt96(i, 0))
-      case _ =>
-        val scale = tsUnitScale(p)
-        if (scale == -1L) (g, i) => g.getLong(i, 0) / 1000L
-        else (g, i) => g.getLong(i, 0) * scale
-    }
-    case d: DecimalType => p.getPrimitiveTypeName match {
-      case INT32 => (g, i) =>
-        Decimal(BigDecimal(BigInt(g.getInteger(i, 0)), d.scale), d.precision, d.scale)
-      case INT64 => (g, i) =>
-        Decimal(BigDecimal(BigInt(g.getLong(i, 0)), d.scale), d.precision, d.scale)
-      case _ => (g, i) =>
-        Decimal(BigDecimal(BigInt(g.getBinary(i, 0).getBytes), d.scale),
-          d.precision, d.scale)
-    }
-    case other => throw new UnsupportedOperationException(
-      s"graft DSv2 reader does not decode $other (flat relational " +
-        "schemas only; read nested tables through the Scala API)")
   }
 }

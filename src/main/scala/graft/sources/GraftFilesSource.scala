@@ -372,7 +372,7 @@ final class GraftFilesMicroBatchStream(spark: SparkSession, srcDir: String,
 }
 
 /** Dispatching factory for every graft-files partition shape:
-  * parquet (vectorized row reader, byte-range splits), csv/json
+  * parquet (the provider's vectorized reader, byte-range splits), csv/json
   * (line parsers), avro (container decode), each optionally wrapped
   * with the hive-partition constant overlay. */
 final class GraftFilesReaderFactory(format: String, schema: StructType,
@@ -387,10 +387,7 @@ final class GraftFilesReaderFactory(format: String, schema: StructType,
   // parquet stream's partitions are all GraftInputPartition unless
   // hive overlays are in play)
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition match {
-      case p: GraftInputPartition => parquetF.supportColumnarReads(p)
-      case _ => false
-    }
+    partition.isInstanceOf[GraftInputPartition]
 
   override def createColumnarReader(partition: InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[

@@ -68,7 +68,7 @@ import graft.core.IcebergImport
   * Scale shape: offset resolution is one metadata.json parse (driver
   * metadata, O(retained snapshots)); per-trigger planning opens only
   * the new snapshots' own manifests; each added file fans out as one
-  * partition through the provider's row reader.
+  * partition through the provider's parquet reader.
   */
 final class GraftIcebergTailTable(dir: String, changes: Boolean = false)
     extends Table with SupportsRead {
@@ -305,14 +305,15 @@ final class GraftIcebergTailReaderFactory(physSchema: StructType)
       // files bind by PHYSICAL parquet names (name-mapping); the
       // table's declared names surface positionally - field order is
       // the declared order by construction
-      new GraftPartitionReader(p.path, Array.empty, physSchema)
+      new GraftReaderFactory(physSchema)
+        .createReader(GraftInputPartition(p.path, Array.empty))
     case p: GraftIcebergChangePartition =>
       new GraftIcebergChangeReader(p, physSchema)
   }
 }
 
 /** Changelog row reader: the underlying data file through the same
-  * physical-name row reader the tail uses, each row tagged with its
+  * physical-name reader the tail uses, each row tagged with its
   * `_change_type`. For position-delete retractions the reader loads
   * the delete files' positions for THIS data file (bounded by delete
   * file size) and serves exactly those rows — the row values a
@@ -339,8 +340,8 @@ final class GraftIcebergChangeReader(p: GraftIcebergChangePartition,
     if (p.onlyDeleted)
       physSchema.add(GraftTable.PosCol, org.apache.spark.sql.types.LongType)
     else physSchema
-  private val inner =
-    new GraftPartitionReader(p.path, Array.empty, innerSchema)
+  private val inner = new GraftReaderFactory(innerSchema)
+    .createReader(GraftInputPartition(p.path, Array.empty))
   private var current: InternalRow = _
 
   override def next(): Boolean = {

@@ -12,8 +12,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** Executor-side `InternalRow` → parquet staging writer for FLAT
-  * relational schemas — the write twin of
-  * [[GraftPartitionReader]]'s decode path, built on parquet's public
+  * relational schemas — the files it writes are read back by
+  * [[GraftColumnarReader]] — built on parquet's public
   * `WriteSupport`/`RecordConsumer` API (no Spark-internal writer).
   *
   * Used by the row-level-operation delta writers
@@ -90,8 +90,8 @@ object RowParquet {
             .named(f.name)
         case _: org.apache.spark.sql.types.VariantType =>
           // the PLAIN variant encoding (value + metadata binaries) —
-          // the same group Spark's unshredded writer stages and the
-          // graft row reader decodes
+          // the same group Spark's unshredded writer stages and its
+          // vectorized reader decodes
           Types.optionalGroup()
             .addField(Types.optional(PrimitiveTypeName.BINARY)
               .named("value"))

@@ -170,10 +170,11 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("randomized decode parity: provider reader == Spark parquet reader") {
-    // the hand-written Group decoder is the riskiest surface — pit it
-    // against Spark's own reader over adversarial values (extremes,
-    // negative zero, unicode, empty strings, null-dense rows) for
-    // several seeds; any divergence is a decoder bug by construction
+    // the provider's batch composition and its survivor copy are the
+    // riskiest surface — pit them against Spark's own reader over
+    // adversarial values (extremes, negative zero, NaN, unicode, empty
+    // strings, decimals, null-dense rows) for several seeds, clean and
+    // DV'd; any divergence is a reader bug by construction
     val rnd = new scala.util.Random(42)
     (1 to 3).foreach { round =>
       val dir = tmpDir(s"dsv2-prop$round") + "/t"
@@ -207,15 +208,21 @@ class GraftDataSourceSpec extends SparkSpec {
           r._6.orNull, r._7.orNull, r._8.orNull)), 4), schema)
       val t = new TxTable(spark, dir, schema, Seq("k"), numBuckets = 2)
       t.append(df)
-      val viaSpark = t.read.collect().map(_.toSeq.map {
+      def canon(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq.map {
         case d: Double if d.isNaN => "NaN"
         case x => x
       }).toSet
-      val viaProvider = load(dir).collect().map(_.toSeq.map {
-        case d: Double if d.isNaN => "NaN"
-        case x => x
-      }).toSet
-      assert(viaProvider === viaSpark, s"decode divergence in round $round")
+      assert(canon(load(dir)) === canon(t.read),
+        s"decode divergence in round $round")
+      // tombstone a slice of keys: the batches holding them go
+      // through the survivor copy
+      val lo = 1 + rnd.nextInt(n / 2)
+      t.deleteWhereLight(col("k").between(lo.toLong, lo + 40L))
+      assert(t.currentFileInfo.exists(_.dvRows > 0L), "expected live DVs")
+      val survivors = canon(t.read)
+      assert(survivors.size === n - 41)
+      assert(canon(load(dir)) === survivors,
+        s"survivor-copy divergence in round $round")
     }
   }
 
@@ -289,6 +296,48 @@ class GraftDataSourceSpec extends SparkSpec {
     val folded = load(dir)
     assert(folded.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(folded.count() === masked.count() - 1)
+  }
+
+  test("columnar reads: a DV'd variant table serves through the batch copy") {
+    val dir = tmpDir("dsv2-col-var") + "/t"
+    val data = (1L to 60L).map(i =>
+        (i, if (i % 5L == 0L) null else s"""{"a": $i, "s": "v$i"}"""))
+      .toDF("k", "j").withColumn("v", parse_json(col("j"))).drop("j")
+    val t = new TxTable(spark, dir, data.schema, Seq("k"), numBuckets = 2)
+    t.append(data)
+    t.deleteWhereLight(col("k") % 3L === 0L)
+    assert(t.currentFileInfo.exists(_.dvRows > 0L), "expected live DVs")
+    def typed(df: DataFrame): Set[Seq[Any]] =
+      rows(df.select(col("k"), try_variant_get(col("v"), "$.a", "int"),
+        try_variant_get(col("v"), "$.s", "string")))
+    val back = load(dir)
+    val plan = back.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"),
+      s"a variant column must keep the columnar scan:\n$plan")
+    assert(back.count() === 40L)
+    assert(typed(back) === typed(t.read))
+  }
+
+  test("columnar reads: a row-identity-only scan serves count-only batches") {
+    val dir = tmpDir("dsv2-col-ident") + "/t"
+    val data = (1L to 300L).map(i => (i, i % 4L)).toDF("k", "g")
+    val t = new TxTable(spark, dir, data.schema, Seq("k"), numBuckets = 2)
+    t.append(data)
+    // the tombstoned identities, read before the delete
+    val doomed = load(dir).filter(col("g") === 1L)
+      .select("_graft_file", "_graft_pos").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    t.deleteWhereLight(col("g") === 1L)
+    assert(t.currentFileInfo.exists(_.dvRows > 0L), "expected live DVs")
+    val ident = load(dir).select("_graft_file", "_graft_pos")
+    val plan = ident.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"),
+      s"an identity-only scan must be columnar:\n$plan")
+    val got = ident.collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(got.length === t.read.count())
+    assert(got.toSet.size === got.length)
+    assert(doomed.size === 75 && got.forall(p => !doomed(p)),
+      "a tombstoned position was served")
   }
 
   test("columnar reads: pre-evolution files null-fill in batches") {

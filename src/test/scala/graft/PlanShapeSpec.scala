@@ -329,4 +329,43 @@ class PlanShapeSpec extends SparkSpec {
     // (~2.4k day rows at sf1), established by the groupBy(day) below it
     assertWindowsBounded("w6_range_frame_7d")
   }
+
+  test("merge-on-read reads mask by a broadcast anti-join; the data never shuffles") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import graft.core.{DeltaExport, DeltaImport, IcebergExport, IcebergImport, TxTable}
+    val data = (1L to 200L).map(i => (i, i * 10L)).toDF("k", "v")
+    val t = new TxTable(spark, tmpDir("plan-mor") + "/t", data.schema,
+      Seq("k"), numBuckets = 2)
+    t.append(data)
+    t.deleteWhereLight(col("k") % 7L === 0L) // DV sidecars, no rewrite
+    DeltaExport.syncDeltaLog(spark, t) // Delta deletion vectors
+    IcebergExport.writeIcebergMetadata(spark, t) // v2 position deletes
+    // hash exchanges outside any broadcast build side: the data side's
+    // (the tombstone side may dedup before it is broadcast)
+    def dataShuffles(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: BroadcastExchangeExec => Nil
+      case s: ShuffleExchangeExec => s +: s.children.flatMap(dataShuffles)
+      case o => o.children.flatMap(dataShuffles)
+    }
+    Seq("TxTable.read" -> t.read,
+      "DeltaImport.read" -> DeltaImport.read(spark, t.dir),
+      "IcebergImport.read" -> IcebergImport.read(spark, t.dir)).foreach {
+      case (name, df) =>
+        val plan = df.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.inputPlan
+          case p => p
+        }
+        assert(plan.collect { case j: BroadcastHashJoinExec =>
+          j.joinType.toString }.contains("LeftAnti"),
+          s"$name must mask by a broadcast anti-join:\n$plan")
+        assert(dataShuffles(plan).isEmpty,
+          s"$name shuffles its data:\n$plan")
+        assert(df.count() === 200L - 28L, name)
+    }
+  }
 }
