@@ -53,7 +53,9 @@ class VariantStoreSpec extends SparkSpec {
     assert(t.scanWhere(col("k") <= 2L).count() === 2L)
   }
 
-  test("the DSv2 scan serves variant (the columnar reader decodes the value/metadata group)") {
+  // The provider has one parquet reader, the columnar one; it decodes the
+  // value/metadata group for every scan, row-consuming callers included.
+  test("the DSv2 scan serves variant (row path decodes the value/metadata group)") {
     val (t, _) = mk("varstore-dsv2")
     val back = spark.read.format("graft").load(t.dir)
       .select(col("k"), try_variant_get(col("v"), "$.a", "int").as("a"))
