@@ -17,17 +17,12 @@ final class AnalyticsQueries(wh: Warehouse) {
   private def items = wh.domainTable("regulation_items").read
   private def runs = wh.domainTable("runs").read
   private def reviewQueue = wh.domainTable("review_queue").read
-  private def links = wh.domainTable("links").read
   private def chunks = wh.domainTable("vector_chunks").read
   private def docs = wh.domainTable("source_documents").read
 
   /** S1 — `GET /api/items`. */
   def listItems(): DataFrame =
     items.orderBy(desc("created_at"), asc("id"))
-
-  /** S2 — `GET /api/runs`. */
-  def listRuns(): DataFrame =
-    runs.orderBy(desc("started_at"), asc("id"))
 
   /** S3 — `GET /api/review-queue`. */
   def listReviewQueue(): DataFrame =

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Idempotent batch file ingest — the `COPY INTO` verb (the

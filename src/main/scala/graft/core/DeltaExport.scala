@@ -123,7 +123,7 @@ object DeltaExport {
   private def addAction(fs: FileSystem, rootUri: String, schema: StructType,
       dv: Option[(String, DeltaDv.Slot)],
       /** ROW TRACKING: (baseRowId, defaultRowCommitVersion). */
-      rowIds: Option[(Long, Long)] = None)(f: TxTable.LiveFile): JObject = {
+      rowIds: Option[(Long, Long)])(f: TxTable.LiveFile): JObject = {
     val status = fs.getFileStatus(new Path(f.path))
     JObject("add" -> JObject(List(
       "path" -> JString(relative(fs, rootUri)(f.path)),
@@ -162,11 +162,11 @@ object DeltaExport {
     * column mapping the legacy (2,5) floor — readers must bind
     * parquet columns by physicalName — or the `columnMapping`
     * reader+writer feature when features mode is already on. */
-  private def protocolAction(withDvs: Boolean, withCdf: Boolean = false,
-      withChecks: Boolean = false, withMapping: Boolean = false,
-      withVariant: Boolean = false,
+  private def protocolAction(withDvs: Boolean, withCdf: Boolean,
+      withChecks: Boolean, withMapping: Boolean,
+      withVariant: Boolean,
       /** rowTracking + its domainMetadata dependency (writer-only). */
-      withRowTracking: Boolean = false): JObject =
+      withRowTracking: Boolean): JObject =
     if (!withDvs && !withCdf && !withVariant && !withRowTracking)
       JObject("protocol" -> JObject(
         "minReaderVersion" -> JInt(if (withMapping) 2 else 1),
@@ -277,14 +277,14 @@ object DeltaExport {
   }
 
   private def metaDataAction(schema: StructType, dvEnabled: Boolean,
-      cdfEnabled: Boolean = false, txVersion: Option[Long] = None,
+      cdfEnabled: Boolean, txVersion: Option[Long],
       tableId: Option[String] = None,
-      checks: Map[String, String] = Map.empty,
-      mappingMaxId: Option[Long] = None,
-      mappingMode: String = "name",
+      checks: Map[String, String],
+      mappingMaxId: Option[Long],
+      mappingMode: String,
       /** ROW TRACKING: the high watermark (enables the feature and
         * gives this writer its checkpoint-durable recovery channel). */
-      rowIdHighWaterMark: Option[Long] = None): JObject =
+      rowIdHighWaterMark: Option[Long]): JObject =
     JObject("metaData" -> JObject(
       // the table id is STABLE across the log's life (stock streaming
       // readers track it); only the very first metaData mints one

@@ -544,7 +544,7 @@ object DeltaImport {
       dataSchema: StructType, group: Seq[AddFile],
       /** session the parquet relations are BUILT under (the id-mode
         * flag-scoped child, or `spark` itself). */
-      reader: Option[SparkSession] = None): DataFrame = {
+      reader: Option[SparkSession]): DataFrame = {
     val rs = reader.getOrElse(spark)
     val (dirty, clean) = group.partition(_.deletionVector.nonEmpty)
     val cleanDf =
@@ -602,8 +602,7 @@ object DeltaImport {
     * field metadata), so the vectorized decode path is unchanged. */
   private case object BindById extends ColumnBinding
 
-  private def columnBinding(spark: SparkSession,
-      snap: Snapshot): Option[ColumnBinding] = {
+  private def columnBinding(snap: Snapshot): Option[ColumnBinding] = {
     val mode = snap.metaRaw.flatMap(raw =>
       (JsonMethods.parse(raw) \ "configuration" \
         "delta.columnMapping.mode") match {
@@ -713,7 +712,7 @@ object DeltaImport {
       asOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(spark, dir, asOf)
     val statsKey: Map[String, String] =
-      if (columnBinding(spark, snap).isEmpty) Map.empty
+      if (columnBinding(snap).isEmpty) Map.empty
       else physicalNameMap(snap.schema)
     // resolve the predicate through the shared analyzer pass (exact
     // types; an unresolvable shape prunes nothing)
@@ -803,7 +802,7 @@ object DeltaImport {
     val rootUri = hfs.makeQualified(root).toString.stripSuffix("/")
     val dataSchema = StructType(
       snap.schema.filterNot(f => snap.partitionColumns.contains(f.name)))
-    val mapping = columnBinding(spark, snap)
+    val mapping = columnBinding(snap)
     val physDataSchema = physicalized(dataSchema, mapping)
     // partitionValues key by PHYSICAL name under columnMapping (the
     // protocol stores partition tuples under the column's physical
@@ -864,7 +863,7 @@ object DeltaImport {
     val snap = snapshot(spark, dir)
     val dataSchema = StructType(
       snap.schema.filterNot(f => snap.partitionColumns.contains(f.name)))
-    columnBinding(spark, snap) match {
+    columnBinding(snap) match {
       case None => (dataSchema, dataSchema)
       case Some(BindByName(m)) => (dataSchema,
         StructType(dataSchema.fields.map(f =>
@@ -1064,7 +1063,7 @@ object DeltaImport {
       StructField("_change_type", org.apache.spark.sql.types.StringType))
     // change files bind by PHYSICAL name (or footer field id, in id
     // mode) under columnMapping, exactly like the data files
-    val mapping = columnBinding(spark, endSnap)
+    val mapping = columnBinding(endSnap)
     val physDataSchema = physicalized(dataSchema, mapping)
     val physChangeSchema = StructType(physDataSchema.fields :+
       StructField("_change_type", org.apache.spark.sql.types.StringType))

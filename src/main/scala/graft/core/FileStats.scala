@@ -468,7 +468,7 @@ object FileStats {
     * candidate in every row group; missing blooms / unsupported types
     * answer true. Metadata+bloom I/O only (no data pages). */
   def bloomMayContain(path: String, conf: Configuration,
-      wanted: Map[String, Seq[Any]], schema: StructType): Boolean = {
+      wanted: Map[String, Seq[Any]]): Boolean = {
     if (wanted.isEmpty) return true
     // the open itself is inside the conservative guard: an unreadable
     // footer must KEEP the file (like every other stats path), not

@@ -2,8 +2,6 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
@@ -69,7 +67,7 @@ object IcebergExport {
   private[graft] val manifestRenders =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def icebergType(dt: DataType, v3: Boolean = false): String =
+  private def icebergType(dt: DataType, v3: Boolean): String =
     dt match {
       case BooleanType      => "boolean"
       case IntegerType      => "int"
@@ -94,7 +92,7 @@ object IcebergExport {
         s"iceberg export does not map $other (flat relational schemas only)")
     }
 
-  private def schemaJson(schema: StructType, v3: Boolean = false): JObject =
+  private def schemaJson(schema: StructType, v3: Boolean): JObject =
     schemaJsonWithIds(schema, 0,
       schema.fieldNames.zipWithIndex.map { case (n, i) =>
         n.toLowerCase -> (i + 1) }.toMap, _.name, v3)
@@ -104,7 +102,7 @@ object IcebergExport {
     * id in every schema version, or time travel re-binds wrongly. */
   private def schemaJsonWithIds(schema: StructType, schemaId: Int,
       ids: Map[String, Int], physOf: StructField => String,
-      v3: Boolean = false): JObject = {
+      v3: Boolean): JObject = {
     val fields = schema.fields.map { f =>
       JObject(
         "id" -> JInt(ids(physOf(f).toLowerCase)),
@@ -591,7 +589,7 @@ object IcebergExport {
         (s \ "manifest-list") match {
           case JString(lp) =>
             referenced += baseName(lp)
-            IcebergImport.readAvro(fs, new Path(lp), conf).foreach { m =>
+            IcebergImport.readAvro(new Path(lp), conf).foreach { m =>
               val mPath = m.get("manifest_path").toString
               referenced += baseName(mPath)
               val content = Option(m.get("content"))
@@ -599,7 +597,7 @@ object IcebergExport {
               // delete manifests reference the position-delete
               // parquets under _iceberg_deletes
               if (content != 0)
-                IcebergImport.readAvro(fs, new Path(mPath), conf).foreach { e =>
+                IcebergImport.readAvro(new Path(mPath), conf).foreach { e =>
                   val df = e.get("data_file").asInstanceOf[GenericRecord]
                   referenced += baseName(df.get("file_path").toString)
                 }
@@ -662,7 +660,7 @@ object IcebergExport {
     * bounded by DV bytes. Returns (path, fileSize, per-data-file
     * (uri, blobMeta, cardinality)). */
   private def writeDvPuffin(spark: SparkSession, fs: FileSystem,
-      table: TxTable, dirty: Seq[(TxTable.LiveFile, Seq[String])],
+      dirty: Seq[(TxTable.LiveFile, Seq[String])],
       v: Long, metaDir: Path)
       : (Path, Long, Seq[(String, Puffin.BlobMeta, Long)]) = {
     import org.apache.spark.sql.functions.{broadcast, col}
@@ -1074,12 +1072,11 @@ object IcebergExport {
             case _ => throw new IllegalStateException("no snapshots")
           }
           val conf = spark.sparkContext.hadoopConfiguration
-          IcebergImport.readAvro(fs, new Path(listPath), conf)
+          IcebergImport.readAvro(new Path(listPath), conf)
             .filter(m => Option(m.get("content"))
               .forall(_.asInstanceOf[Int] == 0))
             .flatMap { m =>
-              IcebergImport.readAvro(fs,
-                new Path(m.get("manifest_path").toString), conf)
+              IcebergImport.readAvro(new Path(m.get("manifest_path").toString), conf)
                 .flatMap { e =>
                   val df0 = e.get("data_file")
                     .asInstanceOf[org.apache.avro.generic.GenericRecord]
@@ -1323,7 +1320,7 @@ object IcebergExport {
           // v3 DELETION VECTORS: tombstones as Puffin blobs, one per
           // dirty data file, each located from its own manifest entry
           val (pufPath, pufSize, blobs) =
-            writeDvPuffin(spark, fs, table, dirty, v, metaDir)
+            writeDvPuffin(spark, fs, dirty, v, metaDir)
           val pufUri = fs.makeQualified(pufPath).toString
           val entries = blobs.map { case (dataUri, bm, card) =>
             val df = new GenericData.Record(
@@ -1714,7 +1711,7 @@ object IcebergExport {
       theta_sketch_agg(iceberg_value_bytes(col(f.name)), lgK)
         .as(s"__theta_${f.name}") }
     val row = table.read.agg(aggs.head, aggs.tail: _*).head()
-    val blobs = targets.zipWithIndex.map { case ((f, fid), i) =>
+    val blobs = targets.zipWithIndex.map { case ((_, fid), i) =>
       val raw: Array[Byte] =
         if (row.isNullAt(i)) null else row.getAs[Array[Byte]](i)
       val sk =

@@ -6,7 +6,7 @@ import scala.io.Source
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -79,12 +79,7 @@ object IcebergImport {
       /** v3 DELETION VECTORS: (referenced data-file basename,
         * portable RoaringBitmapArray bytes) — positions expand on
         * EXECUTORS, the driver holds only compressed bitmaps. */
-      dvDeletes: Seq[(String, Array[Byte])] = Nil,
-      /** v3 ROW LINEAGE: per-`files` first row id — the entry's
-        * explicit `first_row_id` (142), else inherited from the
-        * manifest's base (520) by running record count. None when
-        * the tree assigns no lineage. */
-      fileRowBases: Seq[Option[Long]] = Nil) {
+      dvDeletes: Seq[(String, Array[Byte])] = Nil) {
     def fileSchema: StructType =
       if (physSchema.isEmpty) schema else physSchema
   }
@@ -244,7 +239,7 @@ object IcebergImport {
     if (cols.isEmpty) None else Some(FileStats.Stats(rows, cols))
   }
 
-  private[graft] def readAvro(fs: FileSystem, p: Path,
+  private[graft] def readAvro(p: Path,
       conf: org.apache.hadoop.conf.Configuration): Seq[GenericRecord] = {
     val in = new FsInput(p, conf)
     val r = new DataFileReader[GenericRecord](in,
@@ -595,8 +590,7 @@ object IcebergImport {
       s"snapshot ${sm.id} has no manifest-list (v1 inline-manifest " +
         "layout) - streaming requires v2")
     val listPath = new Path(sm.manifestList.get)
-    val fs = listPath.getFileSystem(conf)
-    val manifests = readAvro(fs, listPath, conf)
+    val manifests = readAvro(listPath, conf)
     def addedBy(m: GenericRecord): Option[Long] =
       if (m.getSchema.getField("added_snapshot_id") == null) None
       else Option(m.get("added_snapshot_id"))
@@ -612,7 +606,7 @@ object IcebergImport {
       mine.exists(m => contentOf(m) != 0 || deletedCount(m) > 0L)
     val files = mine.filter(m => contentOf(m) == 0).flatMap { m =>
       val mPath = new Path(m.get("manifest_path").toString)
-      readAvro(fs, mPath, conf).flatMap { e =>
+      readAvro(mPath, conf).flatMap { e =>
         val status = e.get("status").asInstanceOf[Int]
         val entrySnap: Option[Long] =
           if (e.getSchema.getField("snapshot_id") == null) None
@@ -654,8 +648,7 @@ object IcebergImport {
       s"snapshot ${sm.id} has no manifest-list (v1 inline-manifest " +
         "layout) - changelog streaming requires v2")
     val listPath = new Path(sm.manifestList.get)
-    val fs = listPath.getFileSystem(conf)
-    val manifests = readAvro(fs, listPath, conf)
+    val manifests = readAvro(listPath, conf)
     def addedBy(m: GenericRecord): Option[Long] =
       if (m.getSchema.getField("added_snapshot_id") == null) None
       else Option(m.get("added_snapshot_id"))
@@ -671,7 +664,7 @@ object IcebergImport {
     mine.foreach { m =>
       val isDeleteManifest = contentOf(m) != 0
       val mPath = new Path(m.get("manifest_path").toString)
-      readAvro(fs, mPath, conf).foreach { e =>
+      readAvro(mPath, conf).foreach { e =>
         val status = e.get("status").asInstanceOf[Int]
         val entrySnap: Option[Long] =
           if (e.getSchema.getField("snapshot_id") == null) None
@@ -729,8 +722,6 @@ object IcebergImport {
       snapshotId: Option[Long],
       pred: Option[org.apache.spark.sql.Column]): Snapshot = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
     val md = readMetadataJson(spark, dir)
 
     val fv = (md \ "format-version") match {
@@ -867,9 +858,7 @@ object IcebergImport {
         seq: Option[Long], specId: Option[Int] = None,
         /** the single partition field's bucket-id summary range from
           * the manifest list (field-ids 510/511), when present. */
-        partRange: Option[(Int, Int)] = None,
-        /** v3 row lineage: the manifest's first_row_id base (520). */
-        firstRowId: Option[Long] = None)
+        partRange: Option[(Int, Int)] = None)
     def leInt(x: AnyRef): Option[Int] = x match {
       case bb: java.nio.ByteBuffer => Some(bb.duplicate()
         .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt)
@@ -879,7 +868,7 @@ object IcebergImport {
     }
     val manifests: Seq[ManifestRef] = (snap \ "manifest-list") match {
       case JString(p) =>
-        readAvro(fs, new Path(p), conf).map { m =>
+        readAvro(new Path(p), conf).map { m =>
           val range: Option[(Int, Int)] =
             if (m.getSchema.getField("partitions") == null) None
             else Option(m.get("partitions")).flatMap {
@@ -898,10 +887,7 @@ object IcebergImport {
             if (m.getSchema.getField("partition_spec_id") == null) None
             else Option(m.get("partition_spec_id"))
               .map(_.asInstanceOf[Number].intValue()),
-            range,
-            if (m.getSchema.getField("first_row_id") == null) None
-            else Option(m.get("first_row_id"))
-              .map(_.asInstanceOf[Number].longValue()))
+            range)
         }
       case _ => (snap \ "manifests") match {
         case JArray(ms) => ms.map {
@@ -967,11 +953,7 @@ object IcebergImport {
     // (unpartitioned manifests, foreign spec shapes) are kept.
     val filesCountsSeqs = dataManifests.flatMap { m =>
       val mPath = new Path(m.path)
-      // v3 row lineage inheritance: files with a null explicit
-      // first_row_id consume the manifest's running base in manifest
-      // order, advancing by record_count (spec); explicit values win
-      var rlCursor: Option[Long] = m.firstRowId
-      readAvro(fs, mPath, conf).flatMap { e =>
+      readAvro(mPath, conf).flatMap { e =>
         val status = e.get("status").asInstanceOf[Int]
         if (status == 2) None
         else {
@@ -995,26 +977,12 @@ object IcebergImport {
             case (Some(cs), Some(b)) => !cs(b)
             case _ => false
           }
-          // row-lineage inheritance consumes the manifest's running
-          // base for EVERY null-first_row_id data entry in manifest
-          // order (spec rule) — including entries WE prune: a pruned
-          // file still occupied its id slice when the manifest was
-          // written, so the cursor must advance before the entry is
-          // dropped or every later inherited base comes out short
-          val rc = df.get("record_count").asInstanceOf[Long]
-          val explicitBase: Option[Long] =
-            if (df.getSchema.getField("first_row_id") == null) None
-            else Option(df.get("first_row_id"))
-              .map(_.asInstanceOf[Number].longValue())
-          val rowBase: Option[Long] = explicitBase.orElse {
-            val b = rlCursor
-            rlCursor = rlCursor.map(_ + rc)
-            b
-          }
           if (pruned) None
-          else
+          else {
+            val rc = df.get("record_count").asInstanceOf[Long]
             Some((df.get("file_path").toString, rc, entrySeq(m, e),
-              statsFromEntry(df, rc, schema, fieldIds), rowBase))
+              statsFromEntry(df, rc, schema, fieldIds)))
+          }
         }
       }
     }
@@ -1028,7 +996,7 @@ object IcebergImport {
       scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
     deleteManifests.foreach { m =>
       val mPath = new Path(m.path)
-      readAvro(fs, mPath, conf).foreach { e =>
+      readAvro(mPath, conf).foreach { e =>
         val status = e.get("status").asInstanceOf[Int]
         if (status != 2) {
           val df = e.get("data_file").asInstanceOf[GenericRecord]
@@ -1087,8 +1055,7 @@ object IcebergImport {
       filesCountsSeqs.map(_._1), filesCountsSeqs.map(_._2),
       posDeletes.toSeq, eqDeletes.toSeq, filesCountsSeqs.map(_._3),
       physSchema = physSchema, fileStats = filesCountsSeqs.map(_._4),
-      dvDeletes = dvDeletes.toSeq,
-      fileRowBases = filesCountsSeqs.map(_._5))
+      dvDeletes = dvDeletes.toSeq)
   }
 
   /** Read the current (or pinned) snapshot as a DataFrame under the
@@ -1129,71 +1096,35 @@ object IcebergImport {
       if (xs.isEmpty) xs else xs.zip(keep).collect { case (x, true) => x }
     serve(spark, s.copy(files = sel(s.files),
       recordCounts = sel(s.recordCounts), dataSeqs = sel(s.dataSeqs),
-      fileStats = sel(s.fileStats),
-      fileRowBases = sel(s.fileRowBases))).filter(pred)
+      fileStats = sel(s.fileStats))).filter(pred)
   }
 
-  private[graft] def serve(spark: SparkSession, s: Snapshot,
-      /** append `_row_id` from the v3 ROW LINEAGE bases (per-file
-        * first_row_id + physical row index) — requires every file to
-        * carry a base. */
-      withRowId: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at,
-      lit, split}
-    import spark.implicits._
-    if (s.files.isEmpty) {
-      val empty = spark.createDataFrame(
+  private[graft] def serve(spark: SparkSession, s: Snapshot): DataFrame = {
+    import org.apache.spark.sql.functions.{col, element_at, lit, split}
+    if (s.files.isEmpty)
+      return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-      return if (!withRowId) empty
-        else empty.withColumn("_row_id", lit(null).cast("bigint"))
-    }
     // basenames are the join identity (iceberg file names embed
     // UUIDs); full-URI equality would be brittle across the file:/ vs
     // file:/// qualifications different writers emit
     def base(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-    val rowBaseOf: Map[String, Long] =
-      if (!withRowId) Map.empty
-      else {
-        require(s.fileRowBases.length == s.files.length &&
-          s.fileRowBases.forall(_.isDefined),
-          "row lineage needs a v3 tree whose manifests assign " +
-            "first_row_id (export with formatVersion = 3)")
-        s.files.zip(s.fileRowBases).map { case (f, b) =>
-          base(f) -> b.get }.toMap
-      }
     def scan(files: Seq[String]): DataFrame =
       spark.read.schema(s.fileSchema).parquet(files: _*)
-    /** `_row_id` = the file's base + the physical row index `_pos` of
-      * `identified` (a [[TxTable.withRowIdentity]] scan; positions are
-      * physical, so the mask composes after this). */
-    def withLineage(identified: DataFrame): DataFrame =
-      if (!withRowId) identified
-      else identified
-        .join(broadcast(rowBaseOf.toSeq.toDF("_rl_file", "_rl_base")),
-          col("_file") === col("_rl_file"), "left")
-        .withColumn("_row_id", col("_rl_base") + col("_pos"))
-        .drop("_rl_file", "_rl_base")
-    /** The unmasked rows of `files`, with `_row_id` when asked. */
-    def scanClean(files: Seq[String]): DataFrame =
-      if (!withRowId) scan(files)
-      else withLineage(TxTable.withRowIdentity(scan(files)))
-        .drop("_file", "_pos")
     // data files bind by the name-mapped (physical) column names;
     // the declared names surface via one positional rename
     def toDeclared(df: DataFrame): DataFrame =
-      if (s.physSchema.isEmpty) df
-      else df.toDF((s.schema.fieldNames.toSeq ++
-        (if (withRowId) Seq("_row_id") else Nil)): _*)
+      if (s.physSchema.isEmpty) df else df.toDF(s.schema.fieldNames.toSeq: _*)
     if (s.posDeleteFiles.isEmpty && s.eqDeletes.isEmpty &&
       s.dvDeletes.isEmpty)
-      return toDeclared(scanClean(s.files))
+      return toDeclared(scan(s.files))
+    // the mask is a left anti-join, so duplicate tombstones change no
+    // row: neither side is deduplicated (that would shuffle it)
     val parquetTomb =
       if (s.posDeleteFiles.isEmpty) None
       else Some(spark.read.parquet(s.posDeleteFiles: _*)
         .select(
           element_at(split(col("file_path"), "/"), -1).as("_dv_file"),
-          col("pos").as("_dv_pos"))
-        .distinct())
+          col("pos").as("_dv_pos")))
     // v3 DVs: bitmaps expand to positions on EXECUTORS (the Delta DV
     // read plan) and union with the parquet tombstones
     val dvTomb =
@@ -1205,10 +1136,7 @@ object IcebergImport {
             DeltaDv.deserializeBitmap(vec).iterator.map(p => (f, p)) }
           .toDF("_dv_file", "_dv_pos"))
       }
-    val tombOpt = (parquetTomb, dvTomb) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b).distinct())
-      case (a, b)             => a.orElse(b)
-    }
+    val tombOpt = (parquetTomb ++ dvTomb).reduceOption(_ unionByName _)
     val targeted: Set[String] = (parquetTomb
       .map(_.select("_dv_file").distinct()
         .collect().map(_.getString(0)).toSet) // file-count-bounded
@@ -1217,11 +1145,11 @@ object IcebergImport {
     // position masking, per file group: only referenced files pay
     def scanMasked(files: Seq[String]): DataFrame = {
       val (dirty, clean) = files.partition(f => targeted(base(f)))
-      val cleanDf = if (clean.isEmpty) None else Some(scanClean(clean))
+      val cleanDf = if (clean.isEmpty) None else Some(scan(clean))
       val dirtyDf =
         if (dirty.isEmpty) None
         else Some(TxTable.maskDeleted(
-          withLineage(TxTable.withRowIdentity(scan(dirty))), tombOpt.get))
+          TxTable.withRowIdentity(scan(dirty)), tombOpt.get))
       toDeclared((cleanDf.toSeq ++ dirtyDf.toSeq).reduce(_ unionByName _))
     }
 
@@ -1244,19 +1172,7 @@ object IcebergImport {
           col("_gseq") < lit(d.seq)
         df.join(delRows, cond, "left_anti")
       }
-      masked.drop("_gseq").select((s.schema.map(f => col(f.name)) ++
-        (if (withRowId) Seq(col("_row_id")) else Nil)): _*)
+      masked.drop("_gseq").select(s.schema.map(f => col(f.name)): _*)
     }
   }
-
-  /** [[read]] plus a `_row_id` column served from the tree's v3 ROW
-    * LINEAGE: each row's id = its file's assigned `first_row_id` +
-    * its physical position, exactly the ids [[IcebergExport]] pinned
-    * at export time (stable across re-sync and expiry; DV-masked rows'
-    * ids are never reassigned — they simply don't appear). Refuses
-    * trees whose manifests assign no lineage (v2, or foreign v3
-    * without the fields). */
-  def readWithRowLineage(spark: SparkSession, dir: String,
-      snapshotId: Option[Long] = None): DataFrame =
-    serve(spark, snapshot(spark, dir, snapshotId), withRowId = true)
 }

@@ -60,7 +60,7 @@ object JobTxn {
       try body
       catch {
         case e: Throwable =>
-          rollback(entries.map { case (n, t, v) => (t, v) })
+          rollback(entries.map { case (_, t, v) => (t, v) })
           // best-effort: a surviving journal on THIS path is safe —
           // recover() re-rolls-back to the same versions
           f.delete(journal, false)

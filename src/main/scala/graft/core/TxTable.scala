@@ -1524,12 +1524,14 @@ final class TxTable(
     }
 
   /** The live tombstone set of `entries`: (file basename, row position)
-    * pairs from every referenced DV sidecar. */
+    * pairs from every referenced DV sidecar. Not deduplicated: it only
+    * feeds the [[TxTable.maskDeleted]] anti-join, where a duplicate
+    * changes no row, and a dedup would shuffle it. */
   private def dvTombstones(entries: Seq[FEntry]): DataFrame = {
     val paths = entries.flatMap(_.dvs.map(_.path)).distinct
     if (paths.isEmpty)
       spark.range(0).select(lit("").as("_dv_file"), lit(0L).as("_dv_pos"))
-    else spark.read.parquet(paths: _*).select("_dv_file", "_dv_pos").distinct()
+    else spark.read.parquet(paths: _*).select("_dv_file", "_dv_pos")
   }
 
   /** MERGE-ON-READ: the live rows of `entries` — clean files stream
@@ -1803,7 +1805,7 @@ final class TxTable(
         if (eqs.isEmpty || zoneKept.length > TxTable.MaxBloomProbeFiles) zoneKept
         else {
           val conf = spark.sparkContext.hadoopConfiguration
-          zoneKept.filter(e => FileStats.bloomMayContain(e.path, conf, eqs, phys))
+          zoneKept.filter(e => FileStats.bloomMayContain(e.path, conf, eqs))
         }
     }
   }
@@ -3485,17 +3487,6 @@ final class TxTable(
       (TxTable.LiveFile(e.path, e.bucket, e.stats, e.dvs.map(_.rows).sum),
         e.dvs.map(_.path)))
 
-  /** Total bytes of the current version's data files — driver-side
-    * metadata (one getFileStatus per manifest entry). */
-  def currentDataBytes: Long =
-    if (currentVersion < 0) 0L
-    else {
-      val f = fs
-      loadManifest(currentVersion).entries.map { e =>
-        scala.util.Try(f.getFileStatus(new Path(e.path)).getLen).getOrElse(0L)
-      }.sum
-    }
-
   /** DESCRIBE HISTORY analog — one row per RETAINED commit, derived
     * entirely from the manifests (no write-path bookkeeping to keep in
     * step): version, commit timestamp (manifest mtime), live file
@@ -3520,24 +3511,6 @@ final class TxTable(
         (prev -- paths).size.toLong, metaKeys.mkString(","))
     }.toDF("version", "commit_ts", "n_files", "n_added", "n_removed",
       "meta_keys")
-  }
-
-  /** Size-TARGETED compaction: derive the per-bucket output file count
-    * from the table's ACTUAL bytes (files ≈ targetFileBytes each)
-    * instead of a guessed constant — at 100 TB a one-file-per-bucket
-    * `compact()` would write 100 GB files (unsplittable row groups,
-    * no scan parallelism, no intra-bucket pruning), while a fixed
-    * files-per-bucket over-fragments small tables. Hash buckets are
-    * balanced by construction, so a single global files-per-bucket
-    * derived from the average is the right granularity; files are
-    * range-split and sorted on `clusterBy` (default: the key columns)
-    * so zone maps prune within every bucket. */
-  def compactTo(targetFileBytes: Long,
-      clusterBy: Seq[String] = keys): Unit = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val perBucket = math.max(1L, math.ceil(
-      currentDataBytes.toDouble / numBuckets / targetFileBytes).toLong)
-    compactClustered(clusterBy, perBucket.toInt)
   }
 
   final case class VacuumPlan(dataFiles: Seq[String], dvFiles: Seq[String],

@@ -40,43 +40,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * run at startup before new jobs. Returns journals recovered. */
   def recoverJobTxns(): Int =
     JobTxn.recover(spark, s"$root/_txn", domainTable)
-
-  /** Scheduled-maintenance sweep (the lakehouse OPTIMIZE job; the
-    * reference's Postgres autovacuum/index-maintenance analog):
-    * compact every domain table whose data-file count exceeds
-    * `maxFiles`, then vacuum it to `keepVersions` so compaction
-    * reclaims space instead of doubling it (old versions' files stay
-    * until vacuum). Returns table →
-    * (filesBefore, filesAfter) for the tables compacted. Safe to run
-    * from a cron/stream trigger WHILE writers are live: compaction is
-    * an ordinary optimistic commit (rebased on conflict), and vacuum
-    * deletes nothing younger than `vacuumMinAgeMs` — size that window
-    * above BOTH the longest reader job lifetime and the longest
-    * in-flight commit (see [[TxTable.vacuum]]). */
-  def compactAll(maxFiles: Int = 16, keepVersions: Int = 3,
-      vacuumMinAgeMs: Long = TxTable.DefaultVacuumRetentionMs,
-      /** Output files are sized from ACTUAL bytes (≈ this many bytes
-        * per file — the Delta/Iceberg target-file-size knob; see
-        * [[TxTable.compactTo]]) instead of one file per bucket
-        * regardless of table size. */
-      targetFileBytes: Long = Warehouse.DefaultTargetFileBytes): Map[String, (Int, Int)] =
-    graft.domain.Schemas.tables.keys.toSeq.sorted.flatMap { n =>
-      val t = domainTable(n)
-      val before = t.dataFileCount
-      if (before > maxFiles) {
-        t.compactTo(targetFileBytes)
-        t.vacuum(keepVersions, vacuumMinAgeMs)
-        Some(n -> (before, t.dataFileCount))
-      } else None
-    }.toMap
 }
 
 object Warehouse {
-  /** Default compaction file-size target (the 128 MiB lakehouse
-    * convention: big enough for scan efficiency, small enough for
-    * task-level parallelism and tight zone maps). */
-  val DefaultTargetFileBytes: Long = 128L * 1024 * 1024
-
   /** Bucket counts of the tables the reference mutates per pipeline
     * step (`repository.ts:25-78` upsert, run/review status updates):
     * a key-addressed write rewrites only the touched buckets' files,

@@ -1,6 +1,6 @@
 package graft.domain
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Trust-tier source policy (SURVEY §2.9 V4): profile match →
@@ -72,7 +72,6 @@ object Policy {
     * broadcast join; this one has single digits, like the reference's.)
     */
   def evaluateSource(
-      spark: SparkSession,
       df: DataFrame,
       urlCol: String,
       policy: TrustPolicy = referencePolicy): DataFrame = {

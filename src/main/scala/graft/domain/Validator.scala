@@ -2,7 +2,6 @@ package graft.domain
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Ontology validation gates (SURVEY §2.9 V1/V2) as column expressions.
   *
@@ -26,7 +25,7 @@ object Validator {
   /** Stage 1 — schema/enum/shape checks equivalent to
     * `RegulationItemSchema.safeParse` over an item row already in the
     * typed `Schemas.regulationItems` shape. */
-  def schemaOk(df: DataFrame): Column = {
+  def schemaOk: Column = {
     def nonEmpty(c: String) = col(c).isNotNull && length(col(c)) > 0
     nonEmpty("id") &&
     col("jurisdiction").isin(Terms.Jurisdictions: _*) &&
@@ -51,8 +50,8 @@ object Validator {
 
   /** V1 — 4-stage regulation-item gate; returns the failure reason or
     * null when valid (`validator.ts:26-48`). */
-  def itemReason(df: DataFrame, confidenceMin: Double): Column =
-    when(!schemaOk(df), SchemaFailed)
+  def itemReason(confidenceMin: Double): Column =
+    when(!schemaOk, SchemaFailed)
       .when(!OntoFunctions.isAllowedDomain(col("url")), DomainNotAllowed)
       .when(col("evidence").isNull ||
         col("evidence.citations").isNull ||
@@ -62,7 +61,7 @@ object Validator {
 
   /** Attach `(valid, reason)` columns. */
   def validateItems(df: DataFrame, confidenceMin: Double = 0.7): DataFrame =
-    df.withColumn("_reason", itemReason(df, confidenceMin))
+    df.withColumn("_reason", itemReason(confidenceMin))
       .withColumn("_valid", col("_reason").isNull)
 
   /** V3 — trust-tier routing (`src/jobs/scan.ts:50-74`): main iff valid
@@ -86,7 +85,7 @@ object Validator {
   }
 
   /** V2 — requirement gate (`validator.ts:50-56`). */
-  def requirementReason(df: DataFrame): Column = {
+  def requirementReason: Column = {
     def nonEmpty(c: String) = col(c).isNotNull && length(col(c)) > 0
     when(!(nonEmpty("requirement_family") &&
         col("evidence_status").isin(Terms.EvidenceStatus: _*) &&

@@ -5,12 +5,11 @@ import javax.sound.sampled.AudioSystem
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** REAL audio decoding behind the [[Multimodal.MediaDecoder]] seam —
-  * `javax.sound.sampled` ships with the JDK (WAV/AIFF/AU PCM), so the
-  * audio half of the multimodal family follows the image half
-  * ([[ImageCodec]]) out of stub-land: payload bytes → real format
-  * metadata (sample rate, channels, bit depth, duration) + an
-  * amplitude-envelope feature vector.
+/** REAL audio decoding — `javax.sound.sampled` ships with the JDK
+  * (WAV/AIFF/AU PCM), so the audio half of the multimodal family
+  * follows the image half ([[ImageCodec]]) out of stub-land: payload
+  * bytes → real format metadata (sample rate, channels, bit depth,
+  * duration) + an amplitude-envelope feature vector.
   *
   * Features are per-segment RMS over `segments` equal time slices of
   * the PCM stream, CENTERED by the clip's mean RMS (the same
@@ -111,16 +110,6 @@ object AudioCodec {
       AudioFeatureRow("", fmt.getSampleRate.toInt, ch, 16, durationMs,
         rms.map(r => (r - mean).toFloat))
     } finally ais.close()
-  }
-
-  /** The production audio [[Multimodal.MediaDecoder]]. */
-  final class AudioIoDecoder(segments: Int = 64)
-      extends Multimodal.MediaDecoder {
-    override def dim: Int = segments
-    override def decodeFeatures(row: Multimodal.MediaRow): Array[Float] = {
-      val f = AudioCodec.decodeFeatures(row.content, segments)
-      if (f == null) new Array[Float](segments) else f.features
-    }
   }
 
   /** Batch audio decode over media rows — same per-partition

@@ -37,7 +37,6 @@ object Closure {
       : ClosureResult = {
     val e = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(true)
-    val eAnc = e.select(col("dst").as("_hop"), col("src"))
     // reach = LAZY union of the checkpointed generations: each
     // generation is materialized exactly once (its own checkpoint);
     // re-checkpointing the accumulated union every iteration re-wrote

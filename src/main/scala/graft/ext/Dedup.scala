@@ -30,15 +30,6 @@ object Dedup {
     * tokens (see [[lshCandidatePairsWithStats]]'s `dropped`). */
   val EmptyWordSet = "EMPTY_WORDSET"
 
-  /** X3 — exact dedup by content fingerprint, first-wins by explicit
-    * precedence (rankCols), never partition order. */
-  def exactFirstWins(df: DataFrame, fingerprint: Column,
-      rankCols: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(fingerprint).orderBy(rankCols: _*)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-  }
-
   /** Salted MinHash: one band value = min over words of md5("salt:w").
     * String-lexicographic min is portable across engines. Native
     * streaming expression (see [[graft.functions.MinSaltedMd5]]) —
@@ -56,14 +47,6 @@ object Dedup {
     * dashboard at 100 TB) can alert on `dropped` volume or re-run the
     * oversized buckets with more bands. Nothing is silently lost. */
   final case class CandidateStats(pairs: DataFrame, dropped: DataFrame)
-
-  /** Band count that keeps expected bucket occupancy near
-    * `targetBucket` rows: buckets per band grow with corpus diversity,
-    * so more bands (finer signatures) are needed as the corpus grows.
-    * Heuristic, monotone in `corpusSize`; clamped to [4, 64]. Shares
-    * the clamped-log2 core with [[Similarity.suggestedNBits]]. */
-  def suggestedBands(corpusSize: Long, targetBucket: Long = 1000): Int =
-    Similarity.clampedLog2(corpusSize, targetBucket, lo = 4, hi = 64)
 
   /** X2 — LSH candidate pairs: ids sharing ANY band value. Long-format
     * explode → shuffle on (band, sig) → within-bucket pairing with a
@@ -112,32 +95,6 @@ object Dedup {
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       nBands: Int, maxBucket: Int = 1000): DataFrame =
     lshCandidatePairsWithStats(df, idCol, textCol, nBands, maxBucket).pairs
-
-  /** Exact word-set Jaccard for candidate pairs (n-gram Jaccard with
-    * word unigrams; swap `words` for shingles for higher n). */
-  def jaccardVerify(pairs: DataFrame, df: DataFrame, idCol: String,
-      textCol: String, threshold: Double): DataFrame = {
-    // tokenized once (localCheckpoint): both pair-side joins read the
-    // word sets — same discipline as prefixJaccardJoin (r21)
-    val sets = df.select(col(idCol).as("_jid"),
-      array_distinct(words(col(textCol))).as("_set"))
-      .localCheckpoint(true)
-    pairs
-      .join(sets.withColumnRenamed("_jid", "id_a")
-        .withColumnRenamed("_set", "set_a"), Seq("id_a"))
-      .join(sets.withColumnRenamed("_jid", "id_b")
-        .withColumnRenamed("_set", "set_b"), Seq("id_b"))
-      .withColumn("_u",
-        size(array_union(col("set_a"), col("set_b"))).cast(DoubleType))
-      // two empty sets → 0/0 = NaN, which Spark compares GREATER than
-      // every double and would pass the threshold; NULL never does
-      .withColumn("jaccard",
-        when(col("_u") > 0.0,
-          size(array_intersect(col("set_a"), col("set_b"))).cast(DoubleType) /
-            col("_u")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
 
   /** X2 — EXACT set-similarity self-join by prefix filtering (the
     * AllPairs / PPJoin recipe: Chaudhuri, Ganti & Kaushik, ICDE'06;
@@ -283,10 +240,8 @@ object Dedup {
 
   /** INCREMENTAL connected components — fold one ingest batch's
     * near-dup pairs into persisted component labels without touching
-    * the corpus (the labels-table sibling of [[BandIndex]]'s
-    * incremental candidate generation: the band index finds a new
-    * batch's pairs without re-signaturing the corpus; this folds those
-    * pairs into the standing labels without re-clustering it).
+    * the corpus: the batch's pairs fold into the standing labels
+    * without re-clustering it.
     *
     * `labels` is the standing (id, component) table where component =
     * min reachable id — exactly [[connectedComponents]]' output, so
@@ -342,31 +297,6 @@ object Dedup {
       .select(col("_from").as("id"), col("_to").as("component"))
     CcResult(relabeled.unionByName(newRows), cc.converged, cc.iterations)
   }
-
-  /** Full evidence of an end-to-end near-dup run: the component
-    * labels, the recall ledger of capped LSH buckets, and the
-    * propagation convergence facts — everything an ops dashboard needs
-    * to trust (or distrust) a 100 TB dedup pass. */
-  final case class NearDupStats(components: DataFrame, dropped: DataFrame,
-      converged: Boolean, iterations: Int)
-
-  /** End-to-end near-dup grouping with nothing silent: MinHash-LSH
-    * candidates (dropped buckets reported) → exact Jaccard
-    * verification → transitive closure (convergence reported). */
-  def nearDupGroupsWithStats(df: DataFrame, idCol: String, textCol: String,
-      nBands: Int, threshold: Double, maxBucket: Int = 1000,
-      maxIter: Int = 10): NearDupStats = {
-    val cand = lshCandidatePairsWithStats(df, idCol, textCol, nBands, maxBucket)
-    val verified = jaccardVerify(cand.pairs, df, idCol, textCol, threshold)
-    val cc = connectedComponentsWithStats(
-      verified.select("id_a", "id_b"), maxIter)
-    NearDupStats(cc.components, cand.dropped, cc.converged, cc.iterations)
-  }
-
-  /** Labels-only view of [[nearDupGroupsWithStats]]. */
-  def nearDupGroups(df: DataFrame, idCol: String, textCol: String,
-      nBands: Int, threshold: Double): DataFrame =
-    nearDupGroupsWithStats(df, idCol, textCol, nBands, threshold).components
 
   /** Portable 16-bit SimHash over a named word-array column: bit b of
     * md5(w) votes ±1; sign of the vote sum sets bit b. Hex-char
@@ -445,8 +375,8 @@ object Dedup {
     * documents). Each document is cut into consecutive
     * `windowWords`-word chunks; a chunk instance survives iff it is
     * the GLOBAL first occurrence of its text — first = smallest
-    * (id, position), the same explicit-precedence rule as
-    * [[exactFirstWins]], never partition order. Survivors are
+    * (id, position), an explicit precedence rule, never partition
+    * order. Survivors are
     * reassembled in document order.
     *
     * Returns (id, n_chunks, n_kept, text_dedup) — one row per input

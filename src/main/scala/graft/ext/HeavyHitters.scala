@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** EXACT frequent-item (heavy-hitter) mining at corpus scale, the
@@ -98,10 +98,6 @@ object HeavyHitters {
     import scala.jdk.CollectionConverters._
     states.asScala.iterator
   }
-
-  private[ext] def misraGries(items: Iterator[String], k: Int)
-      : Iterator[(String, Long)] =
-    misraGriesWithStats(items, k)._1.iterator
 
   /** Items of `itemCol` whose frequency × `den` > corpus size × `num`
     * (i.e. frequency > (num/den) · n, exact rational threshold — kept

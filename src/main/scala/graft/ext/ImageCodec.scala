@@ -6,10 +6,10 @@ import javax.imageio.ImageIO
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** REAL image decoding behind the [[Multimodal.MediaDecoder]] seam —
-  * `javax.imageio` ships with the JDK (PNG/JPEG/GIF/BMP/TIFF), so the
-  * decode step is production code, not a stub: payload bytes →
-  * `BufferedImage` → real dimensions + perceptual features.
+/** REAL image decoding — `javax.imageio` ships with the JDK
+  * (PNG/JPEG/GIF/BMP/TIFF), so the decode step is production code,
+  * not a stub: payload bytes → `BufferedImage` → real dimensions +
+  * perceptual features.
   *
   * Features are the classic perceptual-hash family (the published
   * aHash/dHash recipes): a grid×grid mean-gray downsample CENTERED by
@@ -21,8 +21,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * with one float division — deterministic across JVMs, so features
   * are reproducible ingest artifacts.
   *
-  * Near-dup then costs no image-specific dedup code: decode once
-  * behind the seam and it IS an embedding problem
+  * Near-dup then costs no image-specific dedup code: decode once and
+  * it IS an embedding problem
   * ([[Similarity.cosineNearDupPairs]] — hyperplane-LSH blocking,
   * exact cosine inside buckets).
   *
@@ -157,16 +157,6 @@ object ImageCodec {
     bits
   }
 
-  /** The production [[Multimodal.MediaDecoder]]: ImageIO decode +
-    * centered gray-grid features. */
-  final class ImageIoDecoder(grid: Int = 8) extends Multimodal.MediaDecoder {
-    override def dim: Int = grid * grid
-    override def decodeFeatures(row: Multimodal.MediaRow): Array[Float] = {
-      val img = decode(row.content)
-      if (img == null) new Array[Float](dim) else grayGrid(img, grid)
-    }
-  }
-
   case class ImageFeatureRow(
       media_id: String,
       width: Int,
@@ -177,9 +167,9 @@ object ImageCodec {
 
   /** Batch image decode + feature extraction over media rows — real
     * dimensions from the codec, perceptual hashes, cosine features.
-    * Same per-partition streaming shape as
-    * [[Multimodal.extractFeatures]]; undecodable payloads yield
-    * (-1, -1) dims and zero features rather than failing the batch. */
+    * Rows stream through `mapPartitions` (constant memory per
+    * partition); undecodable payloads yield (-1, -1) dims and zero
+    * features rather than failing the batch. */
   def extractImageFeatures(spark: SparkSession, media: DataFrame,
       grid: Int = 8): Dataset[ImageFeatureRow] = {
     import spark.implicits._

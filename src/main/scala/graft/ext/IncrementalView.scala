@@ -50,8 +50,7 @@ import graft.core.TxTable
   *
   * Caveats (standard for IVM): float sums drift under long ± chains —
   * prefer integral/decimal value columns; groups whose count reaches
-  * zero stay as tombstone rows filtered by [[read]] (swept by
-  * [[compactTombstones]]).
+  * zero stay as tombstone rows filtered by [[read]].
   */
 final class IncrementalView(
     spark: SparkSession,
@@ -307,9 +306,6 @@ final class IncrementalView(
 
   private def versionsApplied(from: Long, to: Long): Int =
     source.versions.count(v => v > from && v <= to)
-
-  /** Sweep tombstones (cnt = 0 groups) — safe anytime, refresh-safe. */
-  def compactTombstones(): Unit = table.deleteWhere(col("cnt") === 0L)
 }
 
 object IncrementalView {

@@ -69,9 +69,6 @@ case class KmvSketch(k: Int, hashes: Array[Long]) {
       a.intersect(b).size / tJoint
     }
   }
-
-  /** Union-count estimate via the merged sketch. */
-  def unionEstimate(other: KmvSketch): Double = merge(other).estimate
 }
 
 object KmvSketch {

@@ -1,36 +1,19 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
 /** Multimodal column plumbing (north-star extension): image/audio/video
   * as opaque `binary` columns with typed metadata, processed by
   * `mapPartitions` over a typed Dataset — the Scala analog of
-  * `mapInPandas` batch UDFs. The Spark-side plumbing (schema,
-  * partitioning, batch iteration, output shape) is real, and so are
-  * all three codecs, pure-JDK: [[ImageCodec.ImageIoDecoder]] decodes
-  * PNG/JPEG/GIF/BMP/TIFF via `javax.imageio` (real dimensions +
-  * perceptual aHash/dHash features), [[AudioCodec.AudioIoDecoder]]
+  * `mapInPandas` batch UDFs. All three codecs are pure-JDK:
+  * [[ImageCodec]] decodes PNG/JPEG/GIF/BMP/TIFF via `javax.imageio`
+  * (real dimensions + perceptual aHash/dHash features), [[AudioCodec]]
   * decodes WAV/PCM via `javax.sound.sampled` (real format metadata +
-  * RMS-envelope features), and [[VideoCodec.GifFrameDecoder]] decodes
-  * multi-frame animated GIF via the ImageIO sequence API (real frame
-  * counts + sampled-frame mean features). Licensed containers
-  * (mp4/h264, mp3) slot in behind the same [[MediaDecoder]] seam.
+  * RMS-envelope features), and [[VideoCodec]] decodes multi-frame
+  * animated GIF via the ImageIO sequence API (real frame counts +
+  * sampled-frame mean features).
   */
 object Multimodal {
 
-  /** Media row schema: opaque payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", StringType, nullable = false),
-    StructField("kind", StringType),        // image | audio | video
-    StructField("mime", StringType),
-    StructField("content", BinaryType),
-    StructField("width", IntegerType),      // nullable per-kind metadata
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType),
-    StructField("meta", StringType)))       // open JSON map
-
+  /** A media row: opaque payload + typed, nullable per-kind metadata. */
   case class MediaRow(
       media_id: String,
       kind: String,
@@ -40,70 +23,4 @@ object Multimodal {
       height: Option[Int],
       duration_ms: Option[Long],
       meta: Option[String])
-
-  case class MediaFeatures(
-      media_id: String,
-      kind: String,
-      n_bytes: Long,
-      features: Array[Float])
-
-  /** The decode/feature seam. Images: [[ImageCodec.ImageIoDecoder]]
-    * (real `javax.imageio` decode). Audio/video: deployment-provided
-    * (no JDK codec); tests exercise the plumbing with a deterministic
-    * byte-histogram fake. */
-  trait MediaDecoder extends Serializable {
-    def dim: Int
-    def decodeFeatures(row: MediaRow): Array[Float]
-  }
-
-  /** Batch feature extraction: one decoder instance per partition
-    * (mirrors per-batch model loading in mapInPandas), rows streamed —
-    * constant memory per partition regardless of corpus size. */
-  def extractFeatures(spark: SparkSession, media: DataFrame,
-      decoder: MediaDecoder): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { it =>
-      it.map { row =>
-        MediaFeatures(row.media_id, row.kind,
-          if (row.content == null) 0L else row.content.length.toLong,
-          decoder.decodeFeatures(row))
-      }
-    }
-  }
-
-  /** Deterministic frame sampling plan for video rows: every
-    * `intervalMs`, capped at `maxFrames` — pure column math, the
-    * decode of each sampled frame goes through the same decoder seam. */
-  def frameSamplePlan(media: DataFrame, intervalMs: Long,
-      maxFrames: Int): DataFrame =
-    media.filter(col("kind") === "video" && col("duration_ms").isNotNull)
-      .withColumn("frame_ts_ms",
-        explode(sequence(lit(0L),
-          least(col("duration_ms") - 1,
-            lit(intervalMs) * (maxFrames - 1)), lit(intervalMs))))
-      .select(col("media_id"), col("frame_ts_ms"))
-
-  /** Media near-dup pairs: decoder features feed the SAME bucketed
-    * embedding-cosine path as the text/embedding X2 family
-    * ([[Similarity.cosineNearDupPairs]] — hyperplane-LSH blocking,
-    * exact cosine inside buckets, never all-pairs). Asset or
-    * frame-level near-dup costs no media-specific dedup code: decode
-    * once behind the seam, then it IS an embedding problem. */
-  def nearDupPairs(spark: SparkSession, media: DataFrame,
-      decoder: MediaDecoder, threshold: Double, nBits: Int = 4): DataFrame =
-    Similarity.cosineNearDupPairs(
-      extractFeatures(spark, media, decoder).toDF(),
-      "features", "media_id", threshold, nBits)
-
-  /** Resize request plan (image rows): target box preserving aspect
-    * ratio — metadata math now, decode behind the seam. */
-  def resizePlan(media: DataFrame, maxSide: Int): DataFrame =
-    media.filter(col("kind") === "image" &&
-        col("width").isNotNull && col("height").isNotNull)
-      .withColumn("scale",
-        least(lit(1.0),
-          lit(maxSide.toDouble) / greatest(col("width"), col("height"))))
-      .withColumn("target_w", ceil(col("width") * col("scale")).cast(IntegerType))
-      .withColumn("target_h", ceil(col("height") * col("scale")).cast(IntegerType))
-      .select("media_id", "width", "height", "target_w", "target_h")
 }

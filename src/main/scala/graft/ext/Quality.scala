@@ -2,31 +2,16 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Data-quality expectation checks for pipeline tables (training-data
-  * hygiene at scale): one pass computes per-column null counts,
-  * distinct cardinalities and custom predicate violation counts; a
-  * declarative expectation list turns that into a violations report.
+  * hygiene at scale): a declarative expectation list turns into one
+  * pass of predicate violation counts, a violations report.
   * The soft-fail philosophy matches the reference's review-queue
   * routing: report and route, never silently drop.
   */
 object Quality {
 
   case class Expectation(name: String, predicate: Column)
-
-  /** Single-pass profile: total, per-column null counts + approx
-    * distincts (exact distinct per column would be one shuffle per
-    * column — approximate is the 100 TB default). */
-  def profile(df: DataFrame, exact: Boolean = false): DataFrame = {
-    val aggs = df.columns.flatMap { c =>
-      Seq(
-        count(when(col(c).isNull, 1)).as(s"nulls_$c"),
-        (if (exact) countDistinct(col(c))
-         else approx_count_distinct(col(c))).as(s"distinct_$c"))
-    }
-    df.agg(count(lit(1)).as("n_rows"), aggs.toSeq: _*)
-  }
 
   /** Expectation violations: one conditional aggregate per rule, one
     * scan total. */

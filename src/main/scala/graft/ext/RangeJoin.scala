@@ -213,7 +213,7 @@ object RangeJoin {
     * same a-starts-first single inequality. */
   private def overlapPairsBounded(base: DataFrame, keyCol: String,
       startCol: String, endCol: String, idCols: Seq[String],
-      capPerKey: Option[Int] = None): DataFrame = {
+      capPerKey: Option[Int]): DataFrame = {
     val payload = startCol +: endCol +: idCols
     // struct field order (start, ids..., end): array_sort's default
     // lexicographic struct comparison then IS the pair orientation —

@@ -5,10 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Similarity search over embedding columns (north-star extension;
-  * SURVEY §2.11 X1): exact brute-force cosine top-k as the baseline,
-  * and a random-hyperplane LSH bucketing as the scale path (candidate
-  * set = one bucket + optional multi-probe, instead of the full
-  * corpus).
+  * SURVEY §2.11 X1): random-hyperplane LSH bucketing (candidate set =
+  * one bucket + optional multi-probe, instead of the full corpus).
   *
   * Hyperplanes are derived deterministically from md5 hex arithmetic
   * (engine-portable, no RNG state to ship to executors).
@@ -42,23 +40,6 @@ object Similarity {
   def cosineWithNorms(dotAb: Column, na: Column, nb: Column): Column = {
     val denom = na * nb
     when(denom > 0.0, dotAb / denom)
-  }
-
-  /** X1 — exact top-k by cosine against one query vector (broadcast;
-    * TakeOrdered — no global sort). The query norm is computed once on
-    * the 1-row broadcast side, not re-folded per corpus row. */
-  def cosineTopK(emb: DataFrame, embCol: String, queryId: Column,
-      idCol: String, k: Int): DataFrame = {
-    val e = emb.withColumn("_e", toDouble(col(embCol)))
-    val q = e.filter(col(idCol) === queryId)
-      .select(col("_e").as("_qe"), norm(col("_e")).as("_qn"))
-    e.filter(col(idCol) =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("score",
-        cosineWithNorms(dot(col("_e"), col("_qe")), norm(col("_e")), col("_qn")))
-      .drop("_e", "_qe", "_qn")
-      .orderBy(desc("score"), asc(idCol))
-      .limit(k)
   }
 
   /** Deterministic hyperplane component hp(plane, i) ∈ [-1, 1): value
@@ -134,23 +115,6 @@ object Similarity {
       .orderBy(desc("score"), asc(idCol))
       .limit(k)
   }
-
-  /** Shared bucketing heuristic: ceil(log2(corpus / target)), clamped.
-    * One implementation for both LSH tuning knobs ([[suggestedNBits]],
-    * [[Dedup.suggestedBands]]) so the formula can't silently diverge. */
-  private[ext] def clampedLog2(corpusSize: Long, target: Long,
-      lo: Int, hi: Int): Int =
-    math.min(hi, math.max(lo,
-      (math.log(math.max(2.0, corpusSize.toDouble / target)) /
-        math.log(2.0)).ceil.toInt))
-
-  /** Signature width that keeps expected bucket occupancy near
-    * `targetBucket` (corpus / 2^nBits ≈ targetBucket). The r1 defaults
-    * (4/8 bits → 16/256 buckets) only fit test corpora; at 100 TB this
-    * returns ~24-30 bits. Clamped to [4, 48] (signature packs into a
-    * long). Monotone in `corpusSize`. */
-  def suggestedNBits(corpusSize: Long, targetBucket: Long = 10000): Int =
-    clampedLog2(corpusSize, targetBucket, lo = 4, hi = 48)
 
   /** X2 — embedding-cosine near-dup pairs within LSH buckets (never a
     * full cross join; bucket-size capped like MinHash, with the capped

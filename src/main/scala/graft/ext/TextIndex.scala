@@ -23,9 +23,8 @@ import org.apache.spark.sql.functions._
   * parquet scan. A k-term query reads ~k/nBuckets of the postings and
   * ZERO document texts.
   *
-  * Incremental: [[append]] / [[appendTrigram]] add a new batch's
-  * postings (the ingest path, like [[AnnIndex.append]] /
-  * [[BandIndex.append]]).
+  * Incremental: [[append]] adds a new batch's word postings (the
+  * ingest path, like [[AnnIndex.append]]).
   */
 object TextIndex {
 
@@ -101,11 +100,6 @@ object TextIndex {
       .filter(col("_nt") === terms.distinct.size)
       .drop("_nt")
 
-  /** Ids whose document contains ANY term (OR — union of postings). */
-  def searchAny(spark: SparkSession, dir: String, idCol: String,
-      terms: Seq[String]): DataFrame =
-    postings(spark, dir, terms.distinct).select(idCol).distinct()
-
   // ---- trigram index: arbitrary substring (LIKE '%p%') search ----
 
   /** Build the trigram index (the pg_trgm recipe): postings of every
@@ -127,16 +121,6 @@ object TextIndex {
       dir: String, nBuckets: Int = 64): Unit =
     writePostings(trigramPostingsOf(docs, idCol, textCol, nBuckets), idCol,
       dir, overwrite = true, nBuckets)
-
-  /** Append a new batch's trigram postings (ingest path — parity with
-    * the word index's [[append]]: a continuously-ingested corpus never
-    * rebuilds the substring index from scratch). */
-  def appendTrigram(docs: DataFrame, idCol: String, textCol: String,
-      dir: String): Unit = {
-    val n = nBuckets(docs.sparkSession, dir)
-    writePostings(trigramPostingsOf(docs, idCol, textCol, n), idCol,
-      dir, overwrite = false, n)
-  }
 
   // ---- positional index: exact PHRASE search in postings space ----
 
@@ -167,17 +151,6 @@ object TextIndex {
       idCol, dir, overwrite = true, nBuckets)
     docStatsOf(docs, idCol, textCol)
       .write.mode("overwrite").parquet(s"$dir/docstats")
-  }
-
-  /** Append a new batch's positional postings + doc stats (ingest
-    * path). */
-  def appendPositional(docs: DataFrame, idCol: String, textCol: String,
-      dir: String): Unit = {
-    val n = nBuckets(docs.sparkSession, dir)
-    writePostings(positionalPostingsOf(docs, idCol, textCol, n), idCol,
-      dir, overwrite = false, n)
-    docStatsOf(docs, idCol, textCol)
-      .write.mode("append").parquet(s"$dir/docstats")
   }
 
   /** BM25-RANKED retrieval served entirely from the positional index
@@ -351,36 +324,17 @@ object TextIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** Append a new batch's vocabulary to the fuzzy index (ingest
-    * path). Re-appearing terms add duplicate (variant, term) rows;
-    * probes dedup, so append stays write-only (no read-merge). */
-  def appendFuzzy(docs: DataFrame, textCol: String, dir: String): Unit = {
-    val (n, depth) = fuzzyMeta(docs.sparkSession, dir)
-    fuzzyPostingsOf(docs, textCol, n, depth)
-      .repartition(col("vb"))
-      .sortWithinPartitions("variant", "term")
-      .write.mode("append").partitionBy("vb").parquet(s"$dir/data")
-  }
-
-  /** Vocabulary terms within Levenshtein distance ≤ `maxEdit` of
-    * `term`: (term, dist) rows. The query's own delete variants are
-    * generated DRIVER-SIDE (bounded: Σ C(|q|, i) strings) and their
-    * buckets computed with the same hash — `vb IN (...)` prunes at
-    * planning time and `variant IN (...)` pushes to the scan, so the
-    * probe reads a few bucket directories of the vocabulary index and
-    * nothing else. Exact `levenshtein` verify on the candidates makes
-    * the expansion exact (the deletion-neighborhood candidates are a
-    * sound superset at maxEdit ≤ the indexed depth). */
-  def fuzzyExpand(spark: SparkSession, dir: String, term: String,
-      maxEdit: Int): DataFrame =
-    fuzzyExpandAll(spark, dir, Seq(term), maxEdit).drop("input")
-
-  /** Batched [[fuzzyExpand]] for several query terms at once —
-    * (input, term, dist) rows from ONE index scan: all inputs'
-    * delete variants union into a single partition-pruned probe, and
+  /** Vocabulary terms within Levenshtein distance ≤ `maxEdit` of each
+    * of `terms` — (input, term, dist) rows from ONE index scan. Each
+    * input's delete variants are generated DRIVER-SIDE (bounded:
+    * Σ C(|q|, i) strings); they union into a single partition-pruned
+    * probe (`vb IN (...)`, `variant IN (...)`), and
     * a broadcast (input, variant) map fans candidates back out to
     * their inputs (a query term's neighborhood is bounded, so the
-    * broadcast is control-plane sized however many inputs batch). */
+    * broadcast is control-plane sized however many inputs batch).
+    * Exact `levenshtein` verify on the candidates makes the expansion
+    * exact (the deletion-neighborhood candidates are a sound superset
+    * at maxEdit ≤ the indexed depth). */
   def fuzzyExpandAll(spark: SparkSession, dir: String, terms: Seq[String],
       maxEdit: Int): DataFrame = {
     import spark.implicits._

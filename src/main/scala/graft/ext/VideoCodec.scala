@@ -6,14 +6,13 @@ import javax.imageio.{IIOImage, ImageIO}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** REAL video-style decoding behind the [[Multimodal.MediaDecoder]]
-  * seam — the JDK's `javax.imageio` GIF plugin reads and writes
-  * MULTI-FRAME (animated) GIF natively, so the whole frame pipeline is
-  * production code with zero non-JDK codecs: payload bytes → frame
-  * count → every-k-th frame sample → per-frame perceptual features →
-  * clip-level feature vector. Container formats that need licensed
-  * codecs (mp4/h264) slot in behind the same seam; the GIF path proves
-  * the Spark-side shape (bounded frame iteration, per-frame features,
+/** REAL video-style decoding — the JDK's `javax.imageio` GIF plugin
+  * reads and writes MULTI-FRAME (animated) GIF natively, so the whole
+  * frame pipeline is production code with zero non-JDK codecs:
+  * payload bytes → frame count → every-k-th frame sample → per-frame
+  * perceptual features → clip-level feature vector. Container formats
+  * that need licensed codecs (mp4/h264) are out of scope; the GIF path
+  * proves the Spark-side shape (bounded frame iteration, per-frame features,
   * clip roll-up) against a real multi-frame bitstream.
   *
   * Frame features reuse [[ImageCodec]]'s centered gray-grid — a clip
@@ -111,8 +110,7 @@ object VideoCodec {
   }
 
   /** Every-k-th frame indices (always includes frame 0) — the
-    * deterministic sampling grid shared by the plan-side
-    * [[Multimodal.frameSamplePlan]] and the decode side. */
+    * deterministic sampling grid of the decode side. */
   def sampleIndices(nFrames: Int, everyK: Int): IndexedSeq[Int] = {
     require(everyK >= 1, "sampling stride must be >= 1")
     0 until nFrames by everyK
@@ -136,15 +134,6 @@ object VideoCodec {
     out
   }
 
-  /** The production video [[Multimodal.MediaDecoder]]: multi-frame
-    * decode + sampled-frame mean features. */
-  final class GifFrameDecoder(grid: Int = 8, everyK: Int = 2)
-      extends Multimodal.MediaDecoder {
-    override def dim: Int = grid * grid
-    override def decodeFeatures(row: Multimodal.MediaRow): Array[Float] =
-      clipFeature(decodeFrames(row.content), everyK, grid)
-  }
-
   case class VideoFeatureRow(
       media_id: String,
       n_frames: Int,
@@ -153,16 +142,11 @@ object VideoCodec {
       height: Int,
       features: Array[Float])
 
-  case class FrameFeatureRow(
-      media_id: String,
-      frame_idx: Int,
-      ahash: Long,
-      features: Array[Float])
-
   /** Batch clip decode + feature extraction — real frame counts and
     * dims from the codec, sampled-frame mean features. Same
-    * per-partition streaming shape as [[Multimodal.extractFeatures]];
-    * undecodable payloads yield (0, 0, -1, -1) and zero features. */
+    * per-partition streaming shape as
+    * [[ImageCodec.extractImageFeatures]]; undecodable payloads yield
+    * (0, 0, -1, -1) and zero features. */
   def extractVideoFeatures(spark: SparkSession, media: DataFrame,
       grid: Int = 8, everyK: Int = 2): Dataset[VideoFeatureRow] = {
     import spark.implicits._
@@ -177,26 +161,6 @@ object VideoCodec {
             sampleIndices(frames.length, everyK).length,
             frames.head.getWidth, frames.head.getHeight,
             clipFeature(frames, everyK, grid))
-      }
-    }
-  }
-
-  /** Per-FRAME feature rows (sampled grid) — scene-level dedup and
-    * frame-accurate retrieval ride the same downstream paths as any
-    * other embedding table; one clip fans out to its sampled frames
-    * inside the partition (bounded by the clip's own frame count,
-    * never a shuffle). */
-  def explodeFrameFeatures(spark: SparkSession, media: DataFrame,
-      grid: Int = 8, everyK: Int = 2): Dataset[FrameFeatureRow] = {
-    import spark.implicits._
-    media.as[Multimodal.MediaRow].mapPartitions { it =>
-      it.flatMap { row =>
-        val frames = decodeFrames(row.content)
-        sampleIndices(frames.length, everyK).map { i =>
-          FrameFeatureRow(row.media_id, i,
-            ImageCodec.aHash64(frames(i)),
-            ImageCodec.grayGrid(frames(i), grid))
-        }
       }
     }
   }

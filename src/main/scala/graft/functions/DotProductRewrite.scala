@@ -65,9 +65,9 @@ object DotProductRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
       case ArrayAggregate(
-            ZipWith(a, b, mul @ MulLambda()),
+            ZipWith(a, b, MulLambda()),
             ZeroLiteral(),
-            add @ AddLambda(),
+            AddLambda(),
             IdentityFinish())
           if isDoubleArray(a) && isDoubleArray(b) =>
         DotProduct(a, b)

@@ -2,7 +2,6 @@ package graft.jobs
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -118,7 +117,7 @@ object MergeJob {
     // V2 + V5 — requirements radar, gated on inferred TIER_A.
     val allowRequirements = inferredTier.contains("TIER_A_BINDING")
     val validReqs = out.radarTable
-      .withColumn("_vr", Validator.requirementReason(out.radarTable))
+      .withColumn("_vr", Validator.requirementReason)
       .filter(col("_vr").isNull).drop("_vr")
       .cache()
     try {

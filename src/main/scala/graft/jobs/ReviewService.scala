@@ -33,7 +33,7 @@ final class ReviewService(wh: Warehouse) {
       // zod parse equivalent: schema gate only (`RegulationItemSchema
       // .safeParse`, index.ts:259) — approval bypasses domain/tier gates.
       val ok = normalized
-        .withColumn("_schema_ok", Validator.schemaOk(normalized))
+        .withColumn("_schema_ok", Validator.schemaOk)
         .filter(col("_schema_ok")).drop("_schema_ok")
         .cache()
       try {

@@ -47,26 +47,6 @@ final class RunTracker(wh: Warehouse) {
   def complete(runId: String, metaJson: String, now: Timestamp): Unit =
     finish(runId, "completed", metaJson, now)
 
-  /** S14/F17 — JSONB merge update
-    * (`UPDATE runs SET meta = COALESCE(meta,'{}') || $1`,
-    * `src/jobs/scan.ts:41-45`): top-level keys of `patchJson` overwrite
-    * / extend the existing meta map. Implemented relationally:
-    * from_json both sides as open maps, map_concat (right-biased like
-    * JSONB `||`), to_json back. */
-  def mergeMeta(runId: String, patchJson: String): Unit = {
-    val mapType = org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType,
-      org.apache.spark.sql.types.StringType)
-    // right-biased like JSONB ||: keep only left keys absent from the
-    // patch, then concat (map_concat itself rejects duplicate keys)
-    val leftMap = coalesce(from_json(col("meta"), mapType), map().cast(mapType))
-    val rightMap = coalesce(from_json(lit(patchJson), mapType), map().cast(mapType))
-    val leftOnly = map_filter(leftMap,
-      (k, _) => !array_contains(map_keys(rightMap), k))
-    runs.updateKey(Seq(runId),
-      Map("meta" -> to_json(map_concat(leftOnly, rightMap))))
-  }
-
   def fail(runId: String, error: String, now: Timestamp): Unit =
     finish(runId, "failed", s"""{"error":${JsonUtil.quote(error)}}""", now)
 

@@ -2,7 +2,7 @@ package graft.jobs
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -113,7 +113,6 @@ object ScanJob {
       embedder: Embedder,
       policy: Policy.TrustPolicy,
       tracker: RunTracker): Counters = {
-    val spark = wh.spark
     val now = lit(params.now)
 
     // D1 — first-wins dedup by canonical url: explicit precedence by
@@ -140,7 +139,7 @@ object ScanJob {
       .limit(params.maxResults)
 
     // V4 — trust policy evaluation (broadcast joins, no input shuffle).
-    val evaluated = Policy.evaluateSource(spark, limited.drop("c_url"), "url", policy)
+    val evaluated = Policy.evaluateSource(limited.drop("c_url"), "url", policy)
 
     // Source documents (S9 insert-if-absent) with deterministic ids.
     val docsPlan = evaluated.select(

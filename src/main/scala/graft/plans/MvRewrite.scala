@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, Joi
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.ext.IncrementalView
 
@@ -201,8 +201,8 @@ object MvRewrite extends Rule[LogicalPlan] {
         srcByExprId.get(a.exprId).filter(groupSet.contains).map(vAttr(_))
       ne match {
         case a: AttributeReference => groupRef(a).map(pin)
-        case al @ Alias(a: AttributeReference, _) => groupRef(a).map(pin)
-        case al @ Alias(ae: AggregateExpression, _) =>
+        case Alias(a: AttributeReference, _) => groupRef(a).map(pin)
+        case Alias(ae: AggregateExpression, _) =>
           rewriteAgg(ae, exact, srcByExprId, vAttr, sumSet, minMaxSet).map(pin)
         case _ => None
       }
@@ -448,12 +448,12 @@ object MvRewrite extends Rule[LogicalPlan] {
         case a: AttributeReference =>
           srcByExprId.get(a.exprId).filter(groupSet.contains)
             .map(n => pin(vAttr(n)))
-        case al @ Alias(a: AttributeReference, _) if dimAttrs.contains(a) =>
+        case Alias(a: AttributeReference, _) if dimAttrs.contains(a) =>
           Some(pin(a))
-        case al @ Alias(a: AttributeReference, _) =>
+        case Alias(a: AttributeReference, _) =>
           srcByExprId.get(a.exprId).filter(groupSet.contains)
             .map(n => pin(vAttr(n)))
-        case al @ Alias(ae: AggregateExpression, _) =>
+        case Alias(ae: AggregateExpression, _) =>
           rewriteAgg(ae, exact = false, srcByExprId, vAttr, sumSet, minMaxSet)
             .orElse(dimAgg(ae)).map(pin)
         case _ => None

@@ -625,12 +625,9 @@ object Analytics {
       .agg(count(lit(1)).as("n"))
       .orderBy("window_start", "event_type")
 
-  /** Batch twin of the `flatMapGroupsWithState` milestone state machine
-    * (`streaming.EventStreams.userMilestones`): a user emits a row at
-    * every 10th event in (ts, event_id) order — n_events = the running
-    * count at the crossing. StreamingSpec proves the STREAMING state
-    * matches this batch math; this row pins the batch math itself
-    * against DuckDB. */
+  /** Per-user event milestones: a user emits a row at every 10th event
+    * in (ts, event_id) order — n_events = the running count at the
+    * crossing. */
   def ev_milestones(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
     t(s, dir, "events")

@@ -169,8 +169,8 @@ object TextSim {
   /** X2 — n-gram (word-set) Jaccard near-dup pairs: the EXACT-VERIFY
     * demo, deliberately bounded to 60 docs because the `id_a < id_b`
     * theta join plans a BroadcastNestedLoopJoin (all-pairs). The scale
-    * path is [[x2_shingle_jaccard]] / `Dedup.jaccardVerify`, which
-    * block through LSH buckets and never form the full pair square. */
+    * path is [[x2_shingle_jaccard]], which blocks through LSH buckets
+    * and never forms the full pair square. */
   private def jaccardPairs60(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
       .filter(col("doc_id") < 60)

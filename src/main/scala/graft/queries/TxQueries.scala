@@ -31,7 +31,7 @@ object TxQueries {
   /** Build-once cache: `build` runs only if the table at the keyed tmp
     * dir isn't already at `doneVersion` (a crashed half-build mismatches
     * and is wiped — the manifest protocol makes the check exact). */
-  private def cached(s: SparkSession, dir: String, srcTable: String,
+  private def cached(dir: String, srcTable: String,
       tag: String, doneVersion: Long)
       (make: String => TxTable)(build: TxTable => Unit): TxTable = {
     val src = new java.io.File(s"$dir/$srcTable.parquet")
@@ -56,7 +56,7 @@ object TxQueries {
   def tx_skipping_scan(s: SparkSession, dir: String): DataFrame = {
     val orders = t(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_orderdate")
-    val table = cached(s, dir, "orders", "skip", 2L) { loc =>
+    val table = cached(dir, "orders", "skip", 2L) { loc =>
       new TxTable(s, loc, orders.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(orders)
@@ -80,7 +80,7 @@ object TxQueries {
     val base = cust.filter(col("c_custkey") % 3 =!= 0)
     val upd = cust.filter(col("c_custkey") % 5 === 0)
       .withColumn("c_acctbal", col("c_acctbal") + 100.0)
-    val table = cached(s, dir, "customer", "cdc", 2L) { loc =>
+    val table = cached(dir, "customer", "cdc", 2L) { loc =>
       new TxTable(s, loc, base.schema, Seq("c_custkey"), numBuckets = 4)
     } { tx =>
       tx.append(base)  // v1
@@ -101,7 +101,7 @@ object TxQueries {
     val nation = t(s, dir, "nation")
     val narrow = nation.filter(col("n_nationkey") < 13)
       .select("n_nationkey", "n_name")
-    val table = cached(s, dir, "nation", "evo", 2L) { loc =>
+    val table = cached(dir, "nation", "evo", 2L) { loc =>
       new TxTable(s, loc, narrow.schema, Seq("n_nationkey"), numBuckets = 2)
     } { tx =>
       tx.append(narrow) // v1: (n_nationkey, n_name)
@@ -123,7 +123,7 @@ object TxQueries {
     // tag encodes the delete recipe: cached() keys on source identity
     // only, so a recipe change MUST change the tag or a stale build
     // with the old predicate would be reused
-    val table = cached(s, dir, "supplier", "dv-mod3", 2L) { loc =>
+    val table = cached(dir, "supplier", "dv-mod3", 2L) { loc =>
       new TxTable(s, loc, supp.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.append(supp)                              // v1
@@ -145,7 +145,7 @@ object TxQueries {
   def tx_zorder_scan(s: SparkSession, dir: String): DataFrame = {
     val orders = t(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    val table = cached(s, dir, "orders", "zord", 2L) { loc =>
+    val table = cached(dir, "orders", "zord", 2L) { loc =>
       new TxTable(s, loc, orders.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(orders)                                          // v1
@@ -169,7 +169,7 @@ object TxQueries {
   def tx_bloom_lookup(s: SparkSession, dir: String): DataFrame = {
     val orders = t(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_orderstatus")
-    val table = cached(s, dir, "orders", "bloomq", 1L) { loc =>
+    val table = cached(dir, "orders", "bloomq", 1L) { loc =>
       new TxTable(s, loc, orders.schema, Seq("o_orderkey"), numBuckets = 4,
         bloomCols = Seq("o_custkey"))
     } { tx => tx.append(orders) }
@@ -185,7 +185,7 @@ object TxQueries {
   def tx_restore_read(s: SparkSession, dir: String): DataFrame = {
     val supp = t(s, dir, "supplier")
       .select("s_suppkey", "s_name", "s_nationkey")
-    val table = cached(s, dir, "supplier", "restoreq", 3L) { loc =>
+    val table = cached(dir, "supplier", "restoreq", 3L) { loc =>
       new TxTable(s, loc, supp.schema, Seq("s_suppkey"), numBuckets = 2)
     } { tx =>
       tx.append(supp.filter(col("s_suppkey") <= 100))   // v1
@@ -206,7 +206,7 @@ object TxQueries {
   def tx_clone_read(s: SparkSession, dir: String): DataFrame = {
     val supp = t(s, dir, "supplier")
       .select("s_suppkey", "s_name", "s_nationkey")
-    val table = cached(s, dir, "supplier", "cloneq2", 1L) { loc =>
+    val table = cached(dir, "supplier", "cloneq2", 1L) { loc =>
       new TxTable(s, loc, supp.schema, Seq("s_suppkey"), numBuckets = 2)
     } { clone =>
       // the SOURCE side table lives outside the cached dir, so a
@@ -238,7 +238,7 @@ object TxQueries {
     * nothing, and reordered nothing that an aggregate can see. */
   def tx_compact_read(s: SparkSession, dir: String): DataFrame = {
     val part = t(s, dir, "part").select("p_partkey", "p_brand", "p_retailprice")
-    val table = cached(s, dir, "part", "compactq", 7L) { loc =>
+    val table = cached(dir, "part", "compactq", 7L) { loc =>
       new TxTable(s, loc, part.schema, Seq("p_partkey"), numBuckets = 2)
     } { tx =>
       (0 until 6).foreach(i =>
@@ -268,7 +268,7 @@ object TxQueries {
   def tx_check_read(s: SparkSession, dir: String): DataFrame = {
     val cust = t(s, dir, "customer")
       .select("c_custkey", "c_mktsegment", "c_acctbal")
-    val table = cached(s, dir, "customer", "checkq", 3L) { loc =>
+    val table = cached(dir, "customer", "checkq", 3L) { loc =>
       new TxTable(s, loc, cust.schema, Seq("c_custkey"), numBuckets = 4)
     } { tx =>
       val evens = cust.filter(col("c_custkey") % 2 === 0)
@@ -305,7 +305,7 @@ object TxQueries {
   def tx_repair_read(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-    val table = cached(s, dir, "orders", "repair", 3L) { loc =>
+    val table = cached(dir, "orders", "repair", 3L) { loc =>
       new TxTable(s, loc, o.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(Relational7.driftedOrders(o)) // v1: the diverged replica
@@ -342,7 +342,7 @@ object TxQueries {
   def tx_delta_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
-    val table = cached(s, dir, "orders", "deltart", 4L) { loc =>
+    val table = cached(dir, "orders", "deltart", 4L) { loc =>
       new TxTable(s, loc, o.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(o.filter(col("o_orderkey") % 5 < 3))  // v1
@@ -380,7 +380,7 @@ object TxQueries {
     val v2 = o.filter(col("o_orderkey") % 2 =!= 0 ||
         col("o_orderkey") % 4 === 0)
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
-    val table = cached(s, dir, "orders", "streamevo", 2L) { loc =>
+    val table = cached(dir, "orders", "streamevo", 2L) { loc =>
       new TxTable(s, loc, v1.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // dst v0 — records the _table.json descriptor
@@ -426,7 +426,7 @@ object TxQueries {
   def tx_branch_wap(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    val table = cached(s, dir, "orders", "wap", 3L) { loc =>
+    val table = cached(dir, "orders", "wap", 3L) { loc =>
       new TxTable(s, loc, o.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       val even = o.filter(col("o_orderkey") % 2 === 0)
@@ -460,7 +460,7 @@ object TxQueries {
     val o = t(s, dir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_orderpriority",
         "o_totalprice")
-    val table = cached(s, dir, "orders", "deltadv", 3L) { loc =>
+    val table = cached(dir, "orders", "deltadv", 3L) { loc =>
       new TxTable(s, loc, o.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(o.filter(col("o_orderkey") % 3 === 0))  // v1
@@ -485,7 +485,7 @@ object TxQueries {
   def tx_sql_defaults(s: SparkSession, dir: String): DataFrame = {
     val n = t(s, dir, "nation").select("n_nationkey", "n_regionkey")
     n.createOrReplaceTempView("graft_defs_base")
-    val table = cached(s, dir, "nation", "sqldefs", 5L) { loc =>
+    val table = cached(dir, "nation", "sqldefs", 5L) { loc =>
       new TxTable(s, loc, org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("n_nationkey",
           org.apache.spark.sql.types.LongType),
@@ -532,7 +532,7 @@ object TxQueries {
   def tx_copy_into(s: SparkSession, dir: String): DataFrame = {
     val su = t(s, dir, "supplier")
       .select("s_suppkey", "s_nationkey", "s_acctbal")
-    val table = cached(s, dir, "supplier", "copyinto", 2L) { loc =>
+    val table = cached(dir, "supplier", "copyinto", 2L) { loc =>
       new TxTable(s, loc, su.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0
@@ -575,7 +575,7 @@ object TxQueries {
     val o = t(s, dir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_orderpriority",
         "o_totalprice")
-    val table = cached(s, dir, "orders", "deltamap", 4L) { loc =>
+    val table = cached(dir, "orders", "deltamap", 4L) { loc =>
       new TxTable(s, loc, o.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(o)                                       // v1
@@ -602,7 +602,7 @@ object TxQueries {
   def tx_delta_skip_read(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
-    val table = cached(s, dir, "orders", "deltaskip", 2L) { loc =>
+    val table = cached(dir, "orders", "deltaskip", 2L) { loc =>
       new TxTable(s, loc, o.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(o)                                            // v1
@@ -631,7 +631,7 @@ object TxQueries {
   def tx_iceberg_skip_read(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
-    val table = cached(s, dir, "orders", "iceskip", 2L) { loc =>
+    val table = cached(dir, "orders", "iceskip", 2L) { loc =>
       new TxTable(s, loc, o.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(o)                                            // v1
@@ -666,7 +666,7 @@ object TxQueries {
       StructField("o_orderkey", LongType, nullable = false),
       StructField("o_custkey", LongType),
       StructField("o_totalprice", DoubleType)))
-    val table = cached(s, dir, "orders", "icepart", 1L) { loc =>
+    val table = cached(dir, "orders", "icepart", 1L) { loc =>
       new TxTable(s, loc, schema, Seq("o_orderkey"), numBuckets = 16,
         bucketHash = TxTable.IcebergBucketHash)
     } { tx =>
@@ -694,7 +694,7 @@ object TxQueries {
   def tx_stream_copy(s: SparkSession, dir: String): DataFrame = {
     val su = t(s, dir, "supplier")
       .select("s_suppkey", "s_nationkey", "s_acctbal")
-    val table = cached(s, dir, "supplier", "streamcopy", 3L) { loc =>
+    val table = cached(dir, "supplier", "streamcopy", 3L) { loc =>
       new TxTable(s, loc, su.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0
@@ -749,7 +749,7 @@ object TxQueries {
         su.schema("s_acctbal").dataType),
       org.apache.spark.sql.types.StructField("region",
         org.apache.spark.sql.types.LongType)))
-    val table = cached(s, dir, "supplier", "streamhive", 2L) { loc =>
+    val table = cached(dir, "supplier", "streamhive", 2L) { loc =>
       new TxTable(s, loc, sunkSchema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0
@@ -808,7 +808,7 @@ object TxQueries {
   def tx_iceberg_stream_tail(s: SparkSession, dir: String): DataFrame = {
     val cu = t(s, dir, "customer")
       .select("c_custkey", "c_nationkey", "c_acctbal")
-    val table = cached(s, dir, "customer", "icetail", 2L) { loc =>
+    val table = cached(dir, "customer", "icetail", 2L) { loc =>
       new TxTable(s, loc, cu.schema, Seq("c_custkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // sink v0
@@ -853,7 +853,7 @@ object TxQueries {
   def tx_iceberg_changes_merge(s: SparkSession, dir: String): DataFrame = {
     val cu = t(s, dir, "customer")
       .select("c_custkey", "c_nationkey", "c_acctbal")
-    val table = cached(s, dir, "customer", "icechanges", 3L) { loc =>
+    val table = cached(dir, "customer", "icechanges", 3L) { loc =>
       new TxTable(s, loc, cu.schema, Seq("c_custkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // sink v0
@@ -910,7 +910,7 @@ object TxQueries {
   def tx_sql_analyze(s: SparkSession, dir: String): DataFrame = {
     val cu = t(s, dir, "customer")
       .select("c_custkey", "c_nationkey", "c_mktsegment")
-    val table = cached(s, dir, "customer", "analyze", 2L) { loc =>
+    val table = cached(dir, "customer", "analyze", 2L) { loc =>
       new TxTable(s, loc, cu.schema, Seq("c_custkey"), numBuckets = 4)
     } { tx =>
       tx.append(cu) // v1
@@ -936,7 +936,7 @@ object TxQueries {
   def tx_export_expire(s: SparkSession, dir: String): DataFrame = {
     val pt = t(s, dir, "part")
       .select("p_partkey", "p_size", "p_retailprice")
-    val table = cached(s, dir, "part", "expexpire", 2L) { loc =>
+    val table = cached(dir, "part", "expexpire", 2L) { loc =>
       new TxTable(s, loc, pt.schema, Seq("p_partkey"), numBuckets = 4)
     } { tx =>
       tx.append(pt) // v1
@@ -973,7 +973,7 @@ object TxQueries {
     val ev = t(s, dir, "events")
       .select(col("event_id"), col("value"),
         parse_json(col("props")).as("pv"))
-    val table = cached(s, dir, "events", "varstore", 1L) { loc =>
+    val table = cached(dir, "events", "varstore", 1L) { loc =>
       new TxTable(s, loc, ev.schema, Seq("event_id"), numBuckets = 4)
     } { tx =>
       tx.append(ev) // v1: variant bytes land once
@@ -998,7 +998,7 @@ object TxQueries {
     val ev = t(s, dir, "events")
       .select(col("event_id"), col("value"),
         parse_json(col("props")).as("pv"))
-    val table = cached(s, dir, "events", "varuni2", 2L) { loc =>
+    val table = cached(dir, "events", "varuni2", 2L) { loc =>
       new TxTable(s, loc, ev.schema, Seq("event_id"), numBuckets = 4)
     } { tx =>
       tx.append(ev)                                  // v1
@@ -1038,7 +1038,7 @@ object TxQueries {
   def tx_iceberg_stats_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val su = t(s, dir, "supplier")
       .select("s_suppkey", "s_nationkey")
-    val table = cached(s, dir, "supplier", "puffstats", 1L) { loc =>
+    val table = cached(dir, "supplier", "puffstats", 1L) { loc =>
       new TxTable(s, loc, su.schema, Seq("s_suppkey"), numBuckets = 2)
     } { tx =>
       tx.append(su) // v1
@@ -1068,7 +1068,7 @@ object TxQueries {
     val ev = t(s, dir, "events")
       .select(col("event_id"), col("value"),
         parse_json(col("props")).as("pv"))
-    val table = cached(s, dir, "events", "vardelta", 2L) { loc =>
+    val table = cached(dir, "events", "vardelta", 2L) { loc =>
       new TxTable(s, loc, ev.schema, Seq("event_id"), numBuckets = 4)
     } { tx =>
       tx.append(ev)                                  // v1
@@ -1174,7 +1174,7 @@ object TxQueries {
   def tx_stream_dedup(s: SparkSession, dir: String): DataFrame = {
     val su = t(s, dir, "supplier")
       .select("s_suppkey", "s_nationkey", "s_acctbal")
-    val table = cached(s, dir, "supplier", "streamdedup", 2L) { loc =>
+    val table = cached(dir, "supplier", "streamdedup", 2L) { loc =>
       new TxTable(s, loc, su.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0
@@ -1223,7 +1223,7 @@ object TxQueries {
   def tx_sql_identity(s: SparkSession, dir: String): DataFrame = {
     val su = t(s, dir, "supplier").select("s_suppkey", "s_acctbal")
     su.createOrReplaceTempView("graft_ident_base")
-    val table = cached(s, dir, "supplier", "sqlident", 2L) { loc =>
+    val table = cached(dir, "supplier", "sqlident", 2L) { loc =>
       val md = new org.apache.spark.sql.types.MetadataBuilder()
         .putLong(TxTable.IdentityStartKey, 1L)
         .putLong(TxTable.IdentityStepKey, 1L)
@@ -1271,7 +1271,7 @@ object TxQueries {
     val or = t(s, dir, "orders")
       .select("o_orderkey", "o_totalprice", "o_orderdate")
     or.createOrReplaceTempView("graft_gen_base")
-    val table = cached(s, dir, "orders", "sqlgen", 2L) { loc =>
+    val table = cached(dir, "orders", "sqlgen", 2L) { loc =>
       val md = new org.apache.spark.sql.types.MetadataBuilder()
         .putString(TxTable.GeneratedExprKey, "year(o_orderdate)").build()
       new TxTable(s, loc, org.apache.spark.sql.types.StructType(Seq(
@@ -1328,7 +1328,7 @@ object TxQueries {
   def tx_delta_idmode_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val cu = t(s, dir, "customer")
       .select("c_custkey", "c_mktsegment", "c_acctbal")
-    val table = cached(s, dir, "customer", "idmode", 2L) { loc =>
+    val table = cached(dir, "customer", "idmode", 2L) { loc =>
       new TxTable(s, loc, cu.schema, Seq("c_custkey"), numBuckets = 4,
         fieldIds = true)
     } { tx =>
@@ -1503,7 +1503,7 @@ object TxQueries {
   def tx_iceberg_map_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val p = t(s, dir, "part")
       .select("p_partkey", "p_brand", "p_size", "p_retailprice")
-    val table = cached(s, dir, "part", "icemap", 4L) { loc =>
+    val table = cached(dir, "part", "icemap", 4L) { loc =>
       new TxTable(s, loc, p.schema, Seq("p_partkey"), numBuckets = 4)
     } { tx =>
       tx.append(p)                                    // v1
@@ -1529,7 +1529,7 @@ object TxQueries {
   def tx_relocate_read(s: SparkSession, dir: String): DataFrame = {
     val su = t(s, dir, "supplier")
       .select("s_suppkey", "s_nationkey", "s_acctbal")
-    val table = cached(s, dir, "supplier", "reloc", 1L) { loc =>
+    val table = cached(dir, "supplier", "reloc", 1L) { loc =>
       new TxTable(s, loc, su.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       val pre = tx.dir + "-pre"
@@ -1559,7 +1559,7 @@ object TxQueries {
   def tx_delta_cdf(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    val table = cached(s, dir, "orders", "deltacdf", 3L) { loc =>
+    val table = cached(dir, "orders", "deltacdf", 3L) { loc =>
       new TxTable(s, loc, o.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(o.filter(col("o_orderkey") % 2 === 0))      // tx v1
@@ -1592,7 +1592,7 @@ object TxQueries {
   def tx_iceberg_dv_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val p = t(s, dir, "part")
       .select("p_partkey", "p_brand", "p_size", "p_retailprice")
-    val table = cached(s, dir, "part", "icebergdv", 3L) { loc =>
+    val table = cached(dir, "part", "icebergdv", 3L) { loc =>
       new TxTable(s, loc, p.schema, Seq("p_partkey"), numBuckets = 4)
     } { tx =>
       tx.append(p.filter(col("p_partkey") % 2 === 0))  // v1
@@ -1621,7 +1621,7 @@ object TxQueries {
   def tx_iceberg_v3_dv_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val p = t(s, dir, "part")
       .select("p_partkey", "p_brand", "p_size", "p_retailprice")
-    val table = cached(s, dir, "part", "icebergv3dv2", 3L) { loc =>
+    val table = cached(dir, "part", "icebergv3dv2", 3L) { loc =>
       new TxTable(s, loc, p.schema, Seq("p_partkey"), numBuckets = 4)
     } { tx =>
       tx.append(p.filter(col("p_partkey") % 2 === 0))  // v1
@@ -1654,7 +1654,7 @@ object TxQueries {
   def tx_uniform_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val p = t(s, dir, "part")
       .select("p_partkey", "p_brand", "p_size", "p_retailprice")
-    val table = cached(s, dir, "part", "uniform", 3L) { loc =>
+    val table = cached(dir, "part", "uniform", 3L) { loc =>
       new TxTable(s, loc, p.schema, Seq("p_partkey"), numBuckets = 4)
     } { tx =>
       tx.append(p.filter(col("p_partkey") % 2 === 0))  // v1
@@ -1691,7 +1691,7 @@ object TxQueries {
   def tx_iceberg_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val p = t(s, dir, "part")
       .select("p_partkey", "p_brand", "p_size", "p_retailprice")
-    val table = cached(s, dir, "part", "icebergrt", 3L) { loc =>
+    val table = cached(dir, "part", "icebergrt", 3L) { loc =>
       new TxTable(s, loc, p.schema, Seq("p_partkey"), numBuckets = 4)
     } { tx =>
       tx.append(p.filter(col("p_partkey") % 2 === 0))  // v1
@@ -1736,7 +1736,7 @@ object TxQueries {
       StructField("is_current", BooleanType)))
     // view table lands at v4: replace (first refresh) + 3 merges
     var locRef: String = null
-    val viewTable = cached(s, dir, "orders", "scd2incr", 4L) { loc =>
+    val viewTable = cached(dir, "orders", "scd2incr", 4L) { loc =>
       locRef = loc
       new TxTable(s, s"$loc/hist", histSchema, Seq("custkey", "ver"),
         numBuckets = 4)
@@ -1769,7 +1769,7 @@ object TxQueries {
     val li = t(s, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_returnflag",
         "l_linestatus", "l_quantity")
-    val table = cached(s, dir, "lineitem", "mv", 1L) { loc =>
+    val table = cached(dir, "lineitem", "mv", 1L) { loc =>
       new TxTable(s, loc, li.schema, Seq("l_orderkey", "l_linenumber"),
         numBuckets = 4)
     } { tx => tx.append(li) }
@@ -1910,7 +1910,7 @@ object TxQueries {
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         date_trunc("month", col("l_shipdate")).as("ship_month"))
-    val table = cached(s, dir, "lineitem", "mvsk", 1L) { loc =>
+    val table = cached(dir, "lineitem", "mvsk", 1L) { loc =>
       new TxTable(s, loc, li.schema, Seq("l_orderkey", "l_linenumber"),
         numBuckets = 4)
     } { tx => tx.append(li) }
@@ -1958,7 +1958,7 @@ object TxQueries {
   def tx_sql_provider(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
-    val table = cached(s, dir, "lineitem", "dsv2", 1L) { loc =>
+    val table = cached(dir, "lineitem", "dsv2", 1L) { loc =>
       new TxTable(s, loc, li.schema, Seq("l_orderkey", "l_linenumber"),
         numBuckets = 4)
     } { tx => tx.append(li) }
@@ -1990,7 +1990,7 @@ object TxQueries {
       .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"),
         (col("s_suppkey") % 4).cast("long").as("s_mod"))
     supp.createOrReplaceTempView("graft_dml_src")
-    val table = cached(s, dir, "supplier", "sqldml-mod4", 2L) { loc =>
+    val table = cached(dir, "supplier", "sqldml-mod4", 2L) { loc =>
       new TxTable(s, loc, supp.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0 — records the _table.json descriptor
@@ -2029,7 +2029,7 @@ object TxQueries {
         col("c_nationkey").cast("int").as("nk_old"),
         col("c_acctbal"))
     c.createOrReplaceTempView("graft_ddl2_src")
-    val table = cached(s, dir, "customer", "sqlddl2", 4L) { loc =>
+    val table = cached(dir, "customer", "sqlddl2", 4L) { loc =>
       new TxTable(s, loc, c.schema, Seq("c_custkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0 — records the _table.json descriptor
@@ -2067,7 +2067,7 @@ object TxQueries {
     val supp = t(s, dir, "supplier")
       .select("s_suppkey", "s_nationkey", "s_acctbal")
     supp.createOrReplaceTempView("graft_rnm_base")
-    val table = cached(s, dir, "supplier", "renmap", 5L) { loc =>
+    val table = cached(dir, "supplier", "renmap", 5L) { loc =>
       new TxTable(s, loc, supp.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0
@@ -2109,7 +2109,7 @@ object TxQueries {
     val supp = t(s, dir, "supplier")
       .select("s_suppkey", "s_nationkey", "s_acctbal")
     supp.createOrReplaceTempView("graft_merge_base")
-    val table = cached(s, dir, "supplier", "sqlmerge", 2L) { loc =>
+    val table = cached(dir, "supplier", "sqlmerge", 2L) { loc =>
       new TxTable(s, loc, supp.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0 — records the _table.json descriptor
@@ -2159,7 +2159,7 @@ object TxQueries {
     val supp = t(s, dir, "supplier")
       .select("s_suppkey", "s_nationkey", "s_acctbal")
     supp.createOrReplaceTempView("graft_mrgsrc_base")
-    val table = cached(s, dir, "supplier", "sqlmrgsrc", 2L) { loc =>
+    val table = cached(dir, "supplier", "sqlmrgsrc", 2L) { loc =>
       new TxTable(s, loc, supp.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0
@@ -2208,7 +2208,7 @@ object TxQueries {
     val supp = t(s, dir, "supplier")
       .select("s_suppkey", "s_nationkey", "s_acctbal")
     supp.createOrReplaceTempView("graft_mrgevo_base")
-    val table = cached(s, dir, "supplier", "sqlmrgevo", 3L) { loc =>
+    val table = cached(dir, "supplier", "sqlmrgevo", 3L) { loc =>
       new TxTable(s, loc, supp.schema, Seq("s_suppkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0
@@ -2247,7 +2247,7 @@ object TxQueries {
   def tx_sql_update(s: SparkSession, dir: String): DataFrame = {
     val cust = t(s, dir, "customer")
       .select("c_custkey", "c_nationkey", "c_acctbal")
-    val table = cached(s, dir, "customer", "sqlupd", 2L) { loc =>
+    val table = cached(dir, "customer", "sqlupd", 2L) { loc =>
       new TxTable(s, loc, cust.schema, Seq("c_custkey"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0
@@ -2278,7 +2278,7 @@ object TxQueries {
   def tx_sql_agg_pushdown(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-    val table = cached(s, dir, "orders", "aggpush-us", 2L) { loc =>
+    val table = cached(dir, "orders", "aggpush-us", 2L) { loc =>
       new TxTable(s, loc, o.schema, Seq("o_orderkey"), numBuckets = 4)
     } { tx =>
       tx.append(o.filter(col("o_orderkey") % 2 === 0)) // v1
@@ -2315,10 +2315,10 @@ object TxQueries {
   def tx_sql_spj_join(s: SparkSession, dir: String): DataFrame = {
     val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
     val ords = t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    val tc = cached(s, dir, "customer", "spjc", 1L) { loc =>
+    val tc = cached(dir, "customer", "spjc", 1L) { loc =>
       new TxTable(s, loc, cust.schema, Seq("c_custkey"), numBuckets = 4)
     } { tx => tx.append(cust) }
-    val to = cached(s, dir, "orders", "spjo", 1L) { loc =>
+    val to = cached(dir, "orders", "spjo", 1L) { loc =>
       new TxTable(s, loc, ords.schema, Seq("o_custkey"), numBuckets = 4)
     } { tx => tx.append(ords) }
     s.conf.set("spark.sql.catalog.graftspj", "graft.sources.GraftCatalog")
@@ -2371,7 +2371,7 @@ object TxQueries {
     val raw = s.read.parquet(s"$dir/events.parquet")
       .select("event_id", "event_type", "value")
     // tag v2: the ledger value format changed to "<epoch>:<rows>"
-    val table = cached(s, dir, "events", "streamsink2", 1L) { loc =>
+    val table = cached(dir, "events", "streamsink2", 1L) { loc =>
       new TxTable(s, loc, raw.schema, Seq("event_id"), numBuckets = 4)
     } { tx =>
       tx.createIfAbsent() // v0 — records the _table.json descriptor

@@ -1143,7 +1143,7 @@ final class GraftColumnarReader(path: String, dvPaths: Array[String],
   private var pos = 0L
   private var current: ColumnarBatch = _
 
-  private def compose(inner: ColumnarBatch, rows: Int,
+  private def compose(rows: Int,
       fillPos: Int => Unit, dataVec: String => ColumnVector): ColumnarBatch = {
     if (required.fieldNames.contains(GraftTable.PosCol)) {
       var i = 0
@@ -1173,7 +1173,7 @@ final class GraftColumnarReader(path: String, dvPaths: Array[String],
 
     if (delEnd == delCursor) {
       // clean batch: ZERO-copy passthrough
-      current = compose(inner, n,
+      current = compose(n,
         i => posVector.putLong(i, batchStart + i),
         name => inner.column(dataIdx(name)))
     } else {
@@ -1196,7 +1196,7 @@ final class GraftColumnarReader(path: String, dvPaths: Array[String],
         c += 1
       }
       val byName = dataFields.map(_.name).zip(outVectors).toMap
-      current = compose(inner, out,
+      current = compose(out,
         i => posVector.putLong(i, batchStart + survivors(i)),
         name => byName(name))
     }

@@ -231,7 +231,7 @@ final class GraftIcebergTailStream(dir: String, physSchema: StructType,
                 insert = false, onlyDeleted = false, seq = m.seq))
             if (ch.positionDeletes.nonEmpty)
               GraftIcebergTail
-                .referencedDataFiles(spark, ch.positionDeletes)
+                .referencedDataFiles(ch.positionDeletes)
                 .foreach { case (dataPath, delFiles) =>
                   out += GraftIcebergChangePartition(dataPath, delFiles,
                     insert = false, onlyDeleted = true, seq = m.seq)
@@ -418,7 +418,7 @@ object GraftIcebergTail {
     * position-delete files reference → one retraction partition per
     * data file. Cost is O(delete rows) — the same class as a
     * planning pass, bounded by the snapshot's own delete files. */
-  def referencedDataFiles(spark: SparkSession,
+  def referencedDataFiles(
       deleteFiles: Seq[String]): Seq[(String, Seq[String])] = {
     val refs = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.LinkedHashSet[String]]

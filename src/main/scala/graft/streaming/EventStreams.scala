@@ -1,17 +1,11 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-/** Structured-Streaming surface (SURVEY §2.12 north-star extension).
-  * The reference has no stream engine (BullMQ + 2s polling); here the
-  * same `events` shape flows through real streaming operators:
-  * tumbling/sliding windows, watermarked late-data handling, session
-  * windows, and a `foreachBatch` parquet sink.
+/** Structured-Streaming surface (SURVEY §2.12 north-star extension)
+  * over the `events` shape: a file-based streaming source and a
+  * watermarked stream-stream interval join.
   *
   * Every transform is defined on a plain DataFrame so it runs
   * identically in batch (oracle-checkable) and streaming modes —
@@ -37,63 +31,6 @@ object EventStreams {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(dir)
 
-  /** Tumbling-window counts with watermark (late events beyond
-    * `lateness` are dropped from state — bounded state at scale). */
-  def tumblingCounts(events: DataFrame, width: String = "1 hour",
-      lateness: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), width), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("n"), col("total_value"))
-
-  /** Sliding-window rates (window `width`, slide `slide`). */
-  def slidingCounts(events: DataFrame, width: String = "1 hour",
-      slide: String = "15 minutes", lateness: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), width, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("event_type"), col("n"))
-
-  /** Session windows per user (gap-based; state closes `gap` after the
-    * last event + watermark — the streaming twin of the batch
-    * sessionization query `ev_sessionize`). */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes",
-      lateness: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("total_value"))
-
-  /** Drive a streaming frame into an in-memory table until the source
-    * is exhausted (test/dev harness). */
-  def runToMemory(df: DataFrame, name: String,
-      outputMode: String = "append"): StreamingQuery = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
-
-  /** Streaming exact dedup by event id with bounded state: watermark
-    * caps how long an id is remembered (at-least-once source →
-    * effectively-once sink; the streaming face of X3). */
-  def dedupedEvents(events: DataFrame, lateness: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** Stream-stream interval join: purchases matched to the same user's
     * clicks from the preceding `window`. Watermarks on BOTH sides plus
     * the time-range predicate bound the join state — without them a
@@ -115,195 +52,4 @@ object EventStreams {
       org.apache.spark.sql.functions.expr(
         s"p_user = c_user AND c_ts BETWEEN p_ts - INTERVAL $window AND p_ts"))
   }
-
-  /** LEFT-OUTER stream-stream interval join: every purchase emits —
-    * matched rows immediately, unmatched rows NULL-extended only once
-    * the watermark passes the end of their join window (before that
-    * the match could still arrive, so outer rows are held in state;
-    * this watermark-gated null emission is what distinguishes the
-    * outer from the inner form operationally). Same state bounds as
-    * [[purchasesWithRecentClicks]]. */
-  def purchasesWithClicksLeftOuter(events: DataFrame,
-      window: String = "10 minutes", lateness: String = "1 hour"): DataFrame = {
-    val purchases = events.filter(org.apache.spark.sql.functions.col("event_type") === "purchase")
-      .select(org.apache.spark.sql.functions.col("event_id").as("p_id"),
-        org.apache.spark.sql.functions.col("user_id").as("p_user"),
-        org.apache.spark.sql.functions.col("ts").as("p_ts"))
-      .withWatermark("p_ts", lateness)
-    val clicks = events.filter(org.apache.spark.sql.functions.col("event_type") === "click")
-      .select(org.apache.spark.sql.functions.col("event_id").as("c_id"),
-        org.apache.spark.sql.functions.col("user_id").as("c_user"),
-        org.apache.spark.sql.functions.col("ts").as("c_ts"))
-      .withWatermark("c_ts", lateness)
-    purchases.join(clicks,
-      org.apache.spark.sql.functions.expr(
-        s"p_user = c_user AND c_ts BETWEEN p_ts - INTERVAL $window AND p_ts"),
-      "left_outer")
-  }
-
-  /** Stream-static enrichment join: the static side is re-read per
-    * micro-batch (dimension updates visible without restart); the
-    * stream side never shuffles when the dim broadcasts. */
-  def enriched(events: DataFrame, userDim: DataFrame): DataFrame =
-    events.join(org.apache.spark.sql.functions.broadcast(userDim),
-      Seq("user_id"), "left_outer")
-
-  case class Event(event_id: Long, ts: Timestamp, user_id: Long,
-      event_type: String, value: Double, props: String)
-
-  case class UserMilestone(user_id: Long, n_events: Long, total_value: Double,
-      milestone: Long)
-
-  /** Custom keyed state via `flatMapGroupsWithState` (SURVEY §2.12
-    * mapping): per-user cumulative counters that EMIT a row only when
-    * the user crosses an every-`step`-events milestone — logic no
-    * built-in window expresses. State is one small struct per key;
-    * at cluster scale it lives in the state store, keyed-partitioned. */
-  def userMilestones(events: Dataset[Event], step: Long = 10): Dataset[UserMilestone] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Double), UserMilestone](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[(Long, Double)]) =>
-          var (n, total) = state.getOption.getOrElse((0L, 0.0))
-          val out = scala.collection.mutable.ArrayBuffer[UserMilestone]()
-          // deterministic in-batch order
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            n += 1
-            total += e.value
-            if (n % step == 0)
-              out += UserMilestone(userId, n, total, n / step)
-          }
-          state.update((n, total))
-          out.iterator
-      }
-  }
-
-  case class UserEwma(user_id: Long, n_seen: Long, n_used: Long,
-      ewma: Double)
-
-  /** Streaming twin of the batch α=½ EWMA closed form
-    * (`queries.Analytics.ev_ewma_users`): keyed state holds each
-    * user's newest ≤ `k` (ts, id, value) rows — bounded, state-store
-    * resident — and every micro-batch re-emits the user's current
-    * smoothed score. The arithmetic REPLAYS the batch query's exact
-    * decimal pipeline (each term value·2^−e is an exact double;
-    * `BigDecimal.valueOf` mirrors Spark's shortest-representation
-    * double→DECIMAL(38,18) cast; sum exact; double-then-round-6
-    * mirrors `round(sum(..).cast(double), 6)`), so the LAST emission
-    * per user is bit-equal to the batch result — and the buffer
-    * merges by explicit (ts, id) order, so out-of-order micro-batches
-    * only misrank events older than an already-evicted k-th row (the
-    * standard bounded-state caveat; StreamingSpec asserts the
-    * equality). */
-  def userEwma(events: Dataset[Event], k: Int = 20): Dataset[UserEwma] = {
-    import events.sparkSession.implicits._
-    require(k >= 1 && k <= 62, s"k must be in [1, 62], got $k")
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, List[(Long, Long, Double)]), UserEwma](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event],
-            state: GroupState[(Long, List[(Long, Long, Double)])]) =>
-          val (seen0, buf0) = state.getOption.getOrElse((0L, List.empty))
-          val incoming = batch.toSeq
-          if (incoming.isEmpty) Iterator.empty
-          else {
-            val seen = seen0 + incoming.size
-            // newest-k by explicit (ts, id) order — no delivery-order
-            // assumption: a micro-batch may carry older files than the
-            // buffered ones (only events older than an already-evicted
-            // 20th row can be misranked — the standard bounded-state
-            // caveat)
-            val buf = (incoming.iterator
-              .map(e => (e.ts.getTime, e.event_id, e.value)).toList ++ buf0)
-              .sortBy { case (ts, id, _) => (-ts, -id) }
-              .take(k)
-            val m = buf.size
-            var acc = java.math.BigDecimal.ZERO
-            buf.iterator.zipWithIndex.foreach { case ((_, _, v), i) =>
-              val rank = i + 1
-              val e = if (rank == m) m - 1 else rank
-              val term = v / (1L << e).toDouble
-              acc = acc.add(java.math.BigDecimal.valueOf(term)
-                .setScale(18, java.math.RoundingMode.HALF_UP))
-            }
-            state.update((seen, buf))
-            val ewma = java.math.BigDecimal.valueOf(acc.doubleValue)
-              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-            Iterator.single(UserEwma(userId, seen, m.toLong, ewma))
-          }
-      }
-  }
-
-  case class FunnelStepDef(eventType: String, withinHours: Int)
-
-  case class UserFunnelStep(user_id: Long, steps_completed: Int,
-      ts: Timestamp)
-
-  /** Streaming twin of the batch `ext.Funnel` fold (§2.12 ×
-    * behavioral analytics): per-user step timestamps live in keyed
-    * state, each micro-batch folds its events (in-batch sorted by
-    * (ts, event_type) — the exact order the batch fold's sorted list
-    * induces) with the SAME transition rule (step 1 at first match;
-    * step i > 1 strictly after step i−1 and inside its window,
-    * evaluated against the pre-event snapshot so one event never
-    * satisfies two steps), and a row is emitted whenever a user
-    * advances. Parity with the batch fold holds under in-order
-    * delivery across micro-batches (the file-sequence assumption the
-    * milestone machine makes); late cross-batch stragglers are the
-    * standard no-retraction streaming caveat. State is N longs per
-    * user — state-store-resident and keyed-partitioned at scale. */
-  def funnelProgress(events: Dataset[Event],
-      steps: Seq[FunnelStepDef]): Dataset[UserFunnelStep] = {
-    import events.sparkSession.implicits._
-    require(steps.nonEmpty, "funnel needs at least one step")
-    val n = steps.size
-    val types = steps.map(_.eventType).toArray
-    val winMs = steps.map(_.withinHours.toLong * 3600L * 1000L).toArray
-    val typeSet = types.toSet
-    events
-      .filter(e => typeSet.contains(e.event_type))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Array[Long], UserFunnelStep](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[Array[Long]]) =>
-          val st = state.getOption.getOrElse(Array.fill(n)(-1L))
-          val out = scala.collection.mutable.ArrayBuffer[UserFunnelStep]()
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_type)).foreach { e =>
-            val old = st.clone()
-            val ts = e.ts.getTime
-            if (old(0) < 0L && e.event_type == types(0)) st(0) = ts
-            var i = 1
-            while (i < n) {
-              if (old(i - 1) >= 0L && old(i) < 0L &&
-                  e.event_type == types(i) && ts > old(i - 1) &&
-                  ts <= old(i - 1) + winMs(i)) st(i) = ts
-              i += 1
-            }
-            val advancedTo = st.count(_ >= 0L)
-            if (advancedTo > old.count(_ >= 0L))
-              out += UserFunnelStep(userId, advancedTo, e.ts)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** foreachBatch parquet sink — the production write path: each
-    * micro-batch lands under `outDir/batch=<id>`, written with
-    * OVERWRITE so a batch retried after a partial/complete write
-    * replaces its own directory instead of appending duplicates —
-    * effectively-once, keyed by batchId. */
-  def toParquetSink(df: DataFrame, outDir: String,
-      checkpointDir: String): StreamingQuery =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

@@ -70,25 +70,4 @@ object StreamingView {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-
-  /** LIVE QUANTILE store: each micro-batch persists one
-    * [[graft.ext.QuantileSketch]] summary keyed by the MICRO-BATCH id,
-    * so "p95 so far" folds ∝ batches × capacity rows and is always
-    * one micro-batch behind the stream. Replay-safe WITHOUT a
-    * watermark CAS: the store overwrites its `batch_id=` directory,
-    * so a batch replayed after a crash between the write and the
-    * checkpoint rewrites the same bytes instead of double-counting —
-    * idempotence comes from the storage layout itself (the
-    * [[graft.ext.QuantileSketch.addBatch]] contract). */
-  def startQuantileStore(stream: DataFrame, valueCol: String,
-      storeDir: String, checkpointDir: String,
-      capacity: Int = 4096): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.QuantileSketch.addBatch(
-          batch, valueCol, storeDir, batchId, capacity)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

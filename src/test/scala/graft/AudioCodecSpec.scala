@@ -4,7 +4,7 @@ import graft.ext.{AudioCodec, Multimodal}
 
 /** Real-codec audio pipeline: javax.sound.sampled round-trip ground
   * truth for format metadata, envelope-feature behavior on near-dup
-  * vs unrelated clips, and the decoder seam end-to-end. */
+  * vs unrelated clips, and undecodable-payload degradation. */
 class AudioCodecSpec extends SparkSpec {
   import spark.implicits._
 
@@ -55,21 +55,5 @@ class AudioCodecSpec extends SparkSpec {
     assert(rows("ok").features.exists(_ != 0.0f))
     assert(rows("bad").sample_rate === -1)
     assert(rows("bad").features.forall(_ === 0.0f))
-  }
-
-  test("AudioIoDecoder rides the generic media near-dup path") {
-    val media = Seq(
-      Multimodal.MediaRow("a0", "audio", "audio/wav",
-        AudioCodec.syntheticWav(11L, 8000, 4000), None, None, None, None),
-      Multimodal.MediaRow("a1", "audio", "audio/wav",
-        AudioCodec.syntheticWav(11L, 8000, 4000, variant = 1L, noiseDen = 96),
-        None, None, None, None),
-      Multimodal.MediaRow("b0", "audio", "audio/wav",
-        AudioCodec.syntheticWav(42L, 8000, 4000), None, None, None, None))
-      .toDF()
-    val pairs = Multimodal.nearDupPairs(spark, media,
-        new AudioCodec.AudioIoDecoder(), threshold = 0.8, nBits = 2)
-      .select("id_a", "id_b").as[(String, String)].collect().toSet
-    assert(pairs === Set(("a0", "a1")))
   }
 }

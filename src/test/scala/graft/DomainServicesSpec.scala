@@ -29,16 +29,4 @@ class DomainServicesSpec extends SparkSpec {
     assert(wh.domainTable("vector_stores").read
       .filter(col("provider") === "local").count() === 1)
   }
-
-  test("quality profile: per-column nulls and distincts in one pass") {
-    val df = Seq(
-      (Some("a"), 1), (None, 2), (Some("a"), 3), (Some("b"), 3))
-      .toDF("s", "n")
-    val p = graft.ext.Quality.profile(df, exact = true).collect()(0)
-    assert(p.getAs[Long]("n_rows") === 4)
-    assert(p.getAs[Long]("nulls_s") === 1)
-    assert(p.getAs[Long]("distinct_s") === 2)   // nulls not counted
-    assert(p.getAs[Long]("nulls_n") === 0)
-    assert(p.getAs[Long]("distinct_n") === 3)
-  }
 }

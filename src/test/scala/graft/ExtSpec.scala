@@ -2,28 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, Multimodal, Similarity}
-
-/** Deterministic byte-histogram decoder — the TEST double for the
-  * audio/video side of the [[Multimodal.MediaDecoder]] seam (the JDK
-  * ships no audio/video codec); images go through the real
-  * [[graft.ext.ImageCodec.ImageIoDecoder]]. Top-level (not nested in
-  * the spec) so Spark closures don't drag the suite into
-  * serialization. */
-final class FakeDecoder(override val dim: Int = 16)
-    extends Multimodal.MediaDecoder {
-  override def decodeFeatures(row: Multimodal.MediaRow): Array[Float] = {
-    val acc = new Array[Float](dim)
-    val bytes = if (row.content == null) Array.empty[Byte] else row.content
-    var i = 0
-    while (i < bytes.length) {
-      acc(java.lang.Byte.toUnsignedInt(bytes(i)) % dim) += 1.0f
-      i += 1
-    }
-    val n = math.max(1, bytes.length).toFloat
-    acc.map(_ / n)
-  }
-}
+import graft.ext.{Dedup, Similarity}
 
 class ExtSpec extends SparkSpec {
   import spark.implicits._
@@ -36,23 +15,10 @@ class ExtSpec extends SparkSpec {
     (4L, "spark engines process completely different sentence")) // perm of 2
     .toDF("doc_id", "text")
 
-  test("exactFirstWins keeps lowest-ranked row per fingerprint") {
-    val kept = Dedup.exactFirstWins(corpus, md5(col("text")),
-      Seq(asc("doc_id")))
-    assert(kept.count() === 4)
-    assert(kept.filter(col("doc_id") === 3).count() === 0)
-  }
-
-  test("MinHash LSH candidates include exact and near dups, verified by Jaccard") {
+  test("MinHash LSH candidates include exact dups") {
     val pairs = Dedup.lshCandidatePairs(corpus, "doc_id", "text", nBands = 4)
     val cand = pairs.as[(Long, Long)].collect().toSet
     assert(cand.contains((0L, 3L))) // exact dup always shares all bands
-    val verified = Dedup.jaccardVerify(pairs, corpus, "doc_id", "text", 0.7)
-      .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
-    assert(verified.contains((0L, 3L)))
-    assert(verified.contains((0L, 1L))) // |∩|=7, |∪|=9 → 0.778
-    assert(verified.contains((2L, 4L))) // |∩|=5, |∪|=7 → 0.714
-    assert(!verified.exists { case (a, b) => Set(a, b) == Set(0L, 2L) })
   }
 
   test("prefixJaccardJoin equals the naive all-pairs join (exact, no recall loss)") {
@@ -139,17 +105,6 @@ class ExtSpec extends SparkSpec {
     assert(pairs.forall(_._3 <= 3))
   }
 
-  test("cosineTopK finds the duplicate embedding first") {
-    val emb = Seq(
-      (0L, Array(1.0f, 0.0f, 0.0f)),
-      (1L, Array(1.0f, 0.01f, 0.0f)),
-      (2L, Array(0.0f, 1.0f, 0.0f)),
-      (3L, Array(-1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val top = Similarity.cosineTopK(emb, "embedding", lit(0L), "vec_id", 2)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(top === Seq(1L, 2L))
-  }
-
   test("LSH buckets put identical directions together; annTopK finds the neighbour") {
     val emb = (0 until 50).map { i =>
       val base = if (i % 2 == 0) Array(1.0f, 2.0f, 3.0f, 4.0f)
@@ -200,16 +155,12 @@ class ExtSpec extends SparkSpec {
     assert(pairs.map(t => (t._1, t._2)).toSeq === Seq((0L, 1L)))
   }
 
-  test("zero-norm embeddings never rank first nor pass near-dup thresholds (NaN guard)") {
+  test("zero-norm embeddings never pass near-dup thresholds (NaN guard)") {
     val emb = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f)),
-      (1L, Array(0.9f, 0.1f, 0.0f)),   // true nearest to 0
+      (1L, Array(0.9f, 0.1f, 0.0f)),
       (2L, Array(0.0f, 0.0f, 0.0f)),   // zero vector: failed embed
       (3L, Array(-1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val top = Similarity.cosineTopK(emb, "embedding", lit(0L), "vec_id", 2)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(top.head === 1L, s"zero vector must not outrank real neighbours: $top")
-    assert(!top.contains(2L))
     val pairs = Similarity.cosineNearDupPairs(
       emb, "embedding", "vec_id", threshold = 0.9, nBits = 4)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -262,9 +213,6 @@ class ExtSpec extends SparkSpec {
       .filter(col("sig") === Dedup.EmptyWordSet)
       .select("size").as[Long].collect().toSeq
     assert(ledger === Seq(3L), s"ledger: $ledger")
-    // jaccard verify on an empty-vs-empty pair: NULL, never a NaN pass
-    val fake = Seq((10L, 11L)).toDF("id_a", "id_b")
-    assert(Dedup.jaccardVerify(fake, mixed, "doc_id", "text", 0.5).count() === 0)
   }
 
   test("range join equals the naive inequality join, without nested loops") {
@@ -454,22 +402,6 @@ class ExtSpec extends SparkSpec {
     assert(ok.pairs.count() === 20L * 19 / 2)
   }
 
-  test("suggested signature widths scale with corpus size and clamp") {
-    assert(Dedup.suggestedBands(1000) === 4)
-    assert(Dedup.suggestedBands(10L * 1000 * 1000) >= 13)
-    assert(Dedup.suggestedBands(Long.MaxValue) === 54) // log2(2^63/1e3), under the 64 clamp
-    assert(Dedup.suggestedBands(Long.MaxValue, 1) === 63)
-    assert(Similarity.suggestedNBits(10000) === 4)
-    val b100tb = Similarity.suggestedNBits(50L * 1000 * 1000 * 1000)
-    assert(b100tb >= 22 && b100tb <= 48)
-    assert(Similarity.suggestedNBits(Long.MaxValue) === 48)
-    // monotone
-    val sizes = Seq(1L, 1000L, 1000000L, 1000000000L, 1000000000000L)
-    assert(sizes.map(Dedup.suggestedBands(_)) === sizes.map(Dedup.suggestedBands(_)).sorted)
-    assert(sizes.map(Similarity.suggestedNBits(_)) ===
-      sizes.map(Similarity.suggestedNBits(_)).sorted)
-  }
-
   test("connected components: chain longer than maxIter surfaces non-convergence") {
     // a 30-node path graph: min-label propagation moves the label one
     // hop per iteration, so maxIter=3 cannot converge
@@ -485,23 +417,6 @@ class ExtSpec extends SparkSpec {
     assert(full.components.select("component").distinct().count() === 1)
     assert(full.components.count() === 30)
     assert(full.components.filter(col("component") =!= 0L).count() === 0)
-  }
-
-  test("near-dup groups: transitive closure merges chained pairs") {
-    val chained = Seq(
-      (0L, "alpha beta gamma delta epsilon zeta"),
-      (1L, "alpha beta gamma delta epsilon eta"),    // ~0 (5/7)
-      (2L, "alpha beta gamma delta theta eta"),      // ~1, weaker vs 0
-      (3L, "completely unrelated words here now"),
-      (4L, "alpha beta gamma delta epsilon zeta"))   // ==0
-      .toDF("doc_id", "text")
-    val groups = graft.ext.Dedup
-      .nearDupGroups(chained, "doc_id", "text", nBands = 4, threshold = 0.6)
-      .as[(Long, Long)].collect().toMap
-    // 0,1,2,4 all transitively connected → one component labeled 0
-    assert(groups(0L) === 0L && groups(1L) === 0L &&
-      groups(2L) === 0L && groups(4L) === 0L)
-    assert(!groups.contains(3L)) // isolated doc never pairs
   }
 
   test("persisted ANN index returns the same neighbours as the inline ANN path") {
@@ -596,20 +511,6 @@ class ExtSpec extends SparkSpec {
     assert(got === full)
   }
 
-  test("nearDupGroupsWithStats surfaces the recall ledger and convergence") {
-    val stats = Dedup.nearDupGroupsWithStats(
-      corpus, "doc_id", "text", nBands = 4, threshold = 0.6)
-    assert(stats.converged)
-    assert(stats.dropped.isEmpty) // tiny corpus: nothing capped
-    val labels = stats.components.as[(Long, Long)].collect().toMap
-    assert(labels(0L) === 0L && labels(3L) === 0L) // exact dups grouped
-    // with a pathological cap every bucket is dropped and no groups form
-    val capped = Dedup.nearDupGroupsWithStats(
-      corpus, "doc_id", "text", nBands = 4, threshold = 0.6, maxBucket = 1)
-    assert(capped.dropped.count() > 0)
-    assert(capped.components.count() === 0)
-  }
-
   test("IVF index: clustered directions get separate lists; ANN finds true neighbours") {
     // two well-separated clusters of scaled directions
     val emb = (0 until 60).map { i =>
@@ -638,64 +539,6 @@ class ExtSpec extends SparkSpec {
     val all = graft.ext.IvfIndex.annTopK(emb, "embedding", model,
       lit(0L), "vec_id", k = 59, nProbe = 2)
     assert(all.count() === 59)
-  }
-
-  test("multimodal feature extraction over binary columns") {
-    val rows = Seq(
-      Multimodal.MediaRow("m1", "image", "image/png",
-        Array[Byte](1, 2, 3, 1, 2, 1), Some(640), Some(480), None, None),
-      Multimodal.MediaRow("m2", "audio", "audio/wav",
-        Array[Byte](9, 9, 9, 9), None, None, Some(4000L), None),
-      Multimodal.MediaRow("m3", "image", "image/png",
-        null, Some(10), Some(10), None, None))
-    val media = spark.createDataFrame(rows)
-    val feats = Multimodal.extractFeatures(spark, media,
-      new FakeDecoder(8)).collect()
-    val byId = feats.map(f => f.media_id -> f).toMap
-    assert(byId("m1").n_bytes === 6)
-    assert(byId("m1").features.length === 8)
-    assert(math.abs(byId("m1").features.sum - 1.0f) < 1e-6)
-    assert(byId("m3").n_bytes === 0)
-    // deterministic: same bytes → same features
-    val again = Multimodal.extractFeatures(spark, media,
-      new FakeDecoder(8)).collect()
-      .map(f => f.media_id -> f.features.toSeq).toMap
-    assert(again("m1") === byId("m1").features.toSeq)
-  }
-
-  test("resize and frame-sample plans") {
-    val rows = Seq(
-      Multimodal.MediaRow("img", "image", "image/png", Array[Byte](1),
-        Some(4000), Some(1000), None, None),
-      Multimodal.MediaRow("vid", "video", "video/mp4", Array[Byte](1),
-        None, None, Some(10500L), None))
-    val media = spark.createDataFrame(rows)
-    val resize = Multimodal.resizePlan(media, 1024)
-      .select("media_id", "target_w", "target_h")
-      .as[(String, Int, Int)].collect().head
-    assert(resize === (("img", 1024, 256)))
-    val frames = Multimodal.frameSamplePlan(media, 1000L, maxFrames = 5)
-      .select("frame_ts_ms").as[Long].collect().toSeq
-    assert(frames === Seq(0L, 1000L, 2000L, 3000L, 4000L))
-  }
-
-  test("media near-dup rides the bucketed cosine path (no media-specific dedup)") {
-    // two byte-payloads with near-identical histograms and one far-off
-    val base = Array.tabulate(600)(i => (i % 7).toByte)
-    val near = base.clone(); near(0) = 1.toByte; near(1) = 2.toByte
-    val far = Array.tabulate(600)(i => ((i % 2) * 64).toByte)
-    val rows = Seq(
-      Multimodal.MediaRow("a", "image", "image/png", base,
-        Some(8), Some(8), None, None),
-      Multimodal.MediaRow("b", "image", "image/png", near,
-        Some(8), Some(8), None, None),
-      Multimodal.MediaRow("c", "image", "image/png", far,
-        Some(8), Some(8), None, None))
-    val media = spark.createDataFrame(rows)
-    val pairs = Multimodal.nearDupPairs(spark, media,
-      new FakeDecoder(16), threshold = 0.98, nBits = 2)
-      .select("id_a", "id_b").as[(String, String)].collect().toSet
-    assert(pairs === Set(("a", "b")))
   }
 
   test("windowChunkDedup: global first occurrence wins, order-stable reassembly") {

@@ -347,10 +347,10 @@ class IcebergExportSpec extends SparkSpec {
         case JString(p) => p; case _ => fail("no list") }
       case _ => fail("no snapshots")
     }
-    val delMf = IcebergImport.readAvro(fs, new Path(lastList), conf)
+    val delMf = IcebergImport.readAvro(new Path(lastList), conf)
       .find(m => m.get("content").asInstanceOf[Int] == 1)
       .getOrElse(fail("no delete manifest"))
-    val entry = IcebergImport.readAvro(fs,
+    val entry = IcebergImport.readAvro(
       new Path(delMf.get("manifest_path").toString), conf).head
     val dfRec = entry.get("data_file")
       .asInstanceOf[org.apache.avro.generic.GenericRecord]

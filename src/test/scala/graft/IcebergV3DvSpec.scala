@@ -54,11 +54,11 @@ class IcebergV3DvSpec extends SparkSpec {
       case JString(p) => p
       case _ => fail("no manifest-list")
     }
-    val delMf = IcebergImport.readAvro(fs, new Path(lastList),
+    val delMf = IcebergImport.readAvro(new Path(lastList),
       spark.sparkContext.hadoopConfiguration)
       .find(m => Option(m.get("content")).exists(
         _.asInstanceOf[Int] == 1)).getOrElse(fail("no delete manifest"))
-    val entries = IcebergImport.readAvro(fs,
+    val entries = IcebergImport.readAvro(
       new Path(delMf.get("manifest_path").toString),
       spark.sparkContext.hadoopConfiguration)
     assert(entries.nonEmpty)
@@ -196,13 +196,12 @@ class IcebergV3DvSpec extends SparkSpec {
       val list = (s0 \ "manifest-list") match {
         case JString(p) => p; case _ => fail("no manifest-list")
       }
-      IcebergImport.readAvro(fs, new Path(list),
+      IcebergImport.readAvro(new Path(list),
         spark.sparkContext.hadoopConfiguration)
         .filter(m => Option(m.get("content")).exists(
           _.asInstanceOf[Int] == 1))
         .foreach { m =>
-          IcebergImport.readAvro(fs,
-            new Path(m.get("manifest_path").toString),
+          IcebergImport.readAvro(new Path(m.get("manifest_path").toString),
             spark.sparkContext.hadoopConfiguration).foreach { e =>
             val df = e.get("data_file").asInstanceOf[
               org.apache.avro.generic.GenericRecord]
@@ -290,15 +289,14 @@ class IcebergV3DvSpec extends SparkSpec {
       val list = snaps.find(s0 => lng(s0 \ "snapshot-id") == cur)
         .map(s0 => (s0 \ "manifest-list") match {
           case JString(p) => p; case _ => fail("no list") }).get
-      val mfs = IcebergImport.readAvro(fs, new Path(list), conf)
+      val mfs = IcebergImport.readAvro(new Path(list), conf)
         .filter(m => m.get("content").asInstanceOf[Int] == 0)
       // a manifest whose files all died (pure DELETED tombstones) has
       // no live rows and legitimately no base — the field is optional
       val mfIds = mfs.flatMap(m => Option(m.get("first_row_id"))
         .map(_.asInstanceOf[java.lang.Long].longValue()))
       val fileIds = mfs.flatMap { m =>
-        IcebergImport.readAvro(fs,
-          new Path(m.get("manifest_path").toString), conf)
+        IcebergImport.readAvro(new Path(m.get("manifest_path").toString), conf)
           .filter(e => e.get("status").asInstanceOf[Int] != 2)
           .map { e =>
             val d = e.get("data_file").asInstanceOf[
@@ -365,44 +363,6 @@ class IcebergV3DvSpec extends SparkSpec {
     assert(rewritten.values.forall(_._1 >= before),
       "rewritten file reused a published id range")
     assert(lng(md() \ "next-row-id") >= before + 61L)
-  }
-
-  test("v3 row lineage SERVES _row_id on import; masked ids are holes, never reused") {
-    val (t, dir) = mk("v3rl-read") // 100 rows, k%10==0 DV-deleted
-    IcebergExport.writeIcebergMetadata(spark, t, formatVersion = 3)
-    val back = IcebergImport.readWithRowLineage(spark, dir)
-    assert(back.columns.last === "_row_id")
-    val pairs = back.select("k", "_row_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pairs.size === 90)
-    assert(pairs.values.toSeq.distinct.size === 90, "duplicate row ids")
-    // ids live inside the reserved space [0, next-row-id); the 10
-    // DV-masked rows' ids are HOLES (never reassigned)
-    assert(pairs.values.forall(id => id >= 0L && id < 100L))
-    // stable across re-reads and re-syncs
-    IcebergExport.writeIcebergMetadata(spark, t)
-    val again = IcebergImport.readWithRowLineage(spark, dir)
-      .select("k", "_row_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(again === pairs)
-    // an append extends the space; every old id is unchanged
-    import spark.implicits._
-    t.append(Seq((101L, 202.0)).toDF("k", "v"))
-    IcebergExport.writeIcebergMetadata(spark, t)
-    val m3 = IcebergImport.readWithRowLineage(spark, dir)
-      .select("k", "_row_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    pairs.foreach { case (k, id) => assert(m3(k) === id,
-      s"row id moved for k=$k") }
-    assert(m3(101L) >= 100L, "new row dipped into the published space")
-
-    // a v2 tree (no lineage fields) refuses with the remedy named
-    val (t2, dir2) = mk("v3rl-v2")
-    IcebergExport.writeIcebergMetadata(spark, t2)
-    val e = intercept[IllegalArgumentException] {
-      IcebergImport.readWithRowLineage(spark, dir2).collect()
-    }
-    assert(e.getMessage.contains("first_row_id"))
   }
 
   test("v3 changelog stream serves DV retractions as delete rows") {

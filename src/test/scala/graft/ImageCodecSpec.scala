@@ -4,7 +4,7 @@ import graft.ext.{ImageCodec, Multimodal}
 
 /** Real-codec image pipeline: ImageIO round-trip ground truth for
   * dimensions, perceptual-hash behavior on near-dup vs unrelated
-  * images, and the decoder seam end-to-end. */
+  * images, and undecodable-payload degradation. */
 class ImageCodecSpec extends SparkSpec {
   import spark.implicits._
 
@@ -49,21 +49,5 @@ class ImageCodecSpec extends SparkSpec {
     assert(rows("ok").features.exists(_ != 0.0f))
     assert(rows("bad").width === -1 && rows("bad").height === -1)
     assert(rows("bad").features.forall(_ === 0.0f))
-  }
-
-  test("ImageIoDecoder rides the generic media near-dup path") {
-    val media = Seq(
-      Multimodal.MediaRow("a0", "image", "image/png",
-        ImageCodec.syntheticPng(5L, 32, 32), None, None, None, None),
-      Multimodal.MediaRow("a1", "image", "image/png",
-        ImageCodec.syntheticPng(5L, 32, 32, variant = 1L, noiseDen = 96),
-        None, None, None, None),
-      Multimodal.MediaRow("b0", "image", "image/png",
-        ImageCodec.syntheticPng(77L, 32, 32), None, None, None, None))
-      .toDF()
-    val pairs = Multimodal.nearDupPairs(spark, media,
-        new ImageCodec.ImageIoDecoder(), threshold = 0.8, nBits = 2)
-      .select("id_a", "id_b").as[(String, String)].collect().toSet
-    assert(pairs === Set(("a0", "a1")))
   }
 }

@@ -112,7 +112,7 @@ class IvmSpec extends SparkSpec {
     assert(view.appliedVersion === t.currentVersion)
   }
 
-  test("emptied groups tombstone out of read and sweep away") {
+  test("emptied groups tombstone out of read") {
     val t = src()
     val view = new IncrementalView(spark, t, tmpDir("ivmt") + "/v",
       Seq("g"), Seq("v"), numBuckets = 2)
@@ -122,8 +122,6 @@ class IvmSpec extends SparkSpec {
     view.refresh()
     assert(viewRows(view) === Set(("g2", 1L, 2L)))
     assert(view.table.read.count() === 2) // tombstone row still stored
-    view.compactTombstones()
-    assert(view.table.read.count() === 1)
     assert(viewRows(view) === recompute(t))
   }
 

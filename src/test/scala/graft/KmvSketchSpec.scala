@@ -15,7 +15,7 @@ class KmvSketchSpec extends SparkSpec {
     assert(a.isExact && b.isExact)
     assert(a.estimate === 300.0)
     assert(a.intersectEstimate(b) === 101.0) // 200..300
-    assert(a.unionEstimate(b) === 500.0)     // 1..500
+    assert(a.merge(b).estimate === 500.0)    // 1..500
   }
 
   test("merge is lossless: sketch of parts equals sketch of the whole") {

@@ -266,7 +266,7 @@ class PipelineSpec extends SparkSpec {
     assert(svc.approve("rev-1", t0) === "approved")
   }
 
-  test("run state machine: failure path and JSONB-style meta merge") {
+  test("run state machine: failure path") {
     val wh = freshWarehouse()
     val tracker = new RunTracker(wh)
     tracker.create("run-f", "scan", "EU", 30, t0)
@@ -280,15 +280,6 @@ class PipelineSpec extends SparkSpec {
       .select("status", "meta").collect()(0)
     assert(failed.getString(0) === "failed")
     assert(failed.getString(1).contains("\"error\""))
-
-    // S14: merge patches into existing meta, right side wins
-    tracker.create("run-m", "scan", "EU", 30, t0)
-    tracker.mergeMeta("run-m", """{"vector_error":"boom"}""")
-    tracker.mergeMeta("run-m", """{"vector_error":"boom2","extra":"1"}""")
-    val meta = wh.domainTable("runs").read.filter(col("id") === "run-m")
-      .select("meta").collect()(0).getString(0)
-    assert(meta.contains("\"vector_error\":\"boom2\""))
-    assert(meta.contains("\"extra\":\"1\""))
   }
 
   test("ReviewService reject marks row") {

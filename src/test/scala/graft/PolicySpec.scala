@@ -9,7 +9,7 @@ class PolicySpec extends SparkSpec {
 
   private def evalOne(url: String,
       policy: Policy.TrustPolicy = Policy.referencePolicy) =
-    Policy.evaluateSource(spark, Seq(url).toDF("url"), "url", policy)
+    Policy.evaluateSource(Seq(url).toDF("url"), "url", policy)
       .select("canonical_url", "profile_id", "trust_tier",
         "monitoring_stage", "requires_review", "route", "eval_reason")
       .collect()(0)
@@ -96,7 +96,7 @@ class PolicySpec extends SparkSpec {
       "https://eur-lex.europa.eu/eli/reg/2024/1689",
       "https://commission.europa.eu/news-and-media/news_en/a",
       "https://random.blog.example/post").toDF("url")
-    val out = Policy.evaluateSource(spark, df, "url")
+    val out = Policy.evaluateSource(df, "url")
     val s = out.queryExecution.executedPlan.toString
     assert(!s.contains("Exchange"), s)
     assert(!s.contains("Join"), s)

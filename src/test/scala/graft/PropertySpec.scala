@@ -6,7 +6,6 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.domain.{Normalizer, OntoFunctions, Schemas, Terms, Validator}
-import graft.ext.Dedup
 
 /** Property-based invariants (SURVEY §5.4): the normalizer is total
   * (any JSON → a schema-valid row, never a throw), URL canonicalization
@@ -25,9 +24,6 @@ class PropertySpec extends SparkSpec {
       seed = seed.next
     }
   }
-
-  private def whenever(cond: Boolean)(body: => Unit): Unit =
-    if (cond) body
 
   private val jsonScalar: Gen[String] = Gen.oneOf(
     Gen.alphaNumStr.map(s => "\"" + s + "\""),
@@ -94,24 +90,6 @@ class PropertySpec extends SparkSpec {
       .select(OntoFunctions.canonicalizeUrl(col("url")))
       .as[String].collect().head
     assert(got === "https://a.org/p/")
-  }
-
-  test("dedup ∘ dedup = dedup (first-wins)") {
-    forAll(Gen.listOfN(30, Gen.choose(0, 8))) { keys =>
-      whenever(keys.nonEmpty) {
-        val df = keys.zipWithIndex.map { case (k, i) => (k, i) }
-          .toDF("k", "ord")
-        val once = Dedup.exactFirstWins(df, col("k"), Seq(asc("ord")))
-        val twice = Dedup.exactFirstWins(once, col("k"), Seq(asc("ord")))
-        assert(once.orderBy("k").collect().toSeq ===
-          twice.orderBy("k").collect().toSeq)
-        // first-wins: the kept ord per key is the minimum
-        val kept = once.select("k", "ord").as[(Int, Int)].collect().toMap
-        keys.zipWithIndex.groupBy(_._1).foreach { case (k, grp) =>
-          assert(kept(k) === grp.map(_._2).min)
-        }
-      }
-    }
   }
 
   test("saltedAgg equals direct groupBy for random data (any bucket count)") {

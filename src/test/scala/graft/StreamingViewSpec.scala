@@ -59,39 +59,6 @@ class StreamingViewSpec extends SparkSpec {
     assert(view.appliedVersion === table.currentVersion)
   }
 
-  test("live quantile store equals the batch computation and replays converge") {
-    val src = eventsDir("svq-src", nFiles = 3)
-    val store = tmpDir("svq-store") + "/q"
-    def run(cp: String) = {
-      val stream = spark.readStream.schema(EventStreams.eventSchema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select("value")
-      StreamingView.startQuantileStore(stream, "value", store, cp)
-        .awaitTermination()
-    }
-    run(tmpDir("svq-cp-a"))
-    val vals = spark.read.schema(EventStreams.eventSchema).parquet(src)
-      .select(col("value")).as[Double].collect().sorted
-    val (exact, budget) = graft.ext.QuantileSketch.exactness(spark, store)
-    assert(exact && budget === 0L)
-    def truth(q: Double): Double =
-      vals((math.ceil(q * vals.length) - 1).toInt max 0)
-    val got = graft.ext.QuantileSketch
-      .quantiles(spark, store, Seq(0.5, 0.95))
-      .as[(Double, Double)].collect().toMap
-    assert(got(0.5) === truth(0.5) && got(0.95) === truth(0.95))
-    // weight conservation = every row counted exactly once
-    val w = graft.ext.QuantileSketch.merged(spark, store)
-      .agg(sum("w")).head.getLong(0)
-    assert(w === vals.length.toLong)
-    // a full replay (fresh checkpoint, same micro-batch ids) rewrites
-    // the same per-batch directories — still no double-counting
-    run(tmpDir("svq-cp-b"))
-    val w2 = graft.ext.QuantileSketch.merged(spark, store)
-      .agg(sum("w")).head.getLong(0)
-    assert(w2 === vals.length.toLong)
-  }
-
   test("a full replay (fresh checkpoint, same batch ids) converges — no double-append") {
     val src = eventsDir("sv2-src", nFiles = 2)
     val table = mkTable("sv2-tab")

@@ -18,7 +18,7 @@ class TextIndexSpec extends SparkSpec {
         array_contains(Dedup.words(col("text")), t)).reduce(_ && _))
       .select("doc_id").as[Long].collect().toSet
 
-  test("searchAll/searchAny equal the full-scan answers") {
+  test("searchAll equals the full-scan answer") {
     val idxDir = tmpDir("textidx")
     TextIndex.build(docs, "doc_id", "text", idxDir, nBuckets = 16)
     val terms = Seq("spark", "table")
@@ -26,12 +26,6 @@ class TextIndexSpec extends SparkSpec {
       .as[Long].collect().toSet
     assert(all === scanSearchAll(terms))
     assert(all.nonEmpty)
-    val any = TextIndex.searchAny(spark, idxDir, "doc_id", terms)
-      .as[Long].collect().toSet
-    val scanAny = docs.filter(terms.map(t =>
-        array_contains(Dedup.words(col("text")), t)).reduce(_ || _))
-      .select("doc_id").as[Long].collect().toSet
-    assert(any === scanAny)
   }
 
   test("a probe prunes to the query terms' bucket directories at plan time") {
@@ -103,27 +97,7 @@ class TextIndexSpec extends SparkSpec {
     assert(hits === Set(90001L))
   }
 
-  test("appended documents become substring-searchable (trigram append)") {
-    val base = docs.filter(col("doc_id") < 100)
-    val idxDir = tmpDir("textidx-tg-app")
-    TextIndex.buildTrigram(base, "doc_id", "text", idxDir, nBuckets = 16)
-    val newDoc = Seq((90002L, "the quincunx arrangement holds"))
-      .toDF("doc_id", "text")
-    TextIndex.appendTrigram(newDoc, "doc_id", "text", idxDir)
-    val corpus = base.unionByName(newDoc)
-    val got = TextIndex.substringSearch(spark, idxDir, corpus,
-      "doc_id", "text", "quincunx").select("doc_id").as[Long].collect().toSet
-    assert(got === Set(90002L))
-    // pre-existing docs still found after the append
-    val pattern = "fast merge"
-    val old = TextIndex.substringSearch(spark, idxDir, corpus,
-      "doc_id", "text", pattern).select("doc_id").as[Long].collect().toSet
-    val scan = corpus.filter(lower(col("text")).contains(pattern))
-      .select("doc_id").as[Long].collect().toSet
-    assert(old === scan)
-  }
-
-  test("bm25 ranking equals the from-text recompute; append shifts stats") {
+  test("bm25 ranking equals the from-text recompute") {
     val idxDir = tmpDir("textidx-bm25")
     TextIndex.buildPositional(docs, "doc_id", "text", idxDir, nBuckets = 16)
     val terms = Seq("spark", "table", "vector")
@@ -153,20 +127,9 @@ class TextIndexSpec extends SparkSpec {
       .as[(Long, Double)].collect().toSeq
     assert(got === recompute(docs, 10))
     assert(got.nonEmpty && got.map(_._2) === got.map(_._2).sorted.reverse)
-
-    // append a term-stuffed doc: it must outrank everything, and the
-    // corpus stats (N, avgdl, df) must reflect the append
-    val newDoc = Seq((91001L,
-      "spark table vector spark table vector spark table vector"))
-      .toDF("doc_id", "text")
-    TextIndex.appendPositional(newDoc, "doc_id", "text", idxDir)
-    val after = TextIndex.bm25Search(spark, idxDir, "doc_id", terms, k = 10)
-      .as[(Long, Double)].collect().toSeq
-    assert(after.head._1 === 91001L)
-    assert(after === recompute(docs.unionByName(newDoc), 10))
   }
 
-  test("phrase search equals the adjacent-word scan; repeated words; append") {
+  test("phrase search equals the adjacent-word scan; repeated words") {
     val idxDir = tmpDir("textidx-pos")
     TextIndex.buildPositional(docs, "doc_id", "text", idxDir, nBuckets = 16)
     val phrase = "fast merge"
@@ -185,13 +148,14 @@ class TextIndexSpec extends SparkSpec {
     assert(got.subsetOf(and) && got != and,
       s"phrase should be stricter than AND (${got.size} vs ${and.size})")
 
-    // repeated words anchor correctly, and appended docs are visible
-    val newDocs = Seq(
+    // repeated words anchor correctly
+    val repDir = tmpDir("textidx-pos-rep")
+    val repDocs = Seq(
       (90010L, "alpha beta alpha beta gamma"), // has "beta alpha beta"
       (90011L, "beta alpha gamma beta alpha")) // pair only, not triple
       .toDF("doc_id", "text")
-    TextIndex.appendPositional(newDocs, "doc_id", "text", idxDir)
-    val rep = TextIndex.phraseSearch(spark, idxDir, "doc_id",
+    TextIndex.buildPositional(repDocs, "doc_id", "text", repDir, nBuckets = 4)
+    val rep = TextIndex.phraseSearch(spark, repDir, "doc_id",
       "beta alpha beta").as[Long].collect().toSet
     assert(rep === Set(90010L))
   }
@@ -207,24 +171,25 @@ class TextIndexSpec extends SparkSpec {
       .filter(col("dist") <= d)
       .as[(String, Int)].collect().toSet
     for (q <- Seq("part", "sow", "vektor"); d <- Seq(1, 2)) {
-      val got = TextIndex.fuzzyExpand(spark, idxDir, q, maxEdit = d)
-        .as[(String, Int)].collect().toSet
+      val got = TextIndex.fuzzyExpandAll(spark, idxDir, Seq(q), maxEdit = d)
+        .select("term", "dist").as[(String, Int)].collect().toSet
       assert(got === brute(q, d), s"q=$q maxEdit=$d")
     }
     // "part" at 2 hits multiple vocabulary neighbors (the query fixture)
-    assert(TextIndex.fuzzyExpand(spark, idxDir, "part", 2).count() >= 3)
+    assert(TextIndex.fuzzyExpandAll(spark, idxDir, Seq("part"), 2).count() >= 3)
     // absent neighborhoods come back empty, not error
-    assert(TextIndex.fuzzyExpand(spark, idxDir, "zzzzzzzz", 2).count() === 0L)
+    assert(TextIndex.fuzzyExpandAll(spark, idxDir, Seq("zzzzzzzz"), 2)
+      .count() === 0L)
     // maxEdit beyond the indexed depth refuses (candidates would be unsound)
     intercept[IllegalArgumentException] {
-      TextIndex.fuzzyExpand(spark, idxDir, "part", maxEdit = 3)
+      TextIndex.fuzzyExpandAll(spark, idxDir, Seq("part"), maxEdit = 3)
     }
   }
 
   test("fuzzy probe prunes to the query variants' bucket directories") {
     val idxDir = tmpDir("textidx-fuz-prune")
     TextIndex.buildFuzzy(docs, "text", idxDir, nBuckets = 16, depth = 2)
-    val q = TextIndex.fuzzyExpand(spark, idxDir, "part", maxEdit = 2)
+    val q = TextIndex.fuzzyExpandAll(spark, idxDir, Seq("part"), maxEdit = 2)
     val nVarBuckets = TextIndex.deleteVariants("part", 2).size
     q.collect() // finalize adaptive stages before inspecting the plan
     def leaves(p: org.apache.spark.sql.execution.SparkPlan)
@@ -250,18 +215,18 @@ class TextIndexSpec extends SparkSpec {
       (4L, "aloha zz")).toDF("doc_id", "text")
     val d1 = tmpDir("textidx-fuz-d1")
     TextIndex.buildFuzzy(tiny, "text", d1, nBuckets = 4, depth = 1)
-    val got1 = TextIndex.fuzzyExpand(spark, d1, "alpha", 1)
-      .as[(String, Int)].collect().toMap
+    val got1 = TextIndex.fuzzyExpandAll(spark, d1, Seq("alpha"), 1)
+      .select("term", "dist").as[(String, Int)].collect().toMap
     assert(got1 === Map("alpha" -> 0, "alpfa" -> 1, "aloha" -> 1))
     val d2 = tmpDir("textidx-fuz-d2")
     TextIndex.buildFuzzy(Seq((1L, "alhpa alpha"))
       .toDF("doc_id", "text"), "text", d2, nBuckets = 4, depth = 2)
-    val got2 = TextIndex.fuzzyExpand(spark, d2, "alpha", 2)
-      .as[(String, Int)].collect().toMap
+    val got2 = TextIndex.fuzzyExpandAll(spark, d2, Seq("alpha"), 2)
+      .select("term", "dist").as[(String, Int)].collect().toMap
     assert(got2 === Map("alpha" -> 0, "alhpa" -> 2))
   }
 
-  test("fuzzySearch equals the per-word levenshtein scan; append visibility") {
+  test("fuzzySearch equals the per-word levenshtein scan") {
     val fuzDir = tmpDir("textidx-fuz-e2e")
     val wordDir = tmpDir("textidx-fuz-word")
     TextIndex.buildFuzzy(docs, "text", fuzDir, nBuckets = 16, depth = 2)
@@ -275,13 +240,6 @@ class TextIndexSpec extends SparkSpec {
       .as[(Long, String, Int)].collect().toSet
     assert(got === scan)
     assert(got.nonEmpty)
-    // a new batch's vocabulary becomes fuzzy-searchable via append
-    val newDoc = Seq((95001L, "psrt psrt")).toDF("doc_id", "text")
-    TextIndex.appendFuzzy(newDoc, "text", fuzDir)
-    TextIndex.append(newDoc, "doc_id", "text", wordDir)
-    val after = TextIndex.fuzzySearch(spark, fuzDir, wordDir, "doc_id",
-      "part", maxEdit = 1).as[(Long, String, Int)].collect().toSet
-    assert(after.contains((95001L, "psrt", 1)))
     // no matches → empty result with the contract schema, not a throw
     val none = TextIndex.fuzzySearch(spark, fuzDir, wordDir, "doc_id",
       "qqqqqqqq", maxEdit = 2)

@@ -450,25 +450,6 @@ class TxTableSpec extends SparkSpec {
     assert(scala.io.Source.fromFile(foreign).mkString === v1Text)
   }
 
-  test("compactTo sizes output files from actual bytes, not a guess") {
-    val t = tkv(n = 2)
-    // several appends → many small files
-    (0 until 6).foreach(i => t.append(
-      (0 until 400).map(j => (s"k$i-$j", i * 1000 + j)).toDF("k", "v")))
-    val before = t.read.as[(String, Int)].collect().toSet
-    val bytes = t.currentDataBytes
-    assert(bytes > 0)
-    // tiny target → multiple files per bucket, ≈ bytes/target overall
-    t.compactTo(targetFileBytes = bytes / 8)
-    val small = t.dataFileCount
-    assert(small >= 8, s"expected >= 8 files, got $small")
-    assert(t.read.as[(String, Int)].collect().toSet === before)
-    // huge target → one file per bucket
-    t.compactTo(targetFileBytes = Long.MaxValue / 4)
-    assert(t.dataFileCount === 2)
-    assert(t.read.as[(String, Int)].collect().toSet === before)
-  }
-
   /** Spark jobs started while `body` runs (listener bus drained on
     * both sides, so earlier jobs' events never count). */
   private def jobsDuring(body: => Unit): Int = {
@@ -633,7 +614,7 @@ class TxTableSpec extends SparkSpec {
       "deleteWhereLight" -> (i => t.deleteWhereLight(col("k") === s"k${i + 4}")))
     ops.foreach { case (_, op) => op(10) } // warm every path once
     val jobs = ops.map { case (name, op) => name -> jobsDuring(op(20)) }
-    assert(jobs === Seq("append" -> 2, "upsert" -> 4, "insertIfAbsent" -> 7,
+    assert(jobs === Seq("append" -> 2, "upsert" -> 4, "insertIfAbsent" -> 6,
       "applyChangesIf" -> 10, "upsertLight" -> 8, "deleteWhereLight" -> 4))
     assert(kvRows(t)("k20") === -20 && kvRows(t)("k21") === -20 &&
       !kvRows(t).contains("k22") && !kvRows(t).contains("k24"))

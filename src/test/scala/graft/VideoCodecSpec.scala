@@ -4,8 +4,7 @@ import graft.ext.{ImageCodec, Multimodal, VideoCodec}
 
 /** Real-codec video pipeline: JDK multi-frame GIF round-trip ground
   * truth (lossless gray frames), frame sampling, clip-feature
-  * behavior on near-dup vs unrelated clips, and the decoder seam
-  * end-to-end. */
+  * behavior on near-dup vs unrelated clips, and batch degradation. */
 class VideoCodecSpec extends SparkSpec {
   import spark.implicits._
 
@@ -79,36 +78,5 @@ class VideoCodecSpec extends SparkSpec {
     assert(rows("ok").features.exists(_ != 0.0f))
     assert(rows("bad").n_frames === 0)
     assert(rows("bad").features.forall(_ === 0.0f))
-  }
-
-  test("per-frame explode matches single-frame ImageCodec features") {
-    val bytes = VideoCodec.syntheticGif(3L, 32, 24, 6)
-    val media = Seq(Multimodal.MediaRow("v", "video", "image/gif",
-      bytes, None, None, None, None)).toDF()
-    val rows = VideoCodec.explodeFrameFeatures(spark, media, everyK = 2)
-      .collect().sortBy(_.frame_idx)
-    assert(rows.map(_.frame_idx).toSeq === Seq(0, 2, 4))
-    val frames = VideoCodec.decodeFrames(bytes)
-    rows.foreach { r =>
-      assert(r.features.toSeq ===
-        ImageCodec.grayGrid(frames(r.frame_idx), 8).toSeq)
-      assert(r.ahash === ImageCodec.aHash64(frames(r.frame_idx)))
-    }
-  }
-
-  test("GifFrameDecoder rides the generic media near-dup path") {
-    val media = Seq(
-      Multimodal.MediaRow("v0", "video", "image/gif",
-        VideoCodec.syntheticGif(11L, 32, 24, 6), None, None, None, None),
-      Multimodal.MediaRow("v1", "video", "image/gif",
-        VideoCodec.syntheticGif(11L, 32, 24, 6, variant = 1L, noiseDen = 96),
-        None, None, None, None),
-      Multimodal.MediaRow("w0", "video", "image/gif",
-        VideoCodec.syntheticGif(42L, 32, 24, 6), None, None, None, None))
-      .toDF()
-    val pairs = Multimodal.nearDupPairs(spark, media,
-        new VideoCodec.GifFrameDecoder(), threshold = 0.8, nBits = 2)
-      .select("id_a", "id_b").as[(String, String)].collect().toSet
-    assert(pairs === Set(("v0", "v1")))
   }
 }

@@ -147,51 +147,12 @@ class WarehouseSpec extends SparkSpec {
       Seq(("a", 1), ("b", 2)))
   }
 
-  /** A warehouse whose `run_logs` holds 20 single-row files. */
-  private def fragmentedLogs(prefix: String): Warehouse = {
-    val wh = new Warehouse(spark, tmpDir(prefix))
-    wh.createAll()
-    val logs = wh.domainTable("run_logs")
-    (1 to 20).foreach { i =>
-      logs.append(Seq((s"l$i", s"run-1", "stage", s"m$i"))
-        .toDF("id", "run_id", "stage", "message")
-        .withColumn("meta", lit(null).cast(StringType))
-        .withColumn("created_at", lit(t0).cast(TimestampType)))
-    }
-    assert(logs.dataFileCount >= 20)
-    wh
-  }
-
-  test("compactAll sweeps only tables over the file threshold, preserving data") {
-    val wh = fragmentedLogs("whopt")
-    val swept = wh.compactAll(maxFiles = 16)
-    assert(swept.contains("run_logs"))
-    val (before, after) = swept("run_logs")
-    assert(before >= 20 && after <= 16) // one file per non-empty bucket
-    assert(wh.domainTable("run_logs").count() === 20)
-    // tables under the threshold are untouched
-    assert(!swept.contains("regulation_items"))
-  }
-
   test("bucketed: deleteWhere with no matches touches nothing") {
     val t = kv(4)
     t.append((1 to 50).map(i => (s"k$i", i)).toDF("k", "v"))
     val before = layout(t)
     t.deleteWhere(col("k") === "absent")
     assert(layout(t) === before)
-  }
-
-  test("compactAll on a transactional warehouse compacts AND vacuums to the retention window") {
-    val wh = fragmentedLogs("whopt-tx")
-    val swept = wh.compactAll(maxFiles = 16, keepVersions = 1, vacuumMinAgeMs = 0L)
-    assert(swept("run_logs")._2 <= 16) // one file per non-empty bucket
-    assert(wh.domainTable("run_logs").count() === 20)
-    val tx = wh.domainTable("run_logs")
-    assert(tx.versions.length === 1) // retention window enforced
-    // physically reclaimed: only the retained version's files remain
-    val onDisk = new java.io.File(tx.dir + "/data").listFiles()
-      .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-    assert(onDisk === tx.dataFileCount, s"$onDisk files left after vacuum")
   }
 
   test("run creation is idempotent by id (streaming replay safety)") {
