@@ -58,9 +58,13 @@ object Pools {
     if (tasks.size == 1 || width == 1) return tasks.map(_._2())
     val sem = new Semaphore(width)
     val failures = new ConcurrentLinkedQueue[Throwable]()
+    // pool threads outlive sessions, so each task takes the caller's
+    // context class loader (see Sessions) rather than its thread's
+    val loader = Thread.currentThread().getContextClassLoader
     val futures = tasks.map { case (name, job) =>
       io.submit(new Callable[A] {
         override def call(): A = {
+          Thread.currentThread().setContextClassLoader(loader)
           sem.acquire()
           try {
             if (!failures.isEmpty) null.asInstanceOf[A] // skipped

@@ -13,6 +13,22 @@ import org.apache.spark.sql.SparkSession
   * time zone (oracle parity), shuffle partitions sized to cores rather
   * than the 200 default. Callers that want a quieter log lower the
   * level after the call.
+  *
+  * Two settings exist so each generated class compiles once per JVM.
+  * Spark caches compiled codegen classes by (context class loader,
+  * source), and a whole-stage plan compiles on the driver thread that
+  * runs the action and again in its first task.
+  *  - Session artifact isolation is off: with it on, every task runs
+  *    under a per-session class loader, under which a compile takes
+  *    about twice as long and never hits a driver entry. graft adds no
+  *    session artifacts (jars, files, classes), so isolation guards
+  *    nothing here.
+  *  - In local mode the task threads' context class loader is captured
+  *    with one 1-task job and installed on the calling thread, so
+  *    driver-side and task-side compiles of one source share one cache
+  *    entry. [[Pools.runAll]] tasks run under their caller's loader,
+  *    and Spark's own driver pools (exchange, query-stage, broadcast
+  *    threads) inherit it from the thread that starts them.
   */
 object Sessions {
   def local(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
@@ -43,12 +59,27 @@ object Sessions {
       // INT96 (the legacy default) carries no usable footer statistics;
       // micros gives TxTable's manifest zone maps timestamp min/max
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // tasks run under the executor's one class loader, not a
+      // per-session one (see the scaladoc above)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if (spark.sparkContext.isLocal) {
+      spark.sparkContext.parallelize(Seq(0), 1).foreach(_ =>
+        TaskLoader.captured = Thread.currentThread().getContextClassLoader)
+      Thread.currentThread().setContextClassLoader(TaskLoader.captured)
+    }
     spark
   }
 
   def defaultCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+}
+
+/** Where the capture task leaves its loader: the task runs a copy of
+  * its closure, so a reference the closure captured would not reach
+  * the driver; a static field in the same JVM does. */
+private object TaskLoader {
+  @volatile var captured: ClassLoader = null
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
@@ -29,17 +29,6 @@ object AnnIndex {
     Similarity.lshBuckets(emb, embCol, nBits)
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-
-  /** Incremental maintenance: hash and APPEND a batch of new vectors
-    * into the existing bucket directories — the ingest path at 100 TB
-    * (a streaming foreachBatch can call this per micro-batch; the full
-    * rebuild is only for nBits changes). Appends add files per touched
-    * bucket; run [[build]] or a per-bucket compaction when small files
-    * accumulate. */
-  def append(emb: DataFrame, embCol: String, nBits: Int, dir: String): Unit =
-    Similarity.lshBuckets(emb, embCol, nBits)
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(dir)
 
   /** Read back with the data schema declared (never inferred — one
     * file listing) and `bucket` typed LongType from directory names. */

@@ -204,7 +204,7 @@ object FreqSketch {
     * exact counts, heaviest first — served ENTIRELY from the store
     * (in the exact regime the summed counts ARE the corpus counts, so
     * the stored total is the threshold's n). Refuses the estimate
-    * regime: a trimmed store serves [[topK]] lower bounds, not
+    * regime: a trimmed store holds lower-bound counts, not
     * oracle-exact thresholds. */
   def frequentFromStore(spark: SparkSession, dir: String,
       num: Long, den: Long): DataFrame = {
@@ -217,11 +217,6 @@ object FreqSketch {
     m.filter(col("cnt") * den > lit(total) * num)
       .orderBy(desc("cnt"), asc("item"))
   }
-
-  /** Top-k items by stored (lower-bound) count — valid in both
-    * regimes; pair with [[exactness]] for the error budget. */
-  def topK(spark: SparkSession, dir: String, k: Int): DataFrame =
-    merged(spark, dir).orderBy(desc("cnt"), asc("item")).limit(k)
 
   /** One store = one capacity: summaries trimmed at different
     * capacities carry incompatible error budgets. */

@@ -89,19 +89,6 @@ object IvfIndex {
     Model(rows.map(_.getSeq[Double](1).toArray))
   }
 
-  /** Append a new batch to the persisted index (ingest path — parity
-    * with [[AnnIndex.append]]): vectors assign against the STORED
-    * centroids (the quantizer is fixed at build time, the FAISS
-    * contract) and land in their `ivf_list=` partitions; the existing
-    * corpus is never re-read. */
-  def append(emb: DataFrame, embCol: String, dir: String): Unit = {
-    val m = loadModel(emb.sparkSession, dir)
-    assign(emb, embCol, m)
-      .repartition(col("ivf_list"))
-      .write.mode("append").partitionBy("ivf_list")
-      .parquet(s"$dir/data")
-  }
-
   /** nProbe nearest list ids to a query vector — driver-side argsort
     * over the (tiny) centroid matrix; ties break by index like the
     * relational path. */

@@ -264,19 +264,6 @@ object IvfPq {
     Index(ivf, Pq.loadCodebooks(spark, s"$dir/codebooks"))
   }
 
-  /** Append a new batch to the persisted IVF-PQ index (ingest path):
-    * the batch assigns against the STORED centroids and encodes with
-    * the STORED codebooks (both quantizers are fixed at build time —
-    * the FAISS contract; retrain by rebuilding), then lands in its
-    * `ivf_list=` partitions. The existing corpus is never re-read. */
-  def append(emb: DataFrame, embCol: String, dir: String): Unit = {
-    val idx = loadIndex(emb.sparkSession, dir)
-    Pq.encode(IvfIndex.assign(emb, embCol, idx.ivf), embCol, idx.pq)
-      .repartition(col("ivf_list"))
-      .write.mode("append").partitionBy("ivf_list")
-      .parquet(s"$dir/data")
-  }
-
   /** Probe: nProbe nearest lists via the centroid sidecar (driver-side
     * argsort), `ivf_list IN probes` becomes PartitionFilters, ADC
     * ranking inside the probed lists, exact re-rank of `refine`

@@ -22,9 +22,6 @@ import org.apache.spark.sql.functions._
   * directory per query term — and `term IN (...)` pushes to the
   * parquet scan. A k-term query reads ~k/nBuckets of the postings and
   * ZERO document texts.
-  *
-  * Incremental: [[append]] adds a new batch's word postings (the
-  * ingest path, like [[AnnIndex.append]]).
   */
 object TextIndex {
 
@@ -44,20 +41,18 @@ object TextIndex {
 
   /** Shared postings writer for the word and trigram modes: bucket
     * directories, term-sorted files (row-group min/max + dictionary
-    * pruning within a bucket), nBuckets sidecar on full builds. */
+    * pruning within a bucket), and the nBuckets sidecar. */
   private def writePostings(postings: DataFrame, idCol: String,
-      dir: String, overwrite: Boolean, nBucketsForMeta: Int): Unit = {
+      dir: String, nBucketsForMeta: Int): Unit = {
     postings
       .repartition(col("tb"))
       .sortWithinPartitions("term", idCol)
-      .write.mode(if (overwrite) "overwrite" else "append")
+      .write.mode("overwrite")
       .partitionBy("tb").parquet(s"$dir/data")
-    if (overwrite) {
-      val spark = postings.sparkSession
-      import spark.implicits._
-      Seq(nBucketsForMeta).toDF("n_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    }
+    val spark = postings.sparkSession
+    import spark.implicits._
+    Seq(nBucketsForMeta).toDF("n_buckets")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
   /** One corpus pass: distinct (doc, term) postings → bucket-partitioned,
@@ -65,18 +60,10 @@ object TextIndex {
   def build(docs: DataFrame, idCol: String, textCol: String, dir: String,
       nBuckets: Int = 64): Unit =
     writePostings(postingsOf(docs, idCol, textCol, nBuckets), idCol,
-      dir, overwrite = true, nBuckets)
+      dir, nBuckets)
 
   def nBuckets(spark: SparkSession, dir: String): Int =
     StoreRead.parquet(spark, s"$dir/meta").head.getInt(0)
-
-  /** Append a new batch's postings (ingest path). */
-  def append(docs: DataFrame, idCol: String, textCol: String,
-      dir: String): Unit = {
-    val n = nBuckets(docs.sparkSession, dir)
-    writePostings(postingsOf(docs, idCol, textCol, n), idCol,
-      dir, overwrite = false, n)
-  }
 
   /** Postings of `terms`: (term, id) rows, partition-pruned to the
     * terms' buckets and term-filtered at the scan. */
@@ -120,7 +107,7 @@ object TextIndex {
   def buildTrigram(docs: DataFrame, idCol: String, textCol: String,
       dir: String, nBuckets: Int = 64): Unit =
     writePostings(trigramPostingsOf(docs, idCol, textCol, nBuckets), idCol,
-      dir, overwrite = true, nBuckets)
+      dir, nBuckets)
 
   // ---- positional index: exact PHRASE search in postings space ----
 
@@ -148,7 +135,7 @@ object TextIndex {
   def buildPositional(docs: DataFrame, idCol: String, textCol: String,
       dir: String, nBuckets: Int = 64): Unit = {
     writePostings(positionalPostingsOf(docs, idCol, textCol, nBuckets),
-      idCol, dir, overwrite = true, nBuckets)
+      idCol, dir, nBuckets)
     docStatsOf(docs, idCol, textCol)
       .write.mode("overwrite").parquet(s"$dir/docstats")
   }

@@ -27,7 +27,6 @@ object MvCatalog {
   @volatile var enabled: Boolean = true
 
   def register(v: IncrementalView): Unit = views.put(v.dir, v)
-  def unregister(viewDir: String): Unit = views.remove(viewDir)
   def clear(): Unit = views.clear()
   def isEmpty: Boolean = views.isEmpty
   def all: Seq[IncrementalView] = views.values.toSeq

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming surface (SURVEY §2.12 north-star extension)
-  * over the `events` shape: a file-based streaming source and a
-  * watermarked stream-stream interval join.
+  * over the `events` shape: its schema (what a file-based streaming
+  * source over an events directory declares) and a watermarked
+  * stream-stream interval join.
   *
   * Every transform is defined on a plain DataFrame so it runs
   * identically in batch (oracle-checkable) and streaming modes —
@@ -20,16 +21,6 @@ object EventStreams {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
-
-  /** File-based streaming source over an events directory (new files
-    * are discovered per micro-batch; `maxFilesPerTrigger` bounds batch
-    * size for steady resource use). */
-  def readStream(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
 
   /** Stream-stream interval join: purchases matched to the same user's
     * clicks from the preceding `window`. Watermarks on BOTH sides plus

@@ -484,33 +484,6 @@ class ExtSpec extends SparkSpec {
     assert(scanned.nonEmpty && scanned.head === 1, s"scanned=$scanned")
   }
 
-  test("ANN index append: incrementally added vectors are probe-visible") {
-    import graft.ext.AnnIndex
-    def vecs(ids: Range) = ids.map { i =>
-      val base = if (i % 2 == 0) Array(1.0f, 2.0f, 3.0f, 4.0f)
-      else Array(-4.0f, 3.0f, -2.0f, 1.0f)
-      (i.toLong, base.map(_ * (1.0f + i / 100.0f)))
-    }.toDF("vec_id", "embedding")
-    val idxDir = tmpDir("annidx-inc")
-    AnnIndex.build(vecs(0 until 30), "embedding", nBits = 8, idxDir)
-    AnnIndex.append(vecs(30 until 60), "embedding", nBits = 8, idxDir)
-    val qv = vecs(0 until 1).select("embedding")
-      .head.getSeq[Float](0).map(_.toDouble)
-    val got = AnnIndex.topK(spark, idxDir, vecs(0 until 1).schema,
-      "embedding", qv, k = 100, nBits = 8, probeHamming = 1)
-      .select("vec_id").as[Long].collect().toSet
-    // both the original and the appended same-direction vectors found
-    assert(got.exists(_ < 30) && got.exists(_ >= 30))
-    assert(got.forall(_ % 2 == 0))
-    // equivalent to building the full index in one shot
-    val fullDir = tmpDir("annidx-full")
-    AnnIndex.build(vecs(0 until 60), "embedding", nBits = 8, fullDir)
-    val full = AnnIndex.topK(spark, fullDir, vecs(0 until 1).schema,
-      "embedding", qv, k = 100, nBits = 8, probeHamming = 1)
-      .select("vec_id").as[Long].collect().toSet
-    assert(got === full)
-  }
-
   test("IVF index: clustered directions get separate lists; ANN finds true neighbours") {
     // two well-separated clusters of scaled directions
     val emb = (0 until 60).map { i =>

@@ -130,31 +130,6 @@ class PqSpec extends SparkSpec {
   private def IvfIndex_probeLists(idx: IvfPq.Index, qv: Seq[Double], n: Int) =
     graft.ext.IvfIndex.probeLists(idx.ivf, qv, n)
 
-  test("appended vectors become probe-visible (quantizers stay fixed)") {
-    import spark.implicits._
-    val idxDir = tmpDir("ivfpq-app")
-    IvfPq.buildPersisted(emb, "embedding", nLists = 8, m = 16, k = 32, idxDir)
-    val qv = queryVec(3L)
-    // append a vector equal to the query itself: it must become the
-    // top hit through the persisted probe, encoded with the STORED
-    // codebooks and assigned to a STORED centroid's list
-    val newRow = Seq((990001L, qv.map(_.toFloat), "appended"))
-      .toDF("vec_id", "embedding", "label")
-    IvfPq.append(newRow, "embedding", idxDir)
-    val top = IvfPq.persistedTopK(spark, idxDir, emb.schema, "embedding",
-      "vec_id", qv, k = 5, nProbe = 8, refine = 50)
-      .select("vec_id").as[Long].collect()
-    assert(top.contains(990001L), s"appended vector missing from $top")
-
-    val ivfDir = tmpDir("ivf-app")
-    graft.ext.IvfIndex.buildPersisted(emb, "embedding", nLists = 4, ivfDir)
-    graft.ext.IvfIndex.append(newRow, "embedding", ivfDir)
-    val top2 = graft.ext.IvfIndex.persistedTopK(spark, ivfDir, emb.schema,
-      "embedding", qv, k = 5, nProbe = 4)
-      .select("vec_id").as[Long].collect()
-    assert(top2.contains(990001L), s"appended vector missing from $top2")
-  }
-
   test("batch probe: one pass, union-of-lists pruning, per-query exact parity") {
     import spark.implicits._
     // CLUSTERED corpus (three tight orthogonal clusters): this is the

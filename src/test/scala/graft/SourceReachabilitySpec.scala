@@ -9,9 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** No code under `src/main/scala` that only tests reach. Every
   * `object`, `class` and `trait` declared there, and every member-level
   * `def`, must be named, as a whole word, in `src/main/scala` or
-  * `perfbench/scala` other than at its own declaration. Test sources do
-  * not count. Unused private and local code is the compiler's part
-  * (`-Wunused` in `build.sbt`); this spec covers what it cannot see. */
+  * `perfbench/scala` other than at its own declaration, and every
+  * `object` def must be called there, so a def that shares its name
+  * with another is still checked. Test sources do not count. Unused
+  * private and local code is the compiler's part (`-Wunused` in
+  * `build.sbt`); this spec covers what it cannot see. */
 class SourceReachabilitySpec extends AnyFunSuite {
 
   private val root = new File(System.getProperty("user.dir")).getAbsoluteFile
@@ -176,8 +178,14 @@ class SourceReachabilitySpec extends AnyFunSuite {
       SrcFile(path, code, shape)
     }
 
-  private case class DefDecl(owner: String, name: String, path: String,
-      line: Int, overrides: Boolean)
+  /** The class, object, trait or anonymous class (`kind` "new") whose
+    * body declares a def; `extending` when it has an `extends` clause. */
+  private case class Owner(name: String, kind: String, extending: Boolean)
+
+  private case class DefDecl(owner: Owner, name: String, path: String,
+      line: Int, overrides: Boolean) {
+    def id: String = s"${owner.name}.$name"
+  }
 
   private val Token = """\w+|=>|[{}()\[\];=\n]""".r
   private val Override = """\boverride\b""".r
@@ -190,8 +198,8 @@ class SourceReachabilitySpec extends AnyFunSuite {
   private def memberDefs(s: SrcFile): Seq[DefDecl] = {
     val lines = s.shape.split("\n", -1)
     val out = Seq.newBuilder[DefDecl]
-    var scopes = List.empty[(Option[String], Int)] // (body owner, parens)
-    var pending: Option[String] = None
+    var scopes = List.empty[(Option[Owner], Int)] // (body owner, parens)
+    var pending: Option[Owner] = None
     var parens = 0
     var line = 1
     var prev = ""
@@ -210,7 +218,8 @@ class SourceReachabilitySpec extends AnyFunSuite {
         case "=" | "=>" | "def" | "val" | "var" if parens == 0 =>
           pending = None
         case name if Set("class", "object", "trait", "new")(prev) =>
-          pending = Some(name)
+          pending = Some(Owner(name, prev, extending = false))
+        case "extends" => pending = pending.map(_.copy(extending = true))
         case name if prev == "def" => scopes.headOption.flatMap(_._1)
           .foreach { owner =>
             val l = lines(line - 1)
@@ -231,17 +240,104 @@ class SourceReachabilitySpec extends AnyFunSuite {
       .flatMap(s => Word.findAllIn(s.code)).groupBy(identity).view
       .mapValues(_.size).toMap
     val defs = main.flatMap(memberDefs)
-    assert(defs.exists(d => d.owner == "TxTable" && d.name == "read"),
+    assert(defs.exists(_.id == "TxTable.read"),
       "the def scan found no TxTable.read; it reads the wrong tree")
     // the declaration itself is the one use an unreached def has
     val unreached = defs.filter(d => uses(d.name) == 1)
     val reported = unreached.filterNot(d => d.overrides ||
-      implicitlyCalled(d.name) || allowedDefs.contains(s"${d.owner}.${d.name}"))
+      implicitlyCalled(d.name) || allowedDefs.contains(d.id))
     if (reported.nonEmpty)
       fail("defs named only at their own declaration: " + reported
-        .map(d => s"${d.owner}.${d.name} (${d.path}:${d.line})")
+        .map(d => s"${d.id} (${d.path}:${d.line})")
         .mkString(", "))
-    val stale = allowedDefs.keySet -- unreached.map(d => s"${d.owner}.${d.name}")
+    val stale = allowedDefs.keySet -- unreached.map(_.id)
     assert(stale.isEmpty, s"allow-listed defs that are gone or now called: $stale")
+  }
+
+  /** Object defs kept although no `src/main` or perfbench code calls
+    * them, where another def or API shares the name. */
+  private val allowedObjectDefs: Map[String, String] = {
+    val specOnly = "operator surface only its spec calls: " +
+      "to be put on a catalog query or deleted"
+    val testOnlyUnit = "entry point of a unit only tests drive: " +
+      "to be put on an operator path or deleted with it"
+    val recall = "the recall measure the ANN specs assert with"
+    Map(
+      "Graph.summary" -> specOnly,
+      "IvfIndex.buildPersisted" -> specOnly,
+      "IvfIndex.persistedTopK" -> specOnly,
+      "IvfIndex.annTopK" -> specOnly,
+      "DistinctSketch.estimate" -> specOnly,
+      "RangeJoin.overlapPairs" -> specOnly,
+      "Pq.recallAtK" -> recall,
+      "Similarity.recallAtK" -> recall,
+      "MvCatalog.clear" -> "resets the process-wide view registry between specs",
+      "SparkEntry.entry" -> "the external driver's t1 smoke entry point",
+      "Replication.sync" -> testOnlyUnit,
+      "StreamingScan.start" -> testOnlyUnit,
+      "StreamingMerge.start" -> testOnlyUnit,
+      "StreamingView.start" -> testOnlyUnit)
+  }
+
+  /** Selections (`a.b`, whitespace allowed around the dot) and bare
+    * words of one file's code, string bodies left out. */
+  private case class Names(selections: Seq[(String, String)],
+      bare: Map[String, Int])
+
+  private val NameToken = """\w+|\.""".r
+
+  private def names(s: SrcFile): Names = {
+    val sel = Seq.newBuilder[(String, String)]
+    val bare = scala.collection.mutable.Map.empty[String, Int]
+    var last = ""   // the previous word
+    var dot = false // a `.` came after it
+    for (t <- NameToken.findAllIn(s.shape)) {
+      if (t == ".") dot = true
+      else {
+        if (dot) sel += last -> t
+        else bare(t) = bare.getOrElse(t, 0) + 1
+        last = t; dot = false
+      }
+    }
+    Names(sel.result(), bare.toMap)
+  }
+
+  test("every src/main object def is called from src/main or perfbench") {
+    val main = sources("src/main/scala")
+    val all = main ++ sources("perfbench/scala")
+    val shapes = all.map(s => s.path -> s.shape).toMap
+    val byFile = all.map(s => s.path -> names(s)).toMap
+    val qualified = byFile.values.flatMap(_.selections).toSet
+    val selected = qualified.map(_._2)
+    // files that import an object's members (`Owner._`, `Owner.{...}`)
+    val importers: Map[String, Seq[String]] = all.flatMap { s =>
+      """import\s+[\w.]*?\b(\w+)\s*\.\s*[_{]""".r.findAllMatchIn(s.shape)
+        .map(_.group(1) -> s.path)
+    }.groupMap(_._1)(_._2)
+    def declarations(path: String, name: String): Int =
+      ("""\bdef\s+""" + name + """\b""").r
+        .findAllIn(shapes(path)).size
+    // an object def is called when code selects it on the object
+    // (`Owner.name`), names it bare in its own file beyond its
+    // declarations or in a file importing the object's members, or,
+    // for an object that extends a parent, selects the name on anything
+    def called(d: DefDecl): Boolean =
+      qualified((d.owner.name, d.name)) ||
+        byFile(d.path).bare.getOrElse(d.name, 0) > declarations(d.path, d.name) ||
+        importers.getOrElse(d.owner.name, Nil)
+          .exists(p => p != d.path && byFile(p).bare.contains(d.name)) ||
+        (d.owner.extending && selected(d.name))
+    val defs = main.flatMap(memberDefs).filter(_.owner.kind == "object")
+    assert(defs.exists(_.id == "Sessions.local"),
+      "the def scan found no Sessions.local; it reads the wrong tree")
+    val uncalled = defs.filterNot(d => d.overrides ||
+      implicitlyCalled(d.name) || called(d))
+    val reported = uncalled.filterNot(d =>
+      allowedDefs.contains(d.id) || allowedObjectDefs.contains(d.id))
+    if (reported.nonEmpty)
+      fail("object defs no src/main or perfbench code calls: " + reported
+        .map(d => s"${d.id} (${d.path}:${d.line})").mkString(", "))
+    val stale = allowedObjectDefs.keySet -- uncalled.map(_.id)
+    assert(stale.isEmpty, s"allow-listed object defs that are gone or now called: $stale")
   }
 }

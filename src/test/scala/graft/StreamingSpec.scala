@@ -24,7 +24,8 @@ class StreamingSpec extends SparkSpec {
     .schema(EventStreams.eventSchema).parquet(eventsDir)
 
   test("stream-stream interval join matches batch when fed in one micro-batch") {
-    val stream = EventStreams.readStream(spark, eventsDir, maxFilesPerTrigger = 10)
+    val stream = spark.readStream.schema(EventStreams.eventSchema)
+      .option("maxFilesPerTrigger", 10).parquet(eventsDir)
     EventStreams.purchasesWithRecentClicks(stream).writeStream
       .format("memory").queryName("ssj_out")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

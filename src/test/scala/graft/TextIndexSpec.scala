@@ -4,8 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, TextIndex}
 
-/** Inverted text index: probe pruning, scan parity, and append
-  * visibility. */
+/** Inverted text index: probe pruning and scan parity. */
 class TextIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -83,18 +82,6 @@ class TextIndexSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       TextIndex.substringSearch(spark, idxDir, docs, "doc_id", "text", "ab")
     }
-  }
-
-  test("appended documents become searchable") {
-    val idxDir = tmpDir("textidx-app")
-    TextIndex.build(docs.filter(col("doc_id") < 100), "doc_id", "text",
-      idxDir, nBuckets = 16)
-    val newDoc = Seq((90001L, "zeppelin table spark zeppelin"))
-      .toDF("doc_id", "text")
-    TextIndex.append(newDoc, "doc_id", "text", idxDir)
-    val hits = TextIndex.searchAll(spark, idxDir, "doc_id",
-      Seq("zeppelin", "spark")).as[Long].collect().toSet
-    assert(hits === Set(90001L))
   }
 
   test("bm25 ranking equals the from-text recompute") {

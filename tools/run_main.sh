@@ -2,6 +2,8 @@
 # Dev-only launcher: run a graft main class directly on the compiled
 # classes + the image's Spark jars (faster than sbt run).
 # Usage: tools/run_main.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
+# Extra JVM options (system properties, a log4j2 configuration) go in
+# $JAVA_OPTS; see tools/log4j2-codegen.properties.
 set -e
 CLS="$1"; shift
 OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
@@ -18,7 +20,7 @@ OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
 --add-opens=java.base/sun.security.action=ALL-UNNAMED \
 --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 # heap: SPARK_DRIVER_MEM, else build.sbt's 8g fallback
-exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
+exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} $JAVA_OPTS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLS" "$@"
